@@ -110,10 +110,14 @@ object Bench {
     // compact summary LAST so the tail always ends with one complete,
     // parseable JSON line carrying the total; the per-query map stays in
     // the full line and in bench_out.json (the authoritative record).
+    // A failed query records -1 and is left out of the total, so a crash
+    // would read as a speedup: name the failures here and exit non-zero.
     val n = results.count(_._3 >= 0)
+    val failed = results.collect { case (k, _, m) if m < 0 => "\"" + k + "\"" }
     println(f"""{"metric":"total","value":$total%.4f,"unit":"sec",""" +
       f""""stat":"min-of-$runs%d","n_queries":$n%d,"sf":"$sfDir",""" +
-      s""""queries_in":"$outPath"}""")
+      s""""failed":${failed.mkString("[", ",", "]")},"queries_in":"$outPath"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -42,6 +42,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (spark.sql.graft.matviewRewrite = true|false, default true)
     e.injectOptimizerRule(session =>
       org.apache.spark.sql.graft.store.MatViewRewrite(session))
+    // literal-independent generated code: comparison operands in
+    // Filter/Project read their value from `references`, so a new point-
+    // lookup key reuses the compiled class instead of running Janino
+    e.injectColumnar(_ => org.apache.spark.sql.graft.ParamLiterals.columnarRule)
 
     // Snappy statement surface (PUT INTO, UPDATE/DELETE on managed
     // tables, CREATE POLICY, CREATE SAMPLE TABLE, CREATE TABLE USING

@@ -584,14 +584,15 @@ object Dedup {
 
   /** Materialized size of a (local)checkpointed frame from the driver's
     * storage registry — memory + disk bytes of its cached blocks, no job.
-    * None when the frame is not a checkpoint scan or its blocks are not
-    * (yet) registered.
+    * None unless every leaf of the plan is a checkpoint scan (a mixed
+    * plan would undercount) or when its blocks are not (yet) registered.
     */
-  private def storageBytes(df: DataFrame): Option[Long] = {
-    val ids = df.queryExecution.analyzed.collectLeaves().collect {
+  private[graft] def storageBytes(df: DataFrame): Option[Long] = {
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    val ids = leaves.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }
-    if (ids.isEmpty) return None
+    if (ids.isEmpty || ids.length != leaves.length) return None
     val infos = df.sparkSession.sparkContext.getRDDStorageInfo
       .filter(i => ids.contains(i.id))
     if (infos.length != ids.length) None

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *    and group cardinalities scale with N; nation/region stay shared
   *    dims (real TPC-H keeps them constant across SF too).
   *  - documents: doc_id strided AND every token salted with the replica
-  *    id, so replica shingle/vocab spaces are DISJOINT — each replica
+  *    id (n_chars recomputed as the salted text's length), so replica
+  *    shingle/vocab spaces are DISJOINT — each replica
   *    carries the original's internal near-dup structure, no
   *    cross-replica pairs, and vocabulary-bounded aggregates scale too.
   *  - events: event_id/user_id strided (per-replica user populations,
@@ -82,12 +83,12 @@ object ReplicaBuild {
     // documents: token-salted per replica (disjoint shingle/vocab spaces)
     locally {
       val d = load("documents").crossJoin(reps)
+      val salted = when(col("text").isNull, col("text")).otherwise(
+        array_join(transform(split(col("text"), "\\s+"),
+          t => concat(t, lit("_"), col("__rep"))), " "))
       write("documents", d.select(
-        shift("doc_id", KD),
-        when(col("text").isNull, col("text")).otherwise(
-          array_join(transform(split(col("text"), "\\s+"),
-            t => concat(t, lit("_"), col("__rep"))), " ")).as("text"),
-        col("lang"), col("source"), col("n_chars")))
+        shift("doc_id", KD), salted.as("text"), col("lang"), col("source"),
+        coalesce(length(salted).cast("long"), col("n_chars")).as("n_chars")))
     }
     replicate("events", Map("event_id" -> KE, "user_id" -> KE))
     replicate("embeddings", Map("vec_id" -> KV))

@@ -69,4 +69,13 @@ class BroadcastPolicySpec extends SparkTestBase {
         s"$name: expected >= $minBhj BroadcastHashJoin after hint removal, got $got:\n$plan")
     }
   }
+
+  test("the storage-registry size guard measures only pure checkpoint frames") {
+    val ck = spark.range(0, 1000, 1, 2).toDF("v").localCheckpoint(true)
+    assert(graft.operators.Dedup.storageBytes(ck).exists(_ > 0))
+    // a non-checkpoint leaf has no registry entry: measuring only the
+    // checkpoint part would undercount and could admit an over-sized hint
+    val mixed = ck.union(spark.range(0, 10).toDF("v"))
+    assert(graft.operators.Dedup.storageBytes(mixed).isEmpty)
+  }
 }

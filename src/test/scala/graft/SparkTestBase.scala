@@ -8,6 +8,16 @@ trait SparkTestBase extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Runs `f` with session confs set, restoring the previous values. */
+  def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkTestBase {

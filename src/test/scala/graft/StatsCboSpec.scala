@@ -13,15 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class StatsCboSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
-  private def withConf[T](kvs: (String, String)*)(f: => T): T = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("pushed-filter-aware stats: a pruned scan broadcasts instead of shuffle-joining") {
     val g = GraftSession(spark)
     import spark.implicits._
