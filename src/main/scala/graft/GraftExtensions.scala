@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.graft.{CmsTopK, RowLevelSecurityRule, VectorExpressions => VE}
 
 /** Session extensions — the library's Catalyst integration point
@@ -42,10 +44,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (spark.sql.graft.matviewRewrite = true|false, default true)
     e.injectOptimizerRule(session =>
       org.apache.spark.sql.graft.store.MatViewRewrite(session))
-    // literal-independent generated code: comparison operands in
-    // Filter/Project read their value from `references`, so a new point-
-    // lookup key reuses the compiled class instead of running Janino
-    e.injectColumnar(_ => org.apache.spark.sql.graft.ParamLiterals.columnarRule)
+    // both halves run before CollapseCodegenStages. Pre: literal-
+    // independent generated code — comparison operands in Filter/Project
+    // read their value from `references`, so a new point-lookup key
+    // reuses the compiled class instead of running Janino. Post: a
+    // bounded key lookup's single partition runs on the calling thread
+    // (collect/take/toIterator) instead of as a one-task Spark job
+    e.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        org.apache.spark.sql.graft.ParamLiterals
+      override def postColumnarTransitions: Rule[SparkPlan] =
+        org.apache.spark.sql.graft.store.LocalLookups
+    })
 
     // Snappy statement surface (PUT INTO, UPDATE/DELETE on managed
     // tables, CREATE POLICY, CREATE SAMPLE TABLE, CREATE TABLE USING

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.types._
 
 /** A literal whose value stays out of the generated Java source — the
@@ -58,10 +58,6 @@ case class ParamLiteral(value: Any, dataType: DataType) extends LeafExpression {
   * decimals and binaries already go through `references`.
   */
 object ParamLiterals extends Rule[SparkPlan] {
-
-  val columnarRule: ColumnarRule = new ColumnarRule {
-    override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
-  }
 
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
     case f: FilterExec => f.copy(condition = tokenize(f.condition))

@@ -428,6 +428,17 @@ class GraftScan(tableName: String, fullSchema: StructType,
     BucketRouting.targetBuckets(filters, snapshot.bucketBy,
       snapshot.numBuckets, fullSchema)
 
+  /** A bounded key lookup: the pushed EqualTo/In conjuncts pin every key
+    * column of a table bucketed on its key, so exactly one bucket (one
+    * partition) survives. Plain table reads only: the option-driven
+    * maintenance and matview reads keep the job path. [[LocalLookups]]
+    * answers these on the calling thread.
+    */
+  def isKeyLookup: Boolean =
+    batchIds.isEmpty && mvStrict.isEmpty && !deletedOnly && updatedMode.isEmpty &&
+      snapshot.keyColumns.nonEmpty && snapshot.bucketBy == snapshot.keyColumns &&
+      targetBuckets.exists(_.size == 1)
+
   override def planInputPartitions(): Array[InputPartition] = {
     // strict matview serving (spark.sql.graft.matviewStrictFreshness):
     // re-prove the view's fingerprint at EXECUTION start, closing the

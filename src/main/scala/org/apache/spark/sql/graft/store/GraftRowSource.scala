@@ -252,6 +252,13 @@ class GraftRowScan(tableName: String, fullSchema: StructType,
     }.map(GraftRowStore.RowKey))
   }
 
+  /** A bounded key lookup: a full-PK probe (one [[RowProbePartition]] of
+    * rows planning already located) over the live table, not a
+    * pack-addressed maintenance read. [[LocalLookups]] answers these on
+    * the calling thread.
+    */
+  def isKeyLookup: Boolean = packIds.isEmpty && keyCombos.isDefined
+
   /** Buckets the pushed conjuncts allow, when they pin every bucket
     * column (same murmur3-seed-42 chain as the write distribution).
     */

@@ -233,7 +233,8 @@ object GraftStoreOps {
     * putInto's second full scan + semi-join of the table on every
     * refresh. Same contract discipline as `sourceKeyUnique`: `matched`
     * must cover EXACTLY the key-matched target rows — missing rows
-    * duplicate keys, extra rows lose them.
+    * duplicate keys, extra rows lose them. Both promises are asserted
+    * under `spark.sql.graft.putInto.verifySourceKeyUnique`.
     */
   def putIntoAddressed(spark: SparkSession, table: String, source: DataFrame,
       matched: DataFrame): Unit = {
@@ -246,6 +247,7 @@ object GraftStoreOps {
     // append) — the delete side reads the caller's matched frame
     val src = alignToSchema(t, source)
     assertSourceKeyUnique(spark, table, src, keyCols)
+    assertMatchedCoverage(spark, table, src, matched, keyCols)
     val staged = collectDeleteRefs(spark,
       matched.select(col("_bid"), col("_rid")))
     commitPut(table, src, staged)
@@ -259,14 +261,16 @@ object GraftStoreOps {
     else source.toDF(cols: _*)
   }
 
+  private def verifyPutInto(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.graft.putInto.verifySourceKeyUnique", "false").toBoolean
+
   /** Debug-mode teeth for the `sourceKeyUnique` caller promise (see
     * [[putInto]]): one count-vs-distinct-count aggregate, only under
     * `spark.sql.graft.putInto.verifySourceKeyUnique = true`.
     */
   private def assertSourceKeyUnique(spark: SparkSession, table: String,
       src: DataFrame, keyCols: Seq[String]): Unit = {
-    if (!spark.conf.get("spark.sql.graft.putInto.verifySourceKeyUnique",
-        "false").toBoolean) return
+    if (!verifyPutInto(spark)) return
     val Array(n, nKeys) = src.agg(count(lit(1)),
       count_distinct(struct(keyCols.map(col): _*))).head()
       .toSeq.map(_.asInstanceOf[Long]).toArray
@@ -274,6 +278,27 @@ object GraftStoreOps {
       s"putInto($table): sourceKeyUnique promised but source has $n rows " +
         s"over $nKeys distinct keys — the caller's uniqueness proof is wrong " +
         "(this would silently corrupt the keyed table)")
+  }
+
+  /** Debug-mode teeth for [[putIntoAddressed]]'s `matched` contract,
+    * under the same conf as [[assertSourceKeyUnique]]: `matched` must
+    * carry exactly the rows of table ⋉ source keys — the same keys at the
+    * same `_bid`/`_rid` addresses. A missing row would duplicate its key
+    * after the append, an extra one would lose a key.
+    */
+  private def assertMatchedCoverage(spark: SparkSession, table: String,
+      src: DataFrame, matched: DataFrame, keyCols: Seq[String]): Unit = {
+    if (!verifyPutInto(spark)) return
+    val cols = (keyCols ++ Seq("_bid", "_rid")).map(col)
+    val want = withAddress(spark, table)
+      .join(src.select(keyCols.map(col): _*), keyCols, "left_semi").select(cols: _*)
+    val got = matched.select(cols: _*)
+    val missing = want.except(got).count()
+    val extra = got.except(want).count()
+    require(missing == 0 && extra == 0,
+      s"putIntoAddressed($table): matched frame misses $missing and adds $extra " +
+        "of the table ⋉ source-key rows — the caller's matched set is stale or " +
+        "mis-joined (this would silently duplicate or lose keys)")
   }
 
   /** Stage the delete refs under a fresh token and run the append commit,

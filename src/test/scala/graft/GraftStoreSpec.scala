@@ -271,6 +271,39 @@ class GraftStoreSpec extends SparkTestBase {
     g.dropTable("s_pia")
   }
 
+  test("putIntoAddressed: debug assertion rejects a mis-joined or partial matched frame") {
+    val g = GraftSession(spark)
+    freshOrders("s_pim")
+    val orders = Tables.load(spark, sf, "orders")
+    val src = orders.filter(col("o_orderkey") % 10 === 0)
+      .withColumn("o_orderstatus", lit("UPSERTED"))
+      .localCheckpoint(true)
+    val addressed = GraftStoreOps.readAddressed(spark, "s_pim")
+    val right = addressed.join(src.select(col("o_orderkey")), Seq("o_orderkey"), "left_semi")
+      .localCheckpoint(true)
+    // semi-joined on the wrong key: extra rows (and misses) vs table ⋉ source
+    val misJoined = addressed.join(src.select(col("o_custkey")), Seq("o_custkey"), "left_semi")
+      .localCheckpoint(true)
+    val partial = right.filter(col("o_orderkey") % 20 === 0)
+    val before = g.table("s_pim").count()
+    withConf("spark.sql.graft.putInto.verifySourceKeyUnique" -> "true") {
+      for (bad <- Seq(misJoined, partial)) {
+        val e = intercept[IllegalArgumentException] {
+          GraftStoreOps.putIntoAddressed(spark, "s_pim", src, bad)
+        }
+        assert(e.getMessage.contains("matched frame"), e.getMessage)
+        assert(g.table("s_pim").count() == before, "a rejected upsert must not commit")
+      }
+      // the frame that honours the contract passes the assertion
+      GraftStoreOps.putIntoAddressed(spark, "s_pim", src, right)
+    }
+    val t = g.table("s_pim")
+    assert(t.count() == before)
+    assert(t.filter(col("o_orderstatus") === "UPSERTED").count() == src.count())
+    assert(t.groupBy("o_orderkey").count().filter(col("count") > 1).count() == 0)
+    g.dropTable("s_pim")
+  }
+
   test("delta row buffer: small appends stay delta until compaction") {
     val g = GraftSession(spark)
     freshOrders("s_buf", buckets = 2)

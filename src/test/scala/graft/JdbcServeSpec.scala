@@ -398,4 +398,33 @@ class JdbcServeSpec extends SparkTestBase {
       org.apache.spark.sql.graft.store.GraftColumnStore.drop("jdbc_mvb")
     }
   }
+
+  test("a PK read over the wire submits no job, with default and incremental collect") {
+    // the serving hot path: the Thrift server collects (or, with
+    // incrementalCollect, iterates) the statement's plan, whose root is
+    // the jobless key lookup — the routed get answers on the handler thread
+    val g = GraftSession(spark)
+    g.createTable("jdbc_pk", Tables.load(spark, sf, "customer"),
+      keyColumns = Seq("c_custkey"), provider = "row")
+    val conn = connect()
+    try {
+      val st = conn.createStatement()
+      for (incremental <- Seq("false", "true")) {
+        st.execute(s"SET spark.sql.thriftServer.incrementalCollect=$incremental")
+        var got = Seq.empty[(Long, String)]
+        val jobs = jobsDuring {
+          val rs = st.executeQuery(
+            "SELECT c_custkey, c_name FROM graft.jdbc_pk WHERE c_custkey = 7")
+          got = Iterator.continually(rs).takeWhile(_.next())
+            .map(r => (r.getLong(1), r.getString(2))).toSeq
+          rs.close()
+        }
+        assert(got == Seq((7L, "Customer#000000007")), s"incrementalCollect=$incremental")
+        assert(jobs == 0, s"incrementalCollect=$incremental")
+      }
+    } finally {
+      conn.close()
+      g.dropTable("jdbc_pk")
+    }
+  }
 }

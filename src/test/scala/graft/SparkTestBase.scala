@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +21,31 @@ trait SparkTestBase extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Jobs started while `f` runs. A marker job afterwards is the barrier:
+    * the listener bus delivers in order, so once the marker's start is
+    * seen every earlier job start has been counted.
+    */
+  def jobsDuring(f: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val marker = s"jobs-barrier-${java.util.UUID.randomUUID()}"
+    val seen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.job.description") == marker) seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(30, TimeUnit.SECONDS), "barrier job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 }
 
