@@ -1096,6 +1096,29 @@ class GraftSession(val spark: SparkSession)
       MatViewSupport.storageCols(a.func, i).map(_._1)
     }
 
+  /** `df` cast column by column to a stored view schema: the merge's
+    * sum() widens (decimal sums grow precision), putInto and the
+    * overwrite need exactly the stored types.
+    */
+  private def mvConform(df: DataFrame,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    df.select(schema.fieldNames.toSeq.map(f =>
+      col(f).cast(schema(f).dataType).as(f)): _*)
+
+  /** Current freshness fingerprint of each table. */
+  private def mvFingerprints(tables: Seq[String]): Map[String, MatViews.MvFreshness] =
+    tables.map(t => t -> MatViews.fingerprint(GraftColumnStore(t).snapshot)).toMap
+
+  /** The race re-proof shared by create, rebuild and the refresh paths:
+    * payload ids never recycle, so a fingerprint still equal to the one
+    * `captured` before a scan proves that no mutation committed across
+    * the scan's snapshot pin. True when any table moved or is gone.
+    */
+  private def mvRaced(captured: Map[String, MatViews.MvFreshness]): Boolean =
+    captured.exists { case (t, f) =>
+      GraftColumnStore.get(t).forall(s => MatViews.fingerprint(s.snapshot) != f)
+    }
+
   /** CREATE MATERIALIZED VIEW — materialize a grouped aggregate over one
     * store table into its own bucketed store table (bucketed AND keyed
     * by the group columns: rollup re-aggregation co-locates, and the
@@ -1120,9 +1143,7 @@ class GraftSession(val spark: SparkSession)
     // fingerprint BEFORE the pinned scan: concurrent mutations can only
     // make the view conservatively stale, never falsely fresh —
     // per-table for join views, a mutation in ANY member stales
-    val freshAll: Map[String, MatViews.MvFreshness] = d.tables.map { case (t, _) =>
-      t -> MatViews.fingerprint(GraftColumnStore(t).snapshot)
-    }.toMap
+    val freshAll = mvFingerprints(d.tables.map(_._1))
     val contents = mvContents(d.tables.map(_._1), d.joinConds,
       freshAll.view.mapValues(_.refIds).toMap, d.groupCols, d.groupQual,
       d.aggs, d.predicate)
@@ -1136,12 +1157,8 @@ class GraftSession(val spark: SparkSession)
     // the build scan leaves content the captured fingerprint does not
     // describe — register DIRTY so the first refresh rebuilds instead
     // of running a delta path against an untrustworthy record
-    val raced = d.tables.exists { case (t, _) =>
-      GraftColumnStore.get(t).forall(s =>
-        MatViews.fingerprint(s.snapshot) != freshAll(t))
-    }
     MatViews.register(MatViews.MvDef(nm, base, d.groupCols, d.aggs, viewSql,
-      freshAll(base), d.predicate, joins, d.groupQual, dirty = raced))
+      freshAll(base), d.predicate, joins, d.groupQual, dirty = mvRaced(freshAll)))
     df
   }
 
@@ -1258,68 +1275,63 @@ class GraftSession(val spark: SparkSession)
   }
 
 
-  /** REFRESH MATERIALIZED VIEW — O(delta) after pure appends (aggregate
-    * only the new batches, merge by group key through putInto), after
-    * deletes (SUBTRACTIVE refresh — first AND repeat deletes), and
-    * after updates (two-sided subtract-old/add-new refresh); when
-    * subtraction's algebra declines — or the move MIXES updates and
-    * deletes — a GROUP-PRUNED partial rebuild re-aggregates only the
-    * affected groups; anything else — a changed batch SET (appends mixed
-    * with mutations, emptied batches, compaction), TTL-expiry, a
-    * mutating table among several movers — full rebuild. SEVERAL tables
-    * that each moved by pure appends compose telescopically (one
-    * O(delta) term per mover, see [[telescopedAppendDeltas]]) —
-    * "incremental_multi". GLOBAL views (no GROUP BY) hold one summary
-    * row and fold the same signed deltas into it without a keyed merge.
-    * Returns the path taken:
+  /** REFRESH MATERIALIZED VIEW. Returns the path taken:
     * "noop" | "incremental" | "incremental_multi" | "incremental_delete" |
     * "incremental_update" | "partial" | "full".
     *
-    * SUBTRACTIVE path conditions (single-table AND join views — for a
-    * join view exactly ONE member table moved, from either side: the
-    * vanished join rows are its deleted rows ⋈ the other,
-    * fingerprint-identical tables): the moving table's batch set is
-    * UNCHANGED (a delete that empties a whole batch drops it from the
-    * store, and the vanished payload's rows cannot be re-read) and its
-    * only moved state is delete bitmaps. A batch with NO recorded
-    * bitmap reads its whole current bitmap as the delta; a batch WITH
-    * one (repeat delete) reads current-minus-recorded — the recorded
-    * payload is PINNED by MatViews.register against the GC that the
-    * superseding union swap would otherwise trigger, and resolves
-    * task-side as an exclude mask. Every aggregate must be
-    * algebraically invertible (sum/count/count(*)/avg — min/max/HLL
-    * cannot un-see a value); the view carries a count(*) slot
-    * (group-emptiness detection); and every sum/avg input column is
-    * NON-NULLABLE in the base schema (otherwise removing the last
-    * non-null value would need to flip the stored sum to NULL, which
-    * subtraction cannot know). The delta is a `deleted_rows`
-    * maintenance scan of exactly the moved batches, filtered by the
-    * view predicate, aggregated, and SUBTRACTED from the touched
-    * summary rows through putInto; groups whose count reaches 0 stay as
-    * zero rows that the rewrite masks (`__gN_cnt > 0`) until the next
-    * rebuild compacts them — so the merge never needs a driver-side key
-    * collect, keeping the path O(delta) at any group cardinality.
+    * ONE PRODUCER. `signedDelta` turns the base move since the recorded
+    * fingerprint into signed rows in VIEW SHAPE (the storage columns of
+    * the defining aggregate):
+    *  - pure appends: one telescoped O(delta) term per moving table
+    *    ("incremental"; several movers "incremental_multi", see
+    *    `telescopedAppendDeltas`);
+    *  - a delete-only move: the NEGATED aggregate of a `deleted_rows`
+    *    read of exactly the moved batches ("incremental_delete");
+    *  - an update-only move: the aggregate of the `updated_rows` read
+    *    valued "new" plus the negated one valued "old"
+    *    ("incremental_update") — a row that moved between groups or
+    *    across the view predicate nets correctly on both sides.
+    * Deletes and updates need exactly ONE moving table (for a join view
+    * from either side: its delta rows ⋈ the other, fingerprint-identical
+    * tables are exactly the vanished or changed join rows), an unchanged
+    * batch set (a delete that empties a batch drops it from the store,
+    * and its rows cannot be re-read; deltas may only grow), and the
+    * INVERTIBILITY gate: every aggregate is sum/count/count(*)/avg
+    * (min/max/HLL cannot un-see a value), the view carries a count(*)
+    * slot (group emptiness), and every sum/avg input is NON-NULLABLE in
+    * the base schema (removing the last non-null value would have to
+    * flip the stored sum to NULL, which subtraction cannot know). A
+    * repeat delete reads current-minus-recorded bitmaps: the recorded
+    * payloads are PINNED by MatViews.register against the GC that the
+    * superseding union swap would otherwise trigger, and resolve
+    * task-side as exclude masks.
     *
-    * UPDATE path (same invertibility gate): the moving table's batch
-    * set AND bitmaps are unchanged, its only moved state is update
-    * deltas that GREW (recorded ids ⊆ current ids — deltas only append
-    * between compactions). Two `updated_rows` maintenance reads of the
-    * moved batches — rows addressed by the NEW deltas valued "old"
-    * (recorded delta set) and "new" (current) — aggregate through the
-    * view shape; old negates, the union sum-merges into the touched
-    * summary rows. A row whose update moved it BETWEEN groups subtracts
-    * from its old group and adds to its new one, including groups the
-    * view has never seen (putInto inserts them).
+    * TWO SINKS. Grouped views take ONE keyed merge: the addressed view
+    * rows whose key is in the delta, unioned with the delta, merged by
+    * key and written through putIntoAddressed. A group the view never
+    * saw is inserted; a group whose count reaches 0 stays as a zero row
+    * that the rewrite masks (`__gN_cnt > 0`) until the next rebuild
+    * compacts it, so the merge never collects keys to the driver and
+    * stays O(delta) at any group cardinality. GLOBAL views (no GROUP BY)
+    * hold one row: the stored row folds with the delta into one row
+    * that overwrites the table (the O(table) part of a rebuild is its
+    * base scan, which the delta reads replace); an emptied global view
+    * keeps its zero-count row, which the count mask turns back into
+    * empty-input semantics (count 0, sum NULL) at serve time.
     *
-    * PARTIAL rebuild (delete-only or update-only move, any aggregate
-    * mix): the affected group keys — from the tombstoned rows (a
-    * superset of newly-tombstoned is fine: re-aggregating an
-    * already-correct group is idempotent) or the updated rows' old+new
-    * sides — restrict a re-aggregate of the CURRENT base via a
-    * left-semi join (broadcast + dynamic partition pruning keep the
-    * base scan bounded); refreshed groups merge through putInto and
-    * groups that vanished entirely delete by key. O(affected groups'
-    * data), never O(table).
+    * TWO FALLBACKS, when the move has no signed delta. A one-table move
+    * that the gate declines, a mixed update+delete move, or a delete
+    * whose recorded bitmaps no longer resolve takes the GROUP-PRUNED
+    * partial rebuild (see `partialRebuild`): O(affected groups' data).
+    * Anything else rebuilds in full: a changed batch set (appends mixed
+    * with mutations, emptied batches, compaction), TTL expiry, a
+    * mutating table among several movers, a global view the gate
+    * declines, NULL group keys in the delta, a DIRTY registration.
+    *
+    * RACE SANDWICH. Both sinks check, after the delta materializes, that
+    * no base fingerprint moved since `freshNow` (see `racedMutation`)
+    * and rebuild otherwise; the overwrite, partial and full paths
+    * re-prove after writing and register DIRTY on a race.
     */
   def refreshMaterializedView(name: String): String =
       MatViews.withMaintenanceLock(normalize(name)) {
@@ -1338,8 +1350,8 @@ class GraftSession(val spark: SparkSession)
       mv.joins.map(_.fresh.getOrElse(t,
         MatViews.MvFreshness(Set(-1L), Map.empty))).getOrElse(mv.fresh)
     // per-table classification drives the path choice: identical
-    // tables carry, ONE append-only table takes the O(delta) merge,
-    // anything else (mutation, or several moving tables) rebuilds
+    // tables carry, append-only tables telescope, ONE mutating table
+    // takes the delete/update/partial paths, anything else rebuilds
     def identical(t: String): Boolean = {
       val f = recorded(t)
       freshNow(t).refIds == f.refIds && freshNow(t).fp == f.fp
@@ -1349,24 +1361,43 @@ class GraftSession(val spark: SparkSession)
       f.refIds.subsetOf(freshNow(t).refIds) &&
         snaps(t).mutationState(f.refIds) == f.fp
     }
-    def registered(): MatViews.MvDef = mv.copy(
-      fresh = freshNow(mv.base),
-      joins = mv.joins.map(_.copy(fresh = freshNow)),
-      dirty = false)
+    def register(fresh: Map[String, MatViews.MvFreshness], dirty: Boolean): Unit =
+      MatViews.register(mv.copy(fresh = fresh(mv.base),
+        joins = mv.joins.map(_.copy(fresh = fresh)), dirty = dirty))
     // signed-delta safety: a base mutation committing between the
     // freshNow capture above and a delta scan's snapshot pin would make
     // the delta disagree with the fingerprint this refresh RECORDS —
     // the next refresh would then re-apply part of it (double-subtract /
     // double-add) and, fingerprint finally matching, SERVE the corrupt
-    // summary. Checked AFTER the delta materializes: payload ids never
-    // recycle, so fingerprint(t2) == fingerprint(t0) proves no mutation
-    // committed in [t0, t2], sandwiching the scan's pin at t1. On a
-    // race the caller falls back to rebuild(), whose re-aggregation is
-    // idempotent against current truth (a stale-fingerprint rebuild
-    // never serves and the next refresh converges).
-    def racedMutation(): Boolean = tables.exists { t =>
-      GraftColumnStore.get(t).forall(s =>
-        MatViews.fingerprint(s.snapshot) != freshNow(t))
+    // summary. Checked AFTER the delta materializes, sandwiching the
+    // scan's pin (see mvRaced). On a race the caller falls back to
+    // rebuild(), whose re-aggregation is idempotent against current
+    // truth (a stale-fingerprint rebuild never serves and the next
+    // refresh converges).
+    def racedMutation(): Boolean = mvRaced(freshNow)
+    val conds = mv.joins.map(_.conds).getOrElse(Nil)
+    val ids = freshNow.view.mapValues(_.refIds).toMap
+    val storage = mvStorageNames(mv.aggs)
+    def contents(pinned: Map[String, Set[Long]],
+        special: Option[(String, MvTableRead)] = None): DataFrame =
+      mvContents(tables, conds, pinned, mv.groupCols, mv.groupQual, mv.aggs,
+        mv.predicate, special)
+    // the single-statement overwrite of the backing table (rebuild and
+    // the global sink). Buckets from the backing table's OWN snapshot,
+    // not session state: a JDBC/other session may refresh a view it
+    // didn't create (captured BEFORE the rewrite: a failed createTable
+    // drops the old table, and the retry must still know the layout).
+    // createTable's supersede rule unregisters the view up front — a
+    // FAILED overwrite must not leave it silently vanished (no guard, no
+    // sys.matviews row, retry refused): restore the old registration
+    // (still stale, so it never serves) and rethrow
+    def overwrite(rows: DataFrame): Unit = {
+      val buckets = math.max(
+        GraftColumnStore.get(nm).map(_.snapshot.numBuckets).getOrElse(32), 1)
+      try MatViews.inMaintenance {
+        createTable(nm, rows, keyColumns = mv.groupCols,
+          partitionBy = mv.groupCols, buckets = buckets)
+      } catch { case e: Throwable => MatViews.register(mv); throw e }
     }
     def rebuild(): String = {
       // freshness RE-CAPTURED at rebuild start: rebuild is also the
@@ -1375,36 +1406,13 @@ class GraftSession(val spark: SparkSession)
       // older freshNow over newer content would hand the next refresh's
       // delta paths (which now trust recorded bitmaps/deltas) a
       // fingerprint that no longer describes the stored rows
-      val fresh2 = tables.map(t =>
-        t -> MatViews.fingerprint(GraftColumnStore(t).snapshot)).toMap
-      val contents = mvContents(tables, mv.joins.map(_.conds).getOrElse(Nil),
-        fresh2.view.mapValues(_.refIds).toMap, mv.groupCols, mv.groupQual,
-        mv.aggs, mv.predicate)
-      // buckets from the backing table's OWN snapshot, not session
-      // state: a JDBC/other session may refresh a view it didn't create
-      // (captured BEFORE the rewrite: a failed createTable drops the
-      // old table, and the retry must still know the layout)
-      val buckets = math.max(
-        GraftColumnStore.get(nm).map(_.snapshot.numBuckets).getOrElse(32), 1)
-      // createTable's supersede rule unregisters the view up front — a
-      // FAILED rebuild must not leave it silently vanished (no guard, no
-      // sys.matviews row, retry refused): restore the old registration
-      // (still stale, so it never serves) and rethrow
-      try MatViews.inMaintenance {
-        createTable(nm, contents, keyColumns = mv.groupCols,
-          partitionBy = mv.groupCols, buckets = buckets)
-      } catch { case e: Throwable => MatViews.register(mv); throw e }
-      // post-build re-proof (the racedMutation sandwich, against the
-      // rebuild's OWN capture): on a race the content/fingerprint
-      // pairing is unprovable — register DIRTY, which is stale to the
-      // rewrite AND forces the next refresh to rebuild instead of
-      // running a delta path against an untrustworthy fingerprint
-      val raced = tables.exists(t => GraftColumnStore.get(t).forall(s =>
-        MatViews.fingerprint(s.snapshot) != fresh2(t)))
-      MatViews.register(mv.copy(
-        fresh = fresh2(mv.base),
-        joins = mv.joins.map(_.copy(fresh = fresh2)),
-        dirty = raced))
+      val fresh2 = mvFingerprints(tables)
+      overwrite(contents(fresh2.view.mapValues(_.refIds).toMap))
+      // post-build re-proof against the rebuild's OWN capture: on a race
+      // the content/fingerprint pairing is unprovable — register DIRTY,
+      // which is stale to the rewrite AND forces the next refresh to
+      // rebuild instead of running a delta path against it
+      register(fresh2, dirty = mvRaced(fresh2))
       "full"
     }
     // ONE fingerprint-diff walk classifies the moving table: the moved
@@ -1479,87 +1487,6 @@ class GraftSession(val spark: SparkSession)
         case "sum" | "avg" => nonNullable(a.input)
         case _ => false // min/max/approx_distinct cannot un-see a value
       })
-    }
-    def subtractiveRefresh(movingT: String, movedIds: Set[Long],
-        excludes: Map[Long, Long]): String = {
-      // vanished rows: the moving table's newly-deleted rows (current
-      // bitmap minus the recorded exclude mask), joined (for join
-      // views) to the OTHER tables — fingerprint-identical, so the
-      // pairs are exactly the join rows that no longer exist; the view
-      // predicate filters rows that never contributed
-      val delta = mvContents(tables, mv.joins.map(_.conds).getOrElse(Nil),
-        freshNow.view.mapValues(_.refIds).toMap, mv.groupCols, mv.groupQual,
-        mv.aggs, mv.predicate,
-        special = Some((movingT, MvDeletedRead(movedIds, excludes))))
-        .localCheckpoint(false)
-      // NULL group keys defeat the keyed merge — correctness wins
-      if (delta.filter(mv.groupCols.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty) return rebuild()
-      if (racedMutation()) return rebuild() // see racedMutation scaladoc
-      val storage = mvStorageNames(mv.aggs)
-      val d = storage.foldLeft(delta)((df, n) =>
-        df.withColumnRenamed(n, s"__d_$n"))
-      // inner join (only groups that lost rows change) over the ADDRESSED
-      // view read, checkpointed once: values feed the subtract-merge,
-      // _bid/_rid feed putIntoAddressed's delete side — the view scans
-      // once per refresh instead of twice (see appendMerge)
-      val joined = GraftStoreOps.readAddressed(spark, nm) // session-independent
-        .join(d, mv.groupCols, "inner")
-        .localCheckpoint(false)
-      val merged = joined
-        .select((mv.groupCols.map(col) ++ storage.map(n =>
-          (col(n) - coalesce(col(s"__d_$n"), lit(0))).as(n))): _*)
-      val schema = GraftStoreOps.read(spark, nm).schema
-      val conformed = merged.select(schema.fieldNames.map(f =>
-        col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
-      MatViews.inMaintenance {
-        // source: unique(view-key) ⋈ unique(groupBy output) — key-unique;
-        // matched: exactly the inner join's view rows
-        GraftStoreOps.putIntoAddressed(spark, nm, conformed, joined)
-      }
-      MatViews.register(registered())
-      "incremental_delete"
-    }
-    // two-sided update refresh: rows addressed by the NEW deltas,
-    // valued "old" (recorded delta set) and "new" (current), each
-    // aggregated through the view shape; the old side NEGATES so one
-    // union sum-merge subtracts old contributions and adds new ones —
-    // a row whose update moved it between groups (or across the view
-    // predicate) nets correctly on both sides
-    def updateRefresh(movingT: String, movedIds: Set[Long],
-        since: Set[Long]): String = {
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
-      val ids = freshNow.view.mapValues(_.refIds).toMap
-      def side(which: String) = mvContents(tables, conds, ids,
-        mv.groupCols, mv.groupQual, mv.aggs, mv.predicate,
-        special = Some((movingT, MvUpdatedRead(movedIds, since, which))))
-      val storage = mvStorageNames(mv.aggs)
-      val negOld = storage.foldLeft(side("old"))((df, n) =>
-        df.withColumn(n, -col(n)))
-      val delta = side("new").unionByName(negOld).localCheckpoint(false)
-      // NULL group keys defeat the keyed merge — correctness wins
-      if (delta.filter(mv.groupCols.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty) return rebuild()
-      if (racedMutation()) return rebuild() // see racedMutation scaladoc
-      val keep = mv.groupCols.map(col)
-      // addressed + checkpointed touched frame — same single-view-scan
-      // shape as appendMerge (values → merge, _bid/_rid → delete side)
-      val touched = GraftStoreOps.readAddressed(spark, nm) // session-independent
-        .join(delta.select(keep: _*), mv.groupCols, "left_semi")
-        .localCheckpoint(false)
-      val mergeCols = MatViewSupport.mergeAggs(storage)
-      val merged = touched.drop("_bid", "_rid").unionByName(delta)
-        .groupBy(keep: _*).agg(mergeCols.head, mergeCols.tail: _*)
-      val schema = GraftStoreOps.read(spark, nm).schema
-      val conformed = merged.select(schema.fieldNames.map(f =>
-        col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
-      MatViews.inMaintenance {
-        // source: groupBy(key) output — key-unique; matched: the view
-        // rows whose key ∈ delta keys, exactly putInto's address set
-        GraftStoreOps.putIntoAddressed(spark, nm, conformed, touched)
-      }
-      MatViews.register(registered())
-      "incremental_update"
     }
     // group-pruned partial rebuild: re-aggregate ONLY the groups in
     // `touchedKeys` from the CURRENT base (left-semi restriction —
@@ -1640,8 +1567,6 @@ class GraftSession(val spark: SparkSession)
       })
     }
     def partialRebuild(touchedKeys: DataFrame): String = {
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
-      val ids = freshNow.view.mapValues(_.refIds).toMap
       val touched = touchedKeys.distinct().localCheckpoint(false)
       // NULL group keys defeat the keyed semi-join/putInto/deleteKeys
       if (touched.filter(mv.groupCols.map(col(_).isNull)
@@ -1653,10 +1578,7 @@ class GraftSession(val spark: SparkSession)
         .groupBy(mvKeys(mv.groupCols, mv.groupQual): _*)
         .agg(cols.head, cols.tail: _*)
         .localCheckpoint(false)
-      val mvRows = GraftStoreOps.read(spark, nm) // session-independent
-      val schema = mvRows.schema
-      val conformed = refreshed.select(schema.fieldNames.map(f =>
-        col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
+      val conformed = mvConform(refreshed, GraftColumnStore(nm).schema)
       // groups whose every contributing row vanished produce no
       // refreshed row: their summary rows delete by key (the view table
       // is keyed by the group columns). Guarded — both inputs are
@@ -1675,7 +1597,7 @@ class GraftSession(val spark: SparkSession)
       // mutation racing it leaves content the freshNow fingerprint does
       // not describe — register DIRTY on a race (stale to the rewrite,
       // and the next refresh rebuilds instead of trusting the record)
-      MatViews.register(registered().copy(dirty = racedMutation()))
+      register(freshNow, dirty = racedMutation())
       "partial"
     }
     val moving = tables.filterNot(identical)
@@ -1688,7 +1610,6 @@ class GraftSession(val spark: SparkSession)
     // terms is exactly the view rows that did not exist at the last
     // refresh, with no pair counted twice.
     def telescopedAppendDeltas(movers: Seq[String]): Seq[DataFrame] = {
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
       var done = Set.empty[String]
       movers.map { m =>
         val pinned = tables.map { t =>
@@ -1697,139 +1618,78 @@ class GraftSession(val spark: SparkSession)
           else freshNow(t).refIds)
         }.toMap
         done += m
-        mvContents(tables, conds, pinned, mv.groupCols, mv.groupQual,
-          mv.aggs, mv.predicate)
+        contents(pinned)
       }
     }
-    // keyed merge of an APPEND delta (storage-shaped rows): touched
-    // summary rows ∪ delta, sum/min/max/union-merged by group key
-    // through putInto — shared by the single- and multi-mover paths
-    def appendMerge(delta: DataFrame): Unit = {
-      val keep = mv.groupCols.map(col)
-      val storage = mvStorageNames(mv.aggs)
+    // the one classification of a single moving table, shared by the
+    // signed producer and the partial fallback
+    lazy val move = classifyMove(moving.head)
+    // the signed-delta producer: storage-shaped terms whose union, merged
+    // into the stored rows, yields the view over the current base — or
+    // None when the move cannot be inverted (the fallbacks take it)
+    def signedDelta(): Option[(Seq[DataFrame], String)] = {
+      def negate(df: DataFrame): DataFrame = storage.foldLeft(df)((d, n) =>
+        d.withColumn(n, -col(n)))
+      if (moving.forall(appendOnly))
+        Some((telescopedAppendDeltas(moving),
+          if (moving.size > 1) "incremental_multi" else "incremental"))
+      else if (moving.size > 1 || !subtractable) None
+      else move match {
+        case Some(MvMove(moved, _, true, false)) => // deletes only
+          deleteExcludes(moving.head, moved).map(excl => (Seq(negate(contents(
+            ids, Some((moving.head, MvDeletedRead(moved, excl)))))),
+            "incremental_delete"))
+        case Some(MvMove(moved, since, false, true)) => // updates only
+          def side(which: String) = contents(ids,
+            Some((moving.head, MvUpdatedRead(moved, since, which))))
+          Some((Seq(side("new"), negate(side("old"))), "incremental_update"))
+        case _ => None
+      }
+    }
+    // stored rows ∪ signed delta, merged by group key (no key: one
+    // global row) and conformed to the stored schema
+    def merge(rows: DataFrame, delta: DataFrame): DataFrame = {
+      val mergeCols = MatViewSupport.mergeAggs(storage)
+      mvConform(rows.unionByName(delta).groupBy(mv.groupCols.map(col): _*)
+        .agg(mergeCols.head, mergeCols.tail: _*), rows.schema)
+    }
+    // the keyed sink of every grouped signed path
+    def keyedMerge(terms: Seq[DataFrame], path: String): String = {
+      val delta = terms.reduce(_ unionByName _).localCheckpoint(false)
+      // a NULL group key defeats the equality-keyed merge (and putInto's
+      // key matching) — correctness wins: full rebuild
+      if (delta.filter(mv.groupCols.map(col(_).isNull).reduce(_ || _))
+          .take(1).nonEmpty || racedMutation()) return rebuild()
       // ADDRESSED view read, semi-joined against the delta keys ONCE and
       // checkpointed: the same touched frame feeds the merge (values) AND
-      // putIntoAddressed's delete side (_bid/_rid). putInto previously
-      // re-scanned the whole view and re-derived this exact semi join to
-      // address the matched rows — one full view pass per refresh saved.
+      // putIntoAddressed's delete side (_bid/_rid) — one view pass per
+      // refresh instead of putInto re-deriving this semi join
       val touched = GraftStoreOps.readAddressed(spark, nm) // session-independent
-        .join(delta.select(keep: _*), mv.groupCols, "left_semi")
+        .join(delta.select(mv.groupCols.map(col): _*), mv.groupCols, "left_semi")
         .localCheckpoint(false)
-      val mergeCols = MatViewSupport.mergeAggs(storage)
-      val merged = touched.drop("_bid", "_rid").unionByName(delta)
-        .groupBy(keep: _*).agg(mergeCols.head, mergeCols.tail: _*)
-      // conform to the stored schema exactly (sum() widening: decimal
-      // sums grow precision on the merge pass)
-      val schema = GraftStoreOps.read(spark, nm).schema
-      val conformed = merged.select(schema.fieldNames.map(f =>
-        col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
       MatViews.inMaintenance {
         // source: groupBy(key) output — key-unique; matched: the view
         // rows whose key ∈ delta keys, exactly putInto's address set
-        GraftStoreOps.putIntoAddressed(spark, nm, conformed, touched)
+        GraftStoreOps.putIntoAddressed(spark, nm,
+          merge(touched.drop("_bid", "_rid"), delta), touched)
       }
-      MatViews.register(registered())
+      register(freshNow, dirty = false)
+      path
     }
-    // GLOBAL-aggregate views (no GROUP BY) hold exactly ONE summary row;
-    // every delta path degenerates to folding a signed single-row delta
-    // into the stored row — no keyed merge, no vanished-group handling.
-    // A view emptied by deletes keeps its zero-count row, which the
-    // rewrite's count mask turns back into empty-input aggregate
-    // semantics (count 0, sum NULL) at serve time. The merged row is
-    // materialized (eager local checkpoint) BEFORE the overwrite drops
-    // the stored row it reads from; the overwrite itself is a
-    // single-row createTable — the O(table) part of a rebuild is its
-    // base scan, which these paths replace with O(delta) reads.
-    def globalRefresh(): String = {
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
-      val storage = mvStorageNames(mv.aggs)
-      def negate(df: DataFrame): DataFrame = storage.foldLeft(df)((d, n) =>
-        d.withColumn(n, -col(n)))
-      val ids = freshNow.view.mapValues(_.refIds).toMap
-      val (terms, path): (Option[Seq[DataFrame]], String) =
-        if (moving.forall(appendOnly))
-          (Some(telescopedAppendDeltas(moving)),
-            if (moving.size > 1) "incremental_multi" else "incremental")
-        else if (moving.size == 1 && subtractable) {
-          val t = moving.head
-          classifyMove(t) match {
-            case Some(MvMove(moved, _, true, false)) => // deletes only
-              (deleteExcludes(t, moved).map { excl =>
-                Seq(negate(mvContents(tables, conds, ids, mv.groupCols,
-                  mv.groupQual, mv.aggs, mv.predicate,
-                  special = Some((t, MvDeletedRead(moved, excl))))))
-              }, "incremental_delete")
-            case Some(MvMove(moved, since, false, true)) => // updates only
-              def side(which: String) = mvContents(tables, conds, ids,
-                mv.groupCols, mv.groupQual, mv.aggs, mv.predicate,
-                special = Some((t, MvUpdatedRead(moved, since, which))))
-              (Some(Seq(side("new"), negate(side("old")))), "incremental_update")
-            case _ => (None, "")
-          }
-        } else (None, "")
-      terms match {
-        case None => rebuild()
-        case Some(ds) =>
-          val mvRows = GraftStoreOps.read(spark, nm) // session-independent
-          val schema = mvRows.schema
-          val mergeCols = MatViewSupport.mergeAggs(storage)
-          val merged = ds.foldLeft(mvRows: DataFrame)(_ unionByName _)
-            .groupBy().agg(mergeCols.head, mergeCols.tail: _*)
-          val conformed = merged.select(schema.fieldNames.map(f =>
-            col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
-            .localCheckpoint(true)
-          if (racedMutation()) rebuild() // see racedMutation scaladoc
-          else {
-            val buckets = math.max(GraftColumnStore.get(nm)
-              .map(_.snapshot.numBuckets).getOrElse(32), 1)
-            // same supersede/restore discipline as rebuild(): a failed
-            // overwrite must not leave the view silently vanished
-            try MatViews.inMaintenance {
-              createTable(nm, conformed, keyColumns = mv.groupCols,
-                partitionBy = mv.groupCols, buckets = buckets)
-            } catch { case e: Throwable => MatViews.register(mv); throw e }
-            // post-build re-proof (rebuild's dirty sandwich): on a race
-            // the content/fingerprint pairing is unprovable
-            MatViews.register(registered().copy(dirty = racedMutation()))
-            path
-          }
-      }
+    // the single-row sink of global views: the merged row materializes
+    // (eager checkpoint) BEFORE the overwrite drops the row it reads
+    def globalOverwrite(terms: Seq[DataFrame], path: String): String = {
+      val merged = merge(GraftStoreOps.read(spark, nm), // session-independent
+        terms.reduce(_ unionByName _)).localCheckpoint(true)
+      if (racedMutation()) return rebuild()
+      overwrite(merged)
+      register(freshNow, dirty = racedMutation())
+      path
     }
-    // exactly one moving table drives every O(delta)/partial path —
-    // symmetric for fact- or dim-side moves on join views (the other
-    // tables' fingerprints carry). Classified once: the fingerprint
-    // diff walks every batch ref of the moving table, driver metadata.
-    // A DIRTY registration rebuilds unconditionally: its recorded
-    // fingerprint does not describe its content (a prior refresh
-    // detected a racing mutation), so no delta may trust it.
-    if (mv.dirty) rebuild()
-    else if (moving.isEmpty) "noop"
-    else if (mv.groupCols.isEmpty) globalRefresh()
-    else if (moving.forall(appendOnly)) {
-      // pure appends — one mover takes the classic O(delta) merge,
-      // several movers compose telescopically (one term each)
-      val delta = telescopedAppendDeltas(moving)
-        .reduce(_ unionByName _).localCheckpoint(false)
-      // a NULL group key defeats the equality-keyed merge join below
-      // (and putInto's key matching) — correctness wins: full rebuild.
-      // racedMutation: a delete racing this append-refresh would hide
-      // tombstoned rows from the delta scan while the recorded
-      // fingerprint still claims them — the next refresh's subtractive
-      // path would then remove them a second time (see racedMutation)
-      if (delta.filter(mv.groupCols.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty || racedMutation()) rebuild()
-      else {
-        appendMerge(delta)
-        if (moving.size > 1) "incremental_multi" else "incremental"
-      }
-    }
-    else if (moving.size > 1) rebuild() // a MUTATING table among several
-      // movers: its delta terms would need recorded-state reads of the
-      // OTHER movers' mutations too — out of the telescoping algebra
-    else {
+    // the non-invertible fallback of a single moving table: the partial
+    // rebuild re-aggregates the groups the move touched
+    def partialFallback(): String = {
       val t = moving.head
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
-      val ids = freshNow.view.mapValues(_.refIds).toMap
       def updKeys(moved: Set[Long], since: Set[Long], which: String) =
         mvScan(tables, conds, ids, mv.predicate,
           special = Some((t, MvUpdatedRead(moved, since, which))))
@@ -1838,25 +1698,19 @@ class GraftSession(val spark: SparkSession)
         mvScan(tables, conds, ids, mv.predicate,
           special = Some((t, MvDeletedRead(moved, Map.empty, since, oldValues))))
           .select(mvKeys(mv.groupCols, mv.groupQual): _*)
-      classifyMove(t) match {
+      move match {
         case Some(MvMove(moved, _, true, false)) => // deletes only
-          (if (subtractable) deleteExcludes(t, moved) else None) match {
-            case Some(excl) => subtractiveRefresh(t, moved, excl)
-            case None =>
-              // affected groups = groups of ALL tombstoned rows in the
-              // moved batches — a superset of the newly-tombstoned
-              // (idempotent to re-aggregate), needing no recorded
-              // payload; deltas carried, so current values ARE the
-              // values the summary saw
-              partialRebuild(delKeys(moved, Set.empty, oldValues = false))
-          }
+          // affected groups = groups of ALL tombstoned rows in the
+          // moved batches — a superset of the newly-tombstoned
+          // (idempotent to re-aggregate), needing no recorded
+          // payload; deltas carried, so current values ARE the
+          // values the summary saw
+          partialRebuild(delKeys(moved, Set.empty, oldValues = false))
         case Some(MvMove(moved, since, false, true)) => // updates only
-          if (subtractable) updateRefresh(t, moved, since)
-          else
-            // both sides: an update can move a row between groups or
-            // across the view predicate — old and new keys both touch
-            partialRebuild(updKeys(moved, since, "old")
-              .unionByName(updKeys(moved, since, "new")))
+          // both sides: an update can move a row between groups or
+          // across the view predicate — old and new keys both touch
+          partialRebuild(updKeys(moved, since, "old")
+            .unionByName(updKeys(moved, since, "new")))
         case Some(MvMove(moved, since, _, _)) => // mixed update + delete
           // affected groups = tombstoned rows' groups valued BOTH ways
           // (an update may have moved a row between groups — or across
@@ -1870,8 +1724,22 @@ class GraftSession(val spark: SparkSession)
         case None => rebuild() // expiry, emptied batches, compaction …
       }
     }
+    // A DIRTY registration rebuilds unconditionally: its recorded
+    // fingerprint does not describe its content (a prior refresh
+    // detected a racing mutation), so no delta may trust it.
+    if (mv.dirty) rebuild()
+    else if (moving.isEmpty) "noop"
+    else signedDelta() match {
+      case Some((terms, path)) =>
+        if (mv.groupCols.isEmpty) globalOverwrite(terms, path)
+        else keyedMerge(terms, path)
+      // a global view has no groups to prune; a MUTATING table among
+      // several movers would need recorded-state reads of the OTHER
+      // movers' mutations too — out of the telescoping algebra
+      case None if mv.groupCols.isEmpty || moving.size > 1 => rebuild()
+      case None => partialFallback()
+    }
   }
-
   def dropMaterializedView(name: String): Unit =
       MatViews.withMaintenanceLock(normalize(name)) {
     val nm = normalize(name)

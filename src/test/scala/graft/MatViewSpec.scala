@@ -125,22 +125,95 @@ class MatViewSpec extends SparkTestBase {
   }
 
   test("incremental refresh equals a from-scratch rebuild") {
-    freshBase("mvb3", rows = 300)
-    g.sql("CREATE MATERIALIZED VIEW mv3 AS " +
-      "SELECT k, sum(v) AS sv, count(nv) AS cn, min(d) AS mn, max(d) AS mx, " +
-      "avg(d) AS ad FROM mvb3 GROUP BY k")
-    g.insert("mvb3", spark.range(300, 450).select(
-      (col("id") % 13).cast("int").as("k"), lit("cX").as("cat"),
-      col("id").as("v"), (col("id") % 50).cast("double").as("d"),
-      when(col("id") % 2 === 0, lit(null).cast("long")).otherwise(col("id")).as("nv")))
-    assert(g.refreshMaterializedView("mv3") == "incremental")
-    val incremental = sorted(GraftStoreOps_read("mv3"))
-    // independent ground truth: a fresh view over the same base
-    g.sql("CREATE MATERIALIZED VIEW mv3_check AS " +
-      "SELECT k, sum(v) AS sv, count(nv) AS cn, min(d) AS mn, max(d) AS mx, " +
-      "avg(d) AS ad FROM mvb3 GROUP BY k")
-    assert(incremental == sorted(GraftStoreOps_read("mv3_check")))
-    g.dropMaterializedView("mv3_check")
+    // every signed refresh path over the three view shapes, plus a
+    // min/max view over nullable measures that takes the partial
+    // fallback: after each move the stored live rows (count(*) slot > 0)
+    // equal a fresh CREATE over the same base — the merge itself is
+    // exact, not only the masked answer the rewrite serves. Bucketed by
+    // pk, so no delete empties a batch (that case rebuilds).
+    def factRows(from: Long, to: Long, fkMod: Int): DataFrame =
+      spark.range(from, to).select(col("id").as("pk"),
+        (col("id") % fkMod).as("fk"), (col("id") % 7).cast("int").as("k"),
+        (col("id") * 2).as("v"),
+        when(col("id") % 11 === 0, lit(null).cast("long")).otherwise(col("id")).as("nv"))
+    def appendFact(from: Long, to: Long, fkMod: Int): Unit =
+      g.insert("mvp_fact", factRows(from, to, fkMod))
+    g.createTable("mvp_fact", factRows(0, 600, 30), partitionBy = Seq("pk"), buckets = 4)
+    g.createTable("mvp_dim", spark.range(30).select(col("id").as("dk"),
+      concat(lit("g"), col("id") % 4).as("grp")), partitionBy = Seq("dk"), buckets = 2)
+    // view -> (defining query, its count(*) storage slot)
+    val shapes = Seq(
+      "mvp_keyed" -> ("SELECT k, sum(v) AS sv, count(*) AS n, avg(v) AS av " +
+        "FROM mvp_fact GROUP BY k", "__g1_cnt"),
+      "mvp_star" -> ("SELECT grp, k, sum(v) AS sv, count(*) AS n " +
+        "FROM mvp_fact JOIN mvp_dim ON fk = dk GROUP BY grp, k", "__g1_cnt"),
+      "mvp_global" -> ("SELECT count(*) AS n, sum(v) AS sv FROM mvp_fact " +
+        "JOIN mvp_dim ON fk = dk WHERE k >= 2", "__g0_cnt"),
+      "mvp_minmax" -> ("SELECT k, sum(v) AS sv, count(*) AS n, count(nv) AS cn, " +
+        "min(nv) AS mn, max(nv) AS mx, avg(nv) AS an FROM mvp_fact GROUP BY k", "__g1_cnt"))
+    shapes.foreach { case (v, (q, _)) => g.sql(s"CREATE MATERIALIZED VIEW $v AS $q") }
+    val all = (p: String) => shapes.map(_._1 -> p).toMap
+    // move -> the path each view takes (the single-table views read only
+    // the fact, so the two-table append is a single-mover append for them)
+    val moves: Seq[(String, () => Unit, Map[String, String])] = Seq(
+      ("append", () => appendFact(600, 700, 30), all("incremental")),
+      ("two-table append", () => {
+        appendFact(700, 760, 36)
+        g.insert("mvp_dim", spark.range(30, 36).select(col("id").as("dk"),
+          concat(lit("g"), col("id") % 4).as("grp")))
+      }, all("incremental_multi") + ("mvp_keyed" -> "incremental") +
+        ("mvp_minmax" -> "incremental")),
+      ("first delete", () => g.delete("mvp_fact", col("v") % 10 === 4),
+        all("incremental_delete") + ("mvp_minmax" -> "partial")),
+      ("repeat delete", () => g.delete("mvp_fact", col("v") % 10 === 6),
+        all("incremental_delete") + ("mvp_minmax" -> "partial")),
+      // moves rows between groups and across the global view's predicate
+      ("update", () => g.update("mvp_fact", col("pk") % 5 === 1,
+        "v" -> (col("v") + 7), "k" -> ((col("k") + 1) % 7)),
+        all("incremental_update") + ("mvp_minmax" -> "partial")))
+    // demotion would turn the partial refresh of this small unclustered
+    // base into a full rebuild
+    withConf("spark.sql.graft.matview.partialDemote.enabled" -> "false") {
+      moves.foreach { case (move, run, paths) =>
+        run()
+        shapes.foreach { case (v, (q, cnt)) =>
+          assert(g.refreshMaterializedView(v) == paths(v), s"$move on $v")
+          g.sql(s"CREATE MATERIALIZED VIEW ${v}_check AS $q")
+          try assert(sorted(GraftStoreOps_read(v).filter(col(cnt) > 0)) ==
+            sorted(GraftStoreOps_read(s"${v}_check")), s"$move on $v")
+          finally g.dropMaterializedView(s"${v}_check")
+        }
+      }
+    }
+    g.dropTable("mvp_fact"); g.dropTable("mvp_dim")
+  }
+
+  test("refresh job counts per signed path stay within their measured bounds") {
+    g.createTable("mvjc_base", spark.range(700).select(col("id").as("pk"),
+      (col("id") % 7).cast("int").as("k"), (col("id") * 2).as("v")),
+      partitionBy = Seq("pk"), buckets = 4)
+    g.sql("CREATE MATERIALIZED VIEW mvjc AS SELECT k, sum(v) AS sv, " +
+      "count(*) AS n FROM mvjc_base GROUP BY k")
+    def refreshJobs(path: String): Int = {
+      var took = ""
+      val jobs = jobsDuring { took = g.refreshMaterializedView("mvjc") }
+      assert(took == path)
+      jobs
+    }
+    g.insert("mvjc_base", spark.range(700, 800).select(col("id").as("pk"),
+      (col("id") % 9).cast("int").as("k"), (col("id") * 2).as("v")))
+    val append = refreshJobs("incremental")
+    g.delete("mvjc_base", col("v") % 10 === 4)
+    val delete = refreshJobs("incremental_delete")
+    g.update("mvjc_base", col("pk") % 5 === 1, "v" -> (col("v") + 7))
+    val update = refreshJobs("incremental_update")
+    // bounds are the counts measured before the paths shared one keyed
+    // merge (append 8, delete 7, update 9); the delete path may add the
+    // one job of the merge aggregate that replaced its subtract join
+    assert(append <= 8, s"append refresh ran $append jobs")
+    assert(delete <= 7 + 1, s"delete refresh ran $delete jobs")
+    assert(update <= 9, s"update refresh ran $update jobs")
+    g.dropTable("mvjc_base")
   }
 
   private def GraftStoreOps_read(t: String): DataFrame =
