@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The PRIMARY per-query statistic is the MIN of the timed runs, with the
   * mean kept as `queries_mean`. This host shows large noise PHASES —
-  * round-5 interleaved A/B probes (ScratchProbe/StoreBench) measured the
+  * round-5 interleaved A/B probes (PERF_NOTES §1) measured the
   * SAME arm at 1.7 s and 20.5 s minutes apart, with the slow phase
   * migrating between unrelated queries across runs; it is what produced
   * round 4's "unexplained regression cluster" of textually-unchanged
@@ -24,19 +24,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // A/B hook: SPARK_GRAFT_CONF="k=v;k=v" applies session confs before
     // the run, so a default-flip candidate can be benched in BOTH

@@ -13,7 +13,7 @@ import org.apache.spark.sql.graft.{CmsTopK, RowLevelSecurityRule, VectorExpressi
   * of the custom expressions, so `spark.sql("SELECT vec_cosine(a,b) ...")`
   * works next to the Column API.
   *
-  * Usage: SparkSession.builder().withExtensions(new GraftExtensions) or
+  * Usage: `graft.GraftConf.session(app, cpus)`, which sets
   * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

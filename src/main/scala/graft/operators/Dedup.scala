@@ -187,7 +187,7 @@ object Dedup {
   def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     rawShingles(docs, idCol, textCol, n).distinct()
 
-  private def rawShingles(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def rawShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
     val toks = split(col(textCol), "\\s+")
     docs.select(col(idCol).as("sid"), toks.as("toks"))
@@ -206,14 +206,14 @@ object Dedup {
     * intersection counts, set sizes) is isomorphic under any INJECTIVE
     * mapping of shingle texts, so results are unchanged as long as
     * xxhash64 is collision-free over the corpus's distinct shingles —
-    * verified on this testdata at every SF (distinct-shingle count ==
-    * distinct-hash count). At web scale (10¹¹ shingles) the 64-bit
-    * birthday expectation is ≲1 colliding pair, which merges two
-    * shingles' counts — the [[spanDedup]]-class trade, acceptable for
-    * corpus hygiene, not for the exact oracle (which this corpus's
-    * collision-freedom preserves).
+    * PipelineOpsSpec asserts it on the testdata at every SF
+    * (distinct-shingle count == distinct-hash count). At web scale
+    * (10¹¹ shingles) the 64-bit birthday expectation is ≲1 colliding
+    * pair, which merges two shingles' counts — the [[spanDedup]]-class
+    * trade, acceptable for corpus hygiene, not for the exact oracle
+    * (which this corpus's collision-freedom preserves).
     */
-  private def hashedShingles(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def hashedShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
     rawShingles(docs, idCol, textCol, n)
       .select(col("sid"), xxhash64(col("shingle")).as("hsh"))
@@ -475,7 +475,7 @@ object Dedup {
     // hint must never be able to OOM at 100x, and neither Catalyst
     // stats — the checkpoint keeps the origin's join-sized estimate —
     // nor AQE — both SMJ exchanges submit before member stats arrive,
-    // ScratchProbe measured exactly that race — gets this right on its
+    // PERF_NOTES §10 records exactly that race — gets this right on its
     // own) lives in pruneSigsToMembers. Above the bound the semi join
     // degrades to the linear shuffle join instead of a driver OOM.
     val hashed = pruneSigsToMembers(sigs,
@@ -516,7 +516,7 @@ object Dedup {
     * loop's derived frames: localCheckpoint keeps the ORIGIN's
     * join-sized estimate, and AQE submits both SMJ exchanges together,
     * so the registry-side shuffle is already written before runtime
-    * stats exist (ScratchProbe measured exactly that race). Bytes, not
+    * stats exist (PERF_NOTES §10 records exactly that race). Bytes, not
     * rows: ids can be wide (URLs), and the whole point of the measured
     * guard is that the hint can NEVER build an over-sized driver
     * relation — above the bound the caller's join degrades to the
@@ -979,7 +979,7 @@ object Dedup {
     * explode's fan-out is unknowable from stats, so the planner
     * broadcasts one full exploded side — at 10× bench corpus that is a
     * 2.25M-row single-threaded driver build (44 s measured,
-    * SimhashScaleProbe r16) and at real scale an OOM. The shuffle join
+    * PERF_NOTES §50) and at real scale an OOM. The shuffle join
     * reuses ONE exchange for both sides and spills gracefully. Callers
     * gate it on the actual chunk-row count (sig count × combos), so at
     * small scale the (genuinely cheaper) broadcast stays.

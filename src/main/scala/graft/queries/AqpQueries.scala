@@ -361,7 +361,7 @@ object AqpQueries {
       // KEEP countDistinct in its own aggregation: mixing a DISTINCT
       // aggregate (Expand) with a typed-imperative one (percentile_approx
       // forces ObjectHashAggregate for the whole node) measured 11 s where
-      // the two separate aggregations take 1.3 s combined (ScratchProbe).
+      // the two separate aggregations take 1.3 s combined (PERF_NOTES §50).
       val distincts = li.groupBy("l_returnflag")
         .agg(countDistinct(col("l_orderkey")).as("exact_orders"))
       val approxes = li.groupBy("l_returnflag")

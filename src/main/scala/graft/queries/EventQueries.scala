@@ -162,7 +162,7 @@ object EventQueries {
       // regexp_extract, not get_json_object: the same single-key
       // extraction the oracle runs, and RegExpExtract is codegen'd while
       // GetJsonObject is a CodegenFallback that breaks the
-      // scan→project→partial-agg whole-stage pipeline (JsonProbe: 2.4×)
+      // scan→project→partial-agg whole-stage pipeline (2.4×, PERF_NOTES §50)
       Tables.load(s, dir, "events")
         .select(
           (regexp_extract(col("props"), "\"k\":\\s*(\\d+)", 1).cast("bigint") % 10)

@@ -137,8 +137,8 @@ object MutationQueries {
       // orderBy would add a range EXCHANGE of the whole table before the
       // write — at 100 TB that shuffle dwarfs the write itself, while
       // batch-stats pruning only needs batches to be narrow, which a
-      // partition-local sort already guarantees (round-5 ScratchProbe:
-      // the range exchange alone cost ~2x the store write).
+      // partition-local sort already guarantees (PERF_NOTES §2: the
+      // range exchange alone cost more than the whole store write).
       Tables.load(s, dir, "lineitem")
         .write.format(fmt).option("table", "q_cs").option("batch_size", "4096")
         .option("sort_by", "l_orderkey")

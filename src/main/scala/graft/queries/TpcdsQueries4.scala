@@ -53,8 +53,8 @@ object TpcdsQueries4 {
       // (valid: sum reassociates) — Spark's rollup plans an Expand that
       // triplicates its input before the partial aggregate, so feeding
       // it |types·brands| pre-agg rows instead of the fact join is 1.9×
-      // (1.33 → 0.69 s min-of-5 at sf0.1, tools/RollupExpandProbe,
-      // PERF_NOTES §24) and the gap grows with fact size
+      // (1.33 → 0.69 s min-of-5 at sf0.1, PERF_NOTES §24) and the gap
+      // grows with fact size
       val pre = li.join(part, col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_type"), col("p_brand"))
         .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))

@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftConf, Tables}
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev diagnostic (not part of the driver contract): per-query recall of
@@ -19,12 +19,7 @@ object AccuracyProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-accuracy-probe", 16)
     spark.sparkContext.setLogLevel("ERROR")
 
     def measure(sf: String): Unit = {

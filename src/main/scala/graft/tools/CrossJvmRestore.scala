@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftRowOps, GraftRowStore, GraftStoreOps}
@@ -21,15 +22,7 @@ object CrossJvmRestore {
 
   def main(args: Array[String]): Unit = {
     val Array(mode, dir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-cross-jvm-restore", 4)
     spark.sparkContext.setLogLevel("ERROR")
     mode match {
       case "write" => write(spark, dir)

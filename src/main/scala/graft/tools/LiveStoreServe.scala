@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.store.{GraftStoreOps, LiveCheckpoint}
@@ -27,14 +28,7 @@ object LiveStoreServe {
   private val ROW_SERVED = "live_r_served"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-live-store-serve", 4)
     spark.sparkContext.setLogLevel("ERROR")
     args.toList match {
       case "ingest" :: root :: epochs :: Nil => ingest(spark, root, epochs.toInt)

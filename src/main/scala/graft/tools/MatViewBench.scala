@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, Tables}
+import graft.{GraftConf, GraftSession, Tables}
 
 /** Matview scale rehearsal: does the rewrite's advantage GROW with the
   * base table, and does incremental refresh stay O(delta)?
@@ -31,12 +30,7 @@ import graft.{GraftSession, Tables}
   */
 object MatViewBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-matview-bench", 32)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val g = GraftSession(spark)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftConf
 
 /** Plan A/B for a session conf: renders every SparkEntry query's physical
   * plan under two values of one conf key (default: the DictJoinStrategy
@@ -30,15 +30,7 @@ object PlanDiff {
     val (key, offV, onV) =
       if (args.length >= 4) (args(1), args(2), args(3))
       else (org.apache.spark.sql.graft.store.DictJoinStrategy.CONF_KEY, "false", "auto")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-plan-diff", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     var diffs = 0; var same = 0; var failed = 0

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftConf
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-replica builder (dev tool, not a driver gate): materialize an
@@ -47,13 +48,8 @@ object ReplicaBuild {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val out = if (args.length > 2) args(2) else s"/tmp/graft_replica$mult"
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-replica-build")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-replica-build",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     def load(name: String) = spark.read.parquet(s"$src/$name.parquet")

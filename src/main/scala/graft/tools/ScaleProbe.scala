@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{GraftConf, Tables}
 import org.apache.spark.sql.functions._
 
 /** Scale-linearity rehearsal (dev tool): runs three headline shapes —
@@ -16,10 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-scale-probe", 32)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val li = Tables.load(spark, dir, "lineitem")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftConf
 import org.apache.spark.sql.functions._
 
 /** Dev micro-bench for the store ingest + scan paths (not part of the
@@ -9,14 +9,7 @@ import org.apache.spark.sql.functions._
 object StoreBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.session("graft-store-bench", 32)
     spark.sparkContext.setLogLevel("ERROR")
     val fmt = "org.apache.spark.sql.graft.store.GraftColumnSource"
     val li = graft.Tables.load(spark, sfDir, "lineitem")

@@ -31,7 +31,7 @@ import scala.collection.immutable.BitSet
   *    beats the un-pushed plan: rows never materialize into vectors and
   *    only group-sized partials reach the shuffle.
   *
-  * Measured (graft.tools.AggBench, 10M rows, local[32], interleaved
+  * Measured (PERF_NOTES §50, 10M rows, local[32], interleaved
   * A/B): dict groupBy(7 values) count+sum 1.48× over the un-pushed
   * plan, groupBy(1000) 1.19×, stats-served global count/min/max at
   * parity at this scale (both planning-bound at ~0.13 s; the pushed

@@ -1306,11 +1306,8 @@ object GraftColumnStore {
       }
       // containers: no run/dict scan — hashing whole vectors buys
       // nothing, and generic map/struct rows lack stable value equality.
-      // -Dgraft.store.plainOnly=true is a dev probe knob (ScratchProbe)
-      // that skips the run/dict cost scan to attribute ingest time.
       val col =
-        if (isArray || isMap || structFields >= 0 ||
-          java.lang.Boolean.getBoolean("graft.store.plainOnly")) PlainColumn(out)
+        if (isArray || isMap || structFields >= 0) PlainColumn(out)
         else encode(out, dt)
       vals = new Array[Any](size)
       (col, ColumnStats(min, max, nulls, valueBloom = bloom))

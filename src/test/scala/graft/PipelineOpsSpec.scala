@@ -477,6 +477,19 @@ class PipelineOpsSpec extends SparkTestBase
     assert(gated == Set((100L, 101L, 1.0), (101L, 100L, 2.0 / 3)), s"got $gated")
   }
 
+  test("containmentPairs' shingle hash is collision-free over the testdata at every SF") {
+    // hashedShingles keeps containmentPairs' set algebra only while the
+    // hash is injective over the corpus's distinct shingles; 3 is
+    // containmentPairs' default shingleLen
+    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
+      val d = Tables.load(spark, dir, "documents")
+      val texts = Dedup.rawShingles(d, "doc_id", "text", 3).select("shingle").distinct().count()
+      val hashes = Dedup.hashedShingles(d, "doc_id", "text", 3).select("hsh").distinct().count()
+      assert(texts > 0 && texts == hashes,
+        s"$dir: $texts distinct shingles, $hashes distinct hashes")
+    }
+  }
+
   test("minhash_full equals struct(minhash_sig, shingle_hashes)") {
     import graft.functions.TextFunctions.{minhash_sig, shingle_hashes}
     val sample = docs.filter(col("doc_id") < 100)

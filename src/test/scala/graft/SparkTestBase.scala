@@ -53,16 +53,7 @@ object SparkTestBase {
   // One JVM-wide session across suites: sbt forks a single test JVM and
   // Spark local sessions are expensive to spin up per suite.
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftConf.session("graft-test", 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Survey plans/r15/*_<suffix>.txt against bench times: per query, count
 Exchanges, scans, joins by strategy, non-codegen spans — rank optimization
-candidates. Usage: plan_survey.py <plansDir> <suffix> <bench_json>"""
+candidates. Usage: plan_survey.py <plansDir> <suffix> <bench_json>
+The plan files come from
+`SPARK_GRAFT_SF_DIR=<sfDir> sbt "runMain graft.Explain --out <plansDir> <suffix>"`."""
 import json, os, re, sys
 
 plans_dir = sys.argv[1] if len(sys.argv) > 1 else "plans/r15"
