@@ -1851,7 +1851,7 @@ class GraftSession(val spark: SparkSession)
           s.refs.map(r => r.numRows.toLong * s.schema.defaultSize).sum,
           s.numBuckets, s.keyColumns.mkString(","),
           s.indexes.keys.toSeq.sorted.mkString(","),
-          s.refs.map(r => GraftRowStore.PackRegistry.residentBytes(r.id)).sum,
+          s.refs.map(r => GraftRowStore.packs.residentBytes(r.id)).sum,
           "none")
       } else if (st.storeBacked) {
         val s = GraftColumnStore(name).snapshot

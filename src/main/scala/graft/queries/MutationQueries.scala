@@ -14,6 +14,15 @@ import org.apache.spark.sql.functions._
   */
 object MutationQueries {
 
+  /** A temp directory for a checkpoint or epoch root, deleted once `use`
+    * returns — by then the restore or attach has copied it into the store.
+    */
+  private def withScratchRoot[T](prefix: String)(use: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    try use(root.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- PUT INTO: key-matched rows replaced, new keys inserted ----
@@ -530,11 +539,11 @@ object MutationQueries {
       val g = GraftSession(s)
       g.createTable("q_ckpt", Tables.load(s, dir, "supplier"),
         keyColumns = Seq("s_suppkey"))
-      val ckDir = java.nio.file.Files
-        .createTempDirectory("graft_q_ckpt").toString
-      g.checkpointTable("q_ckpt", ckDir)
-      g.delete("q_ckpt", col("s_nationkey") >= 0) // empty it
-      g.restoreTable("q_ckpt", ckDir)
+      withScratchRoot("graft_q_ckpt") { ckDir =>
+        g.checkpointTable("q_ckpt", ckDir)
+        g.delete("q_ckpt", col("s_nationkey") >= 0) // empty it
+        g.restoreTable("q_ckpt", ckDir)
+      }
       g.table("q_ckpt")
         .groupBy("s_nationkey")
         .agg(count(lit(1)).as("n"))
@@ -564,12 +573,12 @@ object MutationQueries {
       if (!g.isManaged(srv)) {
         g.createTable(pub, Tables.load(s, dir, "orders"),
           partitionBy = Seq("o_orderkey"), buckets = 8)
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft_live_$sx").toString
-        g.publishTable(pub, root) // epoch 0: pristine
-        g.delete(pub, col("o_orderkey") % 10 === 3)
-        g.publishTable(pub, root) // epoch 1: post-delete
-        g.attachTable(srv, root)
+        withScratchRoot(s"graft_live_$sx") { root =>
+          g.publishTable(pub, root) // epoch 0: pristine
+          g.delete(pub, col("o_orderkey") % 10 === 3)
+          g.publishTable(pub, root) // epoch 1: post-delete
+          g.attachTable(srv, root)
+        }
       }
       g.table(srv)
         .groupBy("o_orderstatus")
@@ -600,12 +609,12 @@ object MutationQueries {
       if (!g.isManaged(srv)) {
         g.createTable(pub, Tables.load(s, dir, "orders"),
           partitionBy = Seq("o_orderkey"), buckets = 8)
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft_linc_$sx").toString
-        g.publishTable(pub, root, incremental = true) // epoch 0: all batches
-        g.delete(pub, col("o_orderkey") % 7 === 2)
-        g.publishTable(pub, root, incremental = true) // epoch 1: touched only
-        g.attachTable(srv, root)
+        withScratchRoot(s"graft_linc_$sx") { root =>
+          g.publishTable(pub, root, incremental = true) // epoch 0: all batches
+          g.delete(pub, col("o_orderkey") % 7 === 2)
+          g.publishTable(pub, root, incremental = true) // epoch 1: touched only
+          g.attachTable(srv, root)
+        }
       }
       g.table(srv)
         .groupBy("o_orderpriority")
@@ -635,12 +644,13 @@ object MutationQueries {
       if (!g.isManaged(srv)) {
         g.createTable(pub, Tables.load(s, dir, "orders"),
           partitionBy = Seq("o_orderkey"), buckets = 8)
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft_lview_$sx").toString
-        g.publishTable(pub, root, incremental = true) // epoch 0: pristine
+        val root = java.nio.file.Files.createTempDirectory(s"graft_lview_$sx")
+        g.publishTable(pub, root.toString, incremental = true) // epoch 0: pristine
         g.delete(pub, col("o_orderkey") % 5 === 1)
-        g.publishTable(pub, root, incremental = true) // epoch 1: post-delete
-        g.attachView(srv, root, epoch = Some(0L), verify = true)
+        g.publishTable(pub, root.toString, incremental = true) // epoch 1: post-delete
+        g.attachView(srv, root.toString, epoch = Some(0L), verify = true)
+        // the view reads the epoch files for the JVM's lifetime
+        org.apache.commons.io.FileUtils.forceDeleteOnExit(root.toFile)
       }
       g.table(srv)
         .groupBy("o_orderstatus")

@@ -22,6 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
+  /** q_dedup_simhash: corpus size (docs) from which banding keys on
+    * chunk pairs instead of single chunks (crossover measured between 5k
+    * and 50k docs).
+    */
+  private val SimhashComboDocs = 20000L
+  /** q_dedup_simhash: exploded chunk rows from which the self-join is
+    * pinned off the broadcast path.
+    */
+  private val SimhashMaxBroadcastChunkRows = 500000L
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- per-document surface statistics ----
@@ -1127,24 +1137,19 @@ object PipelineQueries {
       // The switch point is data-derived (sig is checkpointed, so the
       // count is a cached-block scan): crossover measured between 5k
       // docs (combo 1 wins, explode-dominated) and 50k (combo 2 wins,
-      // candidate-dominated); conf-overridable, local default keeps the
-      // driver's bench comparable.
-      val comboDocs = s.conf.getOption("spark.sql.graft.simhash.comboDocs")
-        .map(_.toLong).getOrElse(20000L)
+      // candidate-dominated).
       val nSig = sig.count() // cached-block scan: sig is checkpointed
-      val comboSize = if (nSig >= comboDocs) 2 else 1
+      val comboSize = if (nSig >= SimhashComboDocs) 2 else 1
       // pin the self-join off the broadcast path once the exploded chunk
       // table outgrows a sane build-side row count (see simhashNearDups
       // scaladoc: stats cannot see the explode, so the planner would
-      // broadcast a corpus-scale side); data-derived, conf-overridable,
-      // and the bench corpus (50k chunk rows) stays on its measured-
-      // cheaper broadcast plan
-      val maxBcRows = s.conf.getOption("spark.sql.graft.simhash.maxBroadcastChunkRows")
-        .map(_.toLong).getOrElse(500000L)
+      // broadcast a corpus-scale side); data-derived, and the bench
+      // corpus (50k chunk rows) stays on its measured-cheaper broadcast
+      // plan
       val nCombos = (0 until 10).combinations(comboSize).size
       Dedup.simhashNearDups(sig, maxHamming = 8, numChunks = 10, sigBits = 60,
           comboSize = comboSize,
-          pinShuffleJoin = nSig * nCombos >= maxBcRows)
+          pinShuffleJoin = nSig * nCombos >= SimhashMaxBroadcastChunkRows)
         .select(col("a"), col("b"), col("hamming").cast("int").as("hamming"))
         .orderBy("a", "b")
     },

@@ -130,7 +130,7 @@ object CdcSink {
     GraftRowStore.get(StateTable).flatMap { t =>
       val s = t.snapshot
       s.probe(stateKey(queryName, table), s.refs).map { case (packId, slot) =>
-        GraftRowStore.PackRegistry.pack(packId).rows(slot).getLong(2)
+        GraftRowStore.packs(packId).rows(slot).getLong(2)
       }
     }
 
@@ -150,7 +150,7 @@ object CdcSink {
     val row = InternalRow(
       UTF8String.fromString(queryName), UTF8String.fromString(table), batchId)
     val pack = new GraftRowStore.RowPack(Array(row), s.keyOrdinals, s.keyTypes)
-    val ref = GraftRowStore.PackRef(GraftRowStore.PackRegistry.put(pack), 0, 1)
+    val ref = GraftRowStore.PackRef(GraftRowStore.packs.put(pack), 0, 1)
     t.applyMutation(dead, Seq(ref))
   }
 }

@@ -1135,7 +1135,7 @@ case class GraftCreateTableCommand(name: String, provider: String,
       org.apache.spark.sql.graft.store.GraftColumnStore
         .setHeapOverflow(name.toLowerCase, enabled = true)
       org.apache.spark.sql.graft.store.GraftColumnStore
-        .enforceEviction(name.toLowerCase)
+        .enforceHeapPool(name.toLowerCase)
     }
     Nil
   }

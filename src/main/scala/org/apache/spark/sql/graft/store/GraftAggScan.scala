@@ -332,7 +332,7 @@ class GraftAggReaderFactory(fullSchema: StructType,
     */
   private def accumulateLoop(w: BatchWork, acc: Accs,
       ops: Array[(AggOp, Int)]): Unit = {
-    val batch = BatchRegistry.batch(w.ref.id)
+    val batch = batches(w.ref.id)
     val n = w.ref.numRows
     val dels = w.deletes.map(_.bitset).getOrElse(BitSet.empty)
     // memoized per column: on batches carrying update deltas the merge
@@ -413,7 +413,7 @@ class GraftAggReaderFactory(fullSchema: StructType,
     val singleGroup = spec.groupCols.length == 1
 
     works.foreach { w =>
-      val batch = BatchRegistry.batch(w.ref.id)
+      val batch = batches(w.ref.id)
       val n = w.ref.numRows
       val dels = w.deletes.map(_.bitset).getOrElse(BitSet.empty)
       val groupData = spec.groupCols.map(c => mergedColumn(w, batch, c))

@@ -46,7 +46,7 @@ import scala.jdk.CollectionConverters._
   *    join; resolves through [[GraftCatalog]]'s bucket function);
   *  - commit messages carry [[GraftColumnStore.BatchRef]]s — ids + stats,
   *    never data; payloads are written by the tasks into the
-  *    executor-resident [[GraftColumnStore.BatchRegistry]].
+  *    executor-resident [[GraftColumnStore.batches]] tier.
   */
 class GraftColumnSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -67,27 +67,9 @@ object GraftTable {
   val ROW_IDX_COL = "_graft_row_idx"
 
   def fromOptions(name: String, schema: StructType, props: Map[String, String]): GraftTable = {
-    // an existing table's physical layout wins over (stale) options —
-    // EXCEPT under an ALTER-style rewrite (`relayout`), which must be
-    // able to commit a layout whose column NAMES changed (RENAME of a
-    // key/bucket column): there the explicit options win
     val existing = GraftColumnStore.get(name).map(_.snapshot)
-    val relayout = props.get("relayout").exists(_.toBoolean)
-    val optBucketBy = props.get("partition_by")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val optBuckets = props.get("buckets").map(_.toInt)
-    val optKeys = props.get("key_columns")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val bucketBy =
-      (if (relayout) optBucketBy.orElse(existing.map(_.bucketBy))
-      else existing.map(_.bucketBy).orElse(optBucketBy)).getOrElse(Nil)
-    val buckets =
-      (if (relayout) optBuckets.orElse(existing.map(_.numBuckets))
-      else existing.map(_.numBuckets).orElse(optBuckets)).getOrElse(0)
-    val keys =
-      (if (relayout) optKeys.orElse(existing.map(_.keyColumns))
-      else existing.map(_.keyColumns).orElse(optKeys)).getOrElse(Nil)
-    val sortBy = props.get("sort_by").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    val base = BaseLayout.fromOptions("graftstore", existing, props)
+    val sortBy = props.get("sort_by").map(BaseLayout.columnList).getOrElse(Nil)
     // batch size is part of the table's physical layout: an explicit
     // option wins, else the existing table's size, else the default —
     // so a compact() rewrite keeps the granularity the index was built at
@@ -100,10 +82,6 @@ object GraftTable {
       .orElse(existing.map(_.compression)).getOrElse("none")
     require(compression == "none" || compression == "lz4",
       s"graftstore: unsupported compression '$compression' (none | lz4)")
-    // LRU-overflow budget (EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true'):
-    // resident-payload cap in bytes; 0 disables the disk tier
-    val evictionBudget = props.get("eviction_budget_bytes").map(_.toLong)
-      .orElse(existing.map(_.evictionBudget)).getOrElse(0L)
     // per-batch HLL distinct digests (SKETCH_COLUMNS): layout metadata
     // like the codec — an explicit option wins (enabling on an existing
     // table makes future appends/compacts digest), else the existing
@@ -113,11 +91,6 @@ object GraftTable {
     val sketchBy = props.get("sketch_columns")
       .map(GraftColumnStore.DistinctSketch.parseSketchColumns(_, schema))
       .orElse(existing.map(_.sketchBy)).getOrElse(Nil)
-    // EXPIRE time-to-live in seconds (batch-granularity TTL); 0 = off
-    val expireSeconds = props.get("expire_seconds").map(_.toLong)
-      .orElse(existing.map(_.expireSeconds)).getOrElse(0L)
-    require(expireSeconds >= 0,
-      s"graftstore: expire_seconds must be >= 0, got $expireSeconds")
     // per-table roll-up policy (streaming-ingest tables opt in at
     // CREATE; see PERF_NOTES §23 for why this is not a session default)
     props.get("rollup_threshold").foreach { v =>
@@ -125,8 +98,9 @@ object GraftTable {
       require(n >= 0, s"graftstore: rollup_threshold must be >= 0, got $n")
       GraftColumnStore.setRollupThreshold(name, n)
     }
-    new GraftTable(name, schema, batchSize, bucketBy, buckets, keys, sortBy,
-      compression, evictionBudget, sketchBy, expireSeconds)
+    new GraftTable(name, schema, batchSize, base.bucketBy, base.numBuckets,
+      base.keyColumns, sortBy, compression, base.evictionBudget, sketchBy,
+      base.expireSeconds)
   }
 }
 
@@ -514,7 +488,7 @@ class GraftScan(tableName: String, fullSchema: StructType,
     val works = keptWork
     val rows = works.foldLeft(0L)(_ + _.ref.numRows)
     val bytes = works.foldLeft(0L)((acc, w) =>
-      acc + GraftColumnStore.BatchRegistry.sizeBytes(w.ref.id))
+      acc + GraftColumnStore.batches.sizeBytes(w.ref.id))
     val colStats = new java.util.HashMap[org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
     val snap = snapshot
@@ -628,7 +602,7 @@ class GraftReaderFactory(fullSchema: StructType, required: StructType,
     * earlier deletes.
     */
   private def decode(w: BatchWork): ColumnarBatch = {
-    val batch = GraftColumnStore.BatchRegistry.batch(w.ref.id)
+    val batch = GraftColumnStore.batches(w.ref.id)
     val n = w.ref.numRows
     // bitmap payload resolves task-side from the registry; the planned
     // work item carried only the ref
@@ -1157,23 +1131,16 @@ class GraftBatchWrite(tableName: String, schema: StructType, batchSize: Int,
       // or the full new one, never the empty intermediate a separate
       // replace-then-append pair would expose (compact() depends on
       // this to be a safe online rewrite)
-      table.mutateRetiring { s =>
-        // schema AND layout travel with the swap: an ALTER-style rewrite
-        // commits its new shape, its (possibly renamed) key/bucket
-        // columns, and its new refs in ONE transition (readers see
-        // full-old or full-new, never a mixed state — and the table
-        // never leaves the registry, unlike a drop-then-recreate)
-        (s.copy(schema = schema, bucketBy = bucketBy, numBuckets = numBuckets,
-            keyColumns = keyColumns, refs = newRefs, deletes = Map.empty,
-            updates = Map.empty,
-            sortedBy = sortBy, batchSize = batchSize, compression = compression,
-            evictionBudget = evictionBudget, zorderedBy = Nil,
-            sketchBy = sketchBy, expireSeconds = expireSeconds),
-          Some(GraftColumnStore.Retirees(s.refs.map(_.id),
-            s.updates.values.flatMap(_.values.flatten.map(_.deltaId)).toSeq,
-            s.deletes.values.map(_.bitmapId).toSeq)))
-      }
-      ()
+      // schema AND layout travel with the swap: an ALTER-style rewrite
+      // commits its new shape, its (possibly renamed) key/bucket
+      // columns, and its new refs in ONE transition (readers see
+      // full-old or full-new, never a mixed state — and the table
+      // never leaves the registry, unlike a drop-then-recreate)
+      table.replaceRefs(newRefs, _.copy(schema = schema, bucketBy = bucketBy,
+        numBuckets = numBuckets, keyColumns = keyColumns,
+        sortedBy = sortBy, batchSize = batchSize, compression = compression,
+        evictionBudget = evictionBudget, zorderedBy = Nil,
+        sketchBy = sketchBy, expireSeconds = expireSeconds))
     } else {
       // record the codec as table layout metadata (first write to a fresh
       // table appends — without this a later compact() would resolve the
@@ -1195,11 +1162,11 @@ class GraftBatchWrite(tableName: String, schema: StructType, batchSize: Int,
         case None => table.appendRefs(newRefs)
       }
     }
-    // EXPIRE: reclaim batches whose TTL passed, then LRU-overflow:
+    // EXPIRE: reclaim batches whose TTL passed, then the heap pool:
     // spill past-budget batches to the disk tier now that the snapshot
-    // carries the new refs
-    GraftColumnStore.expireSweep(tableName)
-    GraftColumnStore.enforceEviction(tableName)
+    // carries the new refs (the table's own budget held at every swap)
+    table.expireSweep()
+    GraftColumnStore.enforceHeapPool(tableName)
     // row-buffer roll-up (the reference's always-on behavior): when any
     // bucket accumulates >= threshold small seals, merge them now — the
     // streaming foreachBatch ingest loop is the shape that otherwise
@@ -1220,8 +1187,8 @@ class GraftBatchWrite(tableName: String, schema: StructType, batchSize: Int,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftColumnStore.BatchRegistry.release(
-      messages.flatMap { case GraftCommit(refs) => refs.map(_.id); case _ => Nil }, Nil)
+    GraftColumnStore.batches.release(
+      messages.flatMap { case GraftCommit(refs) => refs.map(_.id); case _ => Nil })
 }
 
 case class GraftCommit(refs: Seq[GraftColumnStore.BatchRef])

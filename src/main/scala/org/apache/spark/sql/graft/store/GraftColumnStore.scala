@@ -33,11 +33,12 @@ object StoreClock {
   * delta row buffer rolled into batches, docs/.../Literals.scala:138-147).
   *
   * Layout:
-  *  - Payloads (the actual column values) live in [[BatchRegistry]], a
-  *    process-wide store written DIRECTLY by writer/mutation tasks — the
-  *    executor-resident tier. Commit messages and table metadata carry
-  *    only [[BatchRef]]s (ids + stats + row counts): metadata-scale, never
-  *    data. On a multi-node cluster the registry maps to node-local bucket
+  *  - Payloads (the actual column values) live in [[batches]], the
+  *    shared [[PayloadTier]] instantiated for sealed batches (update
+  *    deltas and delete bitmaps in [[BatchRegistry]]), written DIRECTLY
+  *    by writer/mutation tasks — the executor-resident tier. Commit
+  *    messages and table metadata carry only [[BatchRef]]s (ids + stats
+  *    + row counts): metadata-scale, never data. On a multi-node cluster the registry maps to node-local bucket
   *    regions (reference GemFire regions) with refs flowing to the
   *    coordinator exactly as here.
   *  - A table is an immutable [[TableSnapshot]] swapped atomically under
@@ -61,7 +62,7 @@ object StoreClock {
   * (Cleaner-driven, so abandoned plans cannot leak leases). Table DROP
   * releases everything immediately via `flushAll`.
   */
-object GraftColumnStore {
+object GraftColumnStore extends TableRegistry {
 
   // ------------------------------ encodings ------------------------------
 
@@ -91,9 +92,9 @@ object GraftColumnStore {
   /** At-rest LZ4-compressed sealed column (reference batch-level codecs:
     * encoders/.../store/CompressionCodecId.scala + CompressionUtils.scala;
     * `COMPRESSION` table option, core/.../sql/store/StoreUtils.scala:42-58).
-    * The payload is the Java-serialized encoded column deflated through an
-    * LZ4 block stream; every read inflates a TRANSIENT copy and drops it —
-    * the same memory-for-CPU trade the reference makes by decompressing
+    * The payload is the encoded column through [[Lz4Serde]]; every read
+    * inflates a TRANSIENT copy and drops it — the same memory-for-CPU
+    * trade the reference makes by decompressing
     * per scan rather than caching inflated buffers. Opt-in per table via
     * `OPTIONS (compression 'lz4')`: the store is a hot in-memory tier, so
     * the default stays uncompressed. Update deltas and delete bitmaps are
@@ -102,11 +103,7 @@ object GraftColumnStore {
   final case class CompressedColumn(numRows: Int, rawSizeBytes: Long,
       bytes: Array[Byte]) extends ColumnData {
     def sizeBytes: Long = bytes.length.toLong
-    override def materialized: ColumnData = {
-      val in = new java.io.ObjectInputStream(new net.jpountz.lz4.LZ4BlockInputStream(
-        new java.io.ByteArrayInputStream(bytes)))
-      try in.readObject().asInstanceOf[ColumnData] finally in.close()
-    }
+    override def materialized: ColumnData = Lz4Serde.fromBytes[ColumnData](bytes)
     def foreachValue(f: (Int, Any) => Unit): Unit = materialized.foreachValue(f)
   }
 
@@ -118,11 +115,7 @@ object GraftColumnStore {
       */
     def deflate(col: ColumnData): ColumnData = {
       if (col.sizeBytes < 2048) return col
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.ObjectOutputStream(new net.jpountz.lz4.LZ4BlockOutputStream(bos))
-      out.writeObject(col)
-      out.close()
-      val bytes = bos.toByteArray
+      val bytes = Lz4Serde.toBytes(col)
       if (bytes.length.toLong * 10 <= col.sizeBytes * 9) {
         CompressedColumn(col.numRows, col.sizeBytes, bytes)
       } else col
@@ -458,118 +451,24 @@ object GraftColumnStore {
       val rows: Array[Int],
       val values: Array[Any]) extends Serializable
 
-  /** Process-wide payload tier — written directly by writer/mutation
-    * TASKS (executor-resident), read by scan tasks; only ids cross the
-    * driver. On a real cluster this is the node-local store.
+  // ONE id space across batches, deltas and bitmaps: a mutation
+  // fingerprint ([[TableSnapshot.mutationState]]) and the matview
+  // bitmap pins compare ids of different payload kinds
+  private val payloadIds = new AtomicLong(0)
+
+  /** Sealed-batch payloads (see [[PayloadTier]]). */
+  val batches = new PayloadTier[StoreBatch]("graftstore batch", "batch", _.sizeBytes, payloadIds)
+
+  /** Update-delta and delete-bitmap payloads — written by mutation TASKS,
+    * resolved by scan tasks; commit messages carry only ids. They are
+    * small and short-lived by construction, so they never spill.
     */
   object BatchRegistry {
-    private val nextId = new AtomicLong(0)
-    private val batches = TrieMap.empty[Long, StoreBatch]
     private val deltas = TrieMap.empty[Long, ColumnDeltaPayload]
     private val bitmaps = TrieMap.empty[Long, Array[Long]]
 
-    // ---- disk tier (EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true',
-    // reference StoreUtils.scala:42-58 / GemFire LRU-overflow regions):
-    // spilled batches live as LZ4-deflated serialized files; access
-    // reloads a TRANSIENT copy (not re-cached — a reload that re-entered
-    // the resident tier would thrash against the budget it was evicted
-    // for). On a cluster these files are executor-local disk, exactly
-    // where the payloads already live. Sizes and access ticks are
-    // metadata so planning (estimateStatistics) and the LRU policy never
-    // touch payloads.
-    private val spilledFiles = TrieMap.empty[Long, java.nio.file.Path]
-    private val batchSizes = TrieMap.empty[Long, Long]
-    private val accessTick = new AtomicLong
-    private val lastAccess = TrieMap.empty[Long, Long]
-    private lazy val spillDir =
-      SpillSweep.registeredTempDir("graft-overflow-", "graft-spill-sweep")
-
-    /** Resident-tier peek: no spill reload, no LRU touch — for plan-time
-      * heuristics that must never perturb the tier they inspect.
-      */
-    def residentBatch(id: Long): Option[StoreBatch] = batches.get(id)
-
-    def putBatch(b: StoreBatch): Long = {
-      val id = nextId.incrementAndGet()
-      batches.put(id, b)
-      // sizes stay LAZY (see sizeBytes) — the O(rows) size fold on seal
-      // would tax every ingest for a statistic only planning asks for
-      lastAccess.put(id, accessTick.incrementAndGet())
-      id
-    }
-    def batch(id: Long): StoreBatch = {
-      // touch AFTER the hit — a blind put racing a release would leave a
-      // permanent lastAccess entry for a dead id (the residual
-      // hit-then-release window leaks one long per race; bounded by
-      // concurrent scans, negligible)
-      batches.get(id) match {
-        case Some(b) =>
-          lastAccess.put(id, accessTick.incrementAndGet())
-          b
-        case None => spilledFiles.get(id) match {
-          case Some(path) =>
-            lastAccess.put(id, accessTick.incrementAndGet())
-            val in = new java.io.ObjectInputStream(new net.jpountz.lz4.LZ4BlockInputStream(
-              java.nio.file.Files.newInputStream(path)))
-            try in.readObject().asInstanceOf[StoreBatch] finally in.close()
-          case None =>
-            throw new IllegalStateException(s"graftstore batch payload missing: $id")
-        }
-      }
-    }
-    /** Resident (heap) payload size; 0 once spilled. */
-    def residentBytes(id: Long): Long =
-      if (batches.contains(id)) sizeBytes(id) else 0L
-    /** Size metadata, computed on first ask and memoized — planning and
-      * the LRU policy read this; spilled batches keep their last
-      * resident size so estimateStatistics never faults payloads in.
-      */
-    def sizeBytes(id: Long): Long = batchSizes.get(id) match {
-      case Some(s) => s
-      case None =>
-        batches.get(id) match {
-          case Some(b) =>
-            val s = b.sizeBytes
-            batchSizes.put(id, s)
-            s
-          case None => 0L
-        }
-    }
-    def isResident(id: Long): Boolean = batches.contains(id)
-    /** Move one resident batch to the disk tier (no-op if already there
-      * or unknown). Synchronized per call so two concurrent evictions of
-      * the same id don't double-write.
-      */
-    def spill(id: Long): Unit = synchronized {
-      batches.get(id).foreach { b =>
-        batchSizes.put(id, sizeBytes(id)) // pin (memoized) size before the payload leaves heap
-        val path = spillDir.resolve(s"batch-$id.lz4")
-        val out = new java.io.ObjectOutputStream(new net.jpountz.lz4.LZ4BlockOutputStream(
-          java.nio.file.Files.newOutputStream(path)))
-        try out.writeObject(b) finally out.close()
-        spilledFiles.put(id, path)
-        batches.remove(id)
-      }
-    }
-    /** LRU eviction: spill least-recently-accessed resident batches from
-      * `ids` until their resident total is ≤ `budgetBytes`.
-      */
-    def enforceBudget(ids: Seq[Long], budgetBytes: Long): Unit = {
-      var resident = ids.map(residentBytes).sum
-      if (resident <= budgetBytes) return
-      val lru = ids.filter(isResident)
-        .sortBy(id => lastAccess.getOrElse(id, 0L))
-      var i = 0
-      while (resident > budgetBytes && i < lru.length) {
-        val id = lru(i)
-        val sz = residentBytes(id)
-        spill(id)
-        resident -= sz
-        i += 1
-      }
-    }
     def putDelta(d: ColumnDeltaPayload): Long = {
-      val id = nextId.incrementAndGet()
+      val id = payloadIds.incrementAndGet()
       deltas.put(id, d)
       id
     }
@@ -580,7 +479,7 @@ object GraftColumnStore {
       * (same executor-resident design as batch/delta payloads).
       */
     def putBitmap(words: Array[Long]): Long = {
-      val id = nextId.incrementAndGet()
+      val id = payloadIds.incrementAndGet()
       bitmaps.put(id, words)
       id
     }
@@ -623,20 +522,10 @@ object GraftColumnStore {
     /** Pinned-bitmap telemetry: (live pins, deferred frees). */
     def bitmapPinStats: (Int, Int) =
       synchronized { (bitmapPins.size, deferredBitmapFrees.size) }
-    // synchronized WITH spill(): an unsynchronized release racing a spill
-    // could interleave after spill's payload read but before its
-    // spilledFiles.put, resurrecting a file entry for a released id (disk
-    // leak + batch(id) silently serving a dead payload)
-    def release(batchIds: Iterable[Long], deltaIds: Iterable[Long],
-        bitmapIds: Iterable[Long] = Nil): Unit = synchronized {
-      batchIds.foreach { id =>
-        batches.remove(id)
-        batchSizes.remove(id)
-        lastAccess.remove(id)
-        spilledFiles.remove(id).foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-      deltaIds.foreach(deltas.remove)
-      bitmapIds.foreach { id =>
+    def release(r: Retirees): Unit = synchronized {
+      batches.release(r.payloads)
+      r.deltas.foreach(deltas.remove)
+      r.bitmaps.foreach { id =>
         if (bitmapPins.contains(id)) deferredBitmapFrees += id
         else bitmaps.remove(id)
       }
@@ -667,7 +556,7 @@ object GraftColumnStore {
       numRows: Int,
       stats: Array[ColumnStats],
       isDelta: Boolean,
-      createdAtMs: Long = 0L) extends Serializable
+      createdAtMs: Long = 0L) extends PayloadRef with Serializable
 
   /** `sketch`: HLL digest of the delta's replacement values when the
     * column is sketched (null otherwise) — UPDATE can introduce values
@@ -706,29 +595,25 @@ object GraftColumnStore {
       evictionBudget: Long = 0L,
       zorderedBy: Seq[String] = Nil,
       sketchBy: Seq[String] = Nil,
-      expireSeconds: Long = 0L) {
-    /** Batch-granularity TTL check (EXPIRE): true once every row in the
-      * batch is older than the table's time-to-live. 0 = no expiry.
-      */
-    def isExpired(ref: BatchRef, nowMs: Long): Boolean =
-      expireSeconds > 0 && ref.createdAtMs > 0 &&
-        nowMs - ref.createdAtMs > expireSeconds * 1000L
-    /** Refs with at least one row inside the TTL — what every read path
-      * (row scan, agg pushdown, sketch union) must enumerate. One clock
-      * read per call, so a single planning sees one consistent cut.
-      */
-    def liveRefs: Vector[BatchRef] =
-      if (expireSeconds <= 0) refs
-      else { val now = StoreClock.nowMs; refs.filterNot(isExpired(_, now)) }
+      expireSeconds: Long = 0L) extends TableState[TableSnapshot, BatchRef] {
+    def withRefs(refs: Vector[BatchRef]): TableSnapshot = copy(refs = refs)
+    /** Dropped batches retire with their update deltas and delete bitmaps. */
+    def withoutRefs(ids: Set[Long]): (TableSnapshot, Retirees) =
+      (copy(refs = refs.filterNot(r => ids(r.id)), deletes = deletes -- ids,
+        updates = updates -- ids),
+        Retirees(refs.collect { case r if ids(r.id) => r.id },
+          updates.iterator.filter(e => ids(e._1))
+            .flatMap(_._2.values.flatten.map(_.deltaId)).toSeq,
+          deletes.iterator.filter(e => ids(e._1)).map(_._2.bitmapId).toSeq))
     def rowCount: Long = liveRefs.iterator
       .map(r => r.numRows.toLong - deletes.get(r.id).map(_.cardinality).getOrElse(0)).sum
     def liveRows(ref: BatchRef): Int =
       ref.numRows - deletes.get(ref.id).map(_.cardinality).getOrElse(0)
     // registry size METADATA, not payloads — planning must never fault
     // a spilled batch back in just to estimate statistics
-    def sizeBytes: Long = refs.map(r => BatchRegistry.sizeBytes(r.id)).sum
+    def sizeBytes: Long = refs.map(r => batches.sizeBytes(r.id)).sum
     /** Heap-resident payload bytes (spilled batches count 0). */
-    def residentBytes: Long = refs.map(r => BatchRegistry.residentBytes(r.id)).sum
+    def residentBytes: Long = refs.map(r => batches.residentBytes(r.id)).sum
     /** Per-batch mutation fingerprint: the delete bitmap id plus the
       * sorted update delta ids. Payload ids never recycle, so equality
       * of two fingerprints proves no DELETE/UPDATE committed against
@@ -746,51 +631,9 @@ object GraftColumnStore {
       }.toMap
   }
 
-  /** Payload ids superseded by one snapshot swap. */
-  final case class Retirees(batches: Seq[Long], deltas: Seq[Long], bitmaps: Seq[Long]) {
-    def isEmpty: Boolean = batches.isEmpty && deltas.isEmpty && bitmaps.isEmpty
-  }
-
-  final class StoreTable(val name: String, initial: TableSnapshot) {
-    @volatile private var current: TableSnapshot = initial
-    def snapshot: TableSnapshot = current
-    def schema: StructType = current.schema
-
-    // Reader-lease payload GC (see [[LeaseGc]]): payloads superseded by a
-    // swap stay resolvable while any scan pinned to an older snapshot is
-    // still reachable (a physical plan is multi-execution, so lease
-    // lifetime is reachability of the Scan/reader factory, not a count
-    // of one execution's reader closes).
-    private val gc = new LeaseGc[Retirees](r =>
-      BatchRegistry.release(r.batches, r.deltas, r.bitmaps))
-
-    /** Atomically capture the snapshot AND open a reader lease at its
-      * epoch — scans call this once, then register themselves (and their
-      * reader factory) via [[addLeaseOwner]]; the lease drops when every
-      * owner is unreachable.
-      */
-    def pinSnapshot(): (TableSnapshot, Long) = synchronized { (current, gc.pin()) }
-    def addLeaseOwner(leaseId: Long, owner: AnyRef): Unit = gc.addOwner(leaseId, owner)
-    /** (live leases, pending retiree sets) — spec telemetry. */
-    def gcStats: (Int, Int) = gc.stats
-
-    def mutate(f: TableSnapshot => TableSnapshot): TableSnapshot =
-      mutateRetiring { s => (f(s), None) }
-
-    /** Snapshot swap + retiree recording in ONE critical section: two
-      * concurrent commits can no longer interleave swap and retire (the
-      * round-4 epoch-lag bug that shrank the grace window to zero).
-      */
-    def mutateRetiring(
-        f: TableSnapshot => (TableSnapshot, Option[Retirees])): TableSnapshot = synchronized {
-      val (next, retirees) = f(current)
-      current = next
-      gc.onSwap(retirees.filterNot(_.isEmpty))
-      next
-    }
-
-    def appendRefs(newRefs: Seq[BatchRef]): Unit =
-      mutate(s => s.copy(refs = s.refs ++ newRefs))
+  final class StoreTable(name: String, initial: TableSnapshot)
+      extends SnapshotTable[TableSnapshot, BatchRef](name, initial, batches) {
+    protected def free(r: Retirees): Unit = BatchRegistry.release(r)
 
     /** Union new delete-bitmap REFS in; fully-dead batches are dropped
       * from the ref list (payloads are released on table drop). When a
@@ -885,38 +728,16 @@ object GraftColumnStore {
             s.mutationState(oldIds) != expectedMutations) { ok = false; (s, None) }
         else {
           ok = true
-          val (dead, kept) = s.refs.partition(r => oldIds.contains(r.id))
-          val deadDeltas = s.updates.view.filterKeys(oldIds)
-            .values.flatMap(_.values.flatten.map(_.deltaId)).toSeq
-          val deadBitmaps = s.deletes.view.filterKeys(oldIds)
-            .values.map(_.bitmapId).toSeq
-          (s.copy(refs = kept ++ newRefs,
-            deletes = s.deletes.view.filterKeys(!oldIds.contains(_)).toMap,
-            updates = s.updates.view.filterKeys(!oldIds.contains(_)).toMap),
-            Some(Retirees(dead.map(_.id), deadDeltas, deadBitmaps)))
+          val (kept, retirees) = s.withoutRefs(oldIds)
+          (kept.withRefs(kept.refs ++ newRefs), Some(retirees))
         }
       }
       ok
     }
-
-    /** Replace all content (compaction / truncate-write); the ENTIRE
-      * previous snapshot's payloads retire (without this, every
-      * compaction leaked the pre-compact table).
-      */
-    def replaceRefs(newRefs: Vector[BatchRef]): Unit = {
-      mutateRetiring { s =>
-        (s.copy(refs = newRefs, deletes = Map.empty, updates = Map.empty),
-          Some(Retirees(s.refs.map(_.id),
-            s.updates.values.flatMap(_.values.flatten.map(_.deltaId)).toSeq,
-            s.deletes.values.map(_.bitmapId).toSeq)))
-      }
-      ()
-    }
-
-    private[store] def flushRetired(): Unit = gc.flushAll()
   }
 
-  private val tables = TrieMap.empty[String, StoreTable]
+  type T = StoreTable
+  protected def kind: String = "graftstore"
 
   /** Delete refs staged by an upsert for the table's NEXT append commit:
     * the commit applies them and the new batch refs in one atomic
@@ -962,84 +783,43 @@ object GraftColumnStore {
     if (enabled) heapOverflowTables.put(name, ()) else heapOverflowTables.remove(name)
   def isHeapOverflow(name: String): Boolean = heapOverflowTables.contains(name)
 
-  /** EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true' enforcement (reference
-    * GemFire LRU-overflow regions): spill the table's least-recently-
-    * accessed sealed batches to the registry's disk tier until the
-    * resident payload fits the budget. Called after every write commit;
-    * scans fault spilled batches back in TRANSIENTLY (never re-cached).
-    * Also re-enforces the global heap-percent pool when the table
-    * participates in it.
+  /** LRUHEAPPERCENT enforcement: when `name` participates in the pool,
+    * spill LRU across every participating table until their combined
+    * resident payload fits the pool budget. Called after write commits;
+    * a table's own EVICTION_BY 'LRUMEMSIZE n' budget is enforced by every
+    * snapshot swap ([[SnapshotTable.mutateRetiring]]).
     */
-  /** EXPIRE maintenance: drop every batch whose TTL has fully passed —
-    * ONE atomic snapshot swap retiring the batches plus their attached
-    * update deltas and delete bitmaps (payloads free once no reader
-    * lease pins them, the standard [[LeaseGc]] path). Scans already hide
-    * expired batches at planning; this reclaims the memory. Runs
-    * opportunistically on every write commit and on demand via
-    * [[GraftStoreOps.expireSweep]]. Returns the number of batches
-    * retired.
-    */
-  def expireSweep(name: String): Int = get(name).map { t =>
-    val now = StoreClock.nowMs
-    var removed = 0
-    t.mutateRetiring { s =>
-      if (s.expireSeconds <= 0) (s, None)
-      else {
-        val (dead, live) = s.refs.partition(s.isExpired(_, now))
-        if (dead.isEmpty) (s, None)
-        else {
-          removed = dead.size
-          val deadIds = dead.map(_.id).toSet
-          val retirees = Retirees(
-            dead.map(_.id),
-            dead.flatMap(r => s.updates.get(r.id).toSeq
-              .flatMap(_.values.flatten.map(_.deltaId))),
-            dead.flatMap(r => s.deletes.get(r.id).map(_.bitmapId)))
-          (s.copy(refs = live, deletes = s.deletes -- deadIds,
-            updates = s.updates -- deadIds), Some(retirees))
-        }
-      }
-    }
-    removed
-  }.getOrElse(0)
-
-  def enforceEviction(name: String): Unit = {
-    get(name).foreach { t =>
-      val s = t.snapshot
-      if (s.evictionBudget > 0L) {
-        BatchRegistry.enforceBudget(s.refs.map(_.id), s.evictionBudget)
-      }
-    }
+  def enforceHeapPool(name: String): Unit =
     if (heapOverflowTables.contains(name)) {
       val pool = heapOverflowTables.keys.flatMap(get).flatMap(_.snapshot.refs.map(_.id)).toSeq
-      BatchRegistry.enforceBudget(pool, heapOverflowBudgetBytes)
+      batches.enforceBudget(pool, heapOverflowBudgetBytes)
     }
-  }
 
+  /** Register a fresh empty table, releasing any previous one of the
+    * name. sketchBy/expireSeconds ride the INITIAL snapshot: a
+    * post-registration mutate would open a window where a concurrent
+    * writer resolves the table option-less and its commit's layout-sync
+    * resets the option.
+    */
   def createOrReplace(name: String, schema: StructType,
       bucketBy: Seq[String] = Nil, numBuckets: Int = 0,
       keyColumns: Seq[String] = Nil, sketchBy: Seq[String] = Nil,
-      expireSeconds: Long = 0L): StoreTable = {
-    heapOverflowTables.remove(name) // a replacement never inherits pool membership
-    tables.remove(name).foreach(releaseAll)
-    // sketchBy/expireSeconds ride the INITIAL snapshot: a
-    // post-registration mutate would open a window where a concurrent
-    // writer resolves the table option-less and its commit's layout-sync
-    // resets the option
-    val t = new StoreTable(name,
+      expireSeconds: Long = 0L): StoreTable =
+    replace(name, new StoreTable(name,
       TableSnapshot(schema, bucketBy, numBuckets, keyColumns, Vector.empty,
-        Map.empty, Map.empty, sketchBy = sketchBy, expireSeconds = expireSeconds))
-    tables.put(name, t)
-    t
-  }
+        Map.empty, Map.empty, sketchBy = sketchBy, expireSeconds = expireSeconds)))
 
   def getOrCreate(name: String, schema: StructType,
       bucketBy: Seq[String] = Nil, numBuckets: Int = 0,
       keyColumns: Seq[String] = Nil): StoreTable =
-    tables.getOrElseUpdate(name, new StoreTable(name,
+    getOrRegister(name, new StoreTable(name,
       TableSnapshot(schema, bucketBy, numBuckets, keyColumns, Vector.empty, Map.empty, Map.empty)))
 
-  def get(name: String): Option[StoreTable] = tables.get(name)
+  // pool membership and roll-up policy are engine metadata keyed by name
+  override protected def forget(name: String): Unit = {
+    heapOverflowTables.remove(name)
+    rollupThresholds.remove(name)
+  }
 
   /** Plan-time heuristic for [[DictJoinStrategy]]'s auto mode: does the
     * column's sealed data look dictionary-encoded? Samples up to 8
@@ -1057,26 +837,12 @@ object GraftColumnStore {
         // refs are ALL sealed batches (isDelta only marks the partial
         // row-buffer seals, encoded identically) — sample them all
         val sampled = snap.refs.iterator
-          .flatMap(r => BatchRegistry.residentBatch(r.id))
+          .flatMap(r => batches.residentPayload(r.id))
           .take(8).toSeq
         sampled.nonEmpty &&
           sampled.count(_.columns(idx).isInstanceOf[DictColumn]) * 2 > sampled.size
       }
     }
-
-  def tableNames: Seq[String] = tables.keys.toSeq.sorted
-
-  def apply(name: String): StoreTable = get(name).getOrElse(
-    throw new IllegalArgumentException(s"graftstore table not found: $name"))
-
-  def drop(name: String): Unit = {
-    heapOverflowTables.remove(name)
-    rollupThresholds.remove(name)
-    // dropping a replica releases its read-only status with it (the
-    // next owner of the name — CREATE, restore — starts writable)
-    ReplicaGuard.clear(name)
-    tables.remove(name).foreach(releaseAll)
-  }
 
   // ---- per-table roll-up maintenance policy (`rollup_threshold` table
   // option): every write commit merges any bucket tail holding >= N
@@ -1091,19 +857,11 @@ object GraftColumnStore {
     if (n > 0) rollupThresholds.put(name, n) else rollupThresholds.remove(name)
   def rollupThreshold(name: String): Int = rollupThresholds.getOrElse(name, 0)
 
-  private def releaseAll(t: StoreTable): Unit = {
-    t.flushRetired()
-    val s = t.snapshot
-    BatchRegistry.release(s.refs.map(_.id),
-      s.updates.values.flatMap(_.values.flatten.map(_.deltaId)),
-      s.deletes.values.map(_.bitmapId))
-  }
-
   // ------------------------------- builder -------------------------------
 
   /** Writer-task builder: buffers rows, seals an encoded batch every
     * `batchSize` rows and registers the payload DIRECTLY in
-    * [[BatchRegistry]] (executor-resident); returns refs only. The final
+    * [[batches]] (executor-resident); returns refs only. The final
     * partial batch is sealed with `isDelta = true` — the row-buffer
     * analog — so compaction can later roll small appends together.
     */
@@ -1365,7 +1123,7 @@ object GraftColumnStore {
           }
         c += 1
       }
-      val id = BatchRegistry.putBatch(new StoreBatch(n, cols))
+      val id = batches.put(new StoreBatch(n, cols))
       refs += BatchRef(id, bucketId, n, stats, isDelta,
         createdAtMs = StoreClock.nowMs)
       n = 0
@@ -1376,7 +1134,7 @@ object GraftColumnStore {
 
     /** Release everything this builder registered (task abort). */
     def abort(): Unit = {
-      BatchRegistry.release(refs.map(_.id), Nil)
+      batches.release(refs.map(_.id))
       refs.clear()
       n = 0
     }

@@ -21,12 +21,9 @@ import scala.collection.mutable
   *    written by the tasks, only metadata (pack refs, tombstone bitmaps)
   *    returns to the driver, which swaps the snapshot atomically.
   */
-object GraftRowOps {
+object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
 
   val FORMAT: String = classOf[GraftRowSource].getName
-
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.format(FORMAT).option("table", table).load()
 
   private def withAddress(spark: SparkSession, table: String): DataFrame = {
     val df = read(spark, table)
@@ -34,71 +31,18 @@ object GraftRowOps {
       df.metadataColumn(GraftRowTable.ROW_IDX_COL).as("_rid"), col("*"))
   }
 
-  /** ALTER-style rewrite preserving the row table's layout (keys,
-    * buckets, eviction budget, TTL) — see the column-store analog
-    * [[GraftStoreOps.alterRewrite]].
+  protected def snapshotOf(table: String): GraftRowStore.RowSnapshot =
+    GraftRowStore(table).snapshot
+
+  /** Secondary indexes after a rewrite: their stats keyed the OLD pack
+    * ids and may name dropped columns — cleared, and the survivors
+    * (following renames) rebuilt, the same treatment as compact().
     */
-  def alterRewrite(spark: SparkSession, table: String,
-      transform: DataFrame => DataFrame,
-      renames: Map[String, String] = Map.empty): Unit =
-    relayoutRewrite(spark, table, transform, renames, None)
-
-  /** REBUCKET for row tables — see [[GraftStoreOps.rebucket]]. */
-  def rebucket(spark: SparkSession, table: String, buckets: Int,
-      bucketBy: Seq[String] = Nil): Unit = {
-    val snap = GraftRowStore(table).snapshot
-    val cols = if (bucketBy.nonEmpty) bucketBy else snap.bucketBy
-    require(cols.nonEmpty,
-      s"rebucket($table): table is unbucketed — name the bucket columns (BY (cols))")
-    require(buckets > 0, s"rebucket($table): buckets must be > 0, got $buckets")
-    cols.foreach(c => require(snap.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-      s"rebucket($table): no such column $c"))
-    relayoutRewrite(spark, table, identity, Map.empty, Some((cols, buckets)))
-  }
-
-  private def relayoutRewrite(spark: SparkSession, table: String,
-      transform: DataFrame => DataFrame,
-      renames: Map[String, String],
-      rebucketTo: Option[(Seq[String], Int)]): Unit = {
-    org.apache.spark.sql.graft.GrantRegistry.check(table, "ALTER")
-    val snap = GraftRowStore(table).snapshot
-    val next = transform(read(spark, table))
-    // RENAME COLUMN travels as an explicit old->new map so keys/buckets/
-    // indexes FOLLOW the renamed column (column-store analog)
-    def follow(c: String): String = renames.collectFirst {
-      case (from, to) if from.equalsIgnoreCase(c) => to
-    }.getOrElse(c)
-    val keyColumns = snap.keyColumns.map(follow)
-    val bucketBy = rebucketTo.map(_._1).getOrElse(snap.bucketBy.map(follow))
-    val numBuckets = rebucketTo.map(_._2).getOrElse(snap.numBuckets)
-    (keyColumns ++ bucketBy).foreach(c =>
-      require(next.columns.contains(c),
-        s"alter($table) cannot drop key/bucket column $c"))
-    next.schema.fields.foreach(f =>
-      require(GraftColumnStore.supportsType(f.dataType),
-        s"alter($table): column ${f.name} has unsupported type ${f.dataType}"))
-    // secondary indexes: stats key the OLD pack ids and may name dropped
-    // columns — cleared in the swap, survivors rebuilt below (same
-    // treatment as compact())
-    val indexSurvivors = snap.indexes.values.map(i => follow(i.column))
-      .filter(next.columns.contains).toSeq.sorted
-    // truncate-overwrite: refs + schema + layout swap atomically at
-    // commit (no drop — a failed write leaves the table untouched)
-    val frozen = next.localCheckpoint(true)
-    try {
-      var w = frozen.write.format(FORMAT).option("table", table)
-        .option("relayout", "true")
-        .option("eviction_budget_bytes", snap.evictionBudget.toString)
-        .option("expire_seconds", snap.expireSeconds.toString)
-      if (keyColumns.nonEmpty)
-        w = w.option("key_columns", keyColumns.mkString(","))
-      if (bucketBy.nonEmpty)
-        w = w.option("partition_by", bucketBy.mkString(","))
-          .option("buckets", numBuckets.toString)
-      w.mode("overwrite").save()
-    } finally graft.operators.CheckpointScope.unpersist(frozen)
+  override protected def afterRewrite(spark: SparkSession, table: String,
+      snap: GraftRowStore.RowSnapshot, r: Relayout): Unit = {
     GraftRowStore(table).mutate(_.copy(indexes = Map.empty))
-    indexSurvivors.foreach(c => createIndex(spark, table, c))
+    r.surviving(snap.indexes.values.map(_.column).toSeq).sorted
+      .foreach(c => createIndex(spark, table, c))
   }
 
   /** PUT INTO (upsert): for each source row, the live row with the same
@@ -145,18 +89,18 @@ object GraftRowOps {
       val keyOrds = keyCols.map(schema.fieldIndex).toArray
       val keyTypes = keyOrds.map(schema.fields(_).dataType)
       val candidates = if (bucketed) refsByBucket.getOrElse(pid, Vector.empty) else allRefs
-      // resolve candidate packs ONCE per task: pack() deserializes a
+      // resolve candidate packs ONCE per task: a fetch deserializes a
       // SPILLED pack from disk per call, so a per-row fetch would pay
       // O(rows x spilled packs) inflations
       val candidatePacks = candidates.map(ref =>
-        ref.id -> GraftRowStore.PackRegistry.pack(ref.id))
+        ref.id -> GraftRowStore.packs(ref.id))
       val tombstones = mutable.Map.empty[Long, mutable.BitSet]
       val buf = mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
       val newRefs = mutable.ArrayBuffer.empty[GraftRowStore.PackRef]
       val bucketId = if (snap.numBuckets > 0) pid else -1
       def seal(): Unit = if (buf.nonEmpty) {
         val pack = new GraftRowStore.RowPack(buf.toArray, keyOrds, keyTypes)
-        newRefs += GraftRowStore.PackRef(GraftRowStore.PackRegistry.put(pack),
+        newRefs += GraftRowStore.PackRef(GraftRowStore.packs.put(pack),
           bucketId, pack.numRows, createdAtMs = StoreClock.nowMs)
         buf.clear()
       }
@@ -224,7 +168,7 @@ object GraftRowOps {
       val candidates = if (bucketed) refsByBucket.getOrElse(pid, Vector.empty) else allRefs
       // pack resolution hoisted out of the row loop — see put()
       val candidatePacks = candidates.map(ref =>
-        ref.id -> GraftRowStore.PackRegistry.pack(ref.id))
+        ref.id -> GraftRowStore.packs(ref.id))
       val tombstones = mutable.Map.empty[Long, mutable.BitSet]
       it.foreach { r =>
         val key = GraftRowStore.keyOf(r, keyOrds, keyTypes)
@@ -337,7 +281,7 @@ object GraftRowOps {
             GraftRowStore.SortedSlotRegistry.sortedSlots(pid, column, ordinal, dt)
           if (nonNull == 0) (pid, null: Any, null: Any)
           else {
-            val rows = GraftRowStore.PackRegistry.pack(pid).rows
+            val rows = GraftRowStore.packs(pid).rows
             (pid, rows(slots(0)).get(ordinal, dt),
               rows(slots(nonNull - 1)).get(ordinal, dt))
           }

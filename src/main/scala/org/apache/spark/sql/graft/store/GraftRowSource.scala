@@ -65,35 +65,9 @@ object GraftRowTable {
   val PACK_SIZE = 32768
 
   def fromOptions(name: String, schema: StructType, props: Map[String, String]): GraftRowTable = {
-    // existing layout wins over (stale) options — except under an
-    // ALTER-style rewrite (`relayout`), where the explicit options win
-    // so a RENAMEd key/bucket column can commit (column-store analog)
-    val existing = GraftRowStore.get(name).map(_.snapshot)
-    val relayout = props.get("relayout").exists(_.toBoolean)
-    val optKeys = props.get("key_columns")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val optBucketBy = props.get("partition_by")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val optBuckets = props.get("buckets").map(_.toInt)
-    val keys =
-      (if (relayout) optKeys.orElse(existing.map(_.keyColumns))
-      else existing.map(_.keyColumns).orElse(optKeys)).getOrElse(Nil)
-    val bucketBy =
-      (if (relayout) optBucketBy.orElse(existing.map(_.bucketBy))
-      else existing.map(_.bucketBy).orElse(optBucketBy)).getOrElse(Nil)
-    val buckets =
-      (if (relayout) optBuckets.orElse(existing.map(_.numBuckets))
-      else existing.map(_.numBuckets).orElse(optBuckets)).getOrElse(0)
-    // LRU-overflow budget (EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true')
-    val evictionBudget = props.get("eviction_budget_bytes").map(_.toLong)
-      .orElse(existing.map(_.evictionBudget)).getOrElse(0L)
-    // EXPIRE time-to-live in seconds (pack-granularity TTL); 0 = off
-    val expireSeconds = props.get("expire_seconds").map(_.toLong)
-      .orElse(existing.map(_.expireSeconds)).getOrElse(0L)
-    require(expireSeconds >= 0,
-      s"graftrow: expire_seconds must be >= 0, got $expireSeconds")
-    new GraftRowTable(name, schema, keys, bucketBy, buckets, evictionBudget,
-      expireSeconds)
+    val base = BaseLayout.fromOptions("graftrow", GraftRowStore.get(name).map(_.snapshot), props)
+    new GraftRowTable(name, schema, base.keyColumns, base.bucketBy, base.numBuckets,
+      base.evictionBudget, base.expireSeconds)
   }
 }
 
@@ -358,7 +332,7 @@ class GraftRowScan(tableName: String, fullSchema: StructType,
       }
       // each candidate pack fetched once across ALL keys (a spilled pack
       // would otherwise deserialize per key)
-      val resolved = GraftRowStore.PackRegistry.resolvePacks(
+      val resolved = GraftRowStore.packs.resolve(
         keyed.flatMap(_._2.map(_.id)).distinct)
       val addresses = keyed.flatMap { case (key, candidates) =>
         GraftRowStore.indexProbes.incrementAndGet()
@@ -479,9 +453,8 @@ class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
     val it: Iterator[InternalRow] = partition match {
       case RowProbePartition(addresses) =>
         // distinct packs fetched once (spilled packs deserialize per
-        // pack() call, and one pack commonly serves many addresses)
-        val probePacks = GraftRowStore.PackRegistry
-          .resolvePacks(addresses.map(_._1).distinct)
+        // fetch, and one pack commonly serves many addresses)
+        val probePacks = GraftRowStore.packs.resolve(addresses.map(_._1).distinct)
         addresses.iterator.map { case (packId, slot) =>
           project(packId, slot, probePacks(packId).rows(slot))
         }
@@ -493,7 +466,7 @@ class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
         val ord = org.apache.spark.sql.catalyst.util.TypeUtils
           .getInterpretedOrdering(p.dt)
         p.refs.iterator.flatMap { ref =>
-          val rows = GraftRowStore.PackRegistry.pack(ref.id).rows
+          val rows = GraftRowStore.packs(ref.id).rows
           // rows passed through so a sorted-slot cache miss does not
           // deserialize the same (possibly spilled) pack a second time
           val (slots, nonNull) = GraftRowStore.SortedSlotRegistry
@@ -537,7 +510,7 @@ class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
       tombstones: Map[Long, BitSet],
       project: (Long, Int, InternalRow) => InternalRow): Iterator[InternalRow] =
     refs.iterator.flatMap { ref =>
-      val pack = GraftRowStore.PackRegistry.pack(ref.id)
+      val pack = GraftRowStore.packs(ref.id)
       val dead = tombstones.getOrElse(ref.id, BitSet.empty)
       Iterator.range(0, pack.numRows)
         .filterNot(dead.contains)
@@ -602,8 +575,8 @@ class GraftRowBatchWrite(tableName: String, schema: StructType, keyColumns: Seq[
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val table = GraftRowStore.getOrCreate(tableName, schema, keyColumns, bucketBy, numBuckets)
-    // record the LRU-overflow budget as layout metadata (the mutate also
-    // triggers the first enforcement pass)
+    // record the LRU-overflow budget as layout metadata (the swap also
+    // runs the first enforcement pass)
     if (table.snapshot.evictionBudget != evictionBudget ||
         table.snapshot.expireSeconds != expireSeconds) {
       table.mutate(_.copy(evictionBudget = evictionBudget,
@@ -617,8 +590,8 @@ class GraftRowBatchWrite(tableName: String, schema: StructType, keyColumns: Seq[
       // ONE atomic swap (see the column-store commit): concurrent
       // planners see the full old or full new table, never an empty
       // intermediate; the write schema + layout ride the same swap (ALTER)
-      table.replaceRefs(newRefs, Some(schema),
-        Some((keyColumns, bucketBy, numBuckets)))
+      table.replaceRefs(newRefs, _.copy(schema = schema, keyColumns = keyColumns,
+        bucketBy = bucketBy, numBuckets = numBuckets))
     else table.appendRefs(newRefs)
     // EXPIRE: reclaim packs whose TTL passed (no-op without a TTL)
     table.expireSweep()
@@ -626,7 +599,7 @@ class GraftRowBatchWrite(tableName: String, schema: StructType, keyColumns: Seq[
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftRowStore.PackRegistry.release(
+    GraftRowStore.packs.release(
       messages.flatMap { case GraftRowCommit(refs) => refs.map(_.id); case _ => Nil })
 }
 
@@ -650,10 +623,10 @@ class GraftRowWriterFactory(schema: StructType, keyColumns: Seq[String], buckete
         else if (bucketed) existing.getOrElse(bucketId, Vector.empty)
         else existing.values.flatten.toVector
       // packs resolved ONCE per writer task: a spilled pack deserializes
-      // from disk on every PackRegistry.pack call, so the per-record
+      // from disk on every fetch, so the per-record
       // PK-collision probe must not fetch per row
       private lazy val collidablePacks: Vector[(Long, GraftRowStore.RowPack)] =
-        collidable.map(r => r.id -> GraftRowStore.PackRegistry.pack(r.id))
+        collidable.map(r => r.id -> GraftRowStore.packs(r.id))
       private val buf = ArrayBuffer.empty[InternalRow]
       private val refs = ArrayBuffer.empty[GraftRowStore.PackRef]
 
@@ -678,14 +651,14 @@ class GraftRowWriterFactory(schema: StructType, keyColumns: Seq[String], buckete
 
       private def seal(): Unit = if (buf.nonEmpty) {
         val pack = new GraftRowStore.RowPack(buf.toArray, keyOrds, keyTypes)
-        refs += GraftRowStore.PackRef(GraftRowStore.PackRegistry.put(pack), bucketId,
+        refs += GraftRowStore.PackRef(GraftRowStore.packs.put(pack), bucketId,
           pack.numRows, createdAtMs = StoreClock.nowMs)
         buf.clear()
       }
 
       override def commit(): WriterCommitMessage = { seal(); GraftRowCommit(refs.toSeq) }
       override def abort(): Unit = {
-        GraftRowStore.PackRegistry.release(refs.map(_.id))
+        GraftRowStore.packs.release(refs.map(_.id))
         refs.clear()
         buf.clear()
       }

@@ -24,12 +24,22 @@ import scala.collection.mutable.ArrayBuffer
   *    before the swap keep their consistent snapshot (snapshot
   *    isolation, reference snapshot-transaction semantics).
   */
-object GraftStoreOps {
+object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
 
   val FORMAT: String = classOf[GraftColumnSource].getName
 
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.format(FORMAT).option("table", table).load()
+  protected def snapshotOf(table: String): GraftColumnStore.TableSnapshot =
+    GraftColumnStore(table).snapshot
+
+  /** A rewrite keeps the batch size and codec, and the sketch set minus
+    * any dropped column — explicit even when empty, so a dropped sketch
+    * column cannot linger via layout inheritance.
+    */
+  override protected def rewriteOptions(snap: GraftColumnStore.TableSnapshot,
+      r: Relayout): Seq[(String, String)] = Seq(
+    "batch_size" -> snap.batchSize.toString,
+    "compression" -> snap.compression,
+    "sketch_columns" -> r.surviving(snap.sketchBy).mkString(","))
 
   /** The scan plus its physical row address (hidden metadata columns).
     * Public for callers that compute a matched-row frame ONCE and thread
@@ -317,7 +327,8 @@ object GraftStoreOps {
     catch {
       case e: Throwable =>
         GraftColumnStore.takeStagedDeletes(token).foreach(d =>
-          GraftColumnStore.BatchRegistry.release(Nil, Nil, d.values.map(_.bitmapId)))
+          GraftColumnStore.BatchRegistry.release(
+            Retirees(Nil, bitmaps = d.values.map(_.bitmapId).toSeq)))
         throw e
     }
   }
@@ -414,7 +425,7 @@ object GraftStoreOps {
     else {
       // a writer won the race: discard this pass's payloads, next
       // maintenance run sees the fresh snapshot
-      GraftColumnStore.BatchRegistry.release(newRefs.map(_.id), Nil)
+      GraftColumnStore.batches.release(newRefs.map(_.id))
       0
     }
   }
@@ -462,96 +473,6 @@ object GraftStoreOps {
     */
   def dropIndex(spark: SparkSession, table: String): Unit =
     GraftColumnStore(table).mutate(_.copy(sortedBy = Nil))
-
-  /** ALTER-style rewrite that PRESERVES the physical layout — codec,
-    * eviction budget, TTL, batch size, buckets, keys, and the sketch
-    * set (minus any dropped column, passed EXPLICITLY so a stale entry
-    * cannot linger in the inherited layout). The naive
-    * rebuild-through-createTable reset all of these to defaults.
-    * Clustering (sort/zorder) is physical row order the rewrite
-    * destroys — re-run CREATE INDEX / OPTIMIZE ZORDER afterwards.
-    */
-  def alterRewrite(spark: SparkSession, table: String,
-      transform: DataFrame => DataFrame,
-      renames: Map[String, String] = Map.empty): Unit =
-    relayoutRewrite(spark, table, transform, renames, None)
-
-  /** ALTER TABLE t REBUCKET n [BY (cols)]: re-hash a live table into a
-    * new bucket count (and optionally new bucket columns) in ONE atomic
-    * layout-changing rewrite — everything else (codec, TTL, sketch set,
-    * keys, batch size, data) survives. This is the co-location remedy
-    * the SPJ bucket-count matrix demands (PERF_NOTES §18): two tables
-    * bucketed on the same key but DIFFERENT counts forfeit the
-    * storage-partitioned join entirely, so re-align one side once and
-    * every later join/aggregation on the key plans exchange-free. At
-    * 100 TB this is the "repartition the table, not every query" lever.
-    * NOTE: a table that others COLOCATE_WITH must keep its partners
-    * aligned — rebucket them together.
-    */
-  def rebucket(spark: SparkSession, table: String, buckets: Int,
-      bucketBy: Seq[String] = Nil): Unit = {
-    val snap = GraftColumnStore(table).snapshot
-    val cols = if (bucketBy.nonEmpty) bucketBy else snap.bucketBy
-    require(cols.nonEmpty,
-      s"rebucket($table): table is unbucketed — name the bucket columns (BY (cols))")
-    require(buckets > 0, s"rebucket($table): buckets must be > 0, got $buckets")
-    cols.foreach(c => require(snap.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-      s"rebucket($table): no such column $c"))
-    relayoutRewrite(spark, table, identity, Map.empty, Some((cols, buckets)))
-  }
-
-  private def relayoutRewrite(spark: SparkSession, table: String,
-      transform: DataFrame => DataFrame,
-      renames: Map[String, String],
-      rebucketTo: Option[(Seq[String], Int)]): Unit = {
-    org.apache.spark.sql.graft.GrantRegistry.check(table, "ALTER")
-    val snap = GraftColumnStore(table).snapshot
-    val next = transform(read(spark, table))
-    // RENAME COLUMN travels as an explicit old->new map so layout
-    // metadata (keys, buckets, sketch set) FOLLOWS the renamed column
-    // instead of silently dropping off the layout when its old name
-    // disappears from the schema
-    def follow(c: String): String = renames.collectFirst {
-      case (from, to) if from.equalsIgnoreCase(c) => to
-    }.getOrElse(c)
-    val keyColumns = snap.keyColumns.map(follow)
-    val bucketBy = rebucketTo.map(_._1).getOrElse(snap.bucketBy.map(follow))
-    val numBuckets = rebucketTo.map(_._2).getOrElse(snap.numBuckets)
-    val sketchBy = snap.sketchBy.map(follow)
-    (keyColumns ++ bucketBy).foreach(c =>
-      require(next.columns.contains(c),
-        s"alter($table) cannot drop key/bucket column $c"))
-    // validate the NEW shape before any mutation: a failure below this
-    // point must leave the table exactly as it was
-    next.schema.fields.foreach(f =>
-      require(GraftColumnStore.supportsType(f.dataType),
-        s"alter($table): column ${f.name} has unsupported type ${f.dataType}"))
-    // materialize first — the transformed plan reads the table; the
-    // commit then swaps refs AND schema atomically (truncate-overwrite,
-    // same full-old-or-full-new guarantee as compact; like compact, a
-    // commit landing between this read and the overwrite is superseded)
-    val frozen = next.localCheckpoint(true)
-    try {
-      var w = frozen.write.format(FORMAT).option("table", table)
-        // relayout: the options below must WIN over the existing layout
-        // (a rename changes the key/bucket column names it commits)
-        .option("relayout", "true")
-        .option("batch_size", snap.batchSize.toString)
-        .option("compression", snap.compression)
-        .option("eviction_budget_bytes", snap.evictionBudget.toString)
-        .option("expire_seconds", snap.expireSeconds.toString)
-        // explicit even when empty: a dropped sketch column must not
-        // linger via layout inheritance (parse filters empty entries)
-        .option("sketch_columns",
-          sketchBy.filter(next.columns.contains).mkString(","))
-      if (keyColumns.nonEmpty)
-        w = w.option("key_columns", keyColumns.mkString(","))
-      if (bucketBy.nonEmpty)
-        w = w.option("partition_by", bucketBy.mkString(","))
-          .option("buckets", numBuckets.toString)
-      w.mode("overwrite").save()
-    } finally graft.operators.CheckpointScope.unpersist(frozen)
-  }
 
   /** ALTER TABLE SET/UNSET TBLPROPERTIES: live-tune the store tunables
     * that need NO data rewrite — retention (`expire_seconds`), the LRU
@@ -604,16 +525,13 @@ object GraftStoreOps {
         compression = codec.getOrElse(s.compression),
         batchSize = batchSize.getOrElse(s.batchSize),
         sketchBy = sketchBy.getOrElse(s.sketchBy)))
-      if (expire.isDefined) GraftColumnStore.expireSweep(table)
-      if (budget.isDefined) GraftColumnStore.enforceEviction(table)
+      if (expire.isDefined) t.expireSweep()
     } else {
       val t = GraftRowStore(table)
       t.mutate(s => s.copy(
         expireSeconds = expire.getOrElse(s.expireSeconds),
         evictionBudget = budget.getOrElse(s.evictionBudget)))
       if (expire.isDefined) t.expireSweep()
-      budget.filter(_ > 0).foreach(b =>
-        GraftRowStore.PackRegistry.enforceBudget(t.snapshot.refs.map(_.id), b))
     }
   }
 
@@ -622,8 +540,8 @@ object GraftStoreOps {
     * holds the table. Returns sealed units retired.
     */
   def expireSweep(spark: SparkSession, table: String): Int =
-    if (GraftColumnStore.get(table).isDefined) GraftColumnStore.expireSweep(table)
-    else GraftRowStore.get(table).map(_.expireSweep()).getOrElse(0)
+    GraftColumnStore.get(table).orElse(GraftRowStore.get(table))
+      .map(_.expireSweep()).getOrElse(0)
 
   /** APPROX COUNT DISTINCT from batch metadata alone: union the
     * per-(batch, column) HLL digests a `sketch_columns` table maintains
@@ -828,9 +746,9 @@ object GraftStoreOps {
         // claim makes compact() double-rewrite (sort_by then re-z) and
         // checkpoints record contradictory sort_by + zorder_by layout
         t.mutate(_.copy(zorderedBy = columns, sortedBy = Nil, batchSize = sealSize))
-        GraftColumnStore.enforceEviction(table)
+        GraftColumnStore.enforceHeapPool(table)
       } catch { case e: Throwable =>
-        GraftColumnStore.BatchRegistry.release(newRefs.map(_.id), Nil)
+        GraftColumnStore.batches.release(newRefs.map(_.id))
         throw e
       }
     }

@@ -17,7 +17,7 @@ class BootstrapSpec extends SparkTestBase {
   private def g = GraftSession(spark)
 
   test("bootstrap restores checkpoint and epoch tables from a diskstore sweep; existing names win") {
-    val dir = java.nio.file.Files.createTempDirectory("boot_ds").toString
+    val dir = tempDir("boot_ds").toString
     g.sql(s"CREATE DISKSTORE boot_ds1 ('$dir')")
     // a checkpointed column table and an epoch-published one, both under
     // the diskstore-default layout (<dir>/<table>)
@@ -62,7 +62,7 @@ class BootstrapSpec extends SparkTestBase {
   }
 
   test("when a table has BOTH a checkpoint and newer epochs, the newest artifact wins") {
-    val dir = java.nio.file.Files.createTempDirectory("boot_both").toString
+    val dir = tempDir("boot_both").toString
     g.sql(s"CREATE DISKSTORE boot_ds2 ('$dir')")
     g.sql("CREATE TABLE boot_c (k bigint, v bigint) USING column " +
       "OPTIONS (partition_by 'k', buckets '4', diskstore 'boot_ds2')")
@@ -85,7 +85,7 @@ class BootstrapSpec extends SparkTestBase {
   }
 
   test("a row table's constraints ride bootstrap recovery") {
-    val dir = java.nio.file.Files.createTempDirectory("boot_row").toString
+    val dir = tempDir("boot_row").toString
     g.sql(s"CREATE DISKSTORE boot_ds3 ('$dir')")
     g.sql("CREATE TABLE boot_r (pk bigint primary key, s string not null) " +
       "USING row OPTIONS (diskstore 'boot_ds3')")
@@ -104,7 +104,7 @@ class BootstrapSpec extends SparkTestBase {
 
   test("a matview's identity rides epoch publishes through bootstrap recovery") {
     import org.apache.spark.sql.graft.store.MatViews
-    val dir = java.nio.file.Files.createTempDirectory("boot_mv").toString
+    val dir = tempDir("boot_mv").toString
     g.sql(s"CREATE DISKSTORE boot_ds5 ('$dir')")
     g.sql("CREATE TABLE boot_mb (k bigint, v bigint) USING column " +
       "OPTIONS (partition_by 'k', buckets '4', diskstore 'boot_ds5')")
@@ -147,7 +147,7 @@ class BootstrapSpec extends SparkTestBase {
   }
 
   test("bootstrapOnInit: re-registering a diskstore recovers its tables with zero further calls") {
-    val dir = java.nio.file.Files.createTempDirectory("boot_auto").toString
+    val dir = tempDir("boot_auto").toString
     g.sql(s"CREATE DISKSTORE boot_ds6 ('$dir')")
     g.sql("CREATE TABLE boot_auto (k bigint, v bigint) USING column " +
       "OPTIONS (partition_by 'k', buckets '4', diskstore 'boot_ds6')")
@@ -171,7 +171,7 @@ class BootstrapSpec extends SparkTestBase {
 
   test("bootstrap never clobbers a live JVM-GLOBAL name owned by another session") {
     import org.apache.spark.sql.graft.store.MatViews
-    val dir = java.nio.file.Files.createTempDirectory("boot_gbl").toString
+    val dir = tempDir("boot_gbl").toString
     g.sql(s"CREATE DISKSTORE boot_ds7 ('$dir')")
     // a durable epoch artifact for the name exists on disk...
     g.sql("CREATE TABLE boot_x (k bigint, v bigint) USING column " +
@@ -201,7 +201,7 @@ class BootstrapSpec extends SparkTestBase {
   }
 
   test("an attached replica under the name wins over bootstrap (deliberate attach is not replaced)") {
-    val dir = java.nio.file.Files.createTempDirectory("boot_rep").toString
+    val dir = tempDir("boot_rep").toString
     g.sql(s"CREATE DISKSTORE boot_ds4 ('$dir')")
     g.sql("CREATE TABLE boot_p (k bigint, v bigint) USING column " +
       "OPTIONS (partition_by 'k', buckets '4', diskstore 'boot_ds4')")

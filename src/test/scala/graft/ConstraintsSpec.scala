@@ -485,7 +485,7 @@ class ConstraintsSpec extends SparkTestBase {
   // ---- checkpoint / restore ----
 
   test("identity high-water mark and enforcement survive checkpoint -> restore") {
-    val dir = java.nio.file.Files.createTempDirectory("c_ckpt").toString
+    val dir = tempDir("c_ckpt").toString
     g.sql("CREATE TABLE c_ckpt (id bigint generated by default as identity " +
       "(start with 100, increment by 10), v string not null, " +
       "email string unique, primary key (id)) USING row")

@@ -11,11 +11,7 @@ import org.apache.spark.sql.graft.store.Diskstores
   */
 class DiskstoreSpec extends SparkTestBase {
 
-  private def tmp(name: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(name)
-    p.toFile.deleteOnExit()
-    p.toString
-  }
+  private def tmp(name: String): String = tempDir(name).toString
 
   test("DDL + binding + no-dir checkpoint/restore round-trip") {
     val g = GraftSession(spark)

@@ -122,7 +122,7 @@ class GraftStoreSpec extends SparkTestBase {
     g.createTable("s_dec", dec, keyColumns = Seq("l_orderkey", "l_linenumber"))
     assert(g.isStoreBacked("s_dec"), "decimal schema must not fall back to cached DF")
     val snap = GraftColumnStore("s_dec").snapshot
-    val batch = GraftColumnStore.BatchRegistry.batch(snap.refs.head.id)
+    val batch = GraftColumnStore.batches(snap.refs.head.id)
     assert(batch.columns(2).isInstanceOf[GraftColumnStore.DecimalColumn],
       s"price must use the scaled-long decimal encoding, got ${batch.columns(2).getClass}")
     // exact roundtrip: decimal sums are exact integers in cents
@@ -696,7 +696,7 @@ class GraftStoreSpec extends SparkTestBase {
     assert(zipped.sizeBytes < plain.sizeBytes,
       s"lz4 snapshot ${zipped.sizeBytes}B must undercut plain ${plain.sizeBytes}B")
     val some = zipped.refs.flatMap(r =>
-      GraftColumnStore.BatchRegistry.batch(r.id).columns.collect {
+      GraftColumnStore.batches(r.id).columns.collect {
         case c: GraftColumnStore.CompressedColumn => c
       })
     assert(some.nonEmpty, "at least one sealed column should be CompressedColumn")
@@ -719,7 +719,7 @@ class GraftStoreSpec extends SparkTestBase {
     val after = GraftColumnStore("s_lz4").snapshot
     assert(after.compression == "lz4")
     assert(after.refs.flatMap(r =>
-      GraftColumnStore.BatchRegistry.batch(r.id).columns.collect {
+      GraftColumnStore.batches(r.id).columns.collect {
         case c: GraftColumnStore.CompressedColumn => c
       }).nonEmpty, "compaction must re-deflate sealed columns")
     assert(g.table("s_lz4").groupBy("lang").count().orderBy("lang").collect().toSeq == expect)
@@ -737,7 +737,7 @@ class GraftStoreSpec extends SparkTestBase {
     assert(snap.evictionBudget == 50000L)
     assert(snap.residentBytes <= 50000L,
       s"resident ${snap.residentBytes}B must fit the 50000B budget")
-    assert(snap.refs.exists(r => !GraftColumnStore.BatchRegistry.isResident(r.id)),
+    assert(snap.refs.exists(r => !GraftColumnStore.batches.isResident(r.id)),
       "past-budget batches must be on the disk tier")
     // scans fault spilled batches back transiently — answers unchanged
     assert(g.table("s_evict").count() == expectCount)
@@ -791,9 +791,9 @@ class GraftStoreSpec extends SparkTestBase {
         "OPTIONS (eviction_by 'LRUHEAPPERCENT', overflow 'true') AS SELECT * FROM ev_src")
       val pool = Seq("s_heap1", "s_heap2")
         .flatMap(t => GraftColumnStore(t).snapshot.refs.map(_.id))
-      assert(pool.map(GraftColumnStore.BatchRegistry.residentBytes).sum <= 50000L,
+      assert(pool.map(GraftColumnStore.batches.residentBytes).sum <= 50000L,
         "the global heap pool must be enforced across tables")
-      assert(pool.exists(id => !GraftColumnStore.BatchRegistry.isResident(id)))
+      assert(pool.exists(id => !GraftColumnStore.batches.isResident(id)))
       // both tables still answer exactly from the mixed tiers
       assert(spark.table("s_heap1").count() == spark.table("ev_src").count())
       assert(spark.table("s_heap2").count() == spark.table("ev_src").count())
@@ -962,7 +962,7 @@ class GraftStoreSpec extends SparkTestBase {
       partitionBy = Seq("o_orderkey"), buckets = 4, compression = "lz4")
     g.update("s_ckpt", col("o_orderstatus") === "O", "o_totalprice" -> lit(5.0))
     val expect = g.table("s_ckpt").agg(sum(col("o_totalprice"))).head().getDouble(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
+    val dir = tempDir("graft-ckpt-").toString
     g.checkpointTable("s_ckpt", dir)
     g.dropTable("s_ckpt") // simulate a fresh process
     val restored = g.restoreTable("s_ckpt", dir)

@@ -35,7 +35,7 @@ class IncrementalPublishSpec extends SparkTestBase {
         .map(_.split(":", -1).last))
 
   test("append dumps only the new batches; unchanged ones are shared by reference") {
-    val root = java.nio.file.Files.createTempDirectory("inc_pub").toString
+    val root = tempDir("inc_pub").toString
     write("inc_src", 0, 10000)
     assert(LiveCheckpoint.publish(spark, "inc_src", root, incremental = true) == 0L)
     val files0 = payloadNames(root)
@@ -63,7 +63,7 @@ class IncrementalPublishSpec extends SparkTestBase {
   }
 
   test("a delete re-dumps only the touched batches; content is exact after attach") {
-    val root = java.nio.file.Files.createTempDirectory("inc_del").toString
+    val root = tempDir("inc_del").toString
     write("inc_d", 0, 8000)
     assert(LiveCheckpoint.publish(spark, "inc_d", root, incremental = true) == 0L)
     val m0 = manifestPayloads(root, 0L).filter(_.nonEmpty).toSet
@@ -85,7 +85,7 @@ class IncrementalPublishSpec extends SparkTestBase {
   }
 
   test("retention GCs payloads no kept epoch references; kept epochs still attach") {
-    val root = java.nio.file.Files.createTempDirectory("inc_gc").toString
+    val root = tempDir("inc_gc").toString
     write("inc_g", 0, 2000)
     (0 until 4).foreach { i =>
       // every publish mutates everything (update touches all batches),
@@ -113,7 +113,7 @@ class IncrementalPublishSpec extends SparkTestBase {
   }
 
   test("epochDiff answers what-changed from the manifests alone") {
-    val root = java.nio.file.Files.createTempDirectory("inc_diff").toString
+    val root = tempDir("inc_diff").toString
     write("inc_df", 0, 8000)
     assert(LiveCheckpoint.publish(spark, "inc_df", root, incremental = true) == 0L)
     // epoch 1: an append (new seals) plus a delete (re-dumps its batch)
@@ -134,7 +134,7 @@ class IncrementalPublishSpec extends SparkTestBase {
 
   test("attachView serves epochs zero-copy: O(manifest) attach, pushdown scans, advances, refuses writes") {
     val g = GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("inc_view").toString
+    val root = tempDir("inc_view").toString
     import spark.implicits._
     write("inc_v", 0, 20000)
     assert(LiveCheckpoint.publish(spark, "inc_v", root, incremental = true) == 0L)
@@ -182,7 +182,7 @@ class IncrementalPublishSpec extends SparkTestBase {
     // attach verifies it, so every iteration is its own oracle. Reuse
     // is exercised incidentally (untouched buckets carry over).
     val rnd = new scala.util.Random(20260815L)
-    val root = java.nio.file.Files.createTempDirectory("inc_fuzz").toString
+    val root = tempDir("inc_fuzz").toString
     write("inc_fz", 0, 4000)
     var hi = 4000L
     var expected = (0L until 4000L).map(i => (i % 8, i * 2)).toSet
@@ -228,7 +228,7 @@ class IncrementalPublishSpec extends SparkTestBase {
     // parquet sidecar carries the SAME entries and every consumer —
     // attach, reuse map, epochDiff, retention GC — reads through the one
     // shared decoder. Threshold dropped to 2 so a small table crosses it.
-    val root = java.nio.file.Files.createTempDirectory("inc_side").toString
+    val root = tempDir("inc_side").toString
     spark.conf.set(LiveCheckpoint.SIDECAR_THRESHOLD_KEY, "2")
     try {
       write("inc_sc", 0, 10000) // 4 buckets => >2 payload entries
@@ -270,7 +270,7 @@ class IncrementalPublishSpec extends SparkTestBase {
 
   test("session face: incremental publish/attach with constraints; row tables fall back to full") {
     val g = GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("inc_sess").toString
+    val root = tempDir("inc_sess").toString
     import spark.implicits._
     g.sql("CREATE TABLE inc_pub (pk bigint, v string not null) USING column " +
       "OPTIONS (partition_by 'pk', buckets '4')")
@@ -297,7 +297,7 @@ class IncrementalPublishSpec extends SparkTestBase {
         .write.format(rfmt).option("table", "inc_row")
         .option("key_columns", "rk").option("partition_by", "rk")
         .option("buckets", "4").mode(mode).save()
-    val root = java.nio.file.Files.createTempDirectory("inc_row").toString
+    val root = tempDir("inc_row").toString
     writeRows(0, 2000, "overwrite")
     assert(LiveCheckpoint.publish(spark, "inc_row", root, incremental = true) == 0L)
     val m0 = manifestPayloads(root, 0L).filter(_.nonEmpty).toSet

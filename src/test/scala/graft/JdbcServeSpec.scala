@@ -19,7 +19,7 @@ class JdbcServeSpec extends SparkTestBase {
   // binds) — share one across the suite's tests
   private lazy val port: Int = {
     System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("jdbc_meta").toString)
+      tempDir("jdbc_meta").toString)
     val p = {
       val s = new java.net.ServerSocket(0)
       try s.getLocalPort finally s.close()
@@ -72,7 +72,7 @@ class JdbcServeSpec extends SparkTestBase {
           .head().getLong(0) == 1L)
         // and a replica attached in THIS session refuses the client's
         // write too — the store-level guard crosses protocol boundaries
-        val root = java.nio.file.Files.createTempDirectory("jdbc_rep").toString
+        val root = tempDir("jdbc_rep").toString
         g.publishTable("jdbc_t", root)
         g.attachTable("jdbc_rep", root)
         val e = intercept[java.sql.SQLException](st.executeUpdate(
@@ -94,7 +94,7 @@ class JdbcServeSpec extends SparkTestBase {
     try {
       locally {
         val st = conn.createStatement()
-        val root = java.nio.file.Files.createTempDirectory("jdbc_root").toString
+        val root = tempDir("jdbc_root").toString
         st.execute("CREATE TABLE jdbc_pub (k bigint, v bigint) USING column " +
           "OPTIONS (partition_by 'k', buckets '4')")
         st.executeUpdate("INSERT INTO graft.jdbc_pub " +

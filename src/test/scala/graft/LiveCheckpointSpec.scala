@@ -23,7 +23,7 @@ class LiveCheckpointSpec extends SparkTestBase {
       .mode("overwrite").save()
 
   test("publish/attach round-trips; the served snapshot advances with commits") {
-    val root = java.nio.file.Files.createTempDirectory("lc_root").toString
+    val root = tempDir("lc_root").toString
     write("lc_src", 1000)
     assert(LiveCheckpoint.publish(spark, "lc_src", root) == 0L)
     assert(LiveCheckpoint.attachLatest(spark, "lc_srv", root) == 0L)
@@ -46,7 +46,7 @@ class LiveCheckpointSpec extends SparkTestBase {
   }
 
   test("an epoch without its marker is invisible; a tampered epoch aborts the attach") {
-    val root = java.nio.file.Files.createTempDirectory("lc_torn").toString
+    val root = tempDir("lc_torn").toString
     write("lc_t", 500)
     LiveCheckpoint.publish(spark, "lc_t", root)
     // an in-flight (torn) epoch: directory + data, NO marker
@@ -69,7 +69,7 @@ class LiveCheckpointSpec extends SparkTestBase {
   }
 
   test("row tables publish and attach too (provider dispatch from the layout manifest)") {
-    val root = java.nio.file.Files.createTempDirectory("lc_row").toString
+    val root = tempDir("lc_row").toString
     import spark.implicits._
     (1L to 500L).map(i => (i, s"v$i")).toDF("pk", "v")
       .write.format(org.apache.spark.sql.graft.store.GraftRowOps.FORMAT)
@@ -91,7 +91,7 @@ class LiveCheckpointSpec extends SparkTestBase {
 
   test("session face: publishTable to the bound diskstore, attachTable serves + enforces constraints") {
     val g = GraftSession(spark)
-    val dsDir = java.nio.file.Files.createTempDirectory("lc_ds").toString
+    val dsDir = tempDir("lc_ds").toString
     g.sql(s"CREATE DISKSTORE lc_store ('$dsDir')")
     import spark.implicits._
     g.sql("CREATE TABLE lc_pub (pk bigint primary key, v string not null) " +
@@ -128,7 +128,7 @@ class LiveCheckpointSpec extends SparkTestBase {
 
   test("DSv2 and store-ops write paths refuse an attached replica (store-level guard)") {
     val g = GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("lc_dsv2").toString
+    val root = tempDir("lc_dsv2").toString
     import spark.implicits._
     import org.apache.spark.sql.graft.store.GraftStoreOps
     write("lc_gpub", 50)
@@ -171,7 +171,7 @@ class LiveCheckpointSpec extends SparkTestBase {
 
   test("re-attach drops the old epoch's constraints when the publisher dropped them") {
     val g = GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("lc_cons").toString
+    val root = tempDir("lc_cons").toString
     import spark.implicits._
     import org.apache.spark.sql.graft.Constraints
     g.sql("CREATE TABLE lc_cpub (pk bigint, v string not null) USING column")
@@ -196,7 +196,7 @@ class LiveCheckpointSpec extends SparkTestBase {
 
   test("SQL faces: PUBLISH TABLE / ATTACH TABLE / ATTACH VIEW ... EPOCH n VERIFY") {
     val g = GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("lc_sql").toString
+    val root = tempDir("lc_sql").toString
     import spark.implicits._
     g.sql("CREATE TABLE lc_sqlt (k bigint, v bigint) USING column " +
       "OPTIONS (partition_by 'k', buckets '4')")
@@ -224,7 +224,7 @@ class LiveCheckpointSpec extends SparkTestBase {
   }
 
   test("a claimed epoch number is never co-written: the publisher advances past it") {
-    val root = java.nio.file.Files.createTempDirectory("lc_claim").toString
+    val root = tempDir("lc_claim").toString
     write("lc_cl", 100)
     assert(LiveCheckpoint.publish(spark, "lc_cl", root) == 0L)
     // a concurrent (or crashed) publisher holds the claim on epoch 1:
@@ -239,7 +239,7 @@ class LiveCheckpointSpec extends SparkTestBase {
   }
 
   test("retention prunes old epochs but numbering continues") {
-    val root = java.nio.file.Files.createTempDirectory("lc_keep").toString
+    val root = tempDir("lc_keep").toString
     write("lc_k", 100)
     (0 until 5).foreach { i =>
       assert(LiveCheckpoint.publish(spark, "lc_k", root, keep = 2) == i.toLong)

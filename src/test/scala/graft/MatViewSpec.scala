@@ -432,8 +432,8 @@ class MatViewSpec extends SparkTestBase {
     val q = "SELECT k, sum(v) AS sv, count(*) AS n FROM mvb10 GROUP BY k"
     assert(usesMatView(q, "mv10"))
     val truth = direct(q)
-    val dBase = java.nio.file.Files.createTempDirectory("mv_ck_b").toString
-    val dMv = java.nio.file.Files.createTempDirectory("mv_ck_v").toString
+    val dBase = tempDir("mv_ck_b").toString
+    val dMv = tempDir("mv_ck_v").toString
     g.checkpointTable("mvb10", dBase)
     g.checkpointTable("mv10", dMv)
     // simulate the cold JVM: drop the base (cascades the view + its
@@ -548,7 +548,7 @@ class MatViewSpec extends SparkTestBase {
   test("a reused checkpoint dir does not leak matview status onto a plain table") {
     freshBase("mvb14", rows = 100)
     g.sql("CREATE MATERIALIZED VIEW mv14 AS SELECT k, sum(v) AS sv FROM mvb14 GROUP BY k")
-    val dir = java.nio.file.Files.createTempDirectory("mv_reuse").toString
+    val dir = tempDir("mv_reuse").toString
     g.checkpointTable("mv14", dir) // writes matview.properties
     g.dropTable("mvb14") // cascades mv14
     // the NAME is reused for a plain table checkpointed into the SAME dir
@@ -821,7 +821,7 @@ class MatViewSpec extends SparkTestBase {
     freshBase("mvb17", rows = 200)
     g.sql("CREATE MATERIALIZED VIEW mv17 AS SELECT k, sum(v) AS sv " +
       "FROM mvb17 WHERE cat = 'c0' GROUP BY k")
-    val dir = java.nio.file.Files.createTempDirectory("mv_pred_ck").toString
+    val dir = tempDir("mv_pred_ck").toString
     g.checkpointTable("mv17", dir)
     g.dropTable("mvb17") // cascades mv17
     freshBase("mvb17", rows = 200)
@@ -1037,7 +1037,7 @@ class MatViewSpec extends SparkTestBase {
     assert(!usesMatView(qOther, "mvj2"))
     assert(sorted(spark.sql(qOther)) == direct(qOther))
     // sidecar roundtrip: the join definition rides checkpoint/restore
-    val dir = java.nio.file.Files.createTempDirectory("mvj_ck").toString
+    val dir = tempDir("mvj_ck").toString
     g.checkpointTable("mvj2", dir)
     g.dropMaterializedView("mvj2")
     g.restoreTable("mvj2", dir)

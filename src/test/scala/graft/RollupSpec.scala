@@ -174,7 +174,7 @@ class RollupSpec extends SparkTestBase {
     assert(GraftStoreOps.read(spark, "ru_topt").count() == 500)
     // the policy is part of the table's checkpoint: a restored table
     // (fresh registry entry) keeps rolling its tail up
-    val dir = java.nio.file.Files.createTempDirectory("ru_ckpt").toString
+    val dir = tempDir("ru_ckpt").toString
     GraftStoreOps.checkpoint(spark, "ru_topt", dir)
     GraftColumnStore.drop("ru_topt")
     assert(GraftColumnStore.rollupThreshold("ru_topt") == 0)

@@ -260,7 +260,7 @@ class RowTableSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     GraftRowOps.createIndex(spark, "r_ckpt", "s_acctbal")
     g.update("r_ckpt", col("s_nationkey") === 0, "s_acctbal" -> lit(1.5))
     val expect = g.table("r_ckpt").orderBy("s_suppkey").collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-rckpt-").toString
+    val dir = tempDir("graft-rckpt-").toString
     g.checkpointTable("r_ckpt", dir)
     g.dropTable("r_ckpt")
     g.restoreTable("r_ckpt", dir)
@@ -281,8 +281,8 @@ class RowTableSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       evictionBudgetBytes = 4000L)
     val snap = GraftRowStore("r_evict").snapshot
     assert(snap.evictionBudget == 4000L)
-    assert(snap.refs.map(r => GraftRowStore.PackRegistry.residentBytes(r.id)).sum <= 4000L)
-    assert(snap.refs.exists(r => !GraftRowStore.PackRegistry.isResident(r.id)),
+    assert(snap.refs.map(r => GraftRowStore.packs.residentBytes(r.id)).sum <= 4000L)
+    assert(snap.refs.exists(r => !GraftRowStore.packs.isResident(r.id)),
       "past-budget packs must be on the disk tier")
     // point lookup faults the pack back transiently
     val row = g.table("r_evict").filter(col("c_custkey") === 42L)
@@ -298,7 +298,7 @@ class RowTableSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(g.table("r_evict").count() == cust.count())
     // budget still enforced after the upsert's mutation swap
     val after = GraftRowStore("r_evict").snapshot
-    assert(after.refs.map(r => GraftRowStore.PackRegistry.residentBytes(r.id)).sum <= 4000L)
+    assert(after.refs.map(r => GraftRowStore.packs.residentBytes(r.id)).sum <= 4000L)
     g.dropTable("r_evict")
   }
 }

@@ -27,7 +27,7 @@ class ServingLifecycleSpec extends SparkTestBase {
       .mode("overwrite").save()
 
   test("an unpinned view survives the publisher outrunning retention: servingRead re-attaches and retries") {
-    val root = java.nio.file.Files.createTempDirectory("srv_race").toString
+    val root = tempDir("srv_race").toString
     write("srv_r", 4000)
     assert(LiveCheckpoint.publish(spark, "srv_r", root,
       keep = 1, incremental = true) == 0L)
@@ -52,7 +52,7 @@ class ServingLifecycleSpec extends SparkTestBase {
   }
 
   test("a PINNED view raises the typed EpochPrunedException — the pin is a reproducibility promise") {
-    val root = java.nio.file.Files.createTempDirectory("srv_pin").toString
+    val root = tempDir("srv_pin").toString
     write("srv_p", 2000)
     assert(LiveCheckpoint.publish(spark, "srv_p", root,
       keep = 1, incremental = true) == 0L)
@@ -73,7 +73,7 @@ class ServingLifecycleSpec extends SparkTestBase {
   }
 
   test("a missing file under a STILL-COMMITTED epoch is corruption: the original error propagates") {
-    val root = java.nio.file.Files.createTempDirectory("srv_corr").toString
+    val root = tempDir("srv_corr").toString
     write("srv_c", 2000)
     // full (non-incremental) epoch: data lives under epoch_0/data
     assert(LiveCheckpoint.publish(spark, "srv_c", root) == 0L)
@@ -89,7 +89,7 @@ class ServingLifecycleSpec extends SparkTestBase {
   }
 
   test("refreshView advances an attached view to the newest committed epoch") {
-    val root = java.nio.file.Files.createTempDirectory("srv_ref").toString
+    val root = tempDir("srv_ref").toString
     write("srv_f", 1000)
     assert(LiveCheckpoint.publish(spark, "srv_f", root, incremental = true) == 0L)
     assert(g.attachView("srv_fview", root) == 0L)
@@ -102,7 +102,7 @@ class ServingLifecycleSpec extends SparkTestBase {
   }
 
   test("sys.replicas is JVM-global beside the guard: another session's attach is visible with its owner") {
-    val root = java.nio.file.Files.createTempDirectory("srv_sess").toString
+    val root = tempDir("srv_sess").toString
     write("srv_s", 500)
     assert(LiveCheckpoint.publish(spark, "srv_s", root) == 0L)
     val spark2 = spark.newSession()
@@ -125,7 +125,7 @@ class ServingLifecycleSpec extends SparkTestBase {
   }
 
   test("a DSv2 CREATE TABLE supersedes a stale replica flag left by attachView") {
-    val root = java.nio.file.Files.createTempDirectory("srv_cre").toString
+    val root = tempDir("srv_cre").toString
     write("srv_x", 100)
     assert(LiveCheckpoint.publish(spark, "srv_x", root) == 0L)
     assert(g.attachView("srv_xview", root) == 0L)
@@ -143,7 +143,7 @@ class ServingLifecycleSpec extends SparkTestBase {
   }
 
   test("an incremental publish of an emptied table falls back to the schema-carrying full form") {
-    val root = java.nio.file.Files.createTempDirectory("srv_empty").toString
+    val root = tempDir("srv_empty").toString
     write("srv_e", 1000)
     assert(LiveCheckpoint.publish(spark, "srv_e", root, incremental = true) == 0L)
     // every live row deleted: an all-empty payload manifest could never

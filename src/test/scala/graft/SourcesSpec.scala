@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkTestBase {
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("csv roundtrip with header + explicit schema") {
     val dir = tmp("graft_csv")

@@ -1,17 +1,33 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for ScalaTest suites (one per suite). */
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   val sf: String = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = SparkTestBase.session
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp directory, deleted with its contents when the suite ends. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
 
   /** Runs `f` with session confs set, restoring the previous values. */
   def withConf[T](kvs: (String, String)*)(f: => T): T = {

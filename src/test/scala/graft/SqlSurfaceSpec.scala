@@ -233,7 +233,7 @@ class SqlSurfaceSpec extends SparkTestBase {
     // empty store-backed table, and warn-and-continue on the ops options.
     // DISKSTORE is honored now (r8), so — exactly like the reference —
     // the named store must exist before a table can target it
-    val dsDir = java.nio.file.Files.createTempDirectory("graft-ddlp-")
+    val dsDir = tempDir("graft-ddlp-")
     g.sql(s"CREATE DISKSTORE IF NOT EXISTS ds1 ('$dsDir')")
     g.sql("""CREATE TABLE ddl_parity (
       |  o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)
@@ -270,7 +270,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("UPDATE/DELETE on an external (unmanaged view) table swap the view") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext").toFile
+    val dir = tempDir("graft_ext").toFile
     Tables.load(spark, sf, "supplier").write.mode("overwrite")
       .parquet(dir.getAbsolutePath)
     spark.read.parquet(dir.getAbsolutePath).createOrReplaceTempView("ext_supp")
@@ -292,7 +292,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("repeated external DML keeps the view plan depth bounded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext_chain").toFile
+    val dir = tempDir("graft_ext_chain").toFile
     Tables.load(spark, sf, "supplier").write.mode("overwrite")
       .parquet(dir.getAbsolutePath)
     spark.read.parquet(dir.getAbsolutePath).createOrReplaceTempView("ext_chain")
@@ -321,7 +321,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("UPDATE/DELETE on a persistent file-source catalog table: copy-on-write") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_cow").toFile
+    val wh = tempDir("graft_cow").toFile
     Tables.load(spark, sf, "supplier").write.mode("overwrite")
       .option("path", new java.io.File(wh, "cat_supp").getAbsolutePath)
       .saveAsTable("cat_supp")
@@ -345,7 +345,7 @@ class SqlSurfaceSpec extends SparkTestBase {
 
   test("stream WINDOW (DURATION, SLIDE) clause rewrites to window() grouping") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_win").toFile
+    val dir = tempDir("graft_win").toFile
     Files.writeString(new java.io.File(dir, "a.json").toPath,
       """{"ts": "2026-01-01T00:00:05.000Z", "v": 1.0}
         |{"ts": "2026-01-01T00:00:15.000Z", "v": 2.0}
@@ -375,7 +375,7 @@ class SqlSurfaceSpec extends SparkTestBase {
 
   test("stream WINDOW clause with SLIDE yields overlapping windows") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_win2").toFile
+    val dir = tempDir("graft_win2").toFile
     Files.writeString(new java.io.File(dir, "a.json").toPath,
       """{"ts": "2026-01-01T00:00:05.000Z", "v": 1.0}
         |{"ts": "2026-01-01T00:00:12.000Z", "v": 2.0}""".stripMargin)

@@ -120,7 +120,7 @@ class StoreSketchSpec extends SparkTestBase {
 
   test("checkpoint/restore re-hydrates the sketch capability") {
     ingest("sk_ckpt", 6000, 800)
-    val dir = java.nio.file.Files.createTempDirectory("sk_ckpt").toString
+    val dir = tempDir("sk_ckpt").toString
     GraftStoreOps.checkpoint(spark, "sk_ckpt", dir)
     GraftColumnStore.drop("sk_ckpt")
     GraftStoreOps.restore(spark, "sk_ckpt", dir)

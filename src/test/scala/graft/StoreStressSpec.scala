@@ -4,80 +4,89 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftStoreOps}
+import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftRowStore}
 
 /** Concurrency stress over the full store feature stack: concurrent
   * writers (UPDATE/DELETE/PUT), scan readers, and the LRU-overflow
-  * enforcement all hammering ONE lz4-compressed, budget-evicted, bucketed
-  * table. Properties: no reader ever observes a partial mutation or a
+  * enforcement all hammering ONE budget-evicted, bucketed table of each
+  * store (lz4-compressed on the column store). Properties: no reader ever observes a partial mutation or a
   * missing payload (snapshot isolation + reader leases hold under
   * spill/reload), and the final state equals the sequential effect of the
   * writer's operations.
   */
 class StoreStressSpec extends SparkTestBase {
 
-  test("readers, a mutating writer and LRU spill race safely on one table") {
-    val g = GraftSession(spark)
-    val orders = Tables.load(spark, sf, "orders")
-    g.createTable("s_stress", orders, keyColumns = Seq("o_orderkey"),
-      partitionBy = Seq("o_orderkey"), buckets = 4,
-      compression = "lz4", evictionBudgetBytes = 30000L)
-    val baseCount = orders.count()
+  // both stores spill through the one shared payload tier
+  Seq("column" -> "", "row" -> " (row store)").foreach { case (provider, suffix) =>
+    test(s"readers, a mutating writer and LRU spill race safely on one table$suffix") {
+      val g = GraftSession(spark)
+      val orders = Tables.load(spark, sf, "orders")
+      g.createTable("s_stress", orders, keyColumns = Seq("o_orderkey"),
+        partitionBy = Seq("o_orderkey"), buckets = 4, provider = provider,
+        compression = if (provider == "column") "lz4" else "none",
+        evictionBudgetBytes = 30000L)
+      val baseCount = orders.count()
 
-    val pool = Executors.newFixedThreadPool(3)
-    val stop = new CountDownLatch(1)
-    val firstError = new AtomicReference[Throwable]()
-    def guard(body: => Unit): Runnable = () =>
-      try body catch { case t: Throwable => firstError.compareAndSet(null, t) }
+      val pool = Executors.newFixedThreadPool(3)
+      val stop = new CountDownLatch(1)
+      val firstError = new AtomicReference[Throwable]()
+      def guard(body: => Unit): Runnable = () =>
+        try body catch { case t: Throwable => firstError.compareAndSet(null, t) }
 
-    // reader 1: full-scan aggregates in a loop — row count must always be
-    // one of the writer's atomic states (base or base minus the deleted
-    // slice; PUT restores the deleted keys, never a partial state)
-    val deletedSlice = orders.filter(col("o_orderkey") % 11 === 3)
-    val nDeleted = deletedSlice.count()
-    val legalCounts = Set(baseCount, baseCount - nDeleted)
-    pool.submit(guard {
-      while (stop.getCount > 0) {
-        val n = g.table("s_stress").count()
-        assert(legalCounts.contains(n),
-          s"scan saw a non-atomic state: $n not in $legalCounts")
-      }
-    })
-    // reader 2: point lookups through bucket pruning while packs spill
-    pool.submit(guard {
-      while (stop.getCount > 0) {
-        val r = g.table("s_stress").filter(col("o_orderkey") === 42L)
-          .select("o_orderkey").collect()
-        assert(r.length <= 1)
-      }
-    })
-    // writer: delete a slice, put it back, update a column — each commit
-    // an atomic snapshot swap followed by budget enforcement
-    val writer = pool.submit(guard {
-      (0 until 5).foreach { i =>
-        g.delete("s_stress", col("o_orderkey") % 11 === 3)
-        g.putInto("s_stress", deletedSlice)
-        g.update("s_stress", col("o_orderkey") % 7 === i,
-          "o_totalprice" -> lit(i.toDouble))
-      }
-    })
-    writer.get(120, TimeUnit.SECONDS)
-    stop.countDown()
-    pool.shutdown()
-    assert(pool.awaitTermination(60, TimeUnit.SECONDS), "readers must drain")
-    if (firstError.get() != null) throw firstError.get()
+      // reader 1: full-scan aggregates in a loop — row count must always be
+      // one of the writer's atomic states (base or base minus the deleted
+      // slice; PUT restores the deleted keys, never a partial state)
+      val deletedSlice = orders.filter(col("o_orderkey") % 11 === 3)
+      val nDeleted = deletedSlice.count()
+      val legalCounts = Set(baseCount, baseCount - nDeleted)
+      pool.submit(guard {
+        while (stop.getCount > 0) {
+          val n = g.table("s_stress").count()
+          assert(legalCounts.contains(n),
+            s"scan saw a non-atomic state: $n not in $legalCounts")
+        }
+      })
+      // reader 2: point lookups through bucket pruning (an index probe on
+      // the row store) while payloads spill
+      pool.submit(guard {
+        while (stop.getCount > 0) {
+          val r = g.table("s_stress").filter(col("o_orderkey") === 42L)
+            .select("o_orderkey").collect()
+          assert(r.length <= 1)
+        }
+      })
+      // writer: delete a slice, put it back, update a column — each commit
+      // an atomic snapshot swap followed by budget enforcement
+      val writer = pool.submit(guard {
+        (0 until 5).foreach { i =>
+          g.delete("s_stress", col("o_orderkey") % 11 === 3)
+          g.putInto("s_stress", deletedSlice)
+          g.update("s_stress", col("o_orderkey") % 7 === i,
+            "o_totalprice" -> lit(i.toDouble))
+        }
+      })
+      writer.get(120, TimeUnit.SECONDS)
+      stop.countDown()
+      pool.shutdown()
+      assert(pool.awaitTermination(60, TimeUnit.SECONDS), "readers must drain")
+      if (firstError.get() != null) throw firstError.get()
 
-    // final state equals the sequential effect: all rows present, last
-    // update (i = 4) applied to the %7==4 slice
-    assert(g.table("s_stress").count() == baseCount)
-    val got = g.table("s_stress").filter(col("o_orderkey") % 7 === 4)
-      .agg(sum(col("o_totalprice"))).head().getDouble(0)
-    val expectRows = orders.filter(col("o_orderkey") % 7 === 4).count()
-    assert(got == expectRows * 4.0, s"last update must win: $got")
-    // budget still enforced after the storm
-    val snap = GraftColumnStore("s_stress").snapshot
-    assert(snap.residentBytes <= 30000L)
-    g.dropTable("s_stress")
+      // final state equals the sequential effect: all rows present, last
+      // update (i = 4) applied to the %7==4 slice
+      assert(g.table("s_stress").count() == baseCount)
+      val got = g.table("s_stress").filter(col("o_orderkey") % 7 === 4)
+        .agg(sum(col("o_totalprice"))).head().getDouble(0)
+      val expectRows = orders.filter(col("o_orderkey") % 7 === 4).count()
+      assert(got == expectRows * 4.0, s"last update must win: $got")
+      // budget still enforced after the storm, with payloads on disk
+      val (ids, tier) =
+        if (provider == "column") (GraftColumnStore("s_stress").snapshot.refs.map(_.id),
+          GraftColumnStore.batches)
+        else (GraftRowStore("s_stress").snapshot.refs.map(_.id), GraftRowStore.packs)
+      assert(ids.map(tier.residentBytes).sum <= 30000L)
+      assert(ids.exists(!tier.isResident(_)), "past-budget payloads must be on the disk tier")
+      g.dropTable("s_stress")
+    }
   }
 
   test("two concurrent PUT INTO writers on disjoint key slices both land") {

@@ -205,7 +205,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("CREATE STREAM TABLE registers a streaming source queryable by SQL") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_stream").toFile
+    val dir = tempDir("graft_stream").toFile
     Files.writeString(new java.io.File(dir, "a.json").toPath,
       """{"k": 1, "v": 10.0}
         |{"k": 2, "v": 20.0}""".stripMargin)
@@ -312,7 +312,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("STREAMING INIT/START/STOP drives registered CQs end-to-end") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_cq").toFile
+    val dir = tempDir("graft_cq").toFile
     Files.writeString(new java.io.File(dir, "a.json").toPath,
       """{"k": 1, "v": 10.0}
         |{"k": 2, "v": 20.0}
@@ -589,7 +589,7 @@ class StreamingSpec extends SparkTestBase {
     val g = GraftSession(spark)
     import spark.implicits._
     import org.apache.spark.sql.graft.store.LiveCheckpoint
-    val root = java.nio.file.Files.createTempDirectory("s_pub").toString
+    val root = tempDir("s_pub").toString
     g.sql("CREATE TABLE s_live (k bigint, v bigint) USING column " +
       "OPTIONS (partition_by 'k', buckets '4')")
     implicit val sqlCtx = spark.sqlContext
