@@ -192,7 +192,7 @@ class GraftSession(val spark: SparkSession)
 
   private def normalize(name: String): String = resolveSynonym(name)
 
-  import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftRowOps, GraftRowStore, GraftStoreOps}
+  import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftRowOps, GraftRowStore, GraftStoreOps, StoreOps}
 
   /** CREATE TABLE ... USING column OPTIONS (partition_by, buckets,
     * key_columns). Data lands in the graftstore column store (sealed
@@ -227,7 +227,9 @@ class GraftSession(val spark: SparkSession)
         require(GraftColumnStore.supportsType(
           data.schema.fields(data.schema.fieldIndex(c)).dataType),
           s"row table $name: key/bucket column $c has an unsupported type"))
-      GraftRowStore.drop(nm) // fresh layout (options win over a stale table)
+      // fresh layout (options win over a stale table), in either store:
+      // dispatch by name must find only the new table
+      StoreOps.drop(nm)
       val w = data.write.format(GraftRowOps.FORMAT).option("table", nm)
         .option("key_columns", keyColumns.mkString(","))
         .option("eviction_budget_bytes", evictionBudgetBytes.toString)
@@ -274,7 +276,9 @@ class GraftSession(val spark: SparkSession)
         if (partitionBy.nonEmpty)
           w.option("partition_by", partitionBy.mkString(",")).option("buckets", buckets.toString)
         else w
-      GraftColumnStore.drop(nm) // fresh layout (options win over a stale table)
+      // fresh layout (options win over a stale table), in either store:
+      // dispatch by name must find only the new table
+      StoreOps.drop(nm)
       w2.mode("overwrite").save()
       // prefer the CATALOG read: only catalog-resolved scans carry the
       // bucket-grouped KeyGroupedPartitioning (the bucket transform's
@@ -307,23 +311,40 @@ class GraftSession(val spark: SparkSession)
 
   /** Durable checkpoint / re-hydration of a store-backed table (the
     * session-level PERSISTENCE/DISKSTORE analog — see
-    * [[org.apache.spark.sql.graft.store.GraftStoreOps.checkpoint]]).
+    * [[org.apache.spark.sql.graft.store.StoreOps.checkpoint]]).
     */
   def checkpointTable(name: String, dir: String): Unit = {
     val nm = normalize(name)
-    if (tables.get(nm).exists(_.rowBacked)) GraftRowOps.checkpoint(spark, nm, dir)
-    else {
-      require(isStoreBacked(name), s"checkpointTable($name): not a store-backed table")
-      GraftStoreOps.checkpoint(spark, nm, dir)
-    }
-    // constraints ride the checkpoint in a sidecar (incl. the identity
-    // high-water mark, so a restored table never re-issues values)
-    org.apache.spark.sql.graft.Constraints.get(nm).foreach { tc =>
-      org.apache.spark.sql.graft.store.GraftManifest.write(spark, dir,
-        Seq("constraints" -> org.apache.spark.sql.graft.Constraints.encode(tc)),
-        s"graft constraints for $nm", file = "constraints.properties")
+    require(tables.get(nm).exists(st => st.storeBacked || st.rowBacked),
+      s"checkpointTable($name): not a store-backed table")
+    StoreOps(nm).checkpoint(spark, nm, dir)
+    writeSidecars(nm, dir)
+  }
+
+  /** The session metadata that rides a table's durable artifacts (a
+    * checkpoint dir, each published epoch dir) beside the store's own
+    * layout: the constraints, incl. the identity high-water mark so a
+    * restored table never re-issues values, and the matview definition.
+    * A table without constraints deletes any stale constraints sidecar
+    * a reused dir still holds, so the restore does not revive it.
+    */
+  private def writeSidecars(nm: String, dir: String): Unit = {
+    org.apache.spark.sql.graft.Constraints.get(nm) match {
+      case Some(tc) =>
+        org.apache.spark.sql.graft.store.GraftManifest.write(spark, dir,
+          Seq("constraints" -> org.apache.spark.sql.graft.Constraints.encode(tc)),
+          s"graft constraints for $nm", file = CONSTRAINTS_SIDECAR)
+      case None => deleteSidecar(dir, CONSTRAINTS_SIDECAR)
     }
     writeMatviewSidecar(nm, dir)
+  }
+
+  private val CONSTRAINTS_SIDECAR = "constraints.properties"
+
+  private def deleteSidecar(dir: String, file: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, file)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, false)
   }
 
   /** A matview's DEFINITION rides its durable artifacts (checkpoint dir
@@ -353,10 +374,7 @@ class GraftSession(val spark: SparkSession)
           "join_conds" -> mv.joins.map(_.conds.map(enc).mkString(";")).getOrElse(""),
           "sql" -> mv.sql),
           s"graft matview definition for $nm", file = "matview.properties")
-      case None =>
-        val p = new org.apache.hadoop.fs.Path(dir, "matview.properties")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, false)
+      case None => deleteSidecar(dir, "matview.properties")
     }
   }
 
@@ -434,29 +452,21 @@ class GraftSession(val spark: SparkSession)
     publishTable(name, diskstoreDirFor(normalize(name), "publishTable"),
       incremental)
 
-  /** `incremental = true` publishes column tables at O(delta-since-last-
-    * epoch) instead of O(table): unchanged batches are shared by
-    * reference across epochs (see [[LiveCheckpoint]]). Semantics are
-    * identical either way — attach verifies the same whole-table
-    * fingerprint.
+  /** `incremental = true` publishes at O(delta-since-last-epoch) instead
+    * of O(table), for column and row tables alike: unchanged batches or
+    * packs are shared by reference across epochs (see [[LiveCheckpoint]]).
+    * Semantics are identical either way — attach verifies the same
+    * whole-table fingerprint.
     */
   def publishTable(name: String, root: String, incremental: Boolean): Long = {
     val nm = normalize(name)
     require(isManaged(nm), s"publishTable($name): not a managed table")
+    // the sidecars land before the commit marker, so no reader can
+    // attach an epoch missing them; a backing table recovered from epochs
+    // — bootstrap's "newest artifact wins" — comes back a MATVIEW
+    // (stale), not a plain table
     org.apache.spark.sql.graft.store.LiveCheckpoint.publish(spark, nm, root,
-      beforeCommit = dir => {
-        org.apache.spark.sql.graft.Constraints.get(nm).foreach { tc =>
-          org.apache.spark.sql.graft.store.GraftManifest.write(spark, dir,
-            Seq("constraints" -> org.apache.spark.sql.graft.Constraints.encode(tc)),
-            s"graft constraints for $nm", file = "constraints.properties")
-        }
-        // the matview definition rides each epoch too (before the commit
-        // marker, so no reader can attach an epoch missing it): a backing
-        // table recovered from epochs — bootstrap's "newest artifact
-        // wins" — comes back a MATVIEW (stale), not a plain table
-        writeMatviewSidecar(nm, dir)
-      },
-      incremental = incremental)
+      beforeCommit = dir => writeSidecars(nm, dir), incremental = incremental)
   }
 
   def publishTable(name: String, root: String): Long =
@@ -466,26 +476,33 @@ class GraftSession(val spark: SparkSession)
     * `name` — read-only with respect to the publisher (the attach
     * copies into this JVM's registries). Returns the epoch served.
     */
-  /** Replace `nm`'s registered constraints with the epoch's sidecar —
+  /** Replace `nm`'s registered constraints with `dir`'s sidecar —
     * clearing FIRST so absence of the sidecar means no constraints (a
-    * re-attach must not keep a dropped epoch's set registered).
+    * re-attach or restore must not keep an older artifact's set).
     */
-  private def registerEpochConstraints(nm: String, root: String, e: Long): Unit = {
-    import org.apache.spark.sql.graft.store.{GraftManifest, LiveCheckpoint}
+  private def recoverConstraints(nm: String, dir: String): Unit = {
     org.apache.spark.sql.graft.Constraints.drop(nm)
-    GraftManifest.readOpt(spark, LiveCheckpoint.dirFor(root, e),
-        "constraints.properties")
+    org.apache.spark.sql.graft.store.GraftManifest.readOpt(spark, dir, CONSTRAINTS_SIDECAR)
       .flatMap(cp => Option(cp.getProperty("constraints")))
       .foreach(enc => org.apache.spark.sql.graft.Constraints.register(nm,
         org.apache.spark.sql.graft.Constraints.decodeConstraints(enc)))
   }
 
+  /** Recover an OWNED table's sidecars (restore and bootstrap): its
+    * constraints and, when it backed a matview, the view definition.
+    */
+  private def recoverSidecars(nm: String, dir: String): Unit = {
+    recoverConstraints(nm, dir)
+    registerMatviewSidecar(nm, dir)
+  }
+
   def attachTable(name: String, root: String): Long = {
     require(!isSynonym(name), s"attachTable($name): name is a synonym")
     val nm = normalize(name)
-    import org.apache.spark.sql.graft.store.{GraftRowStore, LiveCheckpoint}
+    import org.apache.spark.sql.graft.store.LiveCheckpoint
     val e = LiveCheckpoint.attachLatest(spark, nm, root)
-    registerEpochConstraints(nm, root, e)
+    // a replica: constraints ride along, a matview definition does not
+    recoverConstraints(nm, LiveCheckpoint.dirFor(root, e))
     registerFromStore(nm)
     org.apache.spark.sql.graft.store.ReplicaGuard.markReplica(nm,
       org.apache.spark.sql.graft.store.ReplicaGuard.ReplicaInfo(
@@ -544,7 +561,7 @@ class GraftSession(val spark: SparkSession)
     df.createOrReplaceTempView(nm)
     // constraints ride for metadata surfaces (sys.constraints); a view
     // is read-only so there is nothing to enforce
-    registerEpochConstraints(nm, root, e)
+    recoverConstraints(nm, LiveCheckpoint.dirFor(root, e))
     tables.put(nm, TableState(df, Nil, Nil, 0))
     org.apache.spark.sql.graft.store.ReplicaGuard.markReplica(nm,
       org.apache.spark.sql.graft.store.ReplicaGuard.ReplicaInfo(
@@ -621,28 +638,11 @@ class GraftSession(val spark: SparkSession)
     org.apache.spark.sql.graft.store.ReplicaGuard.clear(nm) // an explicit restore supersedes replica status
     org.apache.spark.sql.graft.store.MatViews.unregister(nm) // ... and matview status (re-registered below if the sidecar says so)
     // the manifest knows which store the table came from
-    val p = org.apache.spark.sql.graft.store.GraftManifest.read(spark, dir)
-    org.apache.spark.sql.graft.store.GraftManifest
-      .readOpt(spark, dir, "constraints.properties")
-      .flatMap(cp => Option(cp.getProperty("constraints")))
-      .foreach(enc => org.apache.spark.sql.graft.Constraints.register(nm,
-        org.apache.spark.sql.graft.Constraints.decodeConstraints(enc)))
-    if (p.getProperty("provider", "column") == "row") {
-      val df = GraftRowOps.restore(spark, nm, dir)
-      df.createOrReplaceTempView(nm)
-      val s = GraftRowStore(nm).snapshot
-      tables.put(nm, TableState(df, s.keyColumns, s.bucketBy,
-        math.max(s.numBuckets, 0), rowBacked = true))
-      df
-    } else {
-      val df = GraftStoreOps.restore(spark, nm, dir)
-      df.createOrReplaceTempView(nm)
-      val s = GraftColumnStore(nm).snapshot
-      tables.put(nm, TableState(df, s.keyColumns, s.bucketBy,
-        math.max(s.numBuckets, 0), storeBacked = true))
-      registerMatviewSidecar(nm, dir)
-      df
-    }
+    StoreOps.forManifest(org.apache.spark.sql.graft.store.GraftManifest.read(spark, dir))
+      .restore(spark, nm, dir)
+    registerFromStore(nm)
+    recoverSidecars(nm, dir)
+    table(nm)
   }
 
   /** Durable catalog bootstrap — the reference persists its catalog
@@ -714,19 +714,16 @@ class GraftSession(val spark: SparkSession)
               // name, and recovery must never clobber live state —
               // store/matview presence skips exactly like a local name
               if (isManaged(nm) || ReplicaGuard.isReplica(nm) ||
-                MatViews.isMatView(nm) ||
-                org.apache.spark.sql.graft.store.GraftColumnStore.get(nm).isDefined ||
-                org.apache.spark.sql.graft.store.GraftRowStore.get(nm).isDefined)
+                MatViews.isMatView(nm) || StoreOps.forTable(nm).isDefined)
                 out += ((nm, ds.name, source, epoch, "skipped_exists"))
               else if (source == "epoch") {
                 LiveCheckpoint.attach(spark, nm, dir, epoch)
-                registerEpochConstraints(nm, dir, epoch)
                 registerFromStore(nm)
                 ReplicaGuard.clear(nm) // owned (publisher recovery), not a replica
                 // matview identity rides the epoch's own sidecar: the
                 // recovered view registers STALE (sentinel fingerprint),
                 // write-guarded, visible in sys.matviews; REFRESH revives
-                registerMatviewSidecar(nm, LiveCheckpoint.dirFor(dir, epoch))
+                recoverSidecars(nm, LiveCheckpoint.dirFor(dir, epoch))
                 Diskstores.bind(nm, ds.name)
                 out += ((nm, ds.name, "epoch", epoch, "restored"))
               } else {
@@ -750,32 +747,20 @@ class GraftSession(val spark: SparkSession)
     */
   def adoptFromStore(name: String): Unit = {
     val nm = normalize(name)
-    if (!tables.contains(nm) &&
-      (org.apache.spark.sql.graft.store.GraftColumnStore.get(nm).isDefined ||
-        org.apache.spark.sql.graft.store.GraftRowStore.get(nm).isDefined)) {
-      registerFromStore(nm)
-    }
+    if (!tables.contains(nm) && StoreOps.forTable(nm).isDefined) registerFromStore(nm)
   }
 
   /** Register a table that already lives in this JVM's store registries
     * (row or column) as a managed table + temp view — the shared tail of
-    * attachTable and bootstrap's epoch restore.
+    * restoreTable, attachTable and bootstrap's epoch restore.
     */
   private def registerFromStore(nm: String): Unit = {
-    import org.apache.spark.sql.graft.store.GraftRowStore
-    if (GraftRowStore.get(nm).isDefined) {
-      val df = GraftRowOps.read(spark, nm)
-      df.createOrReplaceTempView(nm)
-      val s = GraftRowStore(nm).snapshot
-      tables.put(nm, TableState(df, s.keyColumns, s.bucketBy,
-        math.max(s.numBuckets, 0), rowBacked = true))
-    } else {
-      val df = GraftStoreOps.read(spark, nm)
-      df.createOrReplaceTempView(nm)
-      val s = org.apache.spark.sql.graft.store.GraftColumnStore(nm).snapshot
-      tables.put(nm, TableState(df, s.keyColumns, s.bucketBy,
-        math.max(s.numBuckets, 0), storeBacked = true))
-    }
+    val ops = StoreOps(nm)
+    val df = ops.read(spark, nm)
+    df.createOrReplaceTempView(nm)
+    val l = ops.layout(nm)
+    tables.put(nm, TableState(df, l.keyColumns, l.bucketBy, math.max(l.numBuckets, 0),
+      storeBacked = ops eq GraftStoreOps, rowBacked = ops eq GraftRowOps))
   }
 
   def isManaged(name: String): Boolean = tables.contains(normalize(name))
@@ -811,8 +796,7 @@ class GraftSession(val spark: SparkSession)
       // createTable reset them all to defaults). alterRewrite checks the
       // ALTER grant — a destructive full-table rewrite is as privileged
       // as any DML.
-      if (st.rowBacked) GraftRowOps.alterRewrite(spark, nm, f)
-      else GraftStoreOps.alterRewrite(spark, nm, f)
+      StoreOps(nm).alterRewrite(spark, nm, f)
       refreshManaged(nm)
       table(nm)
     } else {
@@ -837,9 +821,7 @@ class GraftSession(val spark: SparkSession)
     val nm = normalize(name)
     tables.get(nm).filter(st => st.storeBacked || st.rowBacked).foreach { st =>
       val df = org.apache.spark.sql.graft.PolicyRegistry.withBypass {
-        scala.util.Try(spark.table(s"graft.$nm")).getOrElse(
-          if (st.rowBacked) GraftRowOps.read(spark, nm)
-          else GraftStoreOps.read(spark, nm))
+        scala.util.Try(spark.table(s"graft.$nm")).getOrElse(StoreOps(nm).read(spark, nm))
       }
       df.createOrReplaceTempView(nm)
       tables.put(nm, st.copy(df = df))

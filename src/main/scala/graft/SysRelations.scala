@@ -162,11 +162,10 @@ object SysRelations {
     * Reads the backing row table only if a sink ever created it.
     */
   private def sinkState(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.graft.store.{GraftRowOps, GraftRowStore}
     val t = graft.streaming.CdcSink.StateTable
-    if (GraftRowStore.get(t).isDefined) GraftRowOps.read(spark, t)
-    else spark.createDataFrame(Seq.empty[(String, String, Long)])
-      .toDF("query_name", "table_name", "batch_id")
+    org.apache.spark.sql.graft.store.StoreOps.forTable(t).map(_.read(spark, t))
+      .getOrElse(spark.createDataFrame(Seq.empty[(String, String, Long)])
+        .toDF("query_name", "table_name", "batch_id"))
   }
 }
 

@@ -540,10 +540,7 @@ case class GraftAlterDropConstraintCommand(table: String, name: String)
 case class GraftAlterRebucketCommand(table: String, buckets: Int,
     columns: Seq[String]) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    if (org.apache.spark.sql.graft.store.GraftRowStore.get(table).isDefined)
-      org.apache.spark.sql.graft.store.GraftRowOps.rebucket(spark, table, buckets, columns)
-    else
-      org.apache.spark.sql.graft.store.GraftStoreOps.rebucket(spark, table, buckets, columns)
+    org.apache.spark.sql.graft.store.StoreOps(table).rebucket(spark, table, buckets, columns)
     graft.GraftSession(spark).refreshManaged(table)
     Nil
   }

@@ -221,14 +221,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
           s"graftstore: ALTER TABLE change not supported: $other")
       }
     }
-    val exists = GraftColumnStore.get(nm).isDefined || GraftRowStore.get(nm).isDefined
-    if (!exists)
+    if (StoreOps.forTable(nm).isEmpty)
       throw new NoSuchTableException(ident.namespace().toSeq :+ ident.name())
-    if (dataChange) {
-      if (GraftColumnStore.get(nm).isDefined)
-        GraftStoreOps.alterRewrite(spark, nm, transform, renames)
-      else GraftRowOps.alterRewrite(spark, nm, transform, renames)
-    }
+    if (dataChange) StoreOps(nm).alterRewrite(spark, nm, transform, renames)
     // SET/UNSET TBLPROPERTIES: metadata-only tunables, no rewrite
     if (setProps.nonEmpty || unsetProps.nonEmpty)
       GraftStoreOps.alterProperties(spark, nm, setProps, unsetProps)
@@ -240,9 +235,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
 
   override def dropTable(ident: Identifier): Boolean = {
     val nm = tableName(ident)
-    val existed = GraftColumnStore.get(nm).isDefined || GraftRowStore.get(nm).isDefined
-    GraftColumnStore.drop(nm)
-    GraftRowStore.drop(nm)
+    val existed = StoreOps.forTable(nm).isDefined
+    StoreOps.drop(nm)
     existed
   }
 
@@ -250,8 +244,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     throw new UnsupportedOperationException("graftstore: RENAME not supported")
 
   override def tableExists(ident: Identifier): Boolean =
-    GraftColumnStore.get(tableName(ident)).isDefined ||
-      GraftRowStore.get(tableName(ident)).isDefined
+    StoreOps.forTable(tableName(ident)).isDefined
 
   // ---- namespaces: single flat default namespace ----
   override def listNamespaces(): Array[Array[String]] = Array(Array("default"))

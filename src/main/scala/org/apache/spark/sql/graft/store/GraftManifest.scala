@@ -22,14 +22,9 @@ object GraftManifest {
     try p.store(out, comment) finally out.close()
   }
 
-  def read(spark: SparkSession, dir: String): java.util.Properties = {
-    val p = new java.util.Properties()
-    val path = new org.apache.hadoop.fs.Path(dir, FILE)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    try p.load(in) finally in.close()
-    p
-  }
+  def read(spark: SparkSession, dir: String): java.util.Properties =
+    readOpt(spark, dir, FILE).getOrElse(
+      throw new java.io.FileNotFoundException(s"no $FILE under $dir"))
 
   /** Read a sidecar properties file; None when absent (older
     * checkpoints never wrote one).

@@ -24,6 +24,8 @@ import scala.collection.mutable
 object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
 
   val FORMAT: String = classOf[GraftRowSource].getName
+  val provider: String = "row"
+  protected def registry: TableRegistry = GraftRowStore
 
   private def withAddress(spark: SparkSession, table: String): DataFrame = {
     val df = read(spark, table)
@@ -31,8 +33,33 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
       df.metadataColumn(GraftRowTable.ROW_IDX_COL).as("_rid"), col("*"))
   }
 
-  protected def snapshotOf(table: String): GraftRowStore.RowSnapshot =
+  def snapshotOf(table: String): GraftRowStore.RowSnapshot =
     GraftRowStore(table).snapshot
+
+  protected def storeLayout: Seq[(String, (String, GraftRowStore.RowSnapshot) => String)] = Nil
+
+  /** Secondary indexes are recorded by COLUMN and rebuilt at restore
+    * (their stats key the new pack ids).
+    */
+  protected val rebuiltKey: String = "indexed"
+  protected def rebuiltColumns(snap: GraftRowStore.RowSnapshot): Seq[String] =
+    snap.indexes.values.map(_.column).toSeq.sorted
+  protected def rebuild(spark: SparkSession, table: String, columns: Seq[String]): Unit =
+    columns.foreach(c => createIndex(spark, table, c))
+
+  private[store] val pinOption: String = "pack_ids"
+  private[store] val addressColumn: String = GraftRowTable.PACK_ID_COL
+  private[store] val payloadPrefix: String = "p"
+  /** Packs are immutable and their tombstone sets only GROW (deletes and
+    * upserts union slots in; a fully-dead pack leaves the ref list, a
+    * roll-up mints NEW ids), so equal tombstone states prove the pack's
+    * visible rows are unchanged.
+    */
+  protected def mutationFingerprints(snap: GraftRowStore.RowSnapshot,
+      ids: Set[Long]): Map[Long, String] =
+    ids.iterator.map { id =>
+      id -> snap.tombstones.get(id).map(b => s"${b.size}|${b.hashCode}").getOrElse("0")
+    }.toMap
 
   /** Secondary indexes after a rewrite: their stats keyed the OLD pack
     * ids and may name dropped columns — cleared, and the survivors
@@ -41,8 +68,70 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
   override protected def afterRewrite(spark: SparkSession, table: String,
       snap: GraftRowStore.RowSnapshot, r: Relayout): Unit = {
     GraftRowStore(table).mutate(_.copy(indexes = Map.empty))
-    r.surviving(snap.indexes.values.map(_.column).toSeq).sorted
-      .foreach(c => createIndex(spark, table, c))
+    rebuild(spark, table, r.surviving(rebuiltColumns(snap)).sorted)
+  }
+
+  /** Run `f` on a snapshot pinned by a reader lease: a key-probe job's
+    * tasks resolve pack payloads from this snapshot, and a concurrent
+    * mutation would otherwise free retired packs mid-job. The lease owner
+    * stays reachable until `f` returns.
+    */
+  private def withPinned(t: GraftRowStore.RowTable)(
+      f: GraftRowStore.RowSnapshot => Unit): Unit = {
+    val (snap, leaseId) = t.pinSnapshot()
+    val leaseOwner = new Object
+    t.addLeaseOwner(leaseId, leaseOwner)
+    try f(snap)
+    finally java.lang.ref.Reference.reachabilityFence(leaseOwner)
+  }
+
+  /** Union per-task tombstone bitmaps (pack id → bitmask words). */
+  private def mergeBitmaps(parts: Iterator[(Long, Array[Long])]): Map[Long, BitSet] = {
+    val merged = mutable.Map.empty[Long, BitSet]
+    parts.foreach { case (id, words) =>
+      val bs = BitSet.fromBitMaskNoCopy(words)
+      merged(id) = merged.get(id).map(_ | bs).getOrElse(bs)
+    }
+    merged.toMap
+  }
+
+  /** The key-addressed probe shared by put and deleteKeys: one task per
+    * partition of `routed`, where each source row's key tombstones its
+    * live match among the candidate packs — the task's own bucket when
+    * `bucketed` (the key determines the bucket), every live pack
+    * otherwise. `task(pid)` gives the per-task consumer of each probed
+    * row and what the task returns after its last row. Returns the merged
+    * tombstones and the task results.
+    */
+  private def probeKeys[R](routed: DataFrame, snap: GraftRowStore.RowSnapshot,
+      bucketed: Boolean, keyOrds: Array[Int],
+      keyTypes: Array[org.apache.spark.sql.types.DataType])(
+      task: Int => (org.apache.spark.sql.catalyst.InternalRow => Unit, () => R))
+      : (Map[Long, BitSet], Seq[R]) = {
+    // one TTL cut for both enumerations (liveRefs reads the clock)
+    val allRefs = snap.liveRefs
+    val refsByBucket = allRefs.groupBy(_.bucketId)
+    val tomb = snap.tombstones
+    val results = routed.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+      val candidates = if (bucketed) refsByBucket.getOrElse(pid, Vector.empty) else allRefs
+      // resolve candidate packs ONCE per task: a fetch deserializes a
+      // SPILLED pack from disk per call, so a per-row fetch would pay
+      // O(rows x spilled packs) inflations
+      val candidatePacks = candidates.map(ref => ref.id -> GraftRowStore.packs(ref.id))
+      val tombstones = mutable.Map.empty[Long, mutable.BitSet]
+      val (onRow, finish) = task(pid)
+      it.foreach { r =>
+        val key = GraftRowStore.keyOf(r, keyOrds, keyTypes)
+        candidatePacks.foreach { case (id, pack) =>
+          val slot = pack.index.get(key)
+          if (slot != null && !tomb.get(id).exists(_.contains(slot.intValue())))
+            tombstones.getOrElseUpdate(id, mutable.BitSet.empty) += slot.intValue()
+        }
+        onRow(r)
+      }
+      Iterator.single((tombstones.map { case (k, v) => k -> v.toBitMask }.toMap, finish()))
+    }.collect()
+    (mergeBitmaps(results.iterator.flatMap(_._1)), results.iterator.map(_._2).toSeq)
   }
 
   /** PUT INTO (upsert): for each source row, the live row with the same
@@ -53,83 +142,37 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
   def put(spark: SparkSession, table: String, source: DataFrame): Unit = {
     ReplicaGuard.requireWritable(table, "put")
     val t = GraftRowStore(table)
-    // pin a reader lease for the probe job: its tasks resolve pack
-    // payloads from this snapshot, and a concurrent mutation would
-    // otherwise free retired packs mid-job (only the scan path pinned
-    // leases before). The op object keeps the lease alive until the
-    // fence below.
-    val (snap, leaseId) = t.pinSnapshot()
-    val leaseOwner = new Object
-    t.addLeaseOwner(leaseId, leaseOwner)
-    try putInner(spark, t, snap, source)
-    finally java.lang.ref.Reference.reachabilityFence(leaseOwner)
-  }
-
-  private def putInner(spark: SparkSession, t: GraftRowStore.RowTable,
-      snap: GraftRowStore.RowSnapshot, source: DataFrame): Unit = {
-    val table = t.name
-    require(snap.keyColumns.nonEmpty, s"graftrow.put($table) requires key_columns")
-    val cols = snap.schema.fieldNames.toSeq
-    val src = (if (source.columns.toSeq == cols) source
-      else if (source.columns.toSet == cols.toSet) source.select(cols.map(col): _*)
-      else source.toDF(cols: _*)).dropDuplicates(snap.keyColumns)
-    val routed =
-      if (snap.numBuckets > 0)
-        src.repartition(snap.numBuckets, snap.bucketBy.map(col): _*)
-      else src
-    val bucketed = snap.numBuckets > 0 && snap.bucketBy == snap.keyColumns
-    // one TTL cut for both enumerations (liveRefs reads the clock)
-    val allRefs = snap.liveRefs
-    val refsByBucket = allRefs.groupBy(_.bucketId)
-    val tomb = snap.tombstones
-    val schema = snap.schema
-    val keyCols = snap.keyColumns
-
-    val results = routed.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyOrds = keyCols.map(schema.fieldIndex).toArray
-      val keyTypes = keyOrds.map(schema.fields(_).dataType)
-      val candidates = if (bucketed) refsByBucket.getOrElse(pid, Vector.empty) else allRefs
-      // resolve candidate packs ONCE per task: a fetch deserializes a
-      // SPILLED pack from disk per call, so a per-row fetch would pay
-      // O(rows x spilled packs) inflations
-      val candidatePacks = candidates.map(ref =>
-        ref.id -> GraftRowStore.packs(ref.id))
-      val tombstones = mutable.Map.empty[Long, mutable.BitSet]
-      val buf = mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
-      val newRefs = mutable.ArrayBuffer.empty[GraftRowStore.PackRef]
-      val bucketId = if (snap.numBuckets > 0) pid else -1
-      def seal(): Unit = if (buf.nonEmpty) {
-        val pack = new GraftRowStore.RowPack(buf.toArray, keyOrds, keyTypes)
-        newRefs += GraftRowStore.PackRef(GraftRowStore.packs.put(pack),
-          bucketId, pack.numRows, createdAtMs = StoreClock.nowMs)
-        buf.clear()
-      }
-      it.foreach { r =>
-        val row = r.copy()
-        val key = GraftRowStore.keyOf(row, keyOrds, keyTypes)
-        candidatePacks.foreach { case (id, pack) =>
-          val slot = pack.index.get(key)
-          if (slot != null && !tomb.get(id).exists(_.contains(slot.intValue())))
-            tombstones.getOrElseUpdate(id, mutable.BitSet.empty) += slot.intValue()
+    withPinned(t) { snap =>
+      require(snap.keyColumns.nonEmpty, s"graftrow.put($table) requires key_columns")
+      val cols = snap.schema.fieldNames.toSeq
+      val src = (if (source.columns.toSeq == cols) source
+        else if (source.columns.toSet == cols.toSet) source.select(cols.map(col): _*)
+        else source.toDF(cols: _*)).dropDuplicates(snap.keyColumns)
+      val routed =
+        if (snap.numBuckets > 0)
+          src.repartition(snap.numBuckets, snap.bucketBy.map(col): _*)
+        else src
+      val bucketed = snap.numBuckets > 0 && snap.bucketBy == snap.keyColumns
+      val keyOrds = snap.keyOrdinals
+      val keyTypes = snap.keyTypes
+      val numBuckets = snap.numBuckets
+      val (tombstones, newRefs) = probeKeys(routed, snap, bucketed, keyOrds, keyTypes) { pid =>
+        val buf = mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
+        val refs = mutable.ArrayBuffer.empty[GraftRowStore.PackRef]
+        val bucketId = if (numBuckets > 0) pid else -1
+        def seal(): Unit = if (buf.nonEmpty) {
+          val pack = new GraftRowStore.RowPack(buf.toArray, keyOrds, keyTypes)
+          refs += GraftRowStore.PackRef(GraftRowStore.packs.put(pack),
+            bucketId, pack.numRows, createdAtMs = StoreClock.nowMs)
+          buf.clear()
         }
-        buf += row
-        if (buf.length >= GraftRowTable.PACK_SIZE) seal()
+        (r => {
+          buf += r.copy()
+          if (buf.length >= GraftRowTable.PACK_SIZE) seal()
+        }, () => { seal(); refs.toSeq })
       }
-      seal()
-      Iterator.single((tombstones.map { case (k, v) => k -> v.toBitMask }.toMap,
-        newRefs.toSeq))
-    }.collect()
-
-    val mergedTomb = mutable.Map.empty[Long, BitSet]
-    val mergedRefs = mutable.ArrayBuffer.empty[GraftRowStore.PackRef]
-    results.foreach { case (tm, rs) =>
-      tm.foreach { case (id, words) =>
-        val bs = BitSet.fromBitMaskNoCopy(words)
-        mergedTomb(id) = mergedTomb.get(id).map(_ | bs).getOrElse(bs)
-      }
-      mergedRefs ++= rs
+      t.applyMutation(tombstones, newRefs.flatten)
     }
-    t.applyMutation(mergedTomb.toMap, mergedRefs.toSeq)
   }
 
   /** DELETE every row whose key matches a row of `keys` — the source is
@@ -138,55 +181,18 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
   def deleteKeys(spark: SparkSession, table: String, keys: DataFrame): Unit = {
     ReplicaGuard.requireWritable(table, "deleteKeys")
     val t = GraftRowStore(table)
-    // pinned lease for the probe job — see put()
-    val (snap, leaseId) = t.pinSnapshot()
-    val leaseOwner = new Object
-    t.addLeaseOwner(leaseId, leaseOwner)
-    try deleteKeysInner(t, snap, keys)
-    finally java.lang.ref.Reference.reachabilityFence(leaseOwner)
-  }
-
-  private def deleteKeysInner(t: GraftRowStore.RowTable,
-      snap: GraftRowStore.RowSnapshot, keys: DataFrame): Unit = {
-    val table = t.name
-    require(snap.keyColumns.nonEmpty, s"graftrow.deleteKeys($table) requires key_columns")
-    val src = keys.select(snap.keyColumns.map(col): _*).dropDuplicates(snap.keyColumns)
-    val bucketed = snap.numBuckets > 0 && snap.bucketBy == snap.keyColumns
-    val routed =
-      if (bucketed) src.repartition(snap.numBuckets, snap.bucketBy.map(col): _*)
-      else src
-    // one TTL cut for both enumerations (liveRefs reads the clock)
-    val allRefs = snap.liveRefs
-    val refsByBucket = allRefs.groupBy(_.bucketId)
-    val tomb = snap.tombstones
-    val keySchema = org.apache.spark.sql.types.StructType(
-      snap.keyColumns.map(c => snap.schema.fields(snap.schema.fieldIndex(c))))
-
-    val results = routed.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyOrds = keySchema.fieldNames.indices.toArray
-      val keyTypes = keySchema.fields.map(_.dataType)
-      val candidates = if (bucketed) refsByBucket.getOrElse(pid, Vector.empty) else allRefs
-      // pack resolution hoisted out of the row loop — see put()
-      val candidatePacks = candidates.map(ref =>
-        ref.id -> GraftRowStore.packs(ref.id))
-      val tombstones = mutable.Map.empty[Long, mutable.BitSet]
-      it.foreach { r =>
-        val key = GraftRowStore.keyOf(r, keyOrds, keyTypes)
-        candidatePacks.foreach { case (id, pack) =>
-          val slot = pack.index.get(key)
-          if (slot != null && !tomb.get(id).exists(_.contains(slot.intValue())))
-            tombstones.getOrElseUpdate(id, mutable.BitSet.empty) += slot.intValue()
-        }
-      }
-      Iterator.single(tombstones.map { case (k, v) => k -> v.toBitMask }.toMap)
-    }.collect()
-
-    val merged = mutable.Map.empty[Long, BitSet]
-    results.foreach(_.foreach { case (id, words) =>
-      val bs = BitSet.fromBitMaskNoCopy(words)
-      merged(id) = merged.get(id).map(_ | bs).getOrElse(bs)
-    })
-    if (merged.nonEmpty) t.applyMutation(merged.toMap, Nil)
+    withPinned(t) { snap =>
+      require(snap.keyColumns.nonEmpty, s"graftrow.deleteKeys($table) requires key_columns")
+      val src = keys.select(snap.keyColumns.map(col): _*).dropDuplicates(snap.keyColumns)
+      val bucketed = snap.numBuckets > 0 && snap.bucketBy == snap.keyColumns
+      val routed =
+        if (bucketed) src.repartition(snap.numBuckets, snap.bucketBy.map(col): _*)
+        else src
+      // the source rows ARE the keys
+      val (tombstones, _) = probeKeys(routed, snap, bucketed,
+        snap.keyColumns.indices.toArray, snap.keyTypes)(_ => (_ => (), () => ()))
+      if (tombstones.nonEmpty) t.applyMutation(tombstones, Nil)
+    }
   }
 
   /** DELETE FROM table WHERE cond: victims located by pushed-down scan on
@@ -205,14 +211,8 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
         acc.iterator.map { case (p, s) => (p, s.toBitMask) }
       }
       .collect()
-    if (bitmaps.nonEmpty) {
-      val merged = mutable.Map.empty[Long, BitSet]
-      bitmaps.foreach { case (id, words) =>
-        val bs = BitSet.fromBitMaskNoCopy(words)
-        merged(id) = merged.get(id).map(_ | bs).getOrElse(bs)
-      }
-      GraftRowStore(table).applyMutation(merged.toMap, Nil)
-    }
+    if (bitmaps.nonEmpty)
+      GraftRowStore(table).applyMutation(mergeBitmaps(bitmaps.iterator), Nil)
   }
 
   /** UPDATE table SET assignments WHERE cond: new row versions are
@@ -298,46 +298,4 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
     */
   def dropIndexes(table: String): Unit =
     GraftRowStore(table).mutate(_.copy(indexes = Map.empty))
-
-  /** Durable checkpoint / restore of a row table — the row-side twin of
-    * [[GraftStoreOps.checkpoint]]: snapshot-consistent parquet + layout
-    * manifest; secondary indexes are recorded by COLUMN and rebuilt at
-    * restore (their stats key the new pack ids).
-    */
-  def checkpoint(spark: SparkSession, table: String, dir: String): Unit = {
-    val snap = GraftRowStore(table).snapshot
-    read(spark, table).write.mode("overwrite").parquet(s"$dir/data")
-    GraftManifest.write(spark, dir, Seq(
-      "provider" -> "row",
-      "partition_by" -> snap.bucketBy.mkString(","),
-      "buckets" -> snap.numBuckets.toString,
-      "key_columns" -> snap.keyColumns.mkString(","),
-      "indexed" -> snap.indexes.values.map(_.column).toSeq.sorted.mkString(","),
-      "eviction_budget_bytes" -> snap.evictionBudget.toString,
-      "expire_seconds" -> snap.expireSeconds.toString),
-      s"graftrow checkpoint of $table")
-  }
-
-  def restore(spark: SparkSession, table: String, dir: String): org.apache.spark.sql.DataFrame =
-    restoreFrom(spark, table, GraftManifest.read(spark, dir),
-      spark.read.parquet(s"$dir/data"))
-
-  /** Re-hydrate `table` from an arbitrary row frame + a layout manifest —
-    * the shared tail of checkpoint-dir restore and incremental-epoch
-    * attach (where rows come from shared payload files, not `data/`).
-    */
-  def restoreFrom(spark: SparkSession, table: String,
-      p: java.util.Properties, df: DataFrame): DataFrame = {
-    GraftRowStore.drop(table)
-    var w = df.write.format(FORMAT).option("table", table)
-    Seq("partition_by", "buckets", "key_columns", "eviction_budget_bytes",
-      "expire_seconds").foreach { k =>
-      val v = p.getProperty(k, "")
-      if (v.nonEmpty && !(k == "buckets" && v == "0")) w = w.option(k, v)
-    }
-    w.mode("overwrite").save()
-    p.getProperty("indexed", "").split(",").filter(_.nonEmpty)
-      .foreach(c => createIndex(spark, table, c))
-    read(spark, table)
-  }
 }

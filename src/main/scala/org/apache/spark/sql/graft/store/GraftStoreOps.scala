@@ -27,9 +27,44 @@ import scala.collection.mutable.ArrayBuffer
 object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
 
   val FORMAT: String = classOf[GraftColumnSource].getName
+  val provider: String = "column"
+  protected def registry: TableRegistry = GraftColumnStore
 
-  protected def snapshotOf(table: String): GraftColumnStore.TableSnapshot =
+  def snapshotOf(table: String): GraftColumnStore.TableSnapshot =
     GraftColumnStore(table).snapshot
+
+  /** A checkpoint keeps clustering, seal size, codec, sketch set and the
+    * roll-up policy (engine metadata, but the ingest pattern that needs
+    * it survives a restore).
+    */
+  protected def storeLayout
+      : Seq[(String, (String, GraftColumnStore.TableSnapshot) => String)] = Seq(
+    ("sort_by", (_, s) => s.sortedBy.mkString(",")),
+    ("batch_size", (_, s) => s.batchSize.toString),
+    ("compression", (_, s) => s.compression),
+    ("sketch_columns", (_, s) => s.sketchBy.mkString(",")),
+    ("rollup_threshold", (t, _) => GraftColumnStore.rollupThreshold(t).toString))
+
+  /** z-clustering is physical row order, which the restore write's bucket
+    * shuffle does not preserve — re-clustered from the manifest.
+    */
+  protected val rebuiltKey: String = "zorder_by"
+  protected def rebuiltColumns(snap: GraftColumnStore.TableSnapshot): Seq[String] =
+    snap.zorderedBy
+  protected def rebuild(spark: SparkSession, table: String, columns: Seq[String]): Unit =
+    if (columns.nonEmpty) zorderBy(spark, table, columns)
+
+  private[store] val pinOption: String = "batch_ids"
+  private[store] val addressColumn: String = GraftTable.BATCH_ID_COL
+  private[store] val payloadPrefix: String = "b"
+  /** The delete bitmap id plus the sorted update delta ids of each batch
+    * (see [[GraftColumnStore.TableSnapshot.mutationState]]).
+    */
+  protected def mutationFingerprints(snap: GraftColumnStore.TableSnapshot,
+      ids: Set[Long]): Map[Long, String] =
+    snap.mutationState(ids).map { case (id, (bitmap, deltas)) =>
+      id -> s"${bitmap.getOrElse(-1L)}|${deltas.mkString(",")}"
+    }
 
   /** A rewrite keeps the batch size and codec, and the sketch set minus
     * any dropped column — explicit even when empty, so a dropped sketch
@@ -752,66 +787,5 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
         throw e
       }
     }
-  }
-
-  /** Durable checkpoint of a managed column table (the session-level
-    * analog of the reference's PERSISTENCE/DISKSTORE recovery story —
-    * GemFire disk stores re-hydrate regions on restart; here an explicit
-    * checkpoint/restore pair re-hydrates a store table across JVMs.
-    * Automatic cluster recovery stays an ops non-goal, SURVEY §7).
-    * Layout is part of the checkpoint: buckets, keys, clustering, batch
-    * size, codec and eviction budget all survive the round-trip. The
-    * data lands as parquet (snapshot-consistent — one scan), the layout
-    * as a properties manifest.
-    */
-  def checkpoint(spark: SparkSession, table: String, dir: String): Unit = {
-    val snap = GraftColumnStore(table).snapshot
-    read(spark, table).write.mode("overwrite").parquet(s"$dir/data")
-    GraftManifest.write(spark, dir, Seq(
-      "provider" -> "column",
-      "partition_by" -> snap.bucketBy.mkString(","),
-      "buckets" -> snap.numBuckets.toString,
-      "key_columns" -> snap.keyColumns.mkString(","),
-      "sort_by" -> snap.sortedBy.mkString(","),
-      "zorder_by" -> snap.zorderedBy.mkString(","),
-      "batch_size" -> snap.batchSize.toString,
-      "compression" -> snap.compression,
-      "eviction_budget_bytes" -> snap.evictionBudget.toString,
-      "sketch_columns" -> snap.sketchBy.mkString(","),
-      "expire_seconds" -> snap.expireSeconds.toString,
-      "rollup_threshold" -> GraftColumnStore.rollupThreshold(table).toString),
-      s"graftstore checkpoint of $table")
-  }
-
-  /** Re-hydrate a checkpointed table (fresh JVM or after a drop): the
-    * manifest's layout drives the normal bucketed write path, so the
-    * restored table is byte-for-byte the same KIND of table — colocated
-    * joins, index clustering, codec and budgets all behave as before.
-    */
-  def restore(spark: SparkSession, table: String, dir: String): DataFrame =
-    restoreFrom(spark, table, GraftManifest.read(spark, dir),
-      spark.read.parquet(s"$dir/data"))
-
-  /** Re-hydrate from an explicit layout + row source — the shared tail
-    * of [[restore]] (rows from the checkpoint's own `data/`) and
-    * [[LiveCheckpoint]]'s incremental epochs (rows from shared payload
-    * files the epoch manifest references).
-    */
-  def restoreFrom(spark: SparkSession, table: String,
-      p: java.util.Properties, df: DataFrame): DataFrame = {
-    GraftColumnStore.drop(table)
-    var w = df.write.format(FORMAT).option("table", table)
-    Seq("partition_by", "buckets", "key_columns", "sort_by", "batch_size",
-      "compression", "eviction_budget_bytes", "sketch_columns",
-      "expire_seconds", "rollup_threshold").foreach { k =>
-      val v = p.getProperty(k, "")
-      if (v.nonEmpty && !(k == "buckets" && v == "0")) w = w.option(k, v)
-    }
-    w.mode("overwrite").save()
-    // z-clustering is physical row order, which the restore write's
-    // bucket shuffle does not preserve — re-cluster from the manifest
-    val zcols = p.getProperty("zorder_by", "").split(",").filter(_.nonEmpty).toSeq
-    if (zcols.nonEmpty) zorderBy(spark, table, zcols)
-    read(spark, table)
   }
 }

@@ -169,6 +169,7 @@ object LiveCheckpoint {
     val dir = s"$root/${epochDirName(next)}"
     // both stores serve in connector mode; the layout manifest records
     // the provider, so attach dispatches without being told
+    val ops = StoreOps(table)
     val (rows, h) =
       // the incremental path decides INSIDE its own snapshot whether it
       // can represent the table (None when there are no live rows — the
@@ -177,14 +178,9 @@ object LiveCheckpoint {
       // decision and the manifest come from ONE snapshot read, so a
       // concurrent delete emptying the table between a pre-check and the
       // dump cannot commit an unattachable all-empty-payload epoch.
-      (if (!incremental) None
-      else if (GraftRowStore.get(table).isDefined)
-        publishIncrementalRowEpoch(spark, table, root, dir)
-      else if (GraftColumnStore.get(table).isDefined)
-        publishIncrementalEpoch(spark, table, root, dir)
+      (if (incremental) publishIncrementalEpoch(spark, ops, table, root, dir)
       else None).getOrElse {
-        if (GraftRowStore.get(table).isDefined) GraftRowOps.checkpoint(spark, table, dir)
-        else GraftStoreOps.checkpoint(spark, table, dir)
+        ops.checkpoint(spark, table, dir)
         fingerprint(spark.read.parquet(s"$dir/data"))
       }
     GraftManifest.write(spark, dir, Seq(
@@ -276,29 +272,17 @@ object LiveCheckpoint {
           PayloadEntry(a(0).toLong, a(1), a(2).toLong, a(3).toLong, a(4))
         })
 
-  /** Mutation fingerprint string for reuse decisions: payload ids never
-    * recycle within a store, so equality proves no DELETE/UPDATE landed
-    * on the batch between two publishes (same invariant
-    * [[GraftColumnStore.StoreTable.swapRefs]] relies on).
-    */
-  private def mutFpOf(st: (Option[Long], Vector[Long])): String =
-    s"${st._1.getOrElse(-1L)}|${st._2.mkString(",")}"
-
-  /** O(delta) epoch publish for column tables: dump only batches whose
-    * content changed since the last incremental epoch into shared
-    * content-addressed payload files, reuse the rest by reference, and
-    * derive the epoch fingerprint by SUMMING per-payload fingerprints
-    * (the content hash is an order-independent sum of per-row hashes, so
-    * per-file sums add exactly — the reader's whole-table verification
-    * at attach is unchanged). This is the documented 100 TB shape: a
-    * minutes-cadence publisher rewrites the tail, not the table.
-    *
-    * Encoding bound, stated: the payload list rides layout.properties
-    * (~50 bytes/entry), fine to ~100k batches (≈2.4 TB at the default
-    * 24 MB batch size). Past that, swap the `payloads` property for a
-    * parquet sidecar in the epoch dir — every consumer goes through
-    * [[payloadEntries]], so the encoding is one function wide and the
-    * commit protocol does not change.
+  /** O(delta) epoch publish, for either store: dump only payloads
+    * (column batches, row packs) whose content changed since the last
+    * incremental epoch of the same store into shared content-addressed
+    * payload files, reuse the rest by reference, and derive the epoch
+    * fingerprint by SUMMING per-payload fingerprints (the content hash is
+    * an order-independent sum of per-row hashes, so per-file sums add
+    * exactly — the reader's whole-table verification at attach is
+    * unchanged). This is the documented 100 TB shape: a minutes-cadence
+    * publisher rewrites the tail, not the table. A payload counts as
+    * changed when its store's mutation fingerprint moved (a delete
+    * bitmap or update delta on a batch, new tombstones in a pack).
     *
     * Returns Some(rows, contentHash), or None when THIS snapshot has no
     * live rows — the caller falls back to the full-dump form, whose
@@ -308,35 +292,33 @@ object LiveCheckpoint {
     * and a committed epoch ends up unattachable). Concurrent-mutation
     * safety: the manifest is captured BEFORE the dump scan and
     * re-validated against the live snapshot AFTER it; any DELETE/UPDATE/
-    * roll-up that moved a referenced batch in between aborts the publish
-    * (claim stays burned, caller retries) rather than committing a
-    * manifest that mixes two moments of the table.
+    * roll-up that moved a referenced payload in between aborts the
+    * publish (claim stays burned, caller retries) rather than committing
+    * a manifest that mixes two moments of the table.
     */
-  private def publishIncrementalEpoch(spark: SparkSession, table: String,
-      root: String, dir: String): Option[(Long, Long)] = {
+  private def publishIncrementalEpoch(spark: SparkSession, ops: StoreOps[_],
+      table: String, root: String, dir: String): Option[(Long, Long)] = {
     import org.apache.hadoop.fs.Path
     val (f, _) = fs(spark, root)
-    val t = GraftColumnStore(table)
-    val snap = t.snapshot
-    val refs = snap.liveRefs
-    if (snap.rowCount <= 0) return None
-    val ids = refs.map(_.id).toSet
-    val mutNow = snap.mutationState(ids)
-    // previous incremental epoch's entries (a full epoch or none ⇒
-    // every batch counts as changed — correct and conservative, e.g.
-    // after a publisher restart re-ingested under fresh batch ids)
+    val cut = ops.publishCut(table)
+    if (cut.rowCount <= 0) return None
+    // previous incremental epoch of THIS store (a full epoch, another
+    // store's or none ⇒ every payload counts as changed — correct and
+    // conservative, e.g. after a publisher restart re-ingested under
+    // fresh payload ids)
     val prev: Map[Long, PayloadEntry] =
       latestEpoch(spark, root) match {
         case Some(e) =>
           val p = GraftManifest.read(spark, dirFor(root, e))
-          if (p.getProperty("incremental", "false") == "true")
+          if (p.getProperty("incremental", "false") == "true" &&
+              (StoreOps.forManifest(p) eq ops))
             payloadEntries(spark, dirFor(root, e), p)
               .map(pe => pe.batchId -> pe).toMap
           else Map.empty
         case None => Map.empty
       }
-    val (reused, changed) = refs.partition { r =>
-      prev.get(r.id).exists(_.mutFp == mutFpOf(mutNow(r.id)))
+    val (reused, changed) = cut.ids.partition { id =>
+      prev.get(id).exists(_.mutFp == cut.fingerprints(id))
     }
     val pdir = new Path(root, PAYLOADS)
     f.mkdirs(pdir)
@@ -347,21 +329,18 @@ object LiveCheckpoint {
         val changedStats: Map[Long, (Long, Long)] =
           if (changed.isEmpty) Map.empty
           else {
-            val changedIds = changed.map(_.id)
-            // the roll-up read pattern: batch_ids prunes the scan to
-            // exactly the addressed seals at PLANNING; the dumped rows
-            // are each batch's merged visible rows (deletes/updates
-            // folded by normal scan semantics)
-            val df0 = spark.read.format(GraftStoreOps.FORMAT)
+            // the pin option is the pruning contract: the scan returns
+            // exactly the changed payloads' merged visible rows, pruned
+            // at PLANNING (no defensive isin re-filter — with many
+            // changed payloads that built a thousand-child In)
+            val df0 = spark.read.format(ops.FORMAT)
               .option("table", table)
-              .option("batch_ids", changedIds.mkString(",")).load()
-            df0.select(col("*"),
-                df0.metadataColumn(GraftTable.BATCH_ID_COL).as("__pb"))
-              .filter(col("__pb").isin(changedIds: _*))
+              .option(ops.pinOption, changed.mkString(",")).load()
+            df0.select(col("*"), df0.metadataColumn(ops.addressColumn).as("__pb"))
               .write.mode("overwrite").partitionBy("__pb")
               .parquet(tmp.toString)
             val back = spark.read.parquet(tmp.toString)
-            val tcols = snap.schema.fieldNames.map(back.col(_)).toSeq
+            val tcols = cut.schema.fieldNames.map(back.col(_)).toSeq
             // partition-column inference may read the id back narrower
             back.groupBy(col("__pb").cast("long").as("__pb"))
               .agg(count(lit(1)).as("n"),
@@ -374,26 +353,25 @@ object LiveCheckpoint {
         // rows of the manifest WE captured, or reused-and-redumped
         // entries would mix two moments (e.g. a delta folded into a new
         // seal would appear in both)
-        val after = t.snapshot
-        val afterIds = after.liveRefs.map(_.id).toSet
-        require(afterIds == ids && after.mutationState(ids) == mutNow,
-          s"publish($table): a concurrent mutation moved referenced batches " +
+        val after = ops.publishCut(table)
+        require(after.ids.toSet == cut.ids.toSet && after.fingerprints == cut.fingerprints,
+          s"publish($table): a concurrent mutation moved referenced payloads " +
             "during the incremental dump — epoch aborted, retry the publish")
-        refs.map { r =>
-          val fp = mutFpOf(mutNow(r.id))
-          prev.get(r.id).filter(_.mutFp == fp).getOrElse {
-            changedStats.get(r.id) match {
+        cut.ids.map { id =>
+          val fp = cut.fingerprints(id)
+          prev.get(id).filter(_.mutFp == fp).getOrElse {
+            changedStats.get(id) match {
               case Some((n, hs)) =>
-                val name = s"b${r.id}_r${n}_h${java.lang.Long.toHexString(hs)}"
+                val name = s"${ops.payloadPrefix}${id}_r${n}_h${java.lang.Long.toHexString(hs)}"
                 val target = new Path(pdir, name)
-                val src = new Path(tmp, s"__pb=${r.id}")
+                val src = new Path(tmp, s"__pb=$id")
                 if (f.exists(target)) () // identical content already shared
                 else if (f.rename(src, target)) written += target
                 else throw new java.io.IOException(
                   s"publish($table): failed to place payload $name")
-                PayloadEntry(r.id, fp, n, hs, name)
-              case None => // every row of the batch is deleted
-                PayloadEntry(r.id, fp, 0L, 0L, "")
+                PayloadEntry(id, fp, n, hs, name)
+              case None => // every row of the payload is deleted
+                PayloadEntry(id, fp, 0L, 0L, "")
             }
           }
         }
@@ -414,147 +392,8 @@ object LiveCheckpoint {
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/$SIDECAR")
         Seq("payloads_sidecar" -> "true")
       } else Seq("payloads" -> encodeEntries(entries))
-    GraftManifest.write(spark, dir, Seq(
-      "provider" -> "column",
-      "incremental" -> "true",
-      "partition_by" -> snap.bucketBy.mkString(","),
-      "buckets" -> snap.numBuckets.toString,
-      "key_columns" -> snap.keyColumns.mkString(","),
-      "sort_by" -> snap.sortedBy.mkString(","),
-      "zorder_by" -> snap.zorderedBy.mkString(","),
-      "batch_size" -> snap.batchSize.toString,
-      "compression" -> snap.compression,
-      "eviction_budget_bytes" -> snap.evictionBudget.toString,
-      "sketch_columns" -> snap.sketchBy.mkString(","),
-      "expire_seconds" -> snap.expireSeconds.toString,
-      "rollup_threshold" -> GraftColumnStore.rollupThreshold(table).toString) ++
-      payloadKv,
+    GraftManifest.write(spark, dir, cut.layout ++ Seq("incremental" -> "true") ++ payloadKv,
       s"incremental epoch of $table (${changed.size} dumped, ${reused.size} reused)")
-    Some((entries.iterator.map(_.rows).sum, entries.iterator.map(_.hashSum).sum))
-  }
-
-  /** Tombstone-state fingerprint of one row pack: packs are immutable
-    * and their tombstone sets only GROW (deletes/upserts union slots in;
-    * a fully-dead pack leaves the ref list, a roll-up mints NEW ids), so
-    * equality proves the pack's VISIBLE rows are unchanged — the row
-    * store's analog of the column store's delete-bitmap/update-delta
-    * fingerprint.
-    */
-  private def packFpOf(ts: Option[scala.collection.immutable.BitSet]): String =
-    ts.map(b => s"${b.size}|${b.hashCode}").getOrElse("0")
-
-  /** O(delta) epoch publish for ROW tables — the same shared-payload
-    * protocol as [[publishIncrementalEpoch]], with the PACK as the unit
-    * of reuse: dump only packs whose tombstone state changed since the
-    * last incremental epoch (the `pack_ids` planning option prunes the
-    * dump scan to exactly those packs), reuse the rest by reference.
-    * PK-keyed serving tables publishing at minutes cadence pay O(new +
-    * newly-tombstoned packs), not O(table). Same single-snapshot
-    * decision, post-dump re-validation, and abort-on-concurrent-
-    * mutation contract as the column path.
-    */
-  private def publishIncrementalRowEpoch(spark: SparkSession, table: String,
-      root: String, dir: String): Option[(Long, Long)] = {
-    import org.apache.hadoop.fs.Path
-    val (f, _) = fs(spark, root)
-    val t = GraftRowStore(table)
-    val snap = t.snapshot
-    val refs = snap.liveRefs
-    if (snap.rowCount <= 0) return None
-    val ids = refs.map(_.id).toSet
-    val fpNow: Map[Long, String] =
-      ids.iterator.map(id => id -> packFpOf(snap.tombstones.get(id))).toMap
-    val prev: Map[Long, PayloadEntry] =
-      latestEpoch(spark, root) match {
-        case Some(e) =>
-          val p = GraftManifest.read(spark, dirFor(root, e))
-          if (p.getProperty("incremental", "false") == "true" &&
-              p.getProperty("provider", "column") == "row")
-            payloadEntries(spark, dirFor(root, e), p)
-              .map(pe => pe.batchId -> pe).toMap
-          else Map.empty
-        case None => Map.empty
-      }
-    val (reused, changed) = refs.partition { r =>
-      prev.get(r.id).exists(_.mutFp == fpNow(r.id))
-    }
-    val pdir = new Path(root, PAYLOADS)
-    f.mkdirs(pdir)
-    val tmp = new Path(dir, ".payload_tmp")
-    val written = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val entries =
-      try {
-        val changedStats: Map[Long, (Long, Long)] =
-          if (changed.isEmpty) Map.empty
-          else {
-            val changedIds = changed.map(_.id)
-            // pack_ids is the pruning contract: the scan returns exactly
-            // the changed packs (no defensive isin re-filter — with many
-            // changed packs that built a thousand-child In at planning)
-            val df0 = spark.read.format(GraftRowOps.FORMAT)
-              .option("table", table)
-              .option("pack_ids", changedIds.mkString(",")).load()
-            df0.select(col("*"),
-                df0.metadataColumn(GraftRowTable.PACK_ID_COL).as("__pb"))
-              .write.mode("overwrite").partitionBy("__pb")
-              .parquet(tmp.toString)
-            val back = spark.read.parquet(tmp.toString)
-            val tcols = snap.schema.fieldNames.map(back.col(_)).toSeq
-            back.groupBy(col("__pb").cast("long").as("__pb"))
-              .agg(count(lit(1)).as("n"),
-                coalesce(sum(hash(tcols: _*).cast("bigint")), lit(0L)).as("h"))
-              .collect()
-              .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-          }
-        val after = t.snapshot
-        val afterIds = after.liveRefs.map(_.id).toSet
-        require(afterIds == ids &&
-          ids.forall(id => packFpOf(after.tombstones.get(id)) == fpNow(id)),
-          s"publish($table): a concurrent mutation moved referenced packs " +
-            "during the incremental dump — epoch aborted, retry the publish")
-        refs.map { r =>
-          val fp = fpNow(r.id)
-          prev.get(r.id).filter(_.mutFp == fp).getOrElse {
-            changedStats.get(r.id) match {
-              case Some((n, hs)) =>
-                val name = s"p${r.id}_r${n}_h${java.lang.Long.toHexString(hs)}"
-                val target = new Path(pdir, name)
-                val src = new Path(tmp, s"__pb=${r.id}")
-                if (f.exists(target)) () // identical content already shared
-                else if (f.rename(src, target)) written += target
-                else throw new java.io.IOException(
-                  s"publish($table): failed to place payload $name")
-                PayloadEntry(r.id, fp, n, hs, name)
-              case None => // every row of the pack is tombstoned
-                PayloadEntry(r.id, fp, 0L, 0L, "")
-            }
-          }
-        }
-      } catch {
-        case e: Throwable =>
-          written.foreach(f.delete(_, true))
-          f.delete(tmp, true)
-          throw e
-      }
-    f.delete(tmp, true)
-    val sidecarThreshold = spark.conf.get(SIDECAR_THRESHOLD_KEY, "10000").toInt
-    val payloadKv =
-      if (entries.size > sidecarThreshold) {
-        spark.createDataFrame(entries)
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/$SIDECAR")
-        Seq("payloads_sidecar" -> "true")
-      } else Seq("payloads" -> encodeEntries(entries))
-    GraftManifest.write(spark, dir, Seq(
-      "provider" -> "row",
-      "incremental" -> "true",
-      "partition_by" -> snap.bucketBy.mkString(","),
-      "buckets" -> snap.numBuckets.toString,
-      "key_columns" -> snap.keyColumns.mkString(","),
-      "indexed" -> snap.indexes.values.map(_.column).toSeq.sorted.mkString(","),
-      "eviction_budget_bytes" -> snap.evictionBudget.toString,
-      "expire_seconds" -> snap.expireSeconds.toString) ++
-      payloadKv,
-      s"incremental row epoch of $table (${changed.size} dumped, ${reused.size} reused)")
     Some((entries.iterator.map(_.rows).sum, entries.iterator.map(_.hashSum).sum))
   }
 
@@ -607,9 +446,12 @@ object LiveCheckpoint {
     * (`GraftSession.attachView`). Full epochs read `data/`; incremental
     * epochs read the payload files their manifest references.
     */
-  def epochFrame(spark: SparkSession, root: String, epoch: Long): DataFrame = {
+  def epochFrame(spark: SparkSession, root: String, epoch: Long): DataFrame =
+    epochRows(spark, root, epoch, GraftManifest.read(spark, dirFor(root, epoch)))
+
+  private def epochRows(spark: SparkSession, root: String, epoch: Long,
+      layout: java.util.Properties): DataFrame = {
     val dir = dirFor(root, epoch)
-    val layout = GraftManifest.read(spark, dir)
     if (layout.getProperty("incremental", "false") == "true") {
       val paths = payloadEntries(spark, dir, layout)
         .map(_.name).filter(_.nonEmpty)
@@ -638,32 +480,18 @@ object LiveCheckpoint {
   }
 
   def attach(spark: SparkSession, table: String, root: String, epoch: Long): Unit = {
-    val dir = s"$root/${epochDirName(epoch)}"
+    val dir = dirFor(root, epoch)
     val props = GraftManifest.readOpt(spark, dir, EPOCH_PROPS).getOrElse(
       throw new IllegalStateException(s"epoch $epoch has no manifest under $root"))
     val layout = GraftManifest.read(spark, dir)
-    val isRow = layout.getProperty("provider", "column") == "row"
-    val incrementalEpoch = layout.getProperty("incremental", "false") == "true"
-    // incremental epoch (either provider): rows live in the shared
-    // payload files the manifest references (an epoch dir holds only
-    // metadata)
-    def payloadRows(): DataFrame = spark.read.parquet(
-      payloadEntries(spark, dir, layout)
-        .map(_.name).filter(_.nonEmpty)
-        .map(n => s"$root/$PAYLOADS/$n"): _*)
-    val restored =
-      if (isRow && incrementalEpoch)
-        GraftRowOps.restoreFrom(spark, table, layout, payloadRows())
-      else if (isRow) GraftRowOps.restore(spark, table, dir)
-      else if (incrementalEpoch)
-        GraftStoreOps.restoreFrom(spark, table, layout, payloadRows())
-      else GraftStoreOps.restore(spark, table, dir)
-    val (rows, h) = fingerprint(restored)
+    val ops = StoreOps.forManifest(layout)
+    val (rows, h) = fingerprint(
+      ops.restoreFrom(spark, table, layout, epochRows(spark, root, epoch, layout)))
     val (wantRows, wantH) =
       (props.getProperty("rows").toLong, props.getProperty("content_hash").toLong)
     if (rows != wantRows || h != wantH) {
       // do not leave a known-bad snapshot registered as servable
-      if (isRow) GraftRowStore.drop(table) else GraftColumnStore.drop(table)
+      ops.drop(table)
       throw new IllegalStateException(
         s"torn snapshot at epoch $epoch: restored ($rows, $h) != published ($wantRows, $wantH)")
     }

@@ -8,7 +8,8 @@ import scala.collection.concurrent.TrieMap
 /** Table lifecycle shared by the column and row stores: the metadata
   * handle a snapshot keeps per payload, the snapshot-swap holder with its
   * reader-lease GC, the name → table registry, the layout both stores
-  * resolve from write options, and the layout-preserving ALTER rewrite.
+  * resolve from write options, the layout-preserving ALTER rewrite, and
+  * checkpoint / restore through one layout manifest.
   * Each store supplies its payload tier, its snapshot type and its own
   * mutations; nothing here knows which store it serves (SnappyData keeps
   * row and column tables on one region layer the same way).
@@ -44,6 +45,8 @@ trait TableState[S, Ref <: PayloadRef] {
   def evictionBudget: Long
   /** EXPIRE time-to-live in seconds; 0 = no expiry. */
   def expireSeconds: Long
+  /** Visible rows of the live refs. */
+  def rowCount: Long
 
   def withRefs(refs: Vector[Ref]): S
   /** This snapshot without the refs `ids` and the state attached to them;
@@ -243,14 +246,32 @@ final case class Relayout(renames: Map[String, String], columns: Seq[String]) {
   def surviving(cols: Seq[String]): Seq[String] = cols.map(follow).filter(columns.contains)
 }
 
-/** Table operations written once for both stores. */
+/** What an incremental publish reads off one snapshot: the live payload
+  * ids, the live row count, each payload's mutation fingerprint and the
+  * table's layout manifest entries.
+  */
+private[store] final case class PublishCut(ids: Vector[Long], rowCount: Long,
+    fingerprints: Map[Long, String], layout: Seq[(String, String)],
+    schema: StructType)
+
+/** Table operations written once for both stores: the ALTER rewrite,
+  * the layout manifest, and checkpoint / restore of the table through it
+  * (SnappyData's PERSISTENCE is one option for column and row tables
+  * alike). Each store supplies only what differs, through the hooks.
+  */
 trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
   val FORMAT: String
+  /** The layout manifest's `provider` value for this store. */
+  val provider: String
 
   def read(spark: SparkSession, table: String): DataFrame =
     spark.read.format(FORMAT).option("table", table).load()
 
-  protected def snapshotOf(table: String): S
+  protected def registry: TableRegistry
+  def exists(table: String): Boolean = registry.get(table).isDefined
+  def drop(table: String): Unit = registry.drop(table)
+
+  def snapshotOf(table: String): S
   /** Store-only layout options a rewrite must carry (the column store's
     * batch size, codec and sketch set).
     */
@@ -260,6 +281,104 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
     */
   protected def afterRewrite(spark: SparkSession, table: String, snap: S,
       r: Relayout): Unit = ()
+
+  /** Store-only manifest keys, each read off a live table (by name and
+    * snapshot); a restore replays every one as a write option.
+    */
+  protected def storeLayout: Seq[(String, (String, S) => String)]
+  /** The one store-only manifest key a restore does NOT replay as a write
+    * option: a column list naming state the restore write cannot carry
+    * over — physical row order the bucket shuffle destroys (z-order) or
+    * stats keyed by the old payload ids (secondary indexes).
+    */
+  protected val rebuiltKey: String
+  protected def rebuiltColumns(snap: S): Seq[String]
+  /** Rebuild [[rebuiltKey]]'s columns on the freshly restored table. */
+  protected def rebuild(spark: SparkSession, table: String, columns: Seq[String]): Unit
+
+  /** Incremental publish addressing: the read option that pins a scan to
+    * named payloads, the metadata column carrying each row's payload id,
+    * and the prefix of the shared payload file names.
+    */
+  private[store] val pinOption: String
+  private[store] val addressColumn: String
+  private[store] val payloadPrefix: String
+  /** Per-payload mutation fingerprint: equal strings prove no DELETE /
+    * UPDATE changed the payload's visible rows between two snapshots
+    * (payload ids never recycle within a store).
+    */
+  protected def mutationFingerprints(snap: S, ids: Set[Long]): Map[Long, String]
+
+  /** Every manifest key a restore replays: the shared layout, then the
+    * store's own.
+    */
+  private def layoutKeys: Seq[(String, (String, S) => String)] =
+    Seq[(String, (String, S) => String)](
+      ("partition_by", (_, s) => s.bucketBy.mkString(",")),
+      ("buckets", (_, s) => s.numBuckets.toString),
+      ("key_columns", (_, s) => s.keyColumns.mkString(",")),
+      ("eviction_budget_bytes", (_, s) => s.evictionBudget.toString),
+      ("expire_seconds", (_, s) => s.expireSeconds.toString)) ++ storeLayout
+
+  /** The table's layout manifest: everything a restore needs to rebuild
+    * the same KIND of table — buckets, keys, budgets and the store's own
+    * layout — so colocated joins, pruning and codecs behave as before.
+    */
+  def layoutEntries(table: String, snap: S): Seq[(String, String)] =
+    Seq("provider" -> provider, rebuiltKey -> rebuiltColumns(snap).mkString(",")) ++
+      layoutKeys.map { case (k, of) => k -> of(table, snap) }
+
+  /** The shared layout of the live table. */
+  def layout(table: String): BaseLayout = {
+    val s = snapshotOf(table)
+    BaseLayout(s.keyColumns, s.bucketBy, s.numBuckets, s.evictionBudget, s.expireSeconds)
+  }
+
+  private[store] def publishCut(table: String): PublishCut = {
+    val snap = snapshotOf(table)
+    val ids = snap.liveRefs.map(_.id)
+    PublishCut(ids, snap.rowCount, mutationFingerprints(snap, ids.toSet),
+      layoutEntries(table, snap), snap.schema)
+  }
+
+  /** Durable checkpoint of a store table (the session-level analog of the
+    * reference's PERSISTENCE/DISKSTORE recovery story — GemFire disk
+    * stores re-hydrate regions on restart; here an explicit
+    * checkpoint/restore pair re-hydrates a store table across JVMs.
+    * Automatic cluster recovery stays an ops non-goal, SURVEY §7). The
+    * data lands as parquet (snapshot-consistent — one scan), the layout
+    * as a properties manifest.
+    */
+  def checkpoint(spark: SparkSession, table: String, dir: String): Unit = {
+    val snap = snapshotOf(table)
+    read(spark, table).write.mode("overwrite").parquet(s"$dir/data")
+    GraftManifest.write(spark, dir, layoutEntries(table, snap),
+      s"$provider table checkpoint of $table")
+  }
+
+  /** Re-hydrate a checkpointed table (fresh JVM or after a drop). */
+  def restore(spark: SparkSession, table: String, dir: String): DataFrame =
+    restoreFrom(spark, table, GraftManifest.read(spark, dir),
+      spark.read.parquet(s"$dir/data"))
+
+  /** Re-hydrate `table` from a layout manifest and a row source — the
+    * shared tail of [[restore]] (rows from the checkpoint's own `data/`)
+    * and [[LiveCheckpoint]]'s attach (rows from an epoch). The manifest's
+    * layout drives the normal bucketed write path; a restore replaces
+    * whatever either store held under the name.
+    */
+  def restoreFrom(spark: SparkSession, table: String,
+      p: java.util.Properties, df: DataFrame): DataFrame = {
+    StoreOps.drop(table)
+    var w = df.write.format(FORMAT).option("table", table)
+    layoutKeys.foreach { case (k, _) =>
+      val v = p.getProperty(k, "")
+      if (v.nonEmpty && !(k == "buckets" && v == "0")) w = w.option(k, v)
+    }
+    w.mode("overwrite").save()
+    rebuild(spark, table, BaseLayout.columnList(p.getProperty(rebuiltKey, "")))
+    read(spark, table)
+  }
 
   /** ALTER-style rewrite that PRESERVES the physical layout — buckets,
     * keys, eviction budget, TTL and the store's own options (minus any
@@ -337,4 +456,26 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
     } finally graft.operators.CheckpointScope.unpersist(frozen)
     afterRewrite(spark, table, snap, r)
   }
+}
+
+/** Store dispatch: by table name (the row store first) or by a layout
+  * manifest's `provider` (absent on the oldest manifests, which only the
+  * column store wrote).
+  */
+object StoreOps {
+  val all: Seq[StoreOps[_]] = Seq(GraftRowOps, GraftStoreOps)
+
+  def forTable(table: String): Option[StoreOps[_]] = all.find(_.exists(table))
+
+  def apply(table: String): StoreOps[_] = forTable(table).getOrElse(
+    throw new IllegalArgumentException(s"store table not found: $table"))
+
+  def forManifest(p: java.util.Properties): StoreOps[_] = {
+    val provider = p.getProperty("provider", GraftStoreOps.provider)
+    all.find(_.provider == provider).getOrElse(
+      throw new IllegalArgumentException(s"unknown store provider '$provider'"))
+  }
+
+  /** Drop `table` from every store. */
+  def drop(table: String): Unit = all.foreach(_.drop(table))
 }

@@ -268,7 +268,7 @@ class IncrementalPublishSpec extends SparkTestBase {
     GraftColumnStore.drop("inc_sc"); GraftColumnStore.drop("inc_scsrv")
   }
 
-  test("session face: incremental publish/attach with constraints; row tables fall back to full") {
+  test("session face: incremental publish/attach with constraints") {
     val g = GraftSession(spark)
     val root = tempDir("inc_sess").toString
     import spark.implicits._

@@ -26,6 +26,10 @@ class JdbcServeSpec extends SparkTestBase {
     }
     spark.conf.set("hive.server2.thrift.port", p.toString)
     spark.conf.set("hive.server2.thrift.bind.host", "localhost")
+    // Hive's per-session downloaded-resources directory defaults to
+    // java.io.tmpdir and outlives the suite; keep it under a temp root
+    spark.conf.set("hive.downloaded.resources.dir",
+      tempDir("jdbc_res").toString + "/${hive.session.id}_resources")
     org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
       .startWithContext(spark.sqlContext)
     p

@@ -194,6 +194,116 @@ class LiveCheckpointSpec extends SparkTestBase {
     g.dropTable("lc_cpub"); g.dropTable("lc_csrv")
   }
 
+  test("restoring a checkpoint without constraints drops the previous restore's constraints") {
+    val g = GraftSession(spark)
+    val withNotNull = tempDir("lc_rcons_a").toString
+    val without = tempDir("lc_rcons_b").toString
+    import spark.implicits._
+    import org.apache.spark.sql.graft.Constraints
+    g.sql("CREATE TABLE lc_rcpub (pk bigint, v string not null) USING column")
+    g.insert("lc_rcpub", Seq((1L, "a")).toDF("pk", "v"))
+    g.checkpointTable("lc_rcpub", withNotNull)
+    g.dropTable("lc_rcpub")
+    g.sql("CREATE TABLE lc_rcpub (pk bigint, v string) USING column")
+    g.insert("lc_rcpub", Seq((1L, "a"), (2L, "b")).toDF("pk", "v"))
+    g.checkpointTable("lc_rcpub", without)
+    g.restoreTable("lc_rcsrv", withNotNull)
+    assert(Constraints.get("lc_rcsrv").exists(_.notNull.nonEmpty),
+      "checkpoint A carries the NOT NULL")
+    g.restoreTable("lc_rcsrv", without)
+    assert(g.table("lc_rcsrv").count() == 2)
+    // checkpoint B has no sidecar, which means NO constraints: A's NOT
+    // NULL must not survive the restore over the same name
+    assert(Constraints.get("lc_rcsrv").forall(_.isEmpty),
+      s"stale constraints survived the restore: ${Constraints.get("lc_rcsrv")}")
+    // the same through a REUSED dir: checkpointing the unconstrained table
+    // over A must not leave A's sidecar behind for the next restore
+    g.checkpointTable("lc_rcpub", withNotNull)
+    g.restoreTable("lc_rcsrv", withNotNull)
+    assert(Constraints.get("lc_rcsrv").forall(_.isEmpty),
+      s"a reused dir revived stale constraints: ${Constraints.get("lc_rcsrv")}")
+    g.dropTable("lc_rcpub"); g.dropTable("lc_rcsrv")
+  }
+
+  test("checkpoint, full and incremental epochs round-trip either store's whole layout") {
+    import org.apache.spark.sql.graft.store.{GraftRowOps, GraftRowStore}
+    import spark.implicits._
+    val g = GraftSession(spark)
+    val rows = (0L until 3000L).map(i => (i, i % 16, i * 7 % 101, s"s$i"))
+      .toDF("id", "k", "v", "s")
+    rows.write.format(fmt).option("table", "rt_col")
+      .option("partition_by", "k").option("buckets", "4").option("key_columns", "id")
+      .option("batch_size", "256").option("compression", "lz4")
+      .option("sketch_columns", "v").option("rollup_threshold", "3")
+      .option("eviction_budget_bytes", "100000000").option("expire_seconds", "86400")
+      .mode("overwrite").save()
+    GraftStoreOps.zorderBy(spark, "rt_col", Seq("v", "id"))
+    rows.write.format(GraftRowOps.FORMAT).option("table", "rt_row")
+      .option("key_columns", "id").option("partition_by", "id").option("buckets", "4")
+      .option("eviction_budget_bytes", "50000000").option("expire_seconds", "86400")
+      .mode("overwrite").save()
+    GraftRowOps.createIndex(spark, "rt_row", "v")
+    // (store, its layout manifest of a live table, manifest entries the
+    // fixture sets — so the whole-layout comparison cannot pass vacuously)
+    val stores: Seq[(String, String => Map[String, String], Map[String, String])] = Seq(
+      ("rt_col", t => GraftStoreOps.layoutEntries(t, GraftColumnStore(t).snapshot).toMap,
+        Map("provider" -> "column", "buckets" -> "4", "key_columns" -> "id",
+          "zorder_by" -> "v,id", "compression" -> "lz4", "sketch_columns" -> "v",
+          "rollup_threshold" -> "3", "expire_seconds" -> "86400")),
+      ("rt_row", t => GraftRowOps.layoutEntries(t, GraftRowStore(t).snapshot).toMap,
+        Map("provider" -> "row", "buckets" -> "4", "key_columns" -> "id",
+          "indexed" -> "v", "eviction_budget_bytes" -> "50000000",
+          "expire_seconds" -> "86400")))
+    // (form, copy the source table into the restored name)
+    val forms: Seq[(String, (String, String) => Unit)] = Seq(
+      ("checkpointTable", { (src, dst) =>
+        val dir = tempDir("rt_ckpt").toString
+        g.checkpointTable(src, dir)
+        g.restoreTable(dst, dir)
+      }),
+      ("full epoch", { (src, dst) =>
+        val root = tempDir("rt_full").toString
+        g.publishTable(src, root, incremental = false)
+        g.attachTable(dst, root)
+      }),
+      ("incremental epoch", { (src, dst) =>
+        val root = tempDir("rt_inc").toString
+        val e = g.publishTable(src, root, incremental = true)
+        assert(GraftManifest.read(spark, LiveCheckpoint.dirFor(root, e))
+          .getProperty("incremental") == "true")
+        g.attachTable(dst, root)
+      }))
+    for ((src, layoutOf, fixture) <- stores; ((form, copy), i) <- forms.zipWithIndex) {
+      g.adoptFromStore(src)
+      val dst = s"${src}_rt$i"
+      copy(src, dst)
+      val want = layoutOf(src)
+      assert(fixture.forall { case (k, v) => want.get(k).contains(v) },
+        s"$src fixture layout: $want")
+      assert(layoutOf(dst) == want, s"$src via $form")
+      assert(LiveCheckpoint.fingerprint(g.table(dst)) ==
+        LiveCheckpoint.fingerprint(g.table(src)), s"$src content via $form")
+      g.dropTable(dst)
+    }
+    g.dropTable("rt_col"); g.dropTable("rt_row")
+  }
+
+  test("CREATE over the other store's table leaves only the new table to publish") {
+    val g = GraftSession(spark)
+    val root = tempDir("lc_swap").toString
+    import spark.implicits._
+    g.createTable("lc_swap", Seq((1L, "row")).toDF("pk", "v"),
+      keyColumns = Seq("pk"), provider = "row")
+    g.createTable("lc_swap", Seq((1L, "col"), (2L, "col")).toDF("pk", "v"))
+    assert(g.publishTable("lc_swap", root) == 0L)
+    assert(GraftManifest.read(spark, LiveCheckpoint.dirFor(root, 0L))
+      .getProperty("provider") == "column", "the replaced row table was published")
+    assert(g.attachTable("lc_swapsrv", root) == 0L)
+    assert(g.table("lc_swapsrv").as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "col"), (2L, "col")))
+    g.dropTable("lc_swap"); g.dropTable("lc_swapsrv")
+  }
+
   test("SQL faces: PUBLISH TABLE / ATTACH TABLE / ATTACH VIEW ... EPOCH n VERIFY") {
     val g = GraftSession(spark)
     val root = tempDir("lc_sql").toString

@@ -7,27 +7,43 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the payload tier from forking again: the column and row stores
+/** Keeps the store layer from forking again: the column and row stores
   * spill, fault back and compress through the one `PayloadTier`, so the
-  * LZ4 codec and the spill directory live in its file alone.
+  * LZ4 codec and the spill directory live in its file alone; and they
+  * checkpoint and publish through the one `StoreOps`, so the layout
+  * manifest is written in `StoreTables.scala` alone.
   */
 class StoreTierSpec extends AnyFunSuite {
 
-  test("LZ4 codec and spill directory appear only in the shared payload tier") {
-    // split so this file does not match itself
-    val needles = Seq("LZ4" + "Block", "SpillSweep" + ".registeredTempDir")
+  /** Files under src/main other than `owner` that contain any needle. */
+  private def offenders(owner: String, needles: Seq[String]): List[Path] = {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), s"run from the project root: no $root")
     val files = Files.walk(root)
     val sources = try files.iterator.asScala.filter(Files.isRegularFile(_)).toList
       finally files.close()
-    val offenders = sources.filter { (p: Path) =>
-      p.getFileName.toString != "PayloadTier.scala" && {
+    sources.filter { (p: Path) =>
+      p.getFileName.toString != owner && {
         val text = new String(Files.readAllBytes(p), ISO_8859_1)
         needles.exists(text.contains)
       }
     }
-    if (offenders.nonEmpty)
-      fail(s"${offenders.size} files bypass PayloadTier: ${offenders.mkString(", ")}")
+  }
+
+  test("LZ4 codec and spill directory appear only in the shared payload tier") {
+    // split so this file does not match itself
+    val found = offenders("PayloadTier.scala",
+      Seq("LZ4" + "Block", "SpillSweep" + ".registeredTempDir"))
+    if (found.nonEmpty)
+      fail(s"${found.size} files bypass PayloadTier: ${found.mkString(", ")}")
+  }
+
+  test("the layout manifest is written only by the shared store operations") {
+    // both stores' checkpoints and epochs write their layout through
+    // StoreOps.layoutEntries; a second "provider" entry is a second copy
+    val found = offenders("StoreTables.scala", Seq("\"provider\"" + " ->"))
+    if (found.nonEmpty)
+      fail(s"${found.size} files write a layout manifest outside StoreOps: " +
+        found.map(_.getFileName).mkString(", "))
   }
 }
