@@ -34,6 +34,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // joins (spark.sql.graft.dictJoin = false|auto|true, default auto:
     // fires only when the probe key is actually dict-encoded)
     e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.store.DictJoinStrategy)
+    // a store-table append whose rows are already on the driver (a
+    // VALUES list) writes and commits on the calling thread, no job
+    e.injectPlannerStrategy(session => org.apache.spark.sql.graft.store.LocalWrites(session))
     // whole-table approx_count_distinct over sketch_columns tables →
     // answered from per-batch HLL digests (no scan); declines on any
     // delete/update so the estimate contract is never weakened

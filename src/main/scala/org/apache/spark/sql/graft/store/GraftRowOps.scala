@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graft.store
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.BitSet
@@ -19,7 +22,10 @@ import scala.collection.mutable
   *    pushed-down scan over the hidden address columns;
   *  - mutation = tombstone + append: new row versions land in new packs
   *    written by the tasks, only metadata (pack refs, tombstone bitmaps)
-  *    returns to the driver, which swaps the snapshot atomically.
+  *    returns to the driver, which swaps the snapshot atomically;
+  *  - a single-row op submits no job: a put whose source is local and a
+  *    delete whose victim read is a key lookup run the same task body on
+  *    the calling thread ([[LocalRun]]).
   */
 object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
 
@@ -96,23 +102,29 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
   }
 
   /** The key-addressed probe shared by put and deleteKeys: one task per
-    * partition of `routed`, where each source row's key tombstones its
-    * live match among the candidate packs — the task's own bucket when
+    * source partition, where each source row's key tombstones its live
+    * match among the candidate packs — the task's own bucket when
     * `bucketed` (the key determines the bucket), every live pack
-    * otherwise. `task(pid)` gives the per-task consumer of each probed
-    * row and what the task returns after its last row. Returns the merged
-    * tombstones and the task results.
+    * otherwise. `source` is the routed source for a job
+    * (`Left`), or rows already on the driver, grouped by the partition
+    * the job path would route them to (`Right`): the same task body runs
+    * on the calling thread once per group, with no job. `task(pid)` gives
+    * the per-task consumer of each probed row and the packs the task
+    * sealed after its last row. Returns the merged tombstones and the
+    * sealed packs; a failed local run releases the packs earlier groups
+    * sealed.
     */
-  private def probeKeys[R](routed: DataFrame, snap: GraftRowStore.RowSnapshot,
-      bucketed: Boolean, keyOrds: Array[Int],
+  private def probeKeys(spark: SparkSession,
+      source: Either[DataFrame, Seq[(Int, Array[InternalRow])]],
+      snap: GraftRowStore.RowSnapshot, bucketed: Boolean, keyOrds: Array[Int],
       keyTypes: Array[org.apache.spark.sql.types.DataType])(
-      task: Int => (org.apache.spark.sql.catalyst.InternalRow => Unit, () => R))
-      : (Map[Long, BitSet], Seq[R]) = {
+      task: Int => (InternalRow => Unit, () => Seq[GraftRowStore.PackRef]))
+      : (Map[Long, BitSet], Seq[GraftRowStore.PackRef]) = {
     // one TTL cut for both enumerations (liveRefs reads the clock)
     val allRefs = snap.liveRefs
     val refsByBucket = allRefs.groupBy(_.bucketId)
     val tomb = snap.tombstones
-    val results = routed.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+    val body = (pid: Int, it: Iterator[InternalRow]) => {
       val candidates = if (bucketed) refsByBucket.getOrElse(pid, Vector.empty) else allRefs
       // resolve candidate packs ONCE per task: a fetch deserializes a
       // SPILLED pack from disk per call, so a per-row fetch would pay
@@ -129,15 +141,35 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
         }
         onRow(r)
       }
-      Iterator.single((tombstones.map { case (k, v) => k -> v.toBitMask }.toMap, finish()))
-    }.collect()
-    (mergeBitmaps(results.iterator.flatMap(_._1)), results.iterator.map(_._2).toSeq)
+      (tombstones.map { case (k, v) => k -> v.toBitMask }.toMap, finish())
+    }
+    val results = source match {
+      case Left(routed) =>
+        routed.queryExecution.toRdd
+          .mapPartitionsWithIndex((pid, it) => Iterator.single(body(pid, it))).collect().toSeq
+      case Right(parts) =>
+        val numPartitions = math.max(1, snap.numBuckets)
+        val done = mutable.ArrayBuffer.empty[(Map[Long, Array[Long]], Seq[GraftRowStore.PackRef])]
+        try parts.foreach { case (pid, rows) =>
+          done += LocalRun(spark.sparkContext, pid, numPartitions)(_ => body(pid, rows.iterator))
+        } catch {
+          case e: Throwable =>
+            GraftRowStore.packs.release(done.flatMap(_._2.map(_.id)))
+            throw e
+        }
+        done.toSeq
+    }
+    (mergeBitmaps(results.iterator.flatMap(_._1)), results.flatMap(_._2))
   }
 
   /** PUT INTO (upsert): for each source row, the live row with the same
     * key (if any) is tombstoned and the source row appended — both sides
     * resolved task-side after one shuffle of the SOURCE onto the bucket
-    * routing (reference: PK-routed put against the bucket region).
+    * routing (reference: PK-routed put against the bucket region). A
+    * local source (a `VALUES` list, or a key lookup — UPDATE's pinned
+    * read) is collected without a job, de-duplicated on the driver
+    * keeping each key's first row (the row `dropDuplicates` keeps) and
+    * probed on the calling thread.
     */
   def put(spark: SparkSession, table: String, source: DataFrame): Unit = {
     ReplicaGuard.requireWritable(table, "put")
@@ -145,21 +177,35 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
     withPinned(t) { snap =>
       require(snap.keyColumns.nonEmpty, s"graftrow.put($table) requires key_columns")
       val cols = snap.schema.fieldNames.toSeq
-      val src = (if (source.columns.toSeq == cols) source
+      val src = if (source.columns.toSeq == cols) source
         else if (source.columns.toSet == cols.toSet) source.select(cols.map(col): _*)
-        else source.toDF(cols: _*)).dropDuplicates(snap.keyColumns)
-      val routed =
-        if (snap.numBuckets > 0)
-          src.repartition(snap.numBuckets, snap.bucketBy.map(col): _*)
-        else src
+        else source.toDF(cols: _*)
       val bucketed = snap.numBuckets > 0 && snap.bucketBy == snap.keyColumns
       val keyOrds = snap.keyOrdinals
       val keyTypes = snap.keyTypes
       val numBuckets = snap.numBuckets
-      val (tombstones, newRefs) = probeKeys(routed, snap, bucketed, keyOrds, keyTypes) { pid =>
-        val buf = mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
+      val routed = LocalRun.localRows(src.queryExecution.executedPlan) match {
+        case Some(rows) =>
+          val seen = new java.util.HashSet[GraftRowStore.RowKey]()
+          val distinct = rows.filter(r => seen.add(GraftRowStore.keyOf(r, keyOrds, keyTypes)))
+          Right(
+            if (numBuckets > 0) LocalRun.hashRoute(distinct.toSeq, snap.bucketBy.map { c =>
+              val i = cols.indexOf(c)
+              BoundReference(i, src.schema(i).dataType, nullable = true)
+            }, numBuckets)
+            else Seq(0 -> distinct))
+        case None =>
+          val deduped = src.dropDuplicates(snap.keyColumns)
+          Left(if (numBuckets > 0) deduped.repartition(numBuckets, snap.bucketBy.map(col): _*)
+            else deduped)
+      }
+      val (tombstones, newRefs) = probeKeys(spark, routed, snap, bucketed, keyOrds, keyTypes) { pid =>
+        val buf = mutable.ArrayBuffer.empty[InternalRow]
         val refs = mutable.ArrayBuffer.empty[GraftRowStore.PackRef]
         val bucketId = if (numBuckets > 0) pid else -1
+        // a failed attempt releases what it sealed
+        Option(TaskContext.get()).foreach(_.addTaskFailureListener((_, _) =>
+          GraftRowStore.packs.release(refs.map(_.id))))
         def seal(): Unit = if (buf.nonEmpty) {
           val pack = new GraftRowStore.RowPack(buf.toArray, keyOrds, keyTypes)
           refs += GraftRowStore.PackRef(GraftRowStore.packs.put(pack),
@@ -171,7 +217,7 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
           if (buf.length >= GraftRowTable.PACK_SIZE) seal()
         }, () => { seal(); refs.toSeq })
       }
-      t.applyMutation(tombstones, newRefs.flatten)
+      t.applyMutation(tombstones, newRefs)
     }
   }
 
@@ -189,28 +235,32 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
         if (bucketed) src.repartition(snap.numBuckets, snap.bucketBy.map(col): _*)
         else src
       // the source rows ARE the keys
-      val (tombstones, _) = probeKeys(routed, snap, bucketed,
-        snap.keyColumns.indices.toArray, snap.keyTypes)(_ => (_ => (), () => ()))
+      val (tombstones, _) = probeKeys(spark, Left(routed), snap, bucketed,
+        snap.keyColumns.indices.toArray, snap.keyTypes)(_ => (_ => (), () => Nil))
       if (tombstones.nonEmpty) t.applyMutation(tombstones, Nil)
     }
   }
 
   /** DELETE FROM table WHERE cond: victims located by pushed-down scan on
-    * the hidden addresses, tombstoned per pack.
+    * the hidden addresses, tombstoned per pack. A victim read pinned to
+    * a key is a key lookup and runs on the calling thread, with no job.
     */
   def delete(spark: SparkSession, table: String, cond: Column): Unit = {
     ReplicaGuard.requireWritable(table, "delete")
-    import spark.implicits._
-    val bitmaps = withAddress(spark, table)
-      .filter(coalesce(cond, lit(false)))
+    // a filter drops NULL like FALSE; the bare condition (not wrapped in
+    // coalesce) is what pushes down and pins a nullable key
+    val victims = withAddress(spark, table)
+      .filter(cond)
       .select(col("_pid"), col("_rid"))
-      .as[(Long, Int)]
-      .mapPartitions { it =>
-        val acc = mutable.Map.empty[Long, mutable.BitSet]
-        it.foreach { case (p, r) => acc.getOrElseUpdate(p, mutable.BitSet.empty) += r }
-        acc.iterator.map { case (p, s) => (p, s.toBitMask) }
-      }
-      .collect()
+    val bitmapsOf = (it: Iterator[InternalRow]) => {
+      val acc = mutable.Map.empty[Long, mutable.BitSet]
+      it.foreach(r => acc.getOrElseUpdate(r.getLong(0), mutable.BitSet.empty) += r.getInt(1))
+      acc.iterator.map { case (p, s) => (p, s.toBitMask) }
+    }
+    val bitmaps = LocalRun.localRows(victims.queryExecution.executedPlan) match {
+      case Some(rows) => bitmapsOf(rows.iterator).toArray
+      case None => victims.queryExecution.toRdd.mapPartitions(bitmapsOf).collect()
+    }
     if (bitmaps.nonEmpty)
       GraftRowStore(table).applyMutation(mergeBitmaps(bitmaps.iterator), Nil)
   }
@@ -231,7 +281,7 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
     }
     val setMap = assignments.toMap
     val updated = read(spark, table)
-      .filter(coalesce(cond, lit(false)))
+      .filter(cond)
       .select(snap.schema.fieldNames.map(c =>
         setMap.get(c).map(_.as(c)).getOrElse(col(c))).toSeq: _*)
     // put tombstones the old version by key and appends the new one

@@ -215,10 +215,6 @@ object GraftRowStore extends TableRegistry {
     * indexes, not scan.
     */
   val indexProbes = new AtomicLong(0)
-  /** Key lookups (row or column store) answered on the calling thread by
-    * [[LocalLookupExec]], without a Spark job.
-    */
-  val localLookups = new AtomicLong(0)
   val packsScanned = new AtomicLong(0)
   /** Secondary-index range scans: packs pruned by stats at planning, and
     * packs actually binary-searched by tasks.

@@ -322,7 +322,10 @@ object LiveCheckpoint {
     }
     val pdir = new Path(root, PAYLOADS)
     f.mkdirs(pdir)
-    val tmp = new Path(dir, ".payload_tmp")
+    // not dot- or underscore-led: Spark's file index skips such paths as
+    // hidden and warns that every path was ignored. Epoch reads name
+    // data/ or payload paths, so a crash's leftover is never read.
+    val tmp = new Path(dir, "payload_dump")
     val written = scala.collection.mutable.ArrayBuffer.empty[Path]
     val entries =
       try {

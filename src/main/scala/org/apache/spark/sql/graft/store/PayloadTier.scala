@@ -132,6 +132,9 @@ final class PayloadTier[P <: AnyRef](kind: String, filePrefix: String,
 
   def isResident(id: Long): Boolean = resident.contains(id)
 
+  /** Payloads held, resident or spilled. */
+  def count: Int = resident.size + spilledFiles.size
+
   /** Resident (heap) payload size; 0 once spilled. */
   def residentBytes(id: Long): Long = if (resident.contains(id)) sizeBytes(id) else 0L
 

@@ -431,4 +431,45 @@ class JdbcServeSpec extends SparkTestBase {
       g.dropTable("jdbc_pk")
     }
   }
+
+  test("single-row INSERT, PUT INTO and UPDATE over the wire submit no job") {
+    // serving's write mix: the statements commit on the handler thread,
+    // and a PK read over the wire sees each write
+    val conn = connect()
+    try {
+      val st = conn.createStatement()
+      st.execute("CREATE TABLE jdbc_wo (k bigint, cust bigint, price bigint) USING column " +
+        "OPTIONS (key_columns 'k', partition_by 'k', buckets '4')")
+      st.execute("INSERT INTO graft.jdbc_wo SELECT id, id % 7, id * 10 FROM range(1, 101)")
+      st.execute("CREATE TABLE jdbc_wc (k bigint, name string, bal bigint) USING row " +
+        "OPTIONS (key_columns 'k')")
+      st.execute("INSERT INTO graft.jdbc_wc SELECT id, concat('name', id), id * 100 " +
+        "FROM range(1, 101)")
+      def one(q: String): String = {
+        val rs = st.executeQuery(q)
+        try {
+          assert(rs.next(), q)
+          (1 to rs.getMetaData.getColumnCount).map(rs.getString).mkString("|")
+        } finally rs.close()
+      }
+      for ((sql, read, want) <- Seq(
+          ("INSERT INTO graft.jdbc_wo VALUES (900001, 3, 77)",
+            "SELECT * FROM graft.jdbc_wo WHERE k = 900001", "900001|3|77"),
+          ("PUT INTO jdbc_wc VALUES (900002, 'put', 5)",
+            "SELECT * FROM graft.jdbc_wc WHERE k = 900002", "900002|put|5"),
+          ("PUT INTO jdbc_wc VALUES (7, 'put-old', 8)",
+            "SELECT * FROM graft.jdbc_wc WHERE k = 7", "7|put-old|8"),
+          ("UPDATE jdbc_wc SET bal = 6 WHERE k = 900002",
+            "SELECT * FROM graft.jdbc_wc WHERE k = 900002", "900002|put|6"))) {
+        assert(jobsDuring(st.execute(sql)) == 0, sql)
+        var got = ""
+        assert(jobsDuring { got = one(read) } == 0, read)
+        assert(got == want, sql)
+      }
+    } finally {
+      conn.close()
+      org.apache.spark.sql.graft.store.GraftColumnStore.drop("jdbc_wo")
+      org.apache.spark.sql.graft.store.GraftRowStore.drop("jdbc_wc")
+    }
+  }
 }

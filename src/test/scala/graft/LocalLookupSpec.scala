@@ -4,9 +4,9 @@ import java.util.concurrent.TimeUnit
 
 import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{CollectLimitExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.store.{GraftRowStore, LocalLookupExec}
+import org.apache.spark.sql.graft.store.LocalLookupExec
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.BeforeAndAfterAll
 
@@ -65,13 +65,14 @@ class LocalLookupSpec extends SparkTestBase with BeforeAndAfterAll {
     tables
     for ((what, sql) <- lookups) {
       val df = spark.sql(sql)
-      val before = GraftRowStore.localLookups.get()
+      assert(local(df), s"$what:\n${df.queryExecution.executedPlan}")
+      val runs = df.queryExecution.executedPlan.metrics("numLocalRuns")
+      val before = runs.value
       var got: Seq[String] = Nil
       assert(jobsDuring {
         got = rows(df.queryExecution.executedPlan, df.queryExecution.executedPlan.executeCollect())
       } == 0, what)
-      assert(GraftRowStore.localLookups.get() - before == 1, what)
-      assert(local(df), s"$what:\n${df.queryExecution.executedPlan}")
+      assert(runs.value - before == 1, what)
       assert(got.nonEmpty, what)
       assert(got == viaJob(df), what)
       // Dataset.collect and the executeTake entry take the same path
@@ -122,6 +123,38 @@ class LocalLookupSpec extends SparkTestBase with BeforeAndAfterAll {
       assert(!df.queryExecution.executedPlan.exists(_.isInstanceOf[LocalLookupExec]),
         s"$sql:\n${df.queryExecution.executedPlan}")
     }
+  }
+
+  test("head, first and a key LIMIT read without a job; a non-key LIMIT keeps its job") {
+    tables
+    val byKey = g.table("lk_cust").filter(col("c_custkey") === 7L).select("c_custkey", "c_name")
+    val expect = viaJob(byKey)
+    val limited = Seq(
+      "SELECT c_custkey, c_name FROM graft.lk_cust WHERE c_custkey = 7 LIMIT 1",
+      "SELECT o_orderkey, o_custkey FROM graft.lk_orders WHERE o_orderkey = 7 LIMIT 1")
+    for ((what, run) <- Seq[(String, () => Seq[org.apache.spark.sql.Row])](
+        "head()" -> (() => Seq(byKey.head())),
+        "first()" -> (() => Seq(byKey.first())),
+        "head(2)" -> (() => byKey.head(2).toSeq),
+        "LIMIT 1" -> (() => spark.sql(limited.head).collect().toSeq))) {
+      var got: Seq[org.apache.spark.sql.Row] = Nil
+      assert(jobsDuring { got = run() } == 0, what)
+      assert(got.map(_.mkString("|")) == expect, what)
+    }
+    for (sql <- limited) {
+      val df = spark.sql(sql)
+      assert(df.queryExecution.executedPlan match {
+        case l: CollectLimitExec => l.child.isInstanceOf[LocalLookupExec]
+        case _ => false
+      }, s"$sql:\n${df.queryExecution.executedPlan}")
+      var n = 0
+      assert(jobsDuring { n = df.collect().length } == 0, sql)
+      assert(n == 1, sql)
+    }
+    val nonKey = spark.sql(
+      "SELECT c_custkey FROM graft.lk_cust WHERE c_name = 'Customer#000000007' LIMIT 1")
+    assert(jobsDuring(assert(nonKey.collect().length == 1)) > 0)
+    assert(!nonKey.queryExecution.executedPlan.exists(_.isInstanceOf[LocalLookupExec]))
   }
 
   test("the task context is unset after success and failure; errors match the job path") {
