@@ -10,42 +10,26 @@ import scala.collection.concurrent.TrieMap
   * managed-table surface (reference: core/.../SnappySession.scala:872-2171,
   * sql/sources/StoreStrategy.scala, internal/ColumnTableBulkOps.scala).
   *
-  * Design mapping (SURVEY.md §1.1, §7):
-  *  - "column table" = a cached (in-memory columnar) DataFrame registered
-  *    as a temp view. Spark's InMemoryRelation IS a compressed columnar
-  *    batch store with per-batch min/max stats pruning — the same
-  *    architecture as the reference's column store, minus GemFire
-  *    replication (an explicit non-goal, SURVEY.md §7).
-  *  - PARTITION_BY/BUCKETS ⇒ `repartition(buckets, cols)` before caching:
-  *    the cached plan keeps that HashPartitioning, so joins/aggs on the
-  *    partition key skip the Exchange — the reference's colocated-join
+  * Design mapping (SURVEY.md §1.1, §1.4, §7):
+  *  - the store registry is the one table catalog. A graft table is a
+  *    column or row store table, and every session asks the registry
+  *    (through [[org.apache.spark.sql.graft.store.StoreOps]]) for its
+  *    existence, store kind and layout — the reference keeps its catalog
+  *    inside the store the same way, so every client session (JDBC
+  *    included) sees the same tables. A session holds no per-table
+  *    state; the session that creates, restores or attaches a table
+  *    registers a temp view so bare-name SQL resolves there.
+  *  - PARTITION_BY/BUCKETS ⇒ a bucketed store layout whose catalog read
+  *    reports the bucket-grouped partitioning, so joins/aggs on the
+  *    bucket key skip the Exchange — the reference's colocated-join
   *    behavior (SnappyStrategies.getCollocatedPartitioning).
-  *  - Mutations are copy-on-write snapshots: each INSERT/PUT/UPDATE/DELETE
-  *    produces a new immutable cached plan and atomically swaps the
-  *    catalog entry — the analog of the reference's snapshot-isolated
-  *    batch + delta design (delta rewrite instead of in-place mutation).
-  *    Readers that captured the previous DataFrame keep a consistent view.
-  *
-  * At cluster scale the same API would sit over a DSv2 catalog with
-  * persistent storage; the semantics exposed to queries are identical.
+  *  - Mutations commit as atomic snapshot swaps (delete bitmaps, update
+  *    deltas, tombstones + appended packs) — the reference's
+  *    snapshot-isolated batch + delta design. Readers that pinned the
+  *    previous snapshot keep a consistent view.
   */
 class GraftSession(val spark: SparkSession)
     extends org.apache.spark.internal.Logging {
-
-  /** Catalog entry for a managed table. `storeBacked` tables live in the
-    * graftstore DSv2 column store (delta/delete mutation, bucketed
-    * layout); the cached-DataFrame path remains for schemas the store
-    * doesn't hold (arrays etc.).
-    */
-  case class TableState(
-      df: DataFrame,
-      keyColumns: Seq[String],
-      partitionBy: Seq[String],
-      buckets: Int,
-      storeBacked: Boolean = false,
-      rowBacked: Boolean = false)
-
-  private val tables = TrieMap.empty[String, TableState]
 
   // ---- query history (sys.queries): ring buffer fed by a
   // QueryExecutionListener from session construction on — the
@@ -136,7 +120,7 @@ class GraftSession(val spark: SparkSession)
     require(!n.startsWith("sys.") && n != "sys",
       s"CREATE SYNONYM $name: system schemas are reserved")
     require(!synonymMap.contains(n), s"synonym already exists: $name")
-    require(!tables.contains(n) && !spark.catalog.tableExists(n),
+    require(!isManaged(n) && !spark.catalog.tableExists(n),
       s"CREATE SYNONYM $name: a table or view with this name already exists")
     // direct self-reference never enters the walk below (the name is
     // not in the map yet) — reject it up front (Derby 42916)
@@ -192,14 +176,16 @@ class GraftSession(val spark: SparkSession)
 
   private def normalize(name: String): String = resolveSynonym(name)
 
-  import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftRowOps, GraftRowStore, GraftStoreOps, StoreOps}
+  import org.apache.spark.sql.graft.store.{BaseLayout, GraftColumnStore, GraftRowOps, GraftRowStore, GraftStoreOps, StoreOps}
 
-  /** CREATE TABLE ... USING column OPTIONS (partition_by, buckets,
+  /** CREATE TABLE ... USING column|row OPTIONS (partition_by, buckets,
     * key_columns). Data lands in the graftstore column store (sealed
     * encoded batches + stats, delta row buffer, mutable via delete
-    * bitmaps / update deltas — see GraftColumnStore); a temp view exposes
-    * it to SQL. Schemas with store-unsupported types (arrays, maps) fall
-    * back to the cached-DataFrame snapshot path.
+    * bitmaps / update deltas — see GraftColumnStore) or, for `row`, the
+    * row store (row-major packs with a per-pack PRIMARY-KEY index, the
+    * reference RowFormatRelation); a temp view exposes it to this
+    * session's SQL. A schema the stores cannot hold (interval, NULL
+    * type, UDTs) fails here, before anything is written.
     */
   def createTable(
       name: String,
@@ -213,6 +199,7 @@ class GraftSession(val spark: SparkSession)
       expireSeconds: Long = 0L): DataFrame = {
     require(!isSynonym(name), s"CREATE TABLE $name: name is a synonym")
     val nm = normalize(name)
+    StoreOps.requireSupported(s"CREATE TABLE $name", data.schema)
     org.apache.spark.sql.graft.store.ReplicaGuard.clear(nm) // an explicit CREATE supersedes replica status
     // ... and supersedes matview status the same way (the maintenance
     // scope's own rebuild re-registers right after)
@@ -220,94 +207,90 @@ class GraftSession(val spark: SparkSession)
     // a replaced table must not inherit the old table's constraints —
     // the DDL command re-registers the new ones after this returns
     org.apache.spark.sql.graft.Constraints.drop(nm)
-    if (provider == "row") {
-      // row table (reference RowFormatRelation): row-major packs with a
-      // per-pack PRIMARY-KEY index; point lookups resolve by index probe
-      (keyColumns ++ partitionBy).foreach(c =>
-        require(GraftColumnStore.supportsType(
-          data.schema.fields(data.schema.fieldIndex(c)).dataType),
-          s"row table $name: key/bucket column $c has an unsupported type"))
-      // fresh layout (options win over a stale table), in either store:
-      // dispatch by name must find only the new table
-      StoreOps.drop(nm)
-      val w = data.write.format(GraftRowOps.FORMAT).option("table", nm)
-        .option("key_columns", keyColumns.mkString(","))
-        .option("eviction_budget_bytes", evictionBudgetBytes.toString)
-        .option("expire_seconds", expireSeconds.toString)
-      val w2 =
-        if (partitionBy.nonEmpty)
-          w.option("partition_by", partitionBy.mkString(",")).option("buckets", buckets.toString)
-        else w
-      w2.mode("overwrite").save()
-      val df = GraftRowOps.read(spark, nm)
-      df.createOrReplaceTempView(nm)
-      tables.put(nm, TableState(df, keyColumns, partitionBy, buckets,
-        storeBacked = false, rowBacked = true))
-      df
-    } else if (data.schema.fields.forall(f => GraftColumnStore.supportsType(f.dataType))) {
-      // bucketed writes parallelize via the required clustered
-      // distribution; unbucketed ingest inherits the source's
-      // partitioning — at scale that is the source's split count. When a
-      // BIG source arrives in few splits (one 100 GB parquet file), the
-      // encode stage would serialize on those few tasks, so repartition
-      // up to the cluster's parallelism; below the size floor the extra
-      // shuffle costs more than the encode parallelism buys (measured
-      // 2.3x slower on a small single-file ingest).
-      val ingest =
-        if (partitionBy.nonEmpty) data
-        else {
-          val cores = spark.sparkContext.defaultParallelism
-          val floor = spark.conf.get(GraftSession.INGEST_MIN_BYTES_KEY,
-            (256L << 20).toString).toLong
-          // size gate FIRST: logical stats are metadata; the split count
-          // (data.rdd) costs a full physical planning pass, so only big
-          // sources pay it
-          val bytes = data.queryExecution.optimizedPlan.stats.sizeInBytes
-          if (bytes > floor && data.rdd.getNumPartitions < cores)
-            data.repartition(cores)
-          else data
-        }
-      val w = ingest.write.format(GraftStoreOps.FORMAT).option("table", nm)
-        .option("key_columns", keyColumns.mkString(","))
-        .option("compression", compression)
-        .option("eviction_budget_bytes", evictionBudgetBytes.toString)
-        .option("expire_seconds", expireSeconds.toString)
-      val w2 =
-        if (partitionBy.nonEmpty)
-          w.option("partition_by", partitionBy.mkString(",")).option("buckets", buckets.toString)
-        else w
-      // fresh layout (options win over a stale table), in either store:
-      // dispatch by name must find only the new table
-      StoreOps.drop(nm)
-      w2.mode("overwrite").save()
-      // prefer the CATALOG read: only catalog-resolved scans carry the
-      // bucket-grouped KeyGroupedPartitioning (the bucket transform's
-      // function resolves through GraftCatalog), which is what lets
-      // bucket-key joins/aggregations skip the store-side exchange —
-      // a reader-based load of the same table reports UnknownPartitioning.
-      // withBypass: this analysis is internal plumbing — the CURRENT
-      // user's policies/grants must not bake into the session-shared df
-      // (each user query re-runs the rules at its own analysis); the
-      // Try covers only sessions without the graft catalog registered
-      val df = org.apache.spark.sql.graft.PolicyRegistry.withBypass {
-        scala.util.Try(spark.table(s"graft.$nm"))
-          .getOrElse(GraftStoreOps.read(spark, nm))
+    val ops = if (provider == "row") GraftRowOps else GraftStoreOps
+    val (source, codec) =
+      if (ops eq GraftRowOps) (data, Nil)
+      else {
+        // bucketed writes parallelize via the required clustered
+        // distribution; unbucketed ingest inherits the source's
+        // partitioning — at scale that is the source's split count. When
+        // a BIG source arrives in few splits (one 100 GB parquet file),
+        // the encode stage would serialize on those few tasks, so
+        // repartition up to the cluster's parallelism; below the size
+        // floor the extra shuffle costs more than the encode parallelism
+        // buys (measured 2.3x slower on a small single-file ingest).
+        val ingest =
+          if (partitionBy.nonEmpty) data
+          else {
+            val cores = spark.sparkContext.defaultParallelism
+            val floor = spark.conf.get(GraftSession.INGEST_MIN_BYTES_KEY,
+              (256L << 20).toString).toLong
+            // size gate FIRST: logical stats are metadata; the split count
+            // (data.rdd) costs a full physical planning pass, so only big
+            // sources pay it
+            val bytes = data.queryExecution.optimizedPlan.stats.sizeInBytes
+            if (bytes > floor && data.rdd.getNumPartitions < cores)
+              data.repartition(cores)
+            else data
+          }
+        (ingest, Seq("compression" -> compression))
       }
-      df.createOrReplaceTempView(nm)
-      tables.put(nm, TableState(df, keyColumns, partitionBy, buckets, storeBacked = true))
-      df
-    } else {
-      val df =
-        if (partitionBy.nonEmpty)
-          data.repartition(buckets, partitionBy.map(col): _*)
-        else data
-      swap(nm, TableState(df, keyColumns, partitionBy, buckets))
+    val w = source.write.format(ops.FORMAT).option("table", nm)
+      .option("key_columns", keyColumns.mkString(","))
+      .option("eviction_budget_bytes", evictionBudgetBytes.toString)
+      .option("expire_seconds", expireSeconds.toString)
+      .options(codec.toMap)
+    val w2 =
+      if (partitionBy.nonEmpty)
+        w.option("partition_by", partitionBy.mkString(",")).option("buckets", buckets.toString)
+      else w
+    // fresh layout (options win over a stale table), in either store:
+    // dispatch by name must find only the new table
+    StoreOps.drop(nm)
+    w2.mode("overwrite").save()
+    registerView(nm)
+  }
+
+  /** `table`'s reads, memoized per registry table object: a statement
+    * that returns its table pays no analysis, a re-created table is a new
+    * object, and a relayout (schema or layout change) re-resolves. Weak
+    * keys: a dropped table's entry goes with it.
+    */
+  private val reads = java.util.Collections.synchronizedMap(new java.util.WeakHashMap[
+    AnyRef, ((org.apache.spark.sql.types.StructType, BaseLayout), DataFrame)])
+
+  /** The DataFrame of a graft table, from any session: a store table's
+    * session read (for column tables the catalog read, whose scans carry
+    * the bucket-grouped partitioning), or an attached view's temp view.
+    */
+  def table(name: String): DataFrame = {
+    val nm = normalize(name)
+    StoreOps.forTable(nm) match {
+      case Some(ops) =>
+        val handle = ops.handle(nm)
+        val shape = (ops.schema(nm), ops.layout(nm))
+        Option(reads.get(handle)).filter(_._1 == shape).map(_._2).getOrElse {
+          // withBypass: this analysis is internal plumbing — the CURRENT
+          // user's policies/grants must not bake into the shared read
+          // (each user query re-runs the rules at its own analysis)
+          val df = org.apache.spark.sql.graft.PolicyRegistry.withBypass(
+            ops.sessionRead(spark, nm))
+          reads.put(handle, (shape, df))
+          df
+        }
+      case None if isAttachedView(nm) => spark.table(nm)
+      case None => throw new IllegalArgumentException(s"graft table not found: $name")
     }
   }
 
-  def table(name: String): DataFrame =
-    tables.getOrElse(normalize(name),
-      throw new IllegalArgumentException(s"graft table not found: $name")).df
+  /** Register `nm`'s read as this session's temp view — the tail of
+    * every path that creates, restores or attaches a store table.
+    */
+  private def registerView(nm: String): DataFrame = {
+    val df = table(nm)
+    df.createOrReplaceTempView(nm)
+    df
+  }
 
   /** Durable checkpoint / re-hydration of a store-backed table (the
     * session-level PERSISTENCE/DISKSTORE analog — see
@@ -315,7 +298,7 @@ class GraftSession(val spark: SparkSession)
     */
   def checkpointTable(name: String, dir: String): Unit = {
     val nm = normalize(name)
-    require(tables.get(nm).exists(st => st.storeBacked || st.rowBacked),
+    require(StoreOps.forTable(nm).isDefined,
       s"checkpointTable($name): not a store-backed table")
     StoreOps(nm).checkpoint(spark, nm, dir)
     writeSidecars(nm, dir)
@@ -503,7 +486,7 @@ class GraftSession(val spark: SparkSession)
     val e = LiveCheckpoint.attachLatest(spark, nm, root)
     // a replica: constraints ride along, a matview definition does not
     recoverConstraints(nm, LiveCheckpoint.dirFor(root, e))
-    registerFromStore(nm)
+    registerView(nm)
     org.apache.spark.sql.graft.store.ReplicaGuard.markReplica(nm,
       org.apache.spark.sql.graft.store.ReplicaGuard.ReplicaInfo(
         root, e, "table", pinned = false, sessionId))
@@ -562,7 +545,6 @@ class GraftSession(val spark: SparkSession)
     // constraints ride for metadata surfaces (sys.constraints); a view
     // is read-only so there is nothing to enforce
     recoverConstraints(nm, LiveCheckpoint.dirFor(root, e))
-    tables.put(nm, TableState(df, Nil, Nil, 0))
     org.apache.spark.sql.graft.store.ReplicaGuard.markReplica(nm,
       org.apache.spark.sql.graft.store.ReplicaGuard.ReplicaInfo(
         root, e, "view", pinned = epoch.isDefined, sessionId))
@@ -640,7 +622,7 @@ class GraftSession(val spark: SparkSession)
     // the manifest knows which store the table came from
     StoreOps.forManifest(org.apache.spark.sql.graft.store.GraftManifest.read(spark, dir))
       .restore(spark, nm, dir)
-    registerFromStore(nm)
+    registerView(nm)
     recoverSidecars(nm, dir)
     table(nm)
   }
@@ -709,16 +691,15 @@ class GraftSession(val spark: SparkSession)
                   else ("checkpoint", -1L)
                 }
               // "existing names win" is judged against the JVM-GLOBAL
-              // registries, not just this session's map: another session
-              // (JDBC) may own a live store table or matview under the
-              // name, and recovery must never clobber live state —
-              // store/matview presence skips exactly like a local name
+              // registries: any session (JDBC) may own a live store
+              // table, replica or matview under the name, and recovery
+              // must never clobber live state
               if (isManaged(nm) || ReplicaGuard.isReplica(nm) ||
-                MatViews.isMatView(nm) || StoreOps.forTable(nm).isDefined)
+                MatViews.isMatView(nm))
                 out += ((nm, ds.name, source, epoch, "skipped_exists"))
               else if (source == "epoch") {
                 LiveCheckpoint.attach(spark, nm, dir, epoch)
-                registerFromStore(nm)
+                registerView(nm)
                 ReplicaGuard.clear(nm) // owned (publisher recovery), not a replica
                 // matview identity rides the epoch's own sidecar: the
                 // recovered view registers STALE (sentinel fingerprint),
@@ -739,42 +720,33 @@ class GraftSession(val spark: SparkSession)
       .toDF("table_name", "diskstore", "source", "epoch", "action")
   }
 
-  /** Adopt a store table another session created into THIS session's
-    * managed map (the store registries are JVM-global, session temp
-    * views are not) — the cross-session DML faces (e.g. a constrained
-    * INSERT arriving over JDBC) route through here before the session
-    * paths. No-op when already managed or not a store table.
+  private def isAttachedView(nm: String): Boolean =
+    org.apache.spark.sql.graft.store.ReplicaGuard.infoOf(nm).exists(_.mode == "view")
+
+  /** True when `name` is a graft table: the store registry holds it (no
+    * matter which session created it), or it is an attached view.
     */
-  def adoptFromStore(name: String): Unit = {
+  def isManaged(name: String): Boolean = {
     val nm = normalize(name)
-    if (!tables.contains(nm) && StoreOps.forTable(nm).isDefined) registerFromStore(nm)
+    StoreOps.forTable(nm).isDefined || isAttachedView(nm)
   }
 
-  /** Register a table that already lives in this JVM's store registries
-    * (row or column) as a managed table + temp view — the shared tail of
-    * restoreTable, attachTable and bootstrap's epoch restore.
+  /** Layout of a graft store table (COLOCATE_WITH, CREATE TABLE LIKE and
+    * constraint validation read it).
     */
-  private def registerFromStore(nm: String): Unit = {
-    val ops = StoreOps(nm)
-    val df = ops.read(spark, nm)
-    df.createOrReplaceTempView(nm)
-    val l = ops.layout(nm)
-    tables.put(nm, TableState(df, l.keyColumns, l.bucketBy, math.max(l.numBuckets, 0),
-      storeBacked = ops eq GraftStoreOps, rowBacked = ops eq GraftRowOps))
+  def tableState(name: String): Option[BaseLayout] = {
+    val nm = normalize(name)
+    StoreOps.forTable(nm).map(_.layout(nm))
   }
 
-  def isManaged(name: String): Boolean = tables.contains(normalize(name))
-
-  /** Catalog metadata of a managed table (layout introspection —
-    * COLOCATE_WITH validation and the like).
-    */
-  def tableState(name: String): Option[TableState] = tables.get(normalize(name))
-
-  /** True when the table lives in the graftstore column store (mutable
-    * batches + stats pruning), not the cached-DataFrame fallback.
-    */
+  /** True when the table lives in the graftstore column store. */
   def isStoreBacked(name: String): Boolean =
-    tables.get(normalize(name)).exists(_.storeBacked)
+    GraftColumnStore.get(normalize(name)).isDefined
+
+  /** The store of a graft table, or the table-not-found error. */
+  private def opsOf(name: String): StoreOps[_] =
+    StoreOps.forTable(normalize(name)).getOrElse(
+      throw new IllegalArgumentException(s"graft table not found: $name"))
 
   /** SQL entry point: Snappy-specific statements (PUT INTO, UPDATE,
     * DELETE, CREATE POLICY, CREATE TABLE ... USING column AS ...) plus
@@ -788,44 +760,30 @@ class GraftSession(val spark: SparkSession)
     * normal bucketed write).
     */
   def alterTable(name: String)(f: DataFrame => DataFrame): DataFrame = {
-    val st = stateOf(name)
+    val ops = opsOf(name)
     val nm = normalize(name)
-    if (st.storeBacked || st.rowBacked) {
-      // layout-PRESERVING rewrite: codec, eviction, TTL, sketch columns
-      // and batch size survive the relayout (the naive rebuild through
-      // createTable reset them all to defaults). alterRewrite checks the
-      // ALTER grant — a destructive full-table rewrite is as privileged
-      // as any DML.
-      StoreOps(nm).alterRewrite(spark, nm, f)
-      refreshManaged(nm)
-      table(nm)
-    } else {
-      val next = f(table(name))
-      st.keyColumns.foreach(k => require(next.columns.contains(k),
-        s"alterTable($name) cannot drop key column $k"))
-      st.partitionBy.foreach(p => require(next.columns.contains(p),
-        s"alterTable($name) cannot drop bucket column $p"))
-      // materialize BEFORE the overwrite drops the old table — the
-      // transformed plan reads from it
-      val frozen = next.localCheckpoint(true)
-      createTable(name, frozen, st.keyColumns, st.partitionBy, st.buckets)
-    }
+    // layout-PRESERVING rewrite: codec, eviction, TTL, sketch columns
+    // and batch size survive the relayout (the naive rebuild through
+    // createTable reset them all to defaults). alterRewrite checks the
+    // ALTER grant — a destructive full-table rewrite is as privileged
+    // as any DML.
+    ops.alterRewrite(spark, nm, f)
+    refreshManaged(nm)
+    table(nm)
   }
 
-  /** Re-resolve a managed table's DataFrame/temp view after a relayout
-    * changed its schema (ALTER through either route) — without this, the
-    * session's registered view keeps planning the pre-ALTER relation
-    * against the new store layout. No-op for unmanaged names.
+  /** Re-register this session's temp view of a store table after a
+    * relayout changed its schema or buckets (ALTER or REBUCKET through
+    * either route) — without this, the view keeps planning the pre-ALTER
+    * relation against the new store layout. No-op unless the session's
+    * view of the name is the table's own read.
     */
   def refreshManaged(name: String): Unit = {
+    import org.apache.spark.sql.graft.store.GraftCatalog
     val nm = normalize(name)
-    tables.get(nm).filter(st => st.storeBacked || st.rowBacked).foreach { st =>
-      val df = org.apache.spark.sql.graft.PolicyRegistry.withBypass {
-        scala.util.Try(spark.table(s"graft.$nm")).getOrElse(StoreOps(nm).read(spark, nm))
-      }
-      df.createOrReplaceTempView(nm)
-      tables.put(nm, st.copy(df = df))
-    }
+    if (StoreOps.forTable(nm).isDefined &&
+        GraftCatalog.ownRelation(spark, nm).exists(GraftCatalog.storeRelation(nm, _).isDefined))
+      registerView(nm)
   }
 
   /** CREATE SAMPLE TABLE (reference SnappySession.createSampleTable:872):
@@ -919,17 +877,11 @@ class GraftSession(val spark: SparkSession)
         table(base), info.qcs, p.fraction, p.reservoirFloor, p.rankKey)
       // mirror the sample table's layout from ITS OWN store snapshot —
       // a JDBC/other session may refresh a sample it didn't create
-      // (rebuild() reads buckets the same way); session state is only
-      // the fallback for non-store-backed samples
-      val snapLayout = GraftColumnStore.get(sn).map(_.snapshot)
-      val layout = tables.get(sn)
+      val layout = tableState(sn)
       createTable(sn, drawn,
-        keyColumns = snapLayout.map(_.keyColumns.toSeq)
-          .orElse(layout.map(_.keyColumns)).getOrElse(Nil),
-        partitionBy = snapLayout.map(_.bucketBy.toSeq)
-          .orElse(layout.map(_.partitionBy)).getOrElse(Nil),
-        buckets = snapLayout.map(_.numBuckets).filter(_ > 0)
-          .orElse(layout.map(_.buckets).filter(_ > 0)).getOrElse(32))
+        keyColumns = layout.map(_.keyColumns).getOrElse(Nil),
+        partitionBy = layout.map(_.bucketBy).getOrElse(Nil),
+        buckets = layout.map(_.numBuckets).filter(_ > 0).getOrElse(32))
       samples.updateWith(normalize(base))(_.map(_.map(i =>
         if (i.table == sn) i.copy(fresh = pre) else i)))
       "rebuilt"
@@ -1003,10 +955,6 @@ class GraftSession(val spark: SparkSession)
       generations: Int = 1, minWidth: Int = 16): DataFrame = {
     import org.apache.spark.sql.functions.{col => c, greatest, least, lit, shiftright}
     val st = s"${name}_sketches"
-    // stores are JVM-global, the managed map is session-local: retention
-    // over JDBC/Thrift runs from sessions that didn't create the store
-    adoptFromStore(st)
-    adoptFromStore(name)
     require(isManaged(st), s"decayApproxTSTopK($name): no sketch table $st — " +
       "created before the sketch sidecar existed, or not an approx-topk store")
     require(generations >= 0, "decayApproxTSTopK: generations must be >= 0")
@@ -1112,12 +1060,9 @@ class GraftSession(val spark: SparkSession)
   def createMaterializedView(name: String, viewSql: String,
       buckets: Int = 32): DataFrame = MatViews.withMaintenanceLock(normalize(name)) {
     val nm = normalize(name)
-    // the store registries are JVM-global while isManaged is session-
-    // local: guard against a SECOND session (JDBC, bootstrap) silently
-    // clobbering a same-named table/view created elsewhere
-    require(!isManaged(nm) && GraftColumnStore.get(nm).isEmpty &&
-      org.apache.spark.sql.graft.store.GraftRowStore.get(nm).isEmpty &&
-      !MatViews.isMatView(nm),
+    // the registries are JVM-global: a SECOND session (JDBC, bootstrap)
+    // must not silently clobber a same-named table/view created elsewhere
+    require(!isManaged(nm) && !MatViews.isMatView(nm),
       s"CREATE MATERIALIZED VIEW $nm: name in use")
     val analyzed = spark.sql(viewSql).queryExecution.analyzed
     val d = MatViewSupport.analyzeDefinition(analyzed)
@@ -1728,8 +1673,7 @@ class GraftSession(val spark: SparkSession)
     require(MatViews.isMatView(nm),
       s"DROP MATERIALIZED VIEW $nm: not a materialized view")
     MatViews.unregister(nm)
-    if (isManaged(nm)) dropTable(nm)
-    else GraftColumnStore.drop(nm) // dropped from a session that didn't create it
+    dropTable(nm)
   }
 
   /** SYS.MATVIEWS: one row per materialized view — base, shape, LIVE
@@ -1804,11 +1748,7 @@ class GraftSession(val spark: SparkSession)
       .foreach(m => dropMaterializedView(m.name))
     org.apache.spark.sql.graft.store.MatViews.unregister(nm)
     org.apache.spark.sql.graft.store.ReplicaGuard.clear(nm)
-    tables.remove(nm).foreach { st =>
-      if (st.rowBacked) GraftRowStore.drop(nm)
-      else if (st.storeBacked) GraftColumnStore.drop(nm)
-      else st.df.unpersist(blocking = false)
-    }
+    StoreOps.drop(nm)
     // retire every sample registration involving the table — a stale
     // entry would make the next base-table INSERT fail inside
     // maintainSamples (fan-in to a dropped sample), after the base
@@ -1819,72 +1759,63 @@ class GraftSession(val spark: SparkSession)
     spark.catalog.dropTempView(nm)
   }
 
-  /** Live statistics of every managed table — the reference's
+  /** Live statistics of every store table in the JVM — the reference's
     * `SYS.TABLESTATS` virtual table (its dashboards poll
     * `select * from sys.TABLESTATS`). METADATA-ONLY: counts/sizes come
-    * from snapshot refs, no table is scanned; cached-DataFrame fallback
-    * tables report row_count -1 (a count would run a job).
+    * from snapshot refs, no table is scanned.
     */
   def tableStats: DataFrame = {
-    val rows = tables.toSeq.sortBy(_._1).map { case (name, st) =>
-      if (st.rowBacked) {
-        val s = GraftRowStore(name).snapshot
-        (name, "row", s.rowCount, s.refs.size.toLong,
-          s.refs.map(r => r.numRows.toLong * s.schema.defaultSize).sum,
-          s.numBuckets, s.keyColumns.mkString(","),
-          s.indexes.keys.toSeq.sorted.mkString(","),
-          s.refs.map(r => GraftRowStore.packs.residentBytes(r.id)).sum,
-          "none")
-      } else if (st.storeBacked) {
-        val s = GraftColumnStore(name).snapshot
-        (name, "column", s.rowCount, s.refs.size.toLong, s.sizeBytes,
-          s.numBuckets, s.keyColumns.mkString(","), s.sortedBy.mkString(","),
-          // memory-tier observability: resident vs spilled shows the
-          // LRU-overflow state; the codec explains the footprint
-          s.residentBytes, s.compression)
-      } else {
-        (name, "cached", -1L, -1L, -1L, st.buckets,
-          st.keyColumns.mkString(","), "", -1L, "none")
-      }
+    // get, not apply: another session may drop a listed table meanwhile
+    val rows = GraftRowStore.tableNames.flatMap(GraftRowStore.get).map { t =>
+      val s = t.snapshot
+      (t.name, "row", s.rowCount, s.refs.size.toLong,
+        s.refs.map(r => r.numRows.toLong * s.schema.defaultSize).sum,
+        s.numBuckets, s.keyColumns.mkString(","),
+        s.indexes.keys.toSeq.sorted.mkString(","),
+        s.refs.map(r => GraftRowStore.packs.residentBytes(r.id)).sum,
+        "none")
+    } ++ GraftColumnStore.tableNames.flatMap(GraftColumnStore.get).map { t =>
+      val s = t.snapshot
+      (t.name, "column", s.rowCount, s.refs.size.toLong, s.sizeBytes,
+        s.numBuckets, s.keyColumns.mkString(","), s.sortedBy.mkString(","),
+        // memory-tier observability: resident vs spilled shows the
+        // LRU-overflow state; the codec explains the footprint
+        s.residentBytes, s.compression)
     }
-    spark.createDataFrame(rows).toDF("table_name", "provider", "row_count",
-      "batch_count", "size_bytes", "buckets", "key_columns", "indexed_columns",
-      "resident_bytes", "compression")
+    spark.createDataFrame(rows.sortBy(_._1)).toDF("table_name", "provider",
+      "row_count", "batch_count", "size_bytes", "buckets", "key_columns",
+      "indexed_columns", "resident_bytes", "compression")
   }
 
-  /** Every index-like access structure on managed tables — the
+  /** Every index-like access structure on the JVM's store tables — the
     * `SYS.SYSINDEXES` analog (reference exposes Derby-style SYS index
     * metadata over its region indexes). One row per structure:
     * primary keys, row-table secondary indexes, column-table index
     * clustering and z-order clustering. METADATA-ONLY (snapshot reads).
     */
   def sysIndexes: DataFrame = {
-    val rows = tables.toSeq.sortBy(_._1).flatMap { case (name, st) =>
-      val pk =
-        if (st.keyColumns.nonEmpty)
-          Seq((name, "primary_key", st.keyColumns.mkString(","), "unique hash"))
-        else Nil
-      val secondary =
-        if (st.rowBacked) {
-          val s = GraftRowStore(name).snapshot
-          s.indexes.keys.toSeq.sorted.map(c =>
-            (name, s"idx_$c", c, "row_secondary"))
-        } else if (st.storeBacked) {
-          val s = GraftColumnStore(name).snapshot
-          (if (s.sortedBy.nonEmpty)
-            Seq((name, "clustering", s.sortedBy.mkString(","), "batch_stats"))
-          else Nil) ++
-            (if (s.zorderedBy.nonEmpty)
-              Seq((name, "zorder", s.zorderedBy.mkString(","), "batch_stats"))
-            else Nil)
-        } else Nil
-      pk ++ secondary
+    def pk(name: String, keys: Seq[String]) =
+      if (keys.nonEmpty) Seq((name, "primary_key", keys.mkString(","), "unique hash"))
+      else Nil
+    val rows = GraftRowStore.tableNames.flatMap(GraftRowStore.get).flatMap { t =>
+      val (name, s) = (t.name, t.snapshot)
+      pk(name, s.keyColumns) ++ s.indexes.keys.toSeq.sorted.map(c =>
+        (name, s"idx_$c", c, "row_secondary"))
+    } ++ GraftColumnStore.tableNames.flatMap(GraftColumnStore.get).flatMap { t =>
+      val (name, s) = (t.name, t.snapshot)
+      pk(name, s.keyColumns) ++
+        (if (s.sortedBy.nonEmpty)
+          Seq((name, "clustering", s.sortedBy.mkString(","), "batch_stats"))
+        else Nil) ++
+        (if (s.zorderedBy.nonEmpty)
+          Seq((name, "zorder", s.zorderedBy.mkString(","), "batch_stats"))
+        else Nil)
     }
     // named ANN indexes (CREATE INDEX ... USING ivf|ivfpq)
     val ann = graft.operators.AnnIndexes.list.map(m =>
       (m.table, m.name, m.vecCol, s"ann_${m.provider}"))
     // rows' element type is static, so the empty frame keeps its schema
-    spark.createDataFrame(rows ++ ann)
+    spark.createDataFrame(rows.sortBy(_._1) ++ ann)
       .toDF("table_name", "index_name", "columns", "kind")
   }
 
@@ -1921,27 +1852,25 @@ class GraftSession(val spark: SparkSession)
     * already match, positionally otherwise (classic INSERT semantics —
     * lets `PUT INTO t SELECT k+1, v FROM ...` work without aliases).
     */
-  private def alignColumns(target: DataFrame, source: DataFrame): DataFrame = {
-    require(source.columns.length == target.columns.length,
-      s"source has ${source.columns.length} columns, table has ${target.columns.length}")
+  private def alignColumns(target: org.apache.spark.sql.types.StructType,
+      source: DataFrame): DataFrame = {
+    val columns = target.fieldNames.toSeq
+    require(source.columns.length == columns.length,
+      s"source has ${source.columns.length} columns, table has ${columns.length}")
     val named =
-      if (source.columns.toSeq == target.columns.toSeq) source
-      else if (source.columns.toSet == target.columns.toSet)
-        source.select(target.columns.map(col): _*)
-      else source.toDF(target.columns.toSeq: _*)
+      if (source.columns.toSeq == columns) source
+      else if (source.columns.toSet == columns.toSet)
+        source.select(columns.map(col): _*)
+      else source.toDF(columns: _*)
     // INSERT-style type alignment: VALUES literals arrive as int where
     // the table column is bigint (etc.) — without the cast the mismatch
     // reaches the store (and its key-probe pushdown compares Integer
     // against Long stats and crashes)
-    if (named.schema.fields.zip(target.schema.fields)
+    if (named.schema.fields.zip(target.fields)
         .forall { case (s, t) => s.dataType == t.dataType }) named
-    else named.select(target.schema.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)): _*)
+    else named.select(target.fields.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
   }
-
-  private def stateOf(name: String): TableState =
-    tables.getOrElse(normalize(name),
-      throw new IllegalArgumentException(s"graft table not found: $name"))
 
   // ---- table-constraint enforcement (reference create-table.md:
   // NOT NULL / UNIQUE / FOREIGN KEY / CHECK / IDENTITY on row tables;
@@ -1957,11 +1886,13 @@ class GraftSession(val spark: SparkSession)
   def addConstraint(name: String, clause: String): Unit = {
     import org.apache.spark.sql.graft.{ConstraintEnforcer, Constraints}
     val nm = normalize(name)
-    val st = stateOf(nm)
-    require(st.rowBacked, s"ALTER TABLE $nm ADD CONSTRAINT: constraints are " +
+    val ops = opsOf(nm)
+    require(ops eq GraftRowOps, s"ALTER TABLE $nm ADD CONSTRAINT: constraints are " +
       "supported only for row tables (create-table.md)")
+    val keyColumns = ops.layout(nm).keyColumns
+    val df = table(nm)
     val parsed = Constraints.parseConstraintClause(clause)
-    val checked = Constraints.validateShape(nm, st.df.schema, parsed,
+    val checked = Constraints.validateShape(nm, df.schema, parsed,
       ref => tableState(ref).map(_.keyColumns).toSeq.filter(_.nonEmpty) ++
         Constraints.get(ref).toSeq.flatMap(_.uniques.map(_.columns)))
     val existing = Constraints.get(nm).getOrElse(Constraints.TableConstraints())
@@ -1970,9 +1901,9 @@ class GraftSession(val spark: SparkSession)
     if (checked.primaryKey.nonEmpty) {
       require(existing.primaryKey.isEmpty,
         s"$nm already has a PRIMARY KEY (${existing.primaryKey.mkString(",")})")
-      require(checked.primaryKey == st.keyColumns.map(_.toLowerCase),
+      require(checked.primaryKey == keyColumns.map(_.toLowerCase),
         s"$nm: ADD PRIMARY KEY (${checked.primaryKey.mkString(",")}) must match " +
-          s"the table's physical key layout (${st.keyColumns.mkString(",")}); " +
+          s"the table's physical key layout (${keyColumns.mkString(",")}); " +
           "declare the key at CREATE TABLE or REBUCKET first")
     }
     // duplicate-name rejection across every nameable class
@@ -1983,13 +1914,13 @@ class GraftSession(val spark: SparkSession)
       throw new IllegalArgumentException(s"$nm: constraint '$n' already exists"))
     // existing data must satisfy the new rules (Derby: ADD validates)
     if (checked.checks.nonEmpty || checked.notNull.nonEmpty)
-      ConstraintEnforcer.validateRows(nm, st.df,
+      ConstraintEnforcer.validateRows(nm, df,
         checked.copy(uniques = Nil, foreignKeys = Nil))
     if (checked.uniques.nonEmpty)
-      ConstraintEnforcer.validateUniques(nm, st.df, st.df.limit(0),
+      ConstraintEnforcer.validateUniques(nm, df, df.limit(0),
         checked.copy(checks = Nil, foreignKeys = Nil), None)
     if (checked.foreignKeys.nonEmpty)
-      ConstraintEnforcer.validateForeignKeys(nm, st.df,
+      ConstraintEnforcer.validateForeignKeys(nm, df,
         checked.copy(checks = Nil, uniques = Nil), p => table(p))
     Constraints.register(nm, Constraints.mergeTable(
       existing.copy(primaryKey =
@@ -2006,7 +1937,7 @@ class GraftSession(val spark: SparkSession)
   def dropConstraint(name: String, constraint: String): Unit = {
     import org.apache.spark.sql.graft.Constraints
     val nm = normalize(name)
-    stateOf(nm) // table must exist
+    opsOf(nm) // table must exist
     val cn = constraint.toLowerCase
     val tc = Constraints.get(nm).getOrElse(
       throw new IllegalArgumentException(s"$nm has no constraints"))
@@ -2037,39 +1968,39 @@ class GraftSession(val spark: SparkSession)
     * row-local rules plus one join per UNIQUE/FK, each over the
     * STATEMENT'S rows. Tables without constraints pay nothing.
     */
-  private def constrainIncoming(name: String, st: TableState,
+  private def constrainIncoming(nm: String, ops: StoreOps[_],
       rows: DataFrame, forPut: Boolean): DataFrame = {
     import org.apache.spark.sql.graft.{ConstraintEnforcer, Constraints}
-    val nm = normalize(name)
+    val schema = ops.schema(nm)
     val tc = Constraints.get(nm)
     // the identity column may be omitted from the insert entirely
     // (reference: "leave the identity column out of the insertion column
     // list") — surface it as NULL so the fill step assigns values
     val pre = tc.flatMap(_.identity) match {
       case Some(id) if !rows.columns.exists(_.equalsIgnoreCase(id.column)) &&
-          rows.columns.length == st.df.columns.length - 1 =>
-        val target = st.df.columns.find(_.equalsIgnoreCase(id.column)).get
-        val nonId = st.df.columns.filterNot(_.equalsIgnoreCase(id.column)).toSeq
+          rows.columns.length == schema.length - 1 =>
+        val target = schema.fields.find(_.name.equalsIgnoreCase(id.column)).get
+        val nonId = schema.fieldNames.filterNot(_.equalsIgnoreCase(id.column)).toSeq
         val renamed =
           if (rows.columns.map(_.toLowerCase).toSet ==
               nonId.map(_.toLowerCase).toSet) rows
           else rows.toDF(nonId: _*)
-        renamed.withColumn(target,
-          lit(null).cast(st.df.schema(st.df.schema.fieldIndex(target)).dataType))
+        renamed.withColumn(target.name, lit(null).cast(target.dataType))
       case _ => rows
     }
-    val aligned = alignColumns(st.df, pre)
+    val aligned = alignColumns(schema, pre)
     tc match {
       case None => aligned
       case Some(t) =>
+        val keyColumns = ops.layout(nm).keyColumns
         val filled = t.identity
           .map(id => ConstraintEnforcer.fillIdentity(spark, nm, aligned, id))
           .getOrElse(aligned)
         ConstraintEnforcer.validateRows(nm, filled, t)
-        ConstraintEnforcer.validateUniques(nm, filled, st.df, t,
-          if (forPut) Some((st.keyColumns, filled)) else None)
+        ConstraintEnforcer.validateUniques(nm, filled, table(nm), t,
+          if (forPut) Some((keyColumns, filled)) else None)
         ConstraintEnforcer.validateForeignKeys(nm, filled, t, p => table(p))
-        if (forPut) validatePutParentKeys(nm, st, filled)
+        if (forPut) validatePutParentKeys(nm, keyColumns, filled)
         filled
     }
   }
@@ -2079,16 +2010,16 @@ class GraftSession(val spark: SparkSession)
     * values vanish — restrict like a delete. FKs referencing the PK are
     * safe by construction (matched keys stay, unmatched keys append).
     */
-  private def validatePutParentKeys(nm: String, st: TableState,
+  private def validatePutParentKeys(nm: String, keyColumns: Seq[String],
       src: DataFrame): Unit = {
     import org.apache.spark.sql.graft.{ConstraintEnforcer, Constraints}
-    val pkLower = st.keyColumns.map(_.toLowerCase).toSet
+    val pkLower = keyColumns.map(_.toLowerCase).toSet
     val exposed = Constraints.childrenOf(nm)
       .filterNot(_._2.refColumns.forall(pkLower))
     if (exposed.isEmpty) return
-    val srcKeys = src.select(st.keyColumns.map(col): _*).distinct()
-    val replaced = st.df.join(srcKeys, st.keyColumns, "left_semi")
-    val untouched = st.df.join(srcKeys, st.keyColumns, "left_anti")
+    val srcKeys = src.select(keyColumns.map(col): _*).distinct()
+    val replaced = table(nm).join(srcKeys, keyColumns, "left_semi")
+    val untouched = table(nm).join(srcKeys, keyColumns, "left_anti")
     val names = exposed.map(_._2.name).toSet
     ConstraintEnforcer.validateParentRemoval(nm, refCols =>
       replaced.select(refCols.map(col): _*)
@@ -2103,10 +2034,9 @@ class GraftSession(val spark: SparkSession)
     * rewritten. Costs are proportional to the affected rows (plus one
     * table scan per touched UNIQUE), and zero for unconstrained tables.
     */
-  private def validateUpdate(name: String, st: TableState, condition: Column,
+  private def validateUpdate(nm: String, condition: Column,
       assignments: Seq[(String, Column)]): Unit = {
     import org.apache.spark.sql.graft.{ConstraintEnforcer, Constraints}
-    val nm = normalize(name)
     val tcOpt = Constraints.get(nm)
     val children = Constraints.childrenOf(nm)
     if (!tcOpt.exists(_.enforced) && children.isEmpty) return
@@ -2118,11 +2048,11 @@ class GraftSession(val spark: SparkSession)
     }
     val setMap = assignments.map { case (k, v) => k.toLowerCase -> v }.toMap
     lazy val affectedPost = {
-      val base = st.df.filter(condition)
+      val base = table(nm).filter(condition)
       base.select(base.columns.map(c =>
         setMap.get(c.toLowerCase).map(_.as(c)).getOrElse(col(c))): _*)
     }
-    lazy val rest = st.df.filter(!coalesce(condition, lit(false)))
+    lazy val rest = table(nm).filter(!coalesce(condition, lit(false)))
     tcOpt.foreach { t =>
       if (t.notNull.exists(assignedCols) || t.checks.nonEmpty)
         ConstraintEnforcer.validateRows(nm, affectedPost,
@@ -2138,7 +2068,7 @@ class GraftSession(val spark: SparkSession)
     }
     val refTouched = children.filter(_._2.refColumns.exists(assignedCols))
     if (refTouched.nonEmpty) {
-      val affectedOld = st.df.filter(condition)
+      val affectedOld = table(nm).filter(condition)
       val names = refTouched.map(_._2.name).toSet
       ConstraintEnforcer.validateParentRemoval(nm, refCols =>
         affectedOld.select(refCols.map(col): _*)
@@ -2172,8 +2102,9 @@ class GraftSession(val spark: SparkSession)
     */
   def insert(name: String, rows: DataFrame): DataFrame = {
     requireWritable(name, "insert")
-    val st = stateOf(name)
-    val aligned = constrainIncoming(name, st, rows, forPut = false)
+    val ops = opsOf(name)
+    val nm = normalize(name)
+    val aligned = constrainIncoming(nm, ops, rows, forPut = false)
     // pre-insert fingerprint: sample maintenance advances a sample's
     // recorded freshness only if it was fresh BEFORE this insert — a
     // sample already skewed by an earlier delete must stay visibly
@@ -2181,20 +2112,11 @@ class GraftSession(val spark: SparkSession)
     // walks every batch ref: O(batches) driver work a plain insert
     // must not pay)
     val preFresh =
-      if (samples.contains(normalize(name))) baseFingerprint(name) else None
-    val out =
-      if (st.rowBacked) {
-        aligned.write.format(GraftRowOps.FORMAT)
-          .option("table", normalize(name)).mode("append").save()
-        table(name)
-      } else if (st.storeBacked) {
-        aligned.write.format(GraftStoreOps.FORMAT)
-          .option("table", normalize(name)).mode("append").save()
-        table(name)
-      } else mutate(name)(s => s.df.unionByName(aligned))
+      if (samples.contains(nm)) baseFingerprint(name) else None
+    ops.append(spark, nm, aligned)
     maintainSamples(name, aligned, preFresh)
     maintainMatviews(name)
-    out
+    table(nm)
   }
 
   /** Opt-in matview maintenance on INSERT (the matview face of the
@@ -2286,25 +2208,12 @@ class GraftSession(val spark: SparkSession)
     */
   def putInto(name: String, source: DataFrame): DataFrame = {
     requireWritable(name, "putInto")
-    val st = stateOf(name)
-    val constrained = constrainIncoming(name, st, source, forPut = true)
-    if (st.rowBacked) {
-      require(st.keyColumns.nonEmpty, s"putInto($name) requires key_columns")
-      GraftRowOps.put(spark, normalize(name), constrained)
-      table(name)
-    } else if (st.storeBacked) {
-      require(st.keyColumns.nonEmpty, s"putInto($name) requires key_columns")
-      GraftStoreOps.putInto(spark, normalize(name), constrained)
-      table(name)
-    } else mutate(name) { s =>
-      require(s.keyColumns.nonEmpty, s"putInto($name) requires key_columns")
-      // If the source carries duplicate keys, last-writer-wins is not
-      // well-defined for a batch; keep the first by key order for
-      // determinism (the reference conflates by key in its sink path).
-      val srcDedup = constrained.dropDuplicates(s.keyColumns)
-      s.df.join(srcDedup, s.keyColumns, "left_anti")
-        .unionByName(srcDedup.select(s.df.columns.map(col): _*))
-    }
+    val ops = opsOf(name)
+    val nm = normalize(name)
+    val constrained = constrainIncoming(nm, ops, source, forPut = true)
+    require(ops.layout(nm).keyColumns.nonEmpty, s"putInto($name) requires key_columns")
+    ops.put(spark, nm, constrained)
+    table(nm)
   }
 
   /** UPDATE table SET assignments WHERE condition (reference
@@ -2314,31 +2223,21 @@ class GraftSession(val spark: SparkSession)
     */
   def update(name: String, condition: Column, assignments0: (String, Column)*): DataFrame = {
     requireWritable(name, "update")
-    val st = stateOf(name)
+    val ops = opsOf(name)
+    val nm = normalize(name)
     // assignment values cast to the column's type (SET v = 0 writes an
     // int literal — uncast it would land as Integer in a bigint column's
     // delta and crash the scan's typed fill)
+    val schema = ops.schema(nm)
     val assignments = assignments0.map { case (c, v) =>
-      st.df.schema.fields.find(_.name.equalsIgnoreCase(c)) match {
+      schema.fields.find(_.name.equalsIgnoreCase(c)) match {
         case Some(f) => c -> v.cast(f.dataType)
         case None => c -> v
       }
     }
-    validateUpdate(name, st, condition, assignments)
-    if (st.rowBacked) {
-      GraftRowOps.update(spark, normalize(name), condition, assignments)
-      table(name)
-    } else if (st.storeBacked) {
-      GraftStoreOps.update(spark, normalize(name), condition, assignments)
-      table(name)
-    } else mutate(name) { s =>
-      val setMap = assignments.toMap
-      s.df.select(s.df.columns.map { c =>
-        setMap.get(c)
-          .map(newVal => when(condition, newVal).otherwise(col(c)).as(c))
-          .getOrElse(col(c))
-      }: _*)
-    }
+    validateUpdate(nm, condition, assignments)
+    ops.update(spark, nm, condition, assignments)
+    table(nm)
   }
 
   /** DELETE FROM table WHERE condition (reference ColumnDeleteExec).
@@ -2346,16 +2245,12 @@ class GraftSession(val spark: SparkSession)
     */
   def delete(name: String, condition: Column): DataFrame = {
     requireWritable(name, "delete")
-    val st = stateOf(name)
-    validateDeleteRestrict(normalize(name),
-      st.df.filter(condition), st.df.filter(!coalesce(condition, lit(false))))
-    if (st.rowBacked) {
-      GraftRowOps.delete(spark, normalize(name), condition)
-      table(name)
-    } else if (st.storeBacked) {
-      GraftStoreOps.delete(spark, normalize(name), condition)
-      table(name)
-    } else mutate(name)(s => s.df.filter(!coalesce(condition, lit(false))))
+    val ops = opsOf(name)
+    val nm = normalize(name)
+    validateDeleteRestrict(nm,
+      table(nm).filter(condition), table(nm).filter(!coalesce(condition, lit(false))))
+    ops.delete(spark, nm, condition)
+    table(nm)
   }
 
   // ---- Row-varargs API sugar (reference SnappySession.insert:1990,
@@ -2363,7 +2258,7 @@ class GraftSession(val spark: SparkSession)
   // surface; each returns the affected-row count) ----
 
   private def rowsToDf(name: String, rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
-    val schema = stateOf(name).df.schema
+    val schema = opsOf(name).schema(normalize(name))
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), schema)
   }
@@ -2485,48 +2380,15 @@ class GraftSession(val spark: SparkSession)
     */
   def deleteKeys(name: String, keys: DataFrame): DataFrame = {
     requireWritable(name, "deleteKeys")
-    val st = stateOf(name)
-    require(st.keyColumns.nonEmpty, s"deleteKeys($name) requires key_columns")
-    validateDeleteRestrict(normalize(name),
-      st.df.join(keys.select(st.keyColumns.map(col): _*), st.keyColumns, "left_semi"),
-      st.df.join(keys.select(st.keyColumns.map(col): _*), st.keyColumns, "left_anti"))
-    if (st.rowBacked) {
-      GraftRowOps.deleteKeys(spark, normalize(name), keys)
-      table(name)
-    } else if (st.storeBacked) {
-      GraftStoreOps.deleteKeys(spark, normalize(name), keys)
-      table(name)
-    } else mutate(name) { s =>
-      s.df.join(keys.select(s.keyColumns.map(col): _*), s.keyColumns, "left_anti")
-    }
-  }
-
-  private def mutate(name: String)(f: TableState => DataFrame): DataFrame = {
-    val key = normalize(name)
-    val st = tables.getOrElse(key,
-      throw new IllegalArgumentException(s"graft table not found: $name"))
-    val next =
-      if (st.partitionBy.nonEmpty)
-        f(st).repartition(st.buckets, st.partitionBy.map(col): _*)
-      else f(st)
-    // The new snapshot materializes (eagerly) BEFORE the catalog entry is
-    // swapped, reading from the still-live previous snapshot — readers
-    // never observe a partial mutation. Old snapshot blocks are released
-    // by the ContextCleaner once unreferenced.
-    swap(key, st.copy(df = next))
-  }
-
-  /** Materialize the new state as its own snapshot and swap it in.
-    * localCheckpoint both (a) stores the rows (MEMORY_AND_DISK), making
-    * every table read cache-served, and (b) cuts the lineage chain, so a
-    * long mutation history doesn't accrete an unbounded plan DAG (the
-    * classic iterative-mutation trap).
-    */
-  private def swap(key: String, st: TableState): DataFrame = {
-    val materialized = st.df.localCheckpoint(eager = true)
-    tables.put(key, st.copy(df = materialized))
-    materialized.createOrReplaceTempView(key)
-    materialized
+    val ops = opsOf(name)
+    val nm = normalize(name)
+    val keyColumns = ops.layout(nm).keyColumns
+    require(keyColumns.nonEmpty, s"deleteKeys($name) requires key_columns")
+    validateDeleteRestrict(nm,
+      table(nm).join(keys.select(keyColumns.map(col): _*), keyColumns, "left_semi"),
+      table(nm).join(keys.select(keyColumns.map(col): _*), keyColumns, "left_anti"))
+    ops.deleteKeys(spark, nm, keys)
+    table(nm)
   }
 }
 

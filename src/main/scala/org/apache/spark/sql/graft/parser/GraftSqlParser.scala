@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.graft.store.GraftCatalog
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Session parser for the Snappy statement surface, installed via
@@ -16,9 +17,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * embedded expressions/queries are parsed by the DELEGATE (stock Spark
   * parser), so the full Spark expression language — quoted identifiers,
   * subqueries, CASE, intervals — works in WHERE/SET/source position.
-  * UPDATE/DELETE are only intercepted for GraftSession-managed tables;
-  * everything else (including DSv2 catalog DML) flows to Spark
-  * unchanged.
+  * UPDATE/DELETE are only intercepted for graft tables the session
+  * routes to the store (see `routesToGraft`); everything else (including
+  * DSv2 catalog DML) flows to Spark unchanged.
   */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
@@ -26,13 +27,28 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
 
   private def g = graft.GraftSession(session)
 
-  /** Temp views qualify for the external-DML view-swap path; graft-
-    * managed tables and everything in a real catalog do not (the former
-    * have their own DML, the latter keep Spark's native row-level ops).
+  /** Bare name `t` routes to the graft table of that name: the store
+    * registry holds it (whichever session created it) or it is an
+    * attached view, and the session resolves the name to no relation of
+    * its own other than the table's own read. A user temp view over
+    * parquet or a session-catalog table under the same name keeps its
+    * own route. Metadata lookups only: a temp view's stored plan is
+    * inspected without analysis.
+    */
+  private def routesToGraft(t: String): Boolean = {
+    val n = g.resolveSynonym(t)
+    g.isManaged(n) &&
+      (org.apache.spark.sql.graft.store.ReplicaGuard.infoOf(n).exists(_.mode == "view") ||
+        GraftCatalog.ownRelation(session, n)
+          .forall(GraftCatalog.storeRelation(n, _).isDefined))
+  }
+
+  /** Temp views qualify for the external-DML view-swap path (graft
+    * tables route first); everything in a real catalog keeps Spark's
+    * native row-level ops.
     */
   private def isExternalDmlTarget(t: String): Boolean =
-    !g.isManaged(t.toLowerCase) &&
-      session.catalog.tableExists(t) &&
+    session.catalog.tableExists(t) &&
       (try session.catalog.getTable(t).isTemporary catch { case _: Exception => false })
 
   /** A bare or `graft.`-qualified name naming a graft STORE table whose
@@ -51,8 +67,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       case _ => (None, false)
     }
     nm.filter { n =>
-      (org.apache.spark.sql.graft.store.GraftColumnStore.get(n).isDefined ||
-        org.apache.spark.sql.graft.store.GraftRowStore.get(n).isDefined) &&
+      org.apache.spark.sql.graft.store.StoreOps.forTable(n).isDefined &&
         org.apache.spark.sql.graft.Constraints.get(n).exists(_.enforced) &&
         // bare names the SESSION resolves to something else — a temp
         // view or a session-catalog table that shadows a same-named
@@ -66,16 +81,13 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
         // the underlying V2 relation, silently bypassing
         // identity/CHECK/UNIQUE/FK — same-schema shadows enforce,
         // schema-changing ones fail fast inside [[shadowOfStoreTable]].
-        // (No isManaged short-circuit: a user may REPLACE a managed
-        // name's temp view with their own reshaped shadow — the
-        // analysis-based classification is the only honest gate.)
-        (qualified || !session.catalog.tableExists(n) ||
-          shadowOfStoreTable(n))
+        (qualified || GraftCatalog.ownRelation(session, n)
+          .forall(shadowOfStoreTable(n, _)))
     }
   }
 
-  /** Classifies the SESSION's own relation for bare name `n` when it
-    * shadows the same-named constrained graft store table. Spark's
+  /** Classifies the SESSION's own relation `own` for bare name `n` when
+    * it shadows the same-named constrained graft store table. Spark's
     * native INSERT resolves a temp view over a DSv2 relation by writing
     * THROUGH it into the underlying table (the view's Filter/Project are
     * not applied to the write) — so a shadow that scans the store table
@@ -91,36 +103,13 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     * view-schema column mapping, and routing native would silently
     * skip CHECK/UNIQUE/FK/identity.
     */
-  private def shadowOfStoreTable(n: String): Boolean = {
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-        strip(s.child)
-      case v: org.apache.spark.sql.catalyst.plans.logical.View =>
-        strip(v.child)
-      case other => other
-    }
-    def storeRel(p: LogicalPlan): Option[DataSourceV2Relation] = p match {
-      case r: DataSourceV2Relation => r.table match {
-        case gt: org.apache.spark.sql.graft.store.GraftTable
-          if gt.storeName.equalsIgnoreCase(n) => Some(r)
-        case rt: org.apache.spark.sql.graft.store.GraftRowTable
-          if rt.name().equalsIgnoreCase(s"graftrow.$n") => Some(r)
-        case _ => None
-      }
-      case _ => None
-    }
-    val stripped =
-      try {
-        val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        strip(classic.table(n).queryExecution.analyzed)
-      } catch { case _: Exception => return false }
+  private def shadowOfStoreTable(n: String, own: LogicalPlan): Boolean = {
     // only a LINEAR Project/Filter chain over the single store relation
     // is a write-through shadow; a multi-source view (UNION/JOIN/agg)
     // that merely CONTAINS the relation keeps the native path — Spark
     // refuses inserting into a multi-relation view, which is the right
     // error, and intercepting would silently pick one branch as target
-    def linearBase(p: LogicalPlan): Option[DataSourceV2Relation] = p match {
+    def linearBase(p: LogicalPlan): Option[LogicalPlan] = p match {
       case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
         linearBase(pr.child)
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
@@ -129,15 +118,15 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
         linearBase(s.child)
       case v: org.apache.spark.sql.catalyst.plans.logical.View =>
         linearBase(v.child)
-      case other => storeRel(other)
+      case other => GraftCatalog.storeRelation(n, other)
     }
-    if (storeRel(stripped).isDefined) true
-    else linearBase(stripped) match {
+    if (GraftCatalog.storeRelation(n, own).isDefined) true
+    else linearBase(own) match {
       case None => false // unrelated, or not a linear write-through shape
       case Some(rel) =>
         def shape(out: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) =
           out.map(a => (a.name.toLowerCase, a.dataType))
-        if (shape(stripped.output) == shape(rel.output)) true
+        if (shape(own.output) == shape(rel.output)) true
         else throw new org.apache.spark.sql.AnalysisException(
           errorClass = "_LEGACY_ERROR_TEMP_3105",
           messageParameters = Map("message" ->
@@ -155,7 +144,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     * apply. V2 catalogs (e.g. `graft.t`) and temp views never land here.
     */
   private def isCatalogCowDmlTarget(t: String): Boolean = {
-    if (g.isManaged(t.toLowerCase) || !session.catalog.tableExists(t)) return false
+    if (!session.catalog.tableExists(t)) return false
     try {
       if (session.catalog.getTable(t).isTemporary) return false
       val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -182,7 +171,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       // native MERGE INTO syntax, canonical-upsert form, on MANAGED
       // tables → the PUT INTO path (same contract); other targets keep
       // Spark's row-level MERGE
-      case Some(m: MergeInto) if g.isManaged(m.table.toLowerCase) =>
+      case Some(m: MergeInto) if routesToGraft(m.table) =>
         GraftMergeIntoCommand(m.table.toLowerCase, m.source, m.onCond, m.clauses,
           (m.targetAlias.toSeq :+ m.table).map(_.toLowerCase),
           (m.sourceAlias.toSeq :+ m.source).map(_.toLowerCase))
@@ -211,14 +200,14 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
             GraftConstrainedInsertCommand(nm, cols, src)
           case None => null // unconstrained: Spark's native INSERT
         }
-      case Some(Update(t, assigns, where)) if g.isManaged(t.toLowerCase) =>
+      case Some(Update(t, assigns, where)) if routesToGraft(t) =>
         // validate all embedded expressions NOW (statement-time parse
         // errors); the command re-parses at run — commands must not carry
         // unresolved Expression fields past the analyzer
         assigns.foreach { case (_, v) => delegate.parseExpression(v) }
         delegate.parseExpression(where)
         GraftUpdateCommand(t, assigns, where)
-      case Some(Delete(t, where)) if g.isManaged(t.toLowerCase) =>
+      case Some(Delete(t, where)) if routesToGraft(t) =>
         delegate.parseExpression(where)
         GraftDeleteCommand(t, where)
       // DML on EXTERNAL tables (reference DMLExternalTable,
@@ -276,34 +265,34 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
         schema.foreach(delegate.parseTableSchema) // validate at statement time
         GraftCreateStreamTableCommand(n, schema, provider, opts)
       case Some(CreateIndex(n, t, cols, Some(provider), opts))
-          if g.isManaged(t.toLowerCase) =>
+          if routesToGraft(t) =>
         require(cols.size == 1,
           s"CREATE INDEX $n USING $provider takes exactly one vector column")
         GraftCreateAnnIndexCommand(n.toLowerCase, t.toLowerCase,
           cols.head.toLowerCase, provider, opts)
-      case Some(CreateIndex(_, t, cols, None, _)) if g.isManaged(t.toLowerCase) =>
+      case Some(CreateIndex(_, t, cols, None, _)) if routesToGraft(t) =>
         GraftCreateIndexCommand(t.toLowerCase, cols)
       case Some(DropIndex(n, _)) if graft.operators.AnnIndexes.contains(n) =>
         GraftDropAnnIndexCommand(n.toLowerCase)
-      case Some(DropIndex(_, t)) if g.isManaged(t.toLowerCase) =>
+      case Some(DropIndex(_, t)) if routesToGraft(t) =>
         GraftDropIndexCommand(t.toLowerCase)
-      case Some(OptimizeZorder(t, cols)) if g.isManaged(t.toLowerCase) =>
+      case Some(OptimizeZorder(t, cols)) if routesToGraft(t) =>
         GraftOptimizeZorderCommand(t.toLowerCase, cols)
-      case Some(AlterAddColumn(t, c, dt)) if g.isManaged(t.toLowerCase) =>
+      case Some(AlterAddColumn(t, c, dt)) if routesToGraft(t) =>
         delegate.parseDataType(dt) // validate at statement time
         GraftAlterAddColumnCommand(t.toLowerCase, c, dt)
-      case Some(AlterDropColumn(t, c)) if g.isManaged(t.toLowerCase) =>
+      case Some(AlterDropColumn(t, c)) if routesToGraft(t) =>
         GraftAlterDropColumnCommand(t.toLowerCase, c)
-      case Some(AlterAddConstraint(t, clause)) if g.isManaged(t.toLowerCase) =>
+      case Some(AlterAddConstraint(t, clause)) if routesToGraft(t) =>
         // statement-time shape check: the clause must parse as a
         // table-level constraint (CHECK exprs parse at ADD time below)
         org.apache.spark.sql.graft.Constraints.parseConstraintClause(clause)
         GraftAlterAddConstraintCommand(t.toLowerCase, clause)
-      case Some(AlterDropConstraint(t, n)) if g.isManaged(t.toLowerCase) =>
+      case Some(AlterDropConstraint(t, n)) if routesToGraft(t) =>
         GraftAlterDropConstraintCommand(t.toLowerCase, n.toLowerCase)
-      case Some(AlterRebucket(t, n, cs)) if g.isManaged(t.toLowerCase) =>
+      case Some(AlterRebucket(t, n, cs)) if routesToGraft(t) =>
         GraftAlterRebucketCommand(t.toLowerCase, n, cs)
-      case Some(TruncateTable(t)) if g.isManaged(t.toLowerCase) =>
+      case Some(TruncateTable(t)) if routesToGraft(t) =>
         GraftTruncateTableCommand(t.toLowerCase)
       case Some(CreateDiskstore(n, ine, props, dirs)) =>
         GraftCreateDiskstoreCommand(n, ine, props, dirs)
@@ -332,7 +321,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       // graft-managed sources and temp views (which clone into managed
       // tables) — CREATE TABLE LIKE over a PERSISTENT catalog table must
       // keep Spark's native persistent-table/provider semantics
-      case Some(CreateTableLike(n, s)) if g.isManaged(s.toLowerCase) ||
+      case Some(CreateTableLike(n, s)) if routesToGraft(s) ||
           (try session.catalog.getTable(s).isTemporary
            catch { case _: Exception => true }) =>
         GraftCreateTableLikeCommand(n, s)
@@ -551,11 +540,7 @@ case class GraftCreateIndexCommand(table: String, columns: Seq[String])
   override def run(spark: SparkSession): Seq[Row] = {
     // row tables get per-column secondary indexes (sorted-slot arrays +
     // pack stats); column tables get clustering (sorted batch rewrite)
-    if (org.apache.spark.sql.graft.store.GraftRowStore.get(table).isDefined)
-      columns.foreach(c =>
-        org.apache.spark.sql.graft.store.GraftRowOps.createIndex(spark, table, c))
-    else
-      org.apache.spark.sql.graft.store.GraftStoreOps.createIndex(spark, table, columns)
+    org.apache.spark.sql.graft.store.StoreOps(table).createIndex(spark, table, columns)
     Nil
   }
 }
@@ -679,9 +664,6 @@ case class GraftConstrainedInsertCommand(table: String, columns: Seq[String],
     sourceSql: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val g = graft.GraftSession(spark)
-    // JVM-global registries, session-local temp views: a JDBC/Thrift
-    // session inserting into a table it didn't create adopts it first
-    g.adoptFromStore(table)
     val src0 = spark.sql(sourceSql)
     // a column list renames the source's positional output (VALUES
     // yields col1, col2, …) so g.insert's by-name alignment — and the
@@ -691,12 +673,8 @@ case class GraftConstrainedInsertCommand(table: String, columns: Seq[String],
     // rename, landing values in the wrong columns where native Spark
     // rejects the statement.
     val src = if (columns.nonEmpty) {
-      val targetCols =
-        org.apache.spark.sql.graft.store.GraftColumnStore.get(table)
-          .map(_.schema).orElse(
-            org.apache.spark.sql.graft.store.GraftRowStore.get(table)
-              .map(_.schema))
-          .map(_.fieldNames.toSeq).getOrElse(Seq.empty)
+      val targetCols = org.apache.spark.sql.graft.store.StoreOps(table)
+        .schema(table).fieldNames.toSeq
       val unknown = columns.filterNot(c =>
         targetCols.exists(_.equalsIgnoreCase(c)))
       if (unknown.nonEmpty) throw new org.apache.spark.sql.AnalysisException(
@@ -885,10 +863,7 @@ case class GraftDropAnnIndexCommand(name: String) extends LeafRunnableCommand {
 
 case class GraftDropIndexCommand(table: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    if (org.apache.spark.sql.graft.store.GraftRowStore.get(table).isDefined)
-      org.apache.spark.sql.graft.store.GraftRowOps.dropIndexes(table)
-    else
-      org.apache.spark.sql.graft.store.GraftStoreOps.dropIndex(spark, table)
+    org.apache.spark.sql.graft.store.StoreOps(table).dropIndex(spark, table)
     Nil
   }
 }
@@ -902,10 +877,12 @@ case class GraftCreateTableLikeCommand(name: String, source: String)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val g = graft.GraftSession(spark)
-    g.tableState(source.toLowerCase) match {
-      case Some(ts) =>
-        g.createTable(name, g.table(source).limit(0), ts.keyColumns,
-          ts.partitionBy, ts.buckets, if (ts.rowBacked) "row" else "column")
+    val src = g.resolveSynonym(source)
+    org.apache.spark.sql.graft.store.StoreOps.forTable(src) match {
+      case Some(ops) =>
+        val l = ops.layout(src)
+        g.createTable(name, g.table(src).limit(0), l.keyColumns,
+          l.bucketBy, l.numBuckets, ops.provider)
       case None =>
         g.createTable(name, spark.table(source).limit(0))
     }
@@ -1058,28 +1035,16 @@ case class GraftCreateTableCommand(name: String, provider: String,
         "(operational tiering/replication is not managed by this engine)"))
     options.keys.filterNot(knownOptions).foreach(k =>
       logWarning(s"CREATE TABLE $name: unknown option '$k' ignored"))
-    var partitionBy = options.get("partition_by").toSeq
+    val sourceDf = Dataset.ofRows(classic, source)
+    val declaredBy = options.get("partition_by").toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    var buckets = options.get("buckets").map(_.toInt)
-    // COLOCATE_WITH: colocation here IS shared bucketing (co-bucketed
-    // tables join via storage-partitioned joins with no exchange) — so
-    // inherit the target's bucket count, and reject an explicit layout
-    // that cannot colocate
-    options.get("colocate_with").map(_.trim.toLowerCase).foreach { target =>
-      val ts = g.tableState(target).getOrElse(throw new IllegalArgumentException(
-        s"CREATE TABLE $name: COLOCATE_WITH '$target' is not a managed table"))
-      require(ts.partitionBy.nonEmpty,
-        s"CREATE TABLE $name: COLOCATE_WITH '$target' is not partitioned")
-      buckets.filter(_ != ts.buckets).foreach { b =>
-        throw new IllegalArgumentException(
-          s"CREATE TABLE $name: BUCKETS $b cannot colocate with '$target' " +
-            s"(${ts.buckets} buckets)")
-      }
-      require(partitionBy.isEmpty || partitionBy.size == ts.partitionBy.size,
-        s"CREATE TABLE $name: PARTITION_BY arity ${partitionBy.size} cannot colocate " +
-          s"with '$target' (${ts.partitionBy.size} columns)")
-      buckets = Some(ts.buckets)
-      if (partitionBy.isEmpty) partitionBy = ts.partitionBy
+    val declaredBuckets = options.get("buckets").map(_.toInt)
+    val (partitionBy, buckets) = options.get("colocate_with").map(_.trim.toLowerCase) match {
+      case Some(target) =>
+        val (by, n) = org.apache.spark.sql.graft.store.StoreOps.colocateWith(
+          s"CREATE TABLE $name", target, sourceDf.schema, declaredBy, declaredBuckets)
+        (by, Some(n))
+      case None => (declaredBy, declaredBuckets)
     }
     // constraint scope check (reference create-table.md: "Constraint
     // (only for Row Tables)" — NOT NULL is the one clause the reference
@@ -1099,7 +1064,6 @@ case class GraftCreateTableCommand(name: String, provider: String,
         s"with the PRIMARY KEY constraint (${tableConstraints.primaryKey.mkString(",")})")
     val keyColumns =
       if (tableConstraints.primaryKey.nonEmpty) tableConstraints.primaryKey else optKeys
-    val sourceDf = Dataset.ofRows(classic, source)
     // fail BEFORE creating anything: columns exist, identity type legal,
     // FK targets resolve to a parent PK or UNIQUE constraint
     val tcChecked = Constraints.validateShape(name.toLowerCase, sourceDf.schema,

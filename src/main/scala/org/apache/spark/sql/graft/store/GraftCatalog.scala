@@ -37,8 +37,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
   private def tableName(ident: Identifier): String = ident.name().toLowerCase
 
   override def listTables(namespace: Array[String]): Array[Identifier] =
-    (GraftColumnStore.tableNames ++ GraftRowStore.tableNames)
-      .map(n => Identifier.of(Array.empty, n)).toArray
+    StoreOps.all.flatMap(_.tableNames).map(n => Identifier.of(Array.empty, n)).toArray
 
   override def loadTable(ident: Identifier): Table = {
     val nm = tableName(ident)
@@ -80,6 +79,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     // stale read-only flag that would refuse every subsequent write
     ReplicaGuard.clear(nm)
     MatViews.unregister(nm) // explicit CREATE supersedes matview status too
+    // ... and a dropped table's constraints: a re-created name must not
+    // route its INSERTs through the old CHECKs
+    org.apache.spark.sql.graft.Constraints.drop(nm)
     val (declaredBy: Seq[String], declaredBuckets: Int) = partitions.toSeq match {
       case Seq(BucketTransform(n, cols, Nil)) =>
         (cols.map(_.fieldNames.mkString(".")), n)
@@ -88,32 +90,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
         throw new UnsupportedOperationException(
           s"graftstore supports only bucket(n, cols) partitioning, got: ${other.mkString(",")}")
     }
-    // COLOCATE_WITH through the DSv2 route (same contract as the SQL
-    // DDL route): colocation IS shared bucketing. PERF_NOTES §18 proved
-    // mismatched bucket counts forfeit storage-partitioned joins
-    // ENTIRELY (bucket(4) vs bucket(16) are incompatible
-    // KeyGroupedPartitionings, no align-to-larger) — so a mismatch is an
-    // error at CREATE, not a silent full-shuffle at every join.
+    // COLOCATE_WITH: the same rule as the SQL DDL route
     val (bucketBy: Seq[String], buckets: Int) =
       Option(properties.get("colocate_with")).map(_.trim.toLowerCase) match {
-        case Some(target) =>
-          val ts = GraftColumnStore.get(target).map(_.snapshot).getOrElse(
-            throw new IllegalArgumentException(
-              s"graftstore: COLOCATE_WITH '$target' is not a managed table"))
-          require(ts.numBuckets > 0,
-            s"graftstore: COLOCATE_WITH '$target' is not bucketed")
-          if (declaredBuckets > 0 && declaredBuckets != ts.numBuckets)
-            throw new IllegalArgumentException(
-              s"graftstore: bucket($declaredBuckets, ...) cannot colocate with " +
-                s"'$target' (${ts.numBuckets} buckets) — mismatched counts forfeit " +
-                "storage-partitioned joins entirely")
-          require(declaredBy.isEmpty || declaredBy.size == ts.bucketBy.size,
-            s"graftstore: bucket column arity ${declaredBy.size} cannot colocate " +
-              s"with '$target' (${ts.bucketBy.size} columns)")
-          val by = if (declaredBy.nonEmpty) declaredBy else ts.bucketBy
-          by.foreach(c => require(schema.fieldNames.map(_.toLowerCase).contains(c.toLowerCase),
-            s"graftstore: inherited colocation column '$c' is not in the schema of $nm"))
-          (by, ts.numBuckets)
+        case Some(target) => StoreOps.colocateWith(s"CREATE TABLE $nm", target,
+          schema, declaredBy, Some(declaredBuckets).filter(_ > 0))
         case None => (declaredBy, declaredBuckets)
       }
     val keys = Option(properties.get("key_columns"))
@@ -227,16 +208,22 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     // SET/UNSET TBLPROPERTIES: metadata-only tunables, no rewrite
     if (setProps.nonEmpty || unsetProps.nonEmpty)
       GraftStoreOps.alterProperties(spark, nm, setProps, unsetProps)
-    // a GraftSession-managed temp view over this table must re-resolve,
-    // or it keeps planning the pre-ALTER relation/schema
+    // the session's temp view over this table must re-resolve, or it
+    // keeps planning the pre-ALTER relation/schema
     graft.GraftSession(spark).refreshManaged(nm)
     loadTable(ident)
   }
 
+  /** DROP TABLE graft.t runs the session teardown — FK restrict,
+    * constraints, ANN indexes, matviews, samples, the replica flag and
+    * the diskstore binding go with the store table, exactly as on the
+    * session face.
+    */
   override def dropTable(ident: Identifier): Boolean = {
     val nm = tableName(ident)
     val existed = StoreOps.forTable(nm).isDefined
-    StoreOps.drop(nm)
+    if (existed)
+      graft.GraftSession(org.apache.spark.sql.SparkSession.active).dropTable(nm)
     existed
   }
 
@@ -268,6 +255,50 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
   override def loadFunction(ident: Identifier): UnboundFunction =
     if (ident.name().equalsIgnoreCase("bucket")) GraftBucketFunction
     else throw new NoSuchFunctionException(ident)
+}
+
+/** How a session's own relations relate to the graft catalog's tables. */
+object GraftCatalog {
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.catalyst.analysis.V2TableReference
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+
+  /** The relation `spark` resolves bare name `n` to on its own — a temp
+    * view (its stored plan, so no analysis) or a session-catalog table —
+    * with alias and view wrappers stripped; None when it has none. A
+    * relation of the session's own that no longer resolves is still its
+    * own (an empty relation here, unrelated to any store table).
+    */
+  def ownRelation(spark: SparkSession, n: String): Option[LogicalPlan] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, SubqueryAlias, View}
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case s: SubqueryAlias => strip(s.child)
+      case v: View => strip(v.child)
+      case other => other
+    }
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classic.sessionState.catalog.getRawTempView(n).flatMap(_.plan).orElse {
+      if (!spark.catalog.tableExists(n)) None
+      else Some(scala.util.Try(classic.table(n).queryExecution.analyzed)
+        .getOrElse(LocalRelation()))
+    }.map(strip)
+  }
+
+  /** `p` as a scan of graft store table `n` itself, when it is one: the
+    * store relation, or the reference a temp view keeps to a catalog
+    * table (`graft.n`, re-resolved at each use).
+    */
+  def storeRelation(n: String, p: LogicalPlan): Option[LogicalPlan] = p match {
+    case r: DataSourceV2Relation => r.table match {
+      case t: GraftTable if t.storeName.equalsIgnoreCase(n) => Some(r)
+      case t: GraftRowTable if t.name().equalsIgnoreCase(s"graftrow.$n") => Some(r)
+      case _ => None
+    }
+    case r: V2TableReference if r.catalog.isInstanceOf[GraftCatalog] &&
+        r.identifier.name.equalsIgnoreCase(n) => Some(r)
+    case _ => None
+  }
 }
 
 /** The bucket V2 function backing `bucket(n, col)` transforms. Its result

@@ -171,7 +171,7 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
     * keeping each key's first row (the row `dropDuplicates` keeps) and
     * probed on the calling thread.
     */
-  def put(spark: SparkSession, table: String, source: DataFrame): Unit = {
+  override def put(spark: SparkSession, table: String, source: DataFrame): Unit = {
     ReplicaGuard.requireWritable(table, "put")
     val t = GraftRowStore(table)
     withPinned(t) { snap =>
@@ -224,7 +224,7 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
   /** DELETE every row whose key matches a row of `keys` — the source is
     * bucket-routed and resolved by index probe; no table scan.
     */
-  def deleteKeys(spark: SparkSession, table: String, keys: DataFrame): Unit = {
+  override def deleteKeys(spark: SparkSession, table: String, keys: DataFrame): Unit = {
     ReplicaGuard.requireWritable(table, "deleteKeys")
     val t = GraftRowStore(table)
     withPinned(t) { snap =>
@@ -245,7 +245,7 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
     * the hidden addresses, tombstoned per pack. A victim read pinned to
     * a key is a key lookup and runs on the calling thread, with no job.
     */
-  def delete(spark: SparkSession, table: String, cond: Column): Unit = {
+  override def delete(spark: SparkSession, table: String, cond: Column): Unit = {
     ReplicaGuard.requireWritable(table, "delete")
     // a filter drops NULL like FALSE; the bare condition (not wrapped in
     // coalesce) is what pushes down and pins a nullable key
@@ -269,7 +269,7 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
     * computed by the (codegen'd) scan+project and re-put; key and bucket
     * columns cannot be assigned (reference: PK columns are immutable).
     */
-  def update(spark: SparkSession, table: String, cond: Column,
+  override def update(spark: SparkSession, table: String, cond: Column,
       assignments: Seq[(String, Column)]): Unit = {
     ReplicaGuard.requireWritable(table, "update")
     val t = GraftRowStore(table)
@@ -343,9 +343,13 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
       s.indexes + (column.toLowerCase -> GraftRowStore.IndexStats(column, stats))))
   }
 
+  override def createIndex(spark: SparkSession, table: String,
+      columns: Seq[String]): Unit =
+    columns.foreach(createIndex(spark, table, _))
+
   /** DROP INDEX: clears the secondary-index metadata (memoized sorted
     * arrays are harmless to keep; they die with their packs).
     */
-  def dropIndexes(table: String): Unit =
+  override def dropIndex(spark: SparkSession, table: String): Unit =
     GraftRowStore(table).mutate(_.copy(indexes = Map.empty))
 }

@@ -76,6 +76,16 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     "compression" -> snap.compression,
     "sketch_columns" -> r.surviving(snap.sketchBy).mkString(","))
 
+  /** The catalog read: only catalog-resolved scans carry the
+    * bucket-grouped KeyGroupedPartitioning (the bucket transform's
+    * function resolves through GraftCatalog), which is what lets
+    * bucket-key joins and aggregations skip the store-side exchange — a
+    * reader-based load of the same table reports UnknownPartitioning.
+    * A session without the graft catalog registered gets that load.
+    */
+  override def sessionRead(spark: SparkSession, table: String): DataFrame =
+    scala.util.Try(spark.table(s"graft.$table")).getOrElse(read(spark, table))
+
   /** The scan plus its physical row address (hidden metadata columns).
     * Public for callers that compute a matched-row frame ONCE and thread
     * it through [[putIntoAddressed]] (the matview refresh merges) — the
@@ -91,7 +101,7 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     readAddressed(spark, table)
 
   /** DELETE FROM table WHERE cond. */
-  def delete(spark: SparkSession, table: String, cond: Column): Unit = {
+  override def delete(spark: SparkSession, table: String, cond: Column): Unit = {
     ReplicaGuard.requireWritable(table, "delete")
     MatViews.guardWrite(table)
     deleteAddressed(spark, table,
@@ -99,7 +109,7 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
   }
 
   /** DELETE every row whose key matches a row of `keys`. */
-  def deleteKeys(spark: SparkSession, table: String, keys: DataFrame): Unit = {
+  override def deleteKeys(spark: SparkSession, table: String, keys: DataFrame): Unit = {
     ReplicaGuard.requireWritable(table, "deleteKeys")
     MatViews.guardWrite(table)
     val t = GraftColumnStore(table)
@@ -151,7 +161,7 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     * snapshot. The scan already merges prior deltas, so repeated updates
     * compose.
     */
-  def update(spark: SparkSession, table: String, cond: Column,
+  override def update(spark: SparkSession, table: String, cond: Column,
       assignments: Seq[(String, Column)]): Unit = {
     ReplicaGuard.requireWritable(table, "update")
     MatViews.guardWrite(table)
@@ -230,6 +240,9 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     */
   def putInto(spark: SparkSession, table: String, source: DataFrame): Unit =
     putInto(spark, table, source, sourceKeyUnique = false)
+
+  override def put(spark: SparkSession, table: String, source: DataFrame): Unit =
+    putInto(spark, table, source)
 
   /** As [[putInto]]; `sourceKeyUnique = true` skips the key
     * deduplication pass when the CALLER proves the source is unique per
@@ -491,8 +504,12 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     * play). Bucketed layout is preserved; O(table) once at build, like
     * any index build.
     */
+  override def createIndex(spark: SparkSession, table: String,
+      columns: Seq[String]): Unit =
+    createIndex(spark, table, columns, batchSize = 16384)
+
   def createIndex(spark: SparkSession, table: String, columns: Seq[String],
-      batchSize: Int = 16384): Unit = MatViews.inMaintenance {
+      batchSize: Int): Unit = MatViews.inMaintenance {
     // content-preserving like compact: indexing a summary table is legal
     val t = GraftColumnStore(table)
     columns.foreach(c => require(t.schema.fieldNames.contains(c),
@@ -506,7 +523,7 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
   /** DROP INDEX: clears the clustering metadata (the physical order is
     * harmless to keep).
     */
-  def dropIndex(spark: SparkSession, table: String): Unit =
+  override def dropIndex(spark: SparkSession, table: String): Unit =
     GraftColumnStore(table).mutate(_.copy(sortedBy = Nil))
 
   /** ALTER TABLE SET/UNSET TBLPROPERTIES: live-tune the store tunables
@@ -659,7 +676,7 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     require(columns.size * bits <= 60, s"zorderBy: ${columns.size} cols x $bits bits > 60")
     require(GraftColumnStore.get(table).isDefined,
       s"OPTIMIZE ZORDER: '$table' is not a managed COLUMN table " +
-        "(row tables and cached-DataFrame fallbacks have no batch stats to cluster)")
+        "(row tables have no batch stats to cluster)")
     val t = GraftColumnStore(table)
     val schema = t.schema
     columns.foreach { c =>

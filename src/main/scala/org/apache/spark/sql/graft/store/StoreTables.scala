@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.concurrent.TrieMap
@@ -257,7 +257,10 @@ private[store] final case class PublishCut(ids: Vector[Long], rowCount: Long,
 /** Table operations written once for both stores: the ALTER rewrite,
   * the layout manifest, and checkpoint / restore of the table through it
   * (SnappyData's PERSISTENCE is one option for column and row tables
-  * alike). Each store supplies only what differs, through the hooks.
+  * alike). Each store supplies only what differs, through the hooks —
+  * including the one mutation surface (append, put, update, delete,
+  * deleteKeys, createIndex, dropIndex) that the session and the SQL
+  * surface dispatch through.
   */
 trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
   val FORMAT: String
@@ -270,8 +273,35 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
   protected def registry: TableRegistry
   def exists(table: String): Boolean = registry.get(table).isDefined
   def drop(table: String): Unit = registry.drop(table)
+  def tableNames: Seq[String] = registry.tableNames
+  /** The live registry object of `table`: a re-created table is a new
+    * object, so callers may key per-table caches by it.
+    */
+  def handle(table: String): AnyRef = registry(table)
 
   def snapshotOf(table: String): S
+  def schema(table: String): StructType = snapshotOf(table).schema
+
+  /** The read a session serves the table through. */
+  def sessionRead(spark: SparkSession, table: String): DataFrame = read(spark, table)
+
+  // ---- the mutation surface both stores implement ----
+
+  /** INSERT: the format write in append mode. */
+  def append(spark: SparkSession, table: String, rows: DataFrame): Unit =
+    rows.write.format(FORMAT).option("table", table).mode("append").save()
+  /** PUT INTO: key upsert — a matched row is replaced, the rest append. */
+  def put(spark: SparkSession, table: String, source: DataFrame): Unit
+  def update(spark: SparkSession, table: String, cond: Column,
+      assignments: Seq[(String, Column)]): Unit
+  def delete(spark: SparkSession, table: String, cond: Column): Unit
+  /** DELETE every row whose key matches a row of `keys`. */
+  def deleteKeys(spark: SparkSession, table: String, keys: DataFrame): Unit
+  /** CREATE INDEX on `columns` (row tables: one secondary index per
+    * column; column tables: clustering by the columns).
+    */
+  def createIndex(spark: SparkSession, table: String, columns: Seq[String]): Unit
+  def dropIndex(spark: SparkSession, table: String): Unit
   /** Store-only layout options a rewrite must carry (the column store's
     * batch size, codec and sketch set).
     */
@@ -431,9 +461,7 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
         s"alter($table) cannot drop key/bucket column $c"))
     // validate the NEW shape before any mutation: a failure below this
     // point must leave the table exactly as it was
-    next.schema.fields.foreach(f =>
-      require(GraftColumnStore.supportsType(f.dataType),
-        s"alter($table): column ${f.name} has unsupported type ${f.dataType}"))
+    StoreOps.requireSupported(s"alter($table)", next.schema)
     // materialize first — the transformed plan reads the table; the
     // commit then swaps refs AND schema atomically (truncate-overwrite,
     // same full-old-or-full-new guarantee as compact; like compact, a
@@ -460,7 +488,8 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
 
 /** Store dispatch: by table name (the row store first) or by a layout
   * manifest's `provider` (absent on the oldest manifests, which only the
-  * column store wrote).
+  * column store wrote). The registries behind it are the one table
+  * catalog: every session resolves a graft table here.
   */
 object StoreOps {
   val all: Seq[StoreOps[_]] = Seq(GraftRowOps, GraftStoreOps)
@@ -478,4 +507,44 @@ object StoreOps {
 
   /** Drop `table` from every store. */
   def drop(table: String): Unit = all.foreach(_.drop(table))
+
+  /** Refuse a schema the stores cannot hold, before anything is written
+    * (CREATE and the ALTER rewrite alike).
+    */
+  def requireSupported(what: String, schema: StructType): Unit =
+    schema.fields.foreach(f =>
+      require(GraftColumnStore.supportsType(f.dataType),
+        s"$what: column ${f.name} has unsupported type ${f.dataType}"))
+
+  /** COLOCATE_WITH, for both CREATE routes (SQL DDL and the DSv2
+    * catalog): colocation IS shared bucketing — co-bucketed tables join
+    * storage-partitioned, with no exchange — so the new table takes the
+    * target's bucket count and, when it names none, its bucket columns.
+    * Any bucketed store table is a target. Mismatched counts forfeit
+    * storage-partitioned joins entirely (bucket(4) vs bucket(16) are
+    * incompatible KeyGroupedPartitionings, PERF_NOTES §18), so a
+    * mismatch fails at CREATE, not as a full shuffle at every join.
+    * Returns the (bucket columns, bucket count) the new table takes.
+    */
+  def colocateWith(what: String, target: String, schema: StructType,
+      bucketBy: Seq[String], buckets: Option[Int]): (Seq[String], Int) = {
+    val t = forTable(target).map(_.layout(target)).getOrElse(
+      throw new IllegalArgumentException(
+        s"$what: COLOCATE_WITH '$target' is not a managed table"))
+    require(t.bucketBy.nonEmpty && t.numBuckets > 0,
+      s"$what: COLOCATE_WITH '$target' is not bucketed")
+    buckets.filter(_ != t.numBuckets).foreach { b =>
+      throw new IllegalArgumentException(
+        s"$what: $b buckets cannot colocate with '$target' " +
+          s"(${t.numBuckets} buckets) — mismatched counts forfeit " +
+          "storage-partitioned joins entirely")
+    }
+    require(bucketBy.isEmpty || bucketBy.size == t.bucketBy.size,
+      s"$what: bucket column arity ${bucketBy.size} cannot colocate " +
+        s"with '$target' (${t.bucketBy.size} columns)")
+    val by = if (bucketBy.nonEmpty) bucketBy else t.bucketBy
+    by.foreach(c => require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
+      s"$what: colocation column '$c' is not in the table's schema"))
+    (by, t.numBuckets)
+  }
 }

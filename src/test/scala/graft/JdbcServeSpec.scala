@@ -432,6 +432,34 @@ class JdbcServeSpec extends SparkTestBase {
     }
   }
 
+  test("a client session mutates this session's table by bare name and lists it in sys.tablestats") {
+    // the client's session did not create the table and holds no temp
+    // view of it: the bare names resolve through the store registry
+    val g = GraftSession(spark)
+    g.createTable("jdbc_bare", spark.range(1, 11)
+      .select(col("id").as("k"), (col("id") * 10).as("v")),
+      keyColumns = Seq("k"), provider = "row")
+    val conn = connect()
+    try {
+      val st = conn.createStatement()
+      st.execute("PUT INTO jdbc_bare VALUES (1, 100), (50, 500)")
+      st.execute("UPDATE jdbc_bare SET v = 7 WHERE k = 2")
+      st.execute("DELETE FROM jdbc_bare WHERE k = 3")
+      val got = g.table("jdbc_bare").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.size == 10 && got(1) == 100 && got(50) == 500 && got(2) == 7 &&
+        !got.contains(3L), got)
+      val rs = st.executeQuery(
+        "SELECT provider, row_count FROM sys.tablestats WHERE table_name = 'jdbc_bare'")
+      try {
+        assert(rs.next(), "sys.tablestats lists the table from the client session")
+        assert(rs.getString(1) == "row" && rs.getLong(2) == 10)
+      } finally rs.close()
+    } finally {
+      conn.close()
+      g.dropTable("jdbc_bare")
+    }
+  }
+
   test("single-row INSERT, PUT INTO and UPDATE over the wire submit no job") {
     // serving's write mix: the statements commit on the handler thread,
     // and a PK read over the wire sees each write

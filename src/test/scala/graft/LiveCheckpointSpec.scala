@@ -274,7 +274,6 @@ class LiveCheckpointSpec extends SparkTestBase {
         g.attachTable(dst, root)
       }))
     for ((src, layoutOf, fixture) <- stores; ((form, copy), i) <- forms.zipWithIndex) {
-      g.adoptFromStore(src)
       val dst = s"${src}_rt$i"
       copy(src, dst)
       val want = layoutOf(src)

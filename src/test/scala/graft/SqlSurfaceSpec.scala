@@ -53,7 +53,7 @@ class SqlSurfaceSpec extends SparkTestBase {
     assert(g.table("like_dst").schema == g.table("like_src").schema)
     // layout replicated → the clone colocates with the original
     val ts = g.tableState("like_dst").get
-    assert(ts.partitionBy == Seq("o_orderkey") && ts.buckets == 4 &&
+    assert(ts.bucketBy == Seq("o_orderkey") && ts.numBuckets == 4 &&
       ts.keyColumns == Seq("o_orderkey"))
     // the clone is a live managed table: keyed DML works immediately
     g.sql("PUT INTO like_dst SELECT * FROM orders WHERE o_orderkey < 10")
@@ -618,7 +618,7 @@ class SqlSurfaceSpec extends SparkTestBase {
       "BUCKETS '8') AS SELECT * FROM orders")
     g.sql("CREATE TABLE co_child USING column OPTIONS (PARTITION_BY 'c_custkey', " +
       "COLOCATE_WITH 'co_base') AS SELECT * FROM customer")
-    assert(g.tableState("co_child").get.buckets == 8, "buckets inherited from target")
+    assert(g.tableState("co_child").get.numBuckets == 8, "buckets inherited from target")
     // co-bucketed ⇒ the join plans with no input exchange (the point of
     // colocation); proven in detail in ColocationSpec — sanity-check rows
     val n = g.table("co_child").join(g.table("co_base"),
@@ -817,7 +817,7 @@ class SqlSurfaceSpec extends SparkTestBase {
     val g2 = GraftSession(spark.newSession())
     g2.sql("CREATE TABLE sqlcv (k bigint, v string check (length(v) > 0)) USING row")
     try {
-      assert(!g.isManaged("sqlcv"), "the table must not be session-managed here")
+      assert(!spark.catalog.tableExists("sqlcv"), "this session has no relation named sqlcv")
       org.apache.spark.sql.graft.store.GraftRowOps.read(spark, "sqlcv")
         .createOrReplaceTempView("sqlcv")
       val e = intercept[Exception](

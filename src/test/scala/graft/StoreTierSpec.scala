@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * spill, fault back and compress through the one `PayloadTier`, so the
   * LZ4 codec and the spill directory live in its file alone; and they
   * checkpoint and publish through the one `StoreOps`, so the layout
-  * manifest is written in `StoreTables.scala` alone.
+  * manifest is written in `StoreTables.scala` alone; and the session and
+  * SQL surface reach both stores' DML through that same `StoreOps`.
   */
 class StoreTierSpec extends AnyFunSuite {
 
@@ -36,6 +37,22 @@ class StoreTierSpec extends AnyFunSuite {
       Seq("LZ4" + "Block", "SpillSweep" + ".registeredTempDir"))
     if (found.nonEmpty)
       fail(s"${found.size} files bypass PayloadTier: ${found.mkString(", ")}")
+  }
+
+  test("graft tables are mutated and indexed through StoreOps outside the store") {
+    // the session and the SQL surface dispatch DML and indexes once,
+    // through StoreOps; a direct row-store call is a second dispatch,
+    // and a session flag naming the store is a second catalog. The
+    // column store's direct calls stay: matview maintenance and tools
+    // address column storage tables only.
+    val rowCalls = Seq("put", "update", "delete", "deleteKeys", "createIndex",
+      "dropIndexes").map(m => "GraftRowOps" + "." + m + "(")
+    val flags = Seq("store" + "Backed", "row" + "Backed", "adopt" + "FromStore")
+    val direct = offenders("", rowCalls).filterNot(_.toString.contains("/graft/store/"))
+    val found = (direct ++ offenders("", flags)).distinct
+    if (found.nonEmpty)
+      fail(s"${found.size} files bypass StoreOps or keep a session catalog: " +
+        found.map(_.getFileName).mkString(", "))
   }
 
   test("the layout manifest is written only by the shared store operations") {
