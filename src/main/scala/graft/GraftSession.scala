@@ -744,7 +744,7 @@ class GraftSession(val spark: SparkSession)
     GraftColumnStore.get(normalize(name)).isDefined
 
   /** The store of a graft table, or the table-not-found error. */
-  private def opsOf(name: String): StoreOps[_] =
+  private def opsOf(name: String): StoreOps[_, _, _] =
     StoreOps.forTable(normalize(name)).getOrElse(
       throw new IllegalArgumentException(s"graft table not found: $name"))
 
@@ -1968,7 +1968,7 @@ class GraftSession(val spark: SparkSession)
     * row-local rules plus one join per UNIQUE/FK, each over the
     * STATEMENT'S rows. Tables without constraints pay nothing.
     */
-  private def constrainIncoming(nm: String, ops: StoreOps[_],
+  private def constrainIncoming(nm: String, ops: StoreOps[_, _, _],
       rows: DataFrame, forPut: Boolean): DataFrame = {
     import org.apache.spark.sql.graft.{ConstraintEnforcer, Constraints}
     val schema = ops.schema(nm)

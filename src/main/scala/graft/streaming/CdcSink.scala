@@ -115,8 +115,8 @@ object CdcSink {
     StructField("batch_id", LongType, nullable = false)))
 
   private def stateTable(): GraftRowStore.RowTable =
-    GraftRowStore.getOrCreate(StateTable, stateSchema,
-      keyColumns = Seq("query_name", "table_name"), bucketBy = Nil, numBuckets = 1)
+    GraftRowStore.create(StateTable, GraftRowStore.RowSnapshot(stateSchema,
+      Seq("query_name", "table_name"), Nil, 1, Vector.empty, Map.empty), replace = false)
 
   private def stateKey(queryName: String, table: String): GraftRowStore.RowKey =
     GraftRowStore.RowKey(Seq(

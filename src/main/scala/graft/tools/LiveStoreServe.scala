@@ -41,19 +41,19 @@ object LiveStoreServe {
   }
 
   /** JVM A: live ingest loop. Each cycle micro-appends (small seals →
-    * the rollupThreshold commit trigger merges them mid-loop), deletes
+    * the table's rollup_threshold commit trigger merges them mid-loop), deletes
     * and updates committed rows, then publishes the snapshot as the next
     * epoch. The sleep gives the concurrent reader time to observe
     * intermediate epochs — a real ingest pipeline publishes on a cadence
     * too.
     */
   private def ingest(spark: SparkSession, root: String, epochs: Int): Unit = {
-    spark.conf.set("spark.sql.graft.rollupThreshold", "4")
     spark.range(0, 0)
       .select(col("id").as("k"), col("id").as("v"), lit("").as("s"))
       .write.format(fmt).option("table", TABLE)
       .option("partition_by", "k").option("buckets", "4")
-      .option("batch_size", "4096").mode("overwrite").save()
+      .option("batch_size", "4096").option("rollup_threshold", "4")
+      .mode("overwrite").save()
     (0 until epochs).foreach { e =>
       val base = e * 500
       // micro-appends: 5 × 100 rows, each a small seal

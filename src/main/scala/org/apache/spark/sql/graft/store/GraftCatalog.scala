@@ -39,31 +39,19 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
   override def listTables(namespace: Array[String]): Array[Identifier] =
     StoreOps.all.flatMap(_.tableNames).map(n => Identifier.of(Array.empty, n)).toArray
 
+  // the snapshot is the layout: no option parsing on this per-statement path
   override def loadTable(ident: Identifier): Table = {
     val nm = tableName(ident)
-    GraftColumnStore.get(nm) match {
-      case Some(t) =>
-        val s = t.snapshot
-        // carry the snapshot's batch size and index clustering so
-        // catalog-routed INSERTs keep the granularity/sort the table's
-        // index was built at (the "stats skipping IS the index probe"
-        // property depends on both)
-        // ...and the codec/eviction budget, or a catalog-routed INSERT
-        // would silently reset the table to uncompressed/unevicted
-        new GraftTable(nm, s.schema, s.batchSize, s.bucketBy, s.numBuckets,
-          s.keyColumns, s.sortedBy, s.compression, s.evictionBudget, s.sketchBy,
-          s.expireSeconds)
-      case None => GraftRowStore.get(nm) match {
-        case Some(t) =>
-          val s = t.snapshot
-          new GraftRowTable(nm, s.schema, s.keyColumns, s.bucketBy, s.numBuckets,
-            s.evictionBudget, s.expireSeconds)
-        case None =>
-          throw new NoSuchTableException(ident.namespace().toSeq :+ ident.name())
-      }
-    }
+    StoreOps.all.iterator.flatMap(_.loadTable(nm)).nextOption().getOrElse(
+      throw new NoSuchTableException(ident.namespace().toSeq :+ ident.name()))
   }
 
+  /** CREATE TABLE graft.t [USING row] [PARTITIONED BY (bucket(n, cols))]
+    * [TBLPROPERTIES/OPTIONS (layout)]: `USING row` makes a row table, any
+    * other provider a column table; the properties are the same layout
+    * options a format write takes, resolved and validated by the store
+    * before it registers the table with the whole layout.
+    */
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table = {
     val nm = tableName(ident)
@@ -82,48 +70,24 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     // ... and a dropped table's constraints: a re-created name must not
     // route its INSERTs through the old CHECKs
     org.apache.spark.sql.graft.Constraints.drop(nm)
-    val (declaredBy: Seq[String], declaredBuckets: Int) = partitions.toSeq match {
-      case Seq(BucketTransform(n, cols, Nil)) =>
-        (cols.map(_.fieldNames.mkString(".")), n)
-      case Seq() => (Nil: Seq[String], 0)
+    val props = properties.asScala.toMap
+    val declared: Option[(Seq[String], Int)] = partitions.toSeq match {
+      case Seq(BucketTransform(n, cols, Nil)) => Some((cols.map(_.fieldNames.mkString(".")), n))
+      case Seq() => None
       case other =>
         throw new UnsupportedOperationException(
           s"graftstore supports only bucket(n, cols) partitioning, got: ${other.mkString(",")}")
     }
     // COLOCATE_WITH: the same rule as the SQL DDL route
-    val (bucketBy: Seq[String], buckets: Int) =
-      Option(properties.get("colocate_with")).map(_.trim.toLowerCase) match {
-        case Some(target) => StoreOps.colocateWith(s"CREATE TABLE $nm", target,
-          schema, declaredBy, Some(declaredBuckets).filter(_ > 0))
-        case None => (declaredBy, declaredBuckets)
-      }
-    val keys = Option(properties.get("key_columns"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    // Validate EVERY property before createOrReplace registers the
-    // table: a post-registration failure would leave a phantom entry
-    // that makes the corrected retry fail with TableAlreadyExists. And
-    // fail at CREATE rather than the first write — an unvalidated codec
-    // recorded in the snapshot would poison every later DataFrame
-    // write/compact with a confusing late error (same check as
-    // GraftTable.fromOptions).
-    val compression = Option(properties.get("compression"))
-      .map(_.toLowerCase).getOrElse("none")
-    require(compression == "none" || compression == "lz4",
-      s"graftstore: unsupported compression '$compression' (none | lz4)")
-    val evictionBudget = Option(properties.get("eviction_budget_bytes"))
-      .map(_.toLong).getOrElse(0L)
-    val batchSize = Option(properties.get("batch_size")).map(_.toInt).getOrElse(16384)
-    val sketchBy = Option(properties.get("sketch_columns"))
-      .map(GraftColumnStore.DistinctSketch.parseSketchColumns(_, schema)).getOrElse(Nil)
-    val expireSeconds = Option(properties.get("expire_seconds"))
-      .map(_.toLong).getOrElse(0L)
-    require(expireSeconds >= 0,
-      s"graftstore: expire_seconds must be >= 0, got $expireSeconds")
-    GraftColumnStore.createOrReplace(nm, schema, bucketBy, buckets, keys,
-      sketchBy, expireSeconds)
-    new GraftTable(nm, schema, batchSize,
-      bucketBy, buckets, keys, Nil, compression, evictionBudget, sketchBy,
-      expireSeconds)
+    val bucketing = props.get("colocate_with").map(_.trim.toLowerCase) match {
+      case Some(target) => Some(StoreOps.colocateWith(s"CREATE TABLE $nm", target,
+        schema, declared.map(_._1).getOrElse(Nil), declared.map(_._2)))
+      case None => declared
+    }
+    val options = props ++ bucketing.map { case (by, n) =>
+      Map("partition_by" -> by.mkString(","), "buckets" -> n.toString)
+    }.getOrElse(Map.empty)
+    StoreOps.forProvider(props.get(TableCatalog.PROP_PROVIDER)).createTable(nm, schema, options)
   }
 
   /** ALTER TABLE graft.t through plain Spark SQL (reference
@@ -132,7 +96,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     * (codec/TTL/sketch/buckets survive, and key/bucket/index metadata
     * FOLLOWS a renamed column — see [[GraftStoreOps.alterRewrite]]);
     * SET/UNSET TBLPROPERTIES routes to the metadata-only
-    * [[GraftStoreOps.alterProperties]] (live retention/eviction/codec
+    * [[StoreOps.alterProperties]] (live retention/eviction/codec
     * tuning, no rewrite). Unsupported shapes (NOT NULL adds, positioned
     * adds, nested fields, arbitrary properties) are rejected loudly
     * rather than silently dropped.
@@ -207,7 +171,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     if (dataChange) StoreOps(nm).alterRewrite(spark, nm, transform, renames)
     // SET/UNSET TBLPROPERTIES: metadata-only tunables, no rewrite
     if (setProps.nonEmpty || unsetProps.nonEmpty)
-      GraftStoreOps.alterProperties(spark, nm, setProps, unsetProps)
+      StoreOps(nm).alterProperties(spark, nm, setProps, unsetProps)
     // the session's temp view over this table must re-resolve, or it
     // keeps planning the pre-ALTER relation/schema
     graft.GraftSession(spark).refreshManaged(nm)
@@ -291,8 +255,7 @@ object GraftCatalog {
     */
   def storeRelation(n: String, p: LogicalPlan): Option[LogicalPlan] = p match {
     case r: DataSourceV2Relation => r.table match {
-      case t: GraftTable if t.storeName.equalsIgnoreCase(n) => Some(r)
-      case t: GraftRowTable if t.name().equalsIgnoreCase(s"graftrow.$n") => Some(r)
+      case t: StoreTable[_] if t.storeName.equalsIgnoreCase(n) => Some(r)
       case _ => None
     }
     case r: V2TableReference if r.catalog.isInstanceOf[GraftCatalog] &&

@@ -1,14 +1,11 @@
 package org.apache.spark.sql.graft.store
 
-import java.util
 import java.util.OptionalLong
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
@@ -21,7 +18,6 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.immutable.BitSet
-import scala.jdk.CollectionConverters._
 
 /** DataSource v2 front-end for [[GraftColumnStore]] — the Spark-idiomatic
   * rebuild of the reference's column-table scan/write path
@@ -37,122 +33,43 @@ import scala.jdk.CollectionConverters._
   *  - hidden metadata columns `_graft_batch_id` / `_graft_row_idx`
   *    addressing physical rows — the substrate for distributed
   *    UPDATE/DELETE/PUT (see [[GraftStoreOps]]);
-  *  - bucketed writes: the Write REQUIRES a clustered distribution on the
-  *    bucket columns with exactly `buckets` partitions, so Spark routes
-  *    rows before they reach the writer and writer partition id == bucket
-  *    id; scans then report a bucket-grouped partitioning
+  *  - bucketed scans report a bucket-grouped partitioning
   *    (`KeyGroupedPartitioning` over `bucket(n, cols)`) so equi-joins of
   *    co-bucketed tables plan without an Exchange (storage-partitioned
   *    join; resolves through [[GraftCatalog]]'s bucket function);
-  *  - commit messages carry [[GraftColumnStore.BatchRef]]s — ids + stats,
-  *    never data; payloads are written by the tasks into the
-  *    executor-resident [[GraftColumnStore.batches]] tier.
+  *  - writer tasks seal encoded batches into the executor-resident
+  *    [[GraftColumnStore.batches]] tier and commit their
+  *    [[GraftColumnStore.BatchRef]]s — ids + stats, never data.
+  * The table, its write and its commit are the shared [[StoreTable]].
   */
-class GraftColumnSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    GraftColumnStore.get(name).map(_.schema)
-      .getOrElse(throw new IllegalArgumentException(s"graftstore table not found: $name"))
-  }
+class GraftColumnSource extends StoreSource(GraftStoreOps)
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    GraftTable.fromOptions(properties.get("table"), schema, properties.asScala.toMap)
+/** The column store's own layout beyond [[BaseLayout]]: seal size, index
+  * clustering, at-rest codec, the per-batch HLL digest set
+  * (SKETCH_COLUMNS) and the roll-up policy (every write commit merges a
+  * bucket tail holding at least that many small seals; 0 = off).
+  */
+final case class ColumnLayout(
+    batchSize: Int = ColumnLayout.DefaultBatchSize,
+    sortBy: Seq[String] = Nil,
+    compression: String = "none",
+    sketchBy: Seq[String] = Nil,
+    rollupThreshold: Int = 0)
 
-  override def supportsExternalMetadata(): Boolean = true
+object ColumnLayout {
+  val DefaultBatchSize = 16384
 }
 
 object GraftTable {
   val BATCH_ID_COL = "_graft_batch_id"
-  val ROW_IDX_COL = "_graft_row_idx"
-
-  def fromOptions(name: String, schema: StructType, props: Map[String, String]): GraftTable = {
-    val existing = GraftColumnStore.get(name).map(_.snapshot)
-    val base = BaseLayout.fromOptions("graftstore", existing, props)
-    val sortBy = props.get("sort_by").map(BaseLayout.columnList).getOrElse(Nil)
-    // batch size is part of the table's physical layout: an explicit
-    // option wins, else the existing table's size, else the default —
-    // so a compact() rewrite keeps the granularity the index was built at
-    val batchSize = props.get("batch_size").map(_.toInt)
-      .orElse(existing.map(_.batchSize)).getOrElse(16384)
-    // at-rest codec, like batch size part of the physical layout — an
-    // explicit option wins, else the existing table's codec (so compact/
-    // createIndex rewrites keep compressing), else uncompressed
-    val compression = props.get("compression").map(_.toLowerCase)
-      .orElse(existing.map(_.compression)).getOrElse("none")
-    require(compression == "none" || compression == "lz4",
-      s"graftstore: unsupported compression '$compression' (none | lz4)")
-    // per-batch HLL distinct digests (SKETCH_COLUMNS): layout metadata
-    // like the codec — an explicit option wins (enabling on an existing
-    // table makes future appends/compacts digest), else the existing
-    // table's set. Only an EXPLICIT option validates against the
-    // caller's schema: the inherited set must not reject a reader's
-    // partial user-specified schema (reading needs no digests).
-    val sketchBy = props.get("sketch_columns")
-      .map(GraftColumnStore.DistinctSketch.parseSketchColumns(_, schema))
-      .orElse(existing.map(_.sketchBy)).getOrElse(Nil)
-    // per-table roll-up policy (streaming-ingest tables opt in at
-    // CREATE; see PERF_NOTES §23 for why this is not a session default)
-    props.get("rollup_threshold").foreach { v =>
-      val n = v.toInt
-      require(n >= 0, s"graftstore: rollup_threshold must be >= 0, got $n")
-      GraftColumnStore.setRollupThreshold(name, n)
-    }
-    new GraftTable(name, schema, batchSize, base.bucketBy, base.numBuckets,
-      base.keyColumns, sortBy, compression, base.evictionBudget, sketchBy,
-      base.expireSeconds)
-  }
 }
 
-class GraftTable(tableName: String, tableSchema: StructType, batchSize: Int,
-    bucketBy: Seq[String], numBuckets: Int, keyColumns: Seq[String],
-    sortBy: Seq[String] = Nil, compression: String = "none",
-    evictionBudget: Long = 0L, sketchBy: Seq[String] = Nil,
-    expireSeconds: Long = 0L)
-    extends Table with SupportsRead with SupportsWrite with SupportsMetadataColumns {
-  import GraftTable._
+class GraftTable(tableName: String, tableSchema: StructType, base: BaseLayout,
+    layout: ColumnLayout)
+    extends StoreTable[ColumnLayout](GraftStoreOps, tableName, tableSchema, base, layout) {
 
-  /** Bare store-table name (no `graftstore.` prefix) — rule/strategy access. */
-  def storeName: String = tableName
   /** Columns maintaining per-batch distinct digests — rule access. */
-  def sketchColumns: Seq[String] = sketchBy
-
-  override def name(): String = s"graftstore.$tableName"
-  override def schema(): StructType = tableSchema
-  /** Layout surfaced to `DESCRIBE TABLE EXTENDED graft.t` (Table
-    * Properties section) — the operational answer to "how is this table
-    * physically configured" without touching internal snapshots.
-    */
-  override def properties(): util.Map[String, String] = {
-    val m = new util.HashMap[String, String]()
-    m.put("batch_size", batchSize.toString)
-    if (keyColumns.nonEmpty) m.put("key_columns", keyColumns.mkString(","))
-    if (sortBy.nonEmpty) m.put("sort_by", sortBy.mkString(","))
-    if (compression != "none") m.put("compression", compression)
-    if (evictionBudget > 0) m.put("eviction_budget_bytes", evictionBudget.toString)
-    if (sketchBy.nonEmpty) m.put("sketch_columns", sketchBy.mkString(","))
-    if (expireSeconds > 0) m.put("expire_seconds", expireSeconds.toString)
-    m
-  }
-  override def partitioning(): Array[Transform] =
-    if (bucketBy.nonEmpty && numBuckets > 0)
-      Array(Expressions.bucket(numBuckets, bucketBy: _*))
-    else Array.empty
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE).asJava
-
-  override def metadataColumns(): Array[MetadataColumn] = Array(
-    new MetadataColumn {
-      override def name(): String = BATCH_ID_COL
-      override def dataType(): DataType = LongType
-      override def isNullable: Boolean = false
-    },
-    new MetadataColumn {
-      override def name(): String = ROW_IDX_COL
-      override def dataType(): DataType = IntegerType
-      override def isNullable: Boolean = false
-    })
+  def sketchColumns: Seq[String] = layout.sketchBy
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(tableName, tableSchema,
@@ -183,20 +100,15 @@ class GraftTable(tableName: String, tableSchema: StructType, batchSize: Int,
         .map(_.split(",").iterator.map(_.trim.toLong).toSet)
         .getOrElse(Set.empty))
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // read replicas refuse DSv2 writes too (INSERT INTO graft.t /
-    // df.write.format(store)) — the session guard alone cannot see
-    // these paths. Checked at plan time so the user gets the refusal
-    // before any task launches. Restore/re-attach drops the table
-    // first, which clears the flag, so those internal writes pass.
-    ReplicaGuard.requireWritable(tableName, "write")
-    // matview backing tables are engine-maintained the same way —
-    // refresh/rebuild passes via the maintenance scope
-    MatViews.guardWrite(tableName)
-    new GraftWriteBuilder(tableName, info.schema(), batchSize, bucketBy, numBuckets,
-      keyColumns, sortBy, compression, evictionBudget,
-      info.options.getOrDefault("staged_token", ""), sketchBy, expireSeconds)
-  }
+  // index clustering: Spark sorts each writer partition on the index
+  // columns, so every sealed batch covers a narrow key range and the
+  // scan's min/max skipping becomes the index probe
+  override private[store] def sortBy: Seq[String] = layout.sortBy
+
+  override private[store] def writerFactory(writeSchema: StructType,
+      truncate: Boolean): DataWriterFactory =
+    new GraftWriterFactory(writeSchema, layout.batchSize, base.bucketed,
+      layout.compression == "lz4", layout.sketchBy)
 }
 
 // ------------------------------- read path -------------------------------
@@ -311,7 +223,7 @@ class GraftScan(tableName: String, fullSchema: StructType,
     updatedMode: Option[String] = None,
     sinceDeltas: Set[Long] = Set.empty)
     extends Scan with Batch with SupportsReportStatistics with SupportsReportPartitioning
-    with SupportsRuntimeFiltering {
+    with SupportsRuntimeFiltering with KeyLookupScan {
 
   /** Store-table identity, for planner rules that inspect store metadata
     * (DictJoinStrategy's auto gate reads the key column's encoding).
@@ -347,7 +259,7 @@ class GraftScan(tableName: String, fullSchema: StructType,
     // only columns surviving pruning: Spark resolves these against the
     // scan OUTPUT (and join keys are necessarily in the output)
     required.fieldNames.filterNot(n =>
-      n == GraftTable.BATCH_ID_COL || n == GraftTable.ROW_IDX_COL)
+      n == GraftTable.BATCH_ID_COL || n == StoreTable.ROW_IDX_COL)
       .map(Expressions.column)
 
   override def filter(filters: Array[Filter]): Unit =
@@ -658,7 +570,7 @@ class GraftReaderFactory(fullSchema: StructType, required: StructType,
             if (!dels(i)) { vec.putLong(o, w.ref.id); o += 1 }
             i += 1
           }
-        case GraftTable.ROW_IDX_COL =>
+        case StoreTable.ROW_IDX_COL =>
           var o = 0
           var i = 0
           while (i < n) {
@@ -1078,122 +990,6 @@ object BatchPruning {
 
 // ------------------------------- write path ------------------------------
 
-class GraftWriteBuilder(tableName: String, writeSchema: StructType, batchSize: Int,
-    bucketBy: Seq[String], numBuckets: Int, keyColumns: Seq[String],
-    sortBy: Seq[String] = Nil, compression: String = "none",
-    evictionBudget: Long = 0L, stagedToken: String = "",
-    sketchBy: Seq[String] = Nil, expireSeconds: Long = 0L)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-
-  override def build(): Write = new Write with RequiresDistributionAndOrdering {
-    override def requiredDistribution(): Distribution =
-      if (bucketBy.nonEmpty && numBuckets > 0)
-        Distributions.clustered(bucketBy.map(c => Expressions.column(c)).toArray)
-      else Distributions.unspecified()
-    override def requiredNumPartitions(): Int =
-      if (bucketBy.nonEmpty && numBuckets > 0) numBuckets else 0
-    // index clustering: Spark sorts each writer partition on the index
-    // columns, so every sealed batch covers a narrow key range and the
-    // scan's min/max skipping becomes the index probe
-    override def requiredOrdering(): Array[SortOrder] =
-      sortBy.map(c => Expressions.sort(Expressions.column(c),
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
-    override def toBatch: BatchWrite =
-      new GraftBatchWrite(tableName, writeSchema, batchSize, doTruncate,
-        bucketBy, numBuckets, keyColumns, sortBy, compression, evictionBudget,
-        stagedToken, sketchBy, expireSeconds)
-  }
-}
-
-class GraftBatchWrite(tableName: String, schema: StructType, batchSize: Int,
-    truncate: Boolean, bucketBy: Seq[String], numBuckets: Int, keyColumns: Seq[String],
-    sortBy: Seq[String] = Nil, compression: String = "none",
-    evictionBudget: Long = 0L, stagedToken: String = "",
-    sketchBy: Seq[String] = Nil, expireSeconds: Long = 0L)
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWriterFactory(schema, batchSize, bucketBy.nonEmpty && numBuckets > 0,
-      compression == "lz4", sketchBy)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // metadata-only commit: refs land in the snapshot, payloads are
-    // already resident where the tasks wrote them
-    val table = GraftColumnStore.getOrCreate(tableName, schema, bucketBy, numBuckets, keyColumns)
-    val newRefs = messages.flatMap {
-      case GraftCommit(refs) => refs
-      case _ => Nil
-    }.toVector
-    if (truncate) {
-      // ONE atomic swap: old refs out, new refs + layout metadata in —
-      // a reader planning concurrently sees either the full old table
-      // or the full new one, never the empty intermediate a separate
-      // replace-then-append pair would expose (compact() depends on
-      // this to be a safe online rewrite)
-      // schema AND layout travel with the swap: an ALTER-style rewrite
-      // commits its new shape, its (possibly renamed) key/bucket
-      // columns, and its new refs in ONE transition (readers see
-      // full-old or full-new, never a mixed state — and the table
-      // never leaves the registry, unlike a drop-then-recreate)
-      table.replaceRefs(newRefs, _.copy(schema = schema, bucketBy = bucketBy,
-        numBuckets = numBuckets, keyColumns = keyColumns,
-        sortedBy = sortBy, batchSize = batchSize, compression = compression,
-        evictionBudget = evictionBudget, zorderedBy = Nil,
-        sketchBy = sketchBy, expireSeconds = expireSeconds))
-    } else {
-      // record the codec as table layout metadata (first write to a fresh
-      // table appends — without this a later compact() would resolve the
-      // existing snapshot's default and silently stop compressing)
-      if (table.snapshot.compression != compression ||
-          table.snapshot.evictionBudget != evictionBudget ||
-          table.snapshot.sketchBy != sketchBy ||
-          table.snapshot.expireSeconds != expireSeconds) {
-        table.mutate(_.copy(compression = compression,
-          evictionBudget = evictionBudget, sketchBy = sketchBy,
-          expireSeconds = expireSeconds))
-      }
-      // an upsert staged matched-key deletes for THIS append (token-
-      // keyed, so a concurrent upsert's staged set is untouched): apply
-      // them and the new refs in ONE swap (atomic PUT INTO)
-      (if (stagedToken.nonEmpty) GraftColumnStore.takeStagedDeletes(stagedToken)
-      else None) match {
-        case Some(staged) => table.applyDeletes(staged, newRefs)
-        case None => table.appendRefs(newRefs)
-      }
-    }
-    // EXPIRE: reclaim batches whose TTL passed, then the heap pool:
-    // spill past-budget batches to the disk tier now that the snapshot
-    // carries the new refs (the table's own budget held at every swap)
-    table.expireSweep()
-    GraftColumnStore.enforceHeapPool(tableName)
-    // row-buffer roll-up (the reference's always-on behavior): when any
-    // bucket accumulates >= threshold small seals, merge them now — the
-    // streaming foreachBatch ingest loop is the shape that otherwise
-    // grows unbounded per-bucket tails of tiny batches. The table-level
-    // policy (rollup_threshold CREATE option) wins over the session
-    // conf; both default off for bulk loads (PERF_NOTES §23).
-    val tableThr = GraftColumnStore.rollupThreshold(tableName)
-    val rollupThr = if (tableThr > 0) tableThr
-    else org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.sql.graft.rollupThreshold", "0").toInt
-    if (rollupThr > 0) {
-      val needs = GraftColumnStore.get(tableName).exists(
-        _.snapshot.liveRefs.filter(_.isDelta)
-          .groupBy(_.bucketId).values.exists(_.size >= rollupThr))
-      if (needs) GraftStoreOps.rollupSmallBatches(
-        org.apache.spark.sql.SparkSession.active, tableName, rollupThr)
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftColumnStore.batches.release(
-      messages.flatMap { case GraftCommit(refs) => refs.map(_.id); case _ => Nil })
-}
-
-case class GraftCommit(refs: Seq[GraftColumnStore.BatchRef])
-    extends WriterCommitMessage
-
 class GraftWriterFactory(schema: StructType, batchSize: Int, bucketed: Boolean,
     compress: Boolean = false, sketchBy: Seq[String] = Nil)
     extends DataWriterFactory {
@@ -1204,7 +1000,7 @@ class GraftWriterFactory(schema: StructType, batchSize: Int, bucketed: Boolean,
       private val builder = new GraftColumnStore.BatchBuilder(
         schema, batchSize, if (bucketed) partitionId else -1, compress, sketchBy)
       override def write(record: InternalRow): Unit = builder.add(record)
-      override def commit(): WriterCommitMessage = GraftCommit(builder.result())
+      override def commit(): WriterCommitMessage = StoreCommit(builder.result())
       override def abort(): Unit = builder.abort()
       override def close(): Unit = ()
     }

@@ -590,12 +590,13 @@ object GraftColumnStore extends TableRegistry {
       deletes: Map[Long, DeleteRef],
       updates: Map[Long, Map[Int, Vector[ColumnDeltaRef]]],
       sortedBy: Seq[String] = Nil,
-      batchSize: Int = 16384,
+      batchSize: Int = ColumnLayout.DefaultBatchSize,
       compression: String = "none",
       evictionBudget: Long = 0L,
       zorderedBy: Seq[String] = Nil,
       sketchBy: Seq[String] = Nil,
-      expireSeconds: Long = 0L) extends TableState[TableSnapshot, BatchRef] {
+      expireSeconds: Long = 0L,
+      rollupThreshold: Int = 0) extends TableState[TableSnapshot, BatchRef] {
     def withRefs(refs: Vector[BatchRef]): TableSnapshot = copy(refs = refs)
     /** Dropped batches retire with their update deltas and delete bitmaps. */
     def withoutRefs(ids: Set[Long]): (TableSnapshot, Retirees) =
@@ -737,7 +738,7 @@ object GraftColumnStore extends TableRegistry {
   }
 
   type T = StoreTable
-  protected def kind: String = "graftstore"
+  def kind: String = "graftstore"
 
   /** Delete refs staged by an upsert for the table's NEXT append commit:
     * the commit applies them and the new batch refs in one atomic
@@ -795,31 +796,9 @@ object GraftColumnStore extends TableRegistry {
       batches.enforceBudget(pool, heapOverflowBudgetBytes)
     }
 
-  /** Register a fresh empty table, releasing any previous one of the
-    * name. sketchBy/expireSeconds ride the INITIAL snapshot: a
-    * post-registration mutate would open a window where a concurrent
-    * writer resolves the table option-less and its commit's layout-sync
-    * resets the option.
-    */
-  def createOrReplace(name: String, schema: StructType,
-      bucketBy: Seq[String] = Nil, numBuckets: Int = 0,
-      keyColumns: Seq[String] = Nil, sketchBy: Seq[String] = Nil,
-      expireSeconds: Long = 0L): StoreTable =
-    replace(name, new StoreTable(name,
-      TableSnapshot(schema, bucketBy, numBuckets, keyColumns, Vector.empty,
-        Map.empty, Map.empty, sketchBy = sketchBy, expireSeconds = expireSeconds)))
-
-  def getOrCreate(name: String, schema: StructType,
-      bucketBy: Seq[String] = Nil, numBuckets: Int = 0,
-      keyColumns: Seq[String] = Nil): StoreTable =
-    getOrRegister(name, new StoreTable(name,
-      TableSnapshot(schema, bucketBy, numBuckets, keyColumns, Vector.empty, Map.empty, Map.empty)))
-
-  // pool membership and roll-up policy are engine metadata keyed by name
-  override protected def forget(name: String): Unit = {
+  // pool membership is engine metadata keyed by name
+  override protected def forget(name: String): Unit =
     heapOverflowTables.remove(name)
-    rollupThresholds.remove(name)
-  }
 
   /** Plan-time heuristic for [[DictJoinStrategy]]'s auto mode: does the
     * column's sealed data look dictionary-encoded? Samples up to 8
@@ -844,18 +823,8 @@ object GraftColumnStore extends TableRegistry {
       }
     }
 
-  // ---- per-table roll-up maintenance policy (`rollup_threshold` table
-  // option): every write commit merges any bucket tail holding >= N
-  // small seals. Engine metadata like the heap-overflow set, NOT
-  // physical layout — but it rides checkpoints (GraftStoreOps) because
-  // the ingest pattern that needs it survives a restore. The measured
-  // tradeoff (PERF_NOTES §23) is why this is per-table rather than a
-  // session default: always-on roll-up taxes bulk-ingest commits
-  // ~8-12% for a benefit only fragmented streaming tails ever see.
-  private val rollupThresholds = TrieMap.empty[String, Int]
-  def setRollupThreshold(name: String, n: Int): Unit =
-    if (n > 0) rollupThresholds.put(name, n) else rollupThresholds.remove(name)
-  def rollupThreshold(name: String): Int = rollupThresholds.getOrElse(name, 0)
+  /** The table's roll-up policy (0 when off or when there is no such table). */
+  def rollupThreshold(name: String): Int = get(name).fold(0)(_.snapshot.rollupThreshold)
 
   // ------------------------------- builder -------------------------------
 

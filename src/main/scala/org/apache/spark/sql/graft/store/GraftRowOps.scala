@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.immutable.BitSet
 import scala.collection.mutable
@@ -27,22 +28,43 @@ import scala.collection.mutable
   *    delete whose victim read is a key lookup run the same task body on
   *    the calling thread ([[LocalRun]]).
   */
-object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
+object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot, GraftRowStore.PackRef, Unit] {
+  import GraftRowStore.{PackRef, RowSnapshot}
 
   val FORMAT: String = classOf[GraftRowSource].getName
   val provider: String = "row"
-  protected def registry: TableRegistry = GraftRowStore
+  protected val registry: GraftRowStore.type = GraftRowStore
+  protected def tier: PayloadTier[_] = GraftRowStore.packs
 
   private def withAddress(spark: SparkSession, table: String): DataFrame = {
     val df = read(spark, table)
     df.select(df.metadataColumn(GraftRowTable.PACK_ID_COL).as("_pid"),
-      df.metadataColumn(GraftRowTable.ROW_IDX_COL).as("_rid"), col("*"))
+      df.metadataColumn(StoreTable.ROW_IDX_COL).as("_rid"), col("*"))
   }
 
-  def snapshotOf(table: String): GraftRowStore.RowSnapshot =
-    GraftRowStore(table).snapshot
+  // a row table's layout is the shared one
+  protected def resolveOwn(schema: StructType, options: Map[String, String],
+      existing: Option[RowSnapshot]): Unit = ()
+  protected def ownOf(snap: RowSnapshot): Unit = ()
+  protected def ownKeys: Seq[(String, Unit => String)] = Nil
+  protected def ownTunables: Seq[String] = Nil
 
-  protected def storeLayout: Seq[(String, (String, GraftRowStore.RowSnapshot) => String)] = Nil
+  protected def withLayout(s: RowSnapshot, schema: StructType, base: BaseLayout,
+      own: Unit): RowSnapshot =
+    retune(s.copy(schema = schema, keyColumns = base.keyColumns, bucketBy = base.bucketBy,
+      numBuckets = base.numBuckets), base, own)
+
+  protected def retune(s: RowSnapshot, base: BaseLayout, own: Unit): RowSnapshot =
+    s.copy(evictionBudget = base.evictionBudget, expireSeconds = base.expireSeconds)
+
+  protected def register(name: String, schema: StructType, base: BaseLayout, own: Unit,
+      replace: Boolean): GraftRowStore.RowTable =
+    GraftRowStore.create(name, withLayout(
+      RowSnapshot(schema, Nil, Nil, 0, Vector.empty, Map.empty), schema, base, own), replace)
+
+  protected def newTable(name: String, schema: StructType, base: BaseLayout,
+      own: Unit): StoreTable[Unit] =
+    new GraftRowTable(name, schema, base)
 
   /** Secondary indexes are recorded by COLUMN and rebuilt at restore
     * (their stats key the new pack ids).
@@ -200,22 +222,11 @@ object GraftRowOps extends StoreOps[GraftRowStore.RowSnapshot] {
             else deduped)
       }
       val (tombstones, newRefs) = probeKeys(spark, routed, snap, bucketed, keyOrds, keyTypes) { pid =>
-        val buf = mutable.ArrayBuffer.empty[InternalRow]
-        val refs = mutable.ArrayBuffer.empty[GraftRowStore.PackRef]
-        val bucketId = if (numBuckets > 0) pid else -1
+        val sealer = new GraftRowStore.PackSealer(keyOrds, keyTypes,
+          if (numBuckets > 0) pid else -1)
         // a failed attempt releases what it sealed
-        Option(TaskContext.get()).foreach(_.addTaskFailureListener((_, _) =>
-          GraftRowStore.packs.release(refs.map(_.id))))
-        def seal(): Unit = if (buf.nonEmpty) {
-          val pack = new GraftRowStore.RowPack(buf.toArray, keyOrds, keyTypes)
-          refs += GraftRowStore.PackRef(GraftRowStore.packs.put(pack),
-            bucketId, pack.numRows, createdAtMs = StoreClock.nowMs)
-          buf.clear()
-        }
-        (r => {
-          buf += r.copy()
-          if (buf.length >= GraftRowTable.PACK_SIZE) seal()
-        }, () => { seal(); refs.toSeq })
+        Option(TaskContext.get()).foreach(_.addTaskFailureListener((_, _) => sealer.abort()))
+        (r => sealer.add(r.copy()), () => sealer.result())
       }
       t.applyMutation(tombstones, newRefs)
     }

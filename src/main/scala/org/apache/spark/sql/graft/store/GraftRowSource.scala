@@ -1,13 +1,10 @@
 package org.apache.spark.sql.graft.store
 
-import java.util
 import java.util.OptionalLong
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write._
@@ -16,8 +13,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.collection.immutable.BitSet
-import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 /** DataSource v2 front-end for [[GraftRowStore]] — the Spark-idiomatic
   * rebuild of the reference's row-table scan/write path (reference:
@@ -44,68 +39,16 @@ import scala.jdk.CollectionConverters._
   *    addressed DML (see [[GraftRowOps]]);
   *  - commit messages carry [[GraftRowStore.PackRef]]s — ids + counts,
   *    never rows.
+  * The table, its write and its commit are the shared [[StoreTable]].
   */
-class GraftRowSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    GraftRowStore.get(name).map(_.schema)
-      .getOrElse(throw new IllegalArgumentException(s"graftrow table not found: $name"))
-  }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    GraftRowTable.fromOptions(properties.get("table"), schema, properties.asScala.toMap)
-
-  override def supportsExternalMetadata(): Boolean = true
-}
+class GraftRowSource extends StoreSource(GraftRowOps)
 
 object GraftRowTable {
   val PACK_ID_COL = "_graft_pack_id"
-  val ROW_IDX_COL = "_graft_row_idx"
-  val PACK_SIZE = 32768
-
-  def fromOptions(name: String, schema: StructType, props: Map[String, String]): GraftRowTable = {
-    val base = BaseLayout.fromOptions("graftrow", GraftRowStore.get(name).map(_.snapshot), props)
-    new GraftRowTable(name, schema, base.keyColumns, base.bucketBy, base.numBuckets,
-      base.evictionBudget, base.expireSeconds)
-  }
 }
 
-class GraftRowTable(tableName: String, tableSchema: StructType,
-    keyColumns: Seq[String], bucketBy: Seq[String], numBuckets: Int,
-    evictionBudget: Long = 0L, expireSeconds: Long = 0L)
-    extends Table with SupportsRead with SupportsWrite with SupportsMetadataColumns {
-  import GraftRowTable._
-
-  override def name(): String = s"graftrow.$tableName"
-  override def schema(): StructType = tableSchema
-  /** Layout for `DESCRIBE TABLE EXTENDED` (see the column-table analog). */
-  override def properties(): util.Map[String, String] = {
-    val m = new util.HashMap[String, String]()
-    if (keyColumns.nonEmpty) m.put("key_columns", keyColumns.mkString(","))
-    if (evictionBudget > 0) m.put("eviction_budget_bytes", evictionBudget.toString)
-    if (expireSeconds > 0) m.put("expire_seconds", expireSeconds.toString)
-    m
-  }
-  override def partitioning(): Array[Transform] =
-    if (bucketBy.nonEmpty && numBuckets > 0)
-      Array(Expressions.bucket(numBuckets, bucketBy: _*))
-    else Array.empty
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE).asJava
-
-  override def metadataColumns(): Array[MetadataColumn] = Array(
-    new MetadataColumn {
-      override def name(): String = PACK_ID_COL
-      override def dataType(): DataType = LongType
-      override def isNullable: Boolean = false
-    },
-    new MetadataColumn {
-      override def name(): String = ROW_IDX_COL
-      override def dataType(): DataType = IntegerType
-      override def isNullable: Boolean = false
-    })
+class GraftRowTable(tableName: String, tableSchema: StructType, base: BaseLayout)
+    extends StoreTable[Unit](GraftRowOps, tableName, tableSchema, base, ()) {
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftRowScanBuilder(tableName, tableSchema,
@@ -115,12 +58,32 @@ class GraftRowTable(tableName: String, tableSchema: StructType,
       Option(options.get("pack_ids")).map(
         _.split(",").iterator.map(_.trim.toLong).toSet))
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // same store-level replica refusal as the column source — see
-    // GraftTable.newWriteBuilder
-    ReplicaGuard.requireWritable(tableName, "write")
-    new GraftRowWriteBuilder(tableName, info.schema(), keyColumns, bucketBy, numBuckets,
-      evictionBudget, expireSeconds)
+  // unbucketed-but-keyed: cluster on the keys so the per-task duplicate
+  // check still sees every copy of a key
+  override private[store] def clusterBy: Seq[String] = base.keyColumns
+
+  override private[store] def writerFactory(writeSchema: StructType,
+      truncate: Boolean): DataWriterFactory = {
+    // append must respect the PK invariant against EXISTING rows: ship
+    // the current refs (metadata) so writer tasks can probe pack indexes.
+    // Refs and tombstones come from ONE pinned snapshot (not two racy
+    // reads), and the pinned lease — owned by the factory, which stays
+    // reachable for the write job's duration — keeps those packs
+    // resolvable if a concurrent mutation retires them mid-write.
+    val pinned =
+      if (base.keyColumns.isEmpty || truncate) None
+      else GraftRowStore.get(tableName).map { t =>
+        val (snap, leaseId) = t.pinSnapshot(); (t, snap, leaseId)
+      }
+    val existing: Map[Int, Vector[GraftRowStore.PackRef]] =
+      pinned.map(_._2.liveRefs.groupBy(_.bucketId).map { case (k, v) => k -> v })
+        .getOrElse(Map.empty)
+    val tomb: Map[Long, BitSet] =
+      pinned.map(_._2.tombstones).getOrElse(Map.empty)
+    val factory = new GraftRowWriterFactory(writeSchema, base.keyColumns,
+      base.bucketed, existing, tomb)
+    pinned.foreach { case (t, _, leaseId) => t.addLeaseOwner(leaseId, factory) }
+    factory
   }
 }
 
@@ -179,7 +142,8 @@ case class RowRangeSpec(column: String, ordinal: Int, dt: DataType,
 class GraftRowScan(tableName: String, fullSchema: StructType,
     required: StructType, pushedFilters: Array[Filter],
     packIds: Option[Set[Long]] = None)
-    extends Scan with Batch with SupportsReportStatistics with SupportsReportPartitioning {
+    extends Scan with Batch with SupportsReportStatistics with SupportsReportPartitioning
+    with KeyLookupScan {
 
   // snapshot + reader lease, captured atomically (see LeaseGc): packs
   // this scan references survive concurrent mutations until the last
@@ -430,7 +394,7 @@ class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
     val srcOrdinals: Array[Int] = required.fields.map { f =>
       f.name match {
         case GraftRowTable.PACK_ID_COL => -1
-        case GraftRowTable.ROW_IDX_COL => -2
+        case StoreTable.ROW_IDX_COL => -2
         case n => fullSchema.fieldIndex(n)
       }
     }
@@ -520,91 +484,6 @@ class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
 
 // ------------------------------- write path ------------------------------
 
-class GraftRowWriteBuilder(tableName: String, writeSchema: StructType,
-    keyColumns: Seq[String], bucketBy: Seq[String], numBuckets: Int,
-    evictionBudget: Long = 0L, expireSeconds: Long = 0L)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-
-  override def build(): Write = new Write with RequiresDistributionAndOrdering {
-    // bucketed: cluster on the bucket columns so partition id == bucket
-    // id; unbucketed-but-keyed: cluster on the keys so the per-task
-    // duplicate check still sees every copy of a key
-    override def requiredDistribution(): Distribution =
-      if (bucketBy.nonEmpty && numBuckets > 0)
-        Distributions.clustered(bucketBy.map(c => Expressions.column(c)).toArray)
-      else if (keyColumns.nonEmpty)
-        Distributions.clustered(keyColumns.map(c => Expressions.column(c)).toArray)
-      else Distributions.unspecified()
-    override def requiredNumPartitions(): Int =
-      if (bucketBy.nonEmpty && numBuckets > 0) numBuckets else 0
-    override def requiredOrdering(): Array[SortOrder] = Array.empty
-    override def toBatch: BatchWrite =
-      new GraftRowBatchWrite(tableName, writeSchema, keyColumns, bucketBy, numBuckets,
-        doTruncate, evictionBudget, expireSeconds)
-  }
-}
-
-class GraftRowBatchWrite(tableName: String, schema: StructType, keyColumns: Seq[String],
-    bucketBy: Seq[String], numBuckets: Int, truncate: Boolean,
-    evictionBudget: Long = 0L, expireSeconds: Long = 0L) extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // append must respect the PK invariant against EXISTING rows: ship
-    // the current refs (metadata) so writer tasks can probe pack indexes.
-    // Refs and tombstones come from ONE pinned snapshot (not two racy
-    // reads), and the pinned lease — owned by the factory, which stays
-    // reachable for the write job's duration — keeps those packs
-    // resolvable if a concurrent mutation retires them mid-write.
-    val pinned =
-      if (keyColumns.isEmpty || truncate) None
-      else GraftRowStore.get(tableName).map { t =>
-        val (snap, leaseId) = t.pinSnapshot(); (t, snap, leaseId)
-      }
-    val existing: Map[Int, Vector[GraftRowStore.PackRef]] =
-      pinned.map(_._2.liveRefs.groupBy(_.bucketId).map { case (k, v) => k -> v })
-        .getOrElse(Map.empty)
-    val tomb: Map[Long, BitSet] =
-      pinned.map(_._2.tombstones).getOrElse(Map.empty)
-    val factory = new GraftRowWriterFactory(schema, keyColumns,
-      bucketBy.nonEmpty && numBuckets > 0, existing, tomb)
-    pinned.foreach { case (t, _, leaseId) => t.addLeaseOwner(leaseId, factory) }
-    factory
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val table = GraftRowStore.getOrCreate(tableName, schema, keyColumns, bucketBy, numBuckets)
-    // record the LRU-overflow budget as layout metadata (the swap also
-    // runs the first enforcement pass)
-    if (table.snapshot.evictionBudget != evictionBudget ||
-        table.snapshot.expireSeconds != expireSeconds) {
-      table.mutate(_.copy(evictionBudget = evictionBudget,
-        expireSeconds = expireSeconds))
-    }
-    val newRefs = messages.flatMap {
-      case GraftRowCommit(refs) => refs
-      case _ => Nil
-    }.toVector
-    if (truncate)
-      // ONE atomic swap (see the column-store commit): concurrent
-      // planners see the full old or full new table, never an empty
-      // intermediate; the write schema + layout ride the same swap (ALTER)
-      table.replaceRefs(newRefs, _.copy(schema = schema, keyColumns = keyColumns,
-        bucketBy = bucketBy, numBuckets = numBuckets))
-    else table.appendRefs(newRefs)
-    // EXPIRE: reclaim packs whose TTL passed (no-op without a TTL)
-    table.expireSweep()
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftRowStore.packs.release(
-      messages.flatMap { case GraftRowCommit(refs) => refs.map(_.id); case _ => Nil })
-}
-
-case class GraftRowCommit(refs: Seq[GraftRowStore.PackRef]) extends WriterCommitMessage
-
 class GraftRowWriterFactory(schema: StructType, keyColumns: Seq[String], bucketed: Boolean,
     existing: Map[Int, Vector[GraftRowStore.PackRef]],
     existingTombstones: Map[Long, BitSet]) extends DataWriterFactory {
@@ -627,8 +506,7 @@ class GraftRowWriterFactory(schema: StructType, keyColumns: Seq[String], buckete
       // PK-collision probe must not fetch per row
       private lazy val collidablePacks: Vector[(Long, GraftRowStore.RowPack)] =
         collidable.map(r => r.id -> GraftRowStore.packs(r.id))
-      private val buf = ArrayBuffer.empty[InternalRow]
-      private val refs = ArrayBuffer.empty[GraftRowStore.PackRef]
+      private val sealer = new GraftRowStore.PackSealer(keyOrds, keyTypes, bucketId)
 
       override def write(record: InternalRow): Unit = {
         val row = record.copy()
@@ -645,23 +523,11 @@ class GraftRowWriterFactory(schema: StructType, keyColumns: Seq[String], buckete
                 s"graftrow: primary key already exists: ${key.values.mkString(",")} (use PUT INTO to upsert)")
           }
         }
-        buf += row
-        if (buf.length >= GraftRowTable.PACK_SIZE) seal()
+        sealer.add(row)
       }
 
-      private def seal(): Unit = if (buf.nonEmpty) {
-        val pack = new GraftRowStore.RowPack(buf.toArray, keyOrds, keyTypes)
-        refs += GraftRowStore.PackRef(GraftRowStore.packs.put(pack), bucketId,
-          pack.numRows, createdAtMs = StoreClock.nowMs)
-        buf.clear()
-      }
-
-      override def commit(): WriterCommitMessage = { seal(); GraftRowCommit(refs.toSeq) }
-      override def abort(): Unit = {
-        GraftRowStore.packs.release(refs.map(_.id))
-        refs.clear()
-        buf.clear()
-      }
+      override def commit(): WriterCommitMessage = StoreCommit(sealer.result())
+      override def abort(): Unit = sealer.abort()
       override def close(): Unit = ()
     }
 }

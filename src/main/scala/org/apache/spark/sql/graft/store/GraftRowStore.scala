@@ -209,7 +209,7 @@ object GraftRowStore extends TableRegistry {
   }
 
   type T = RowTable
-  protected def kind: String = "graftrow"
+  def kind: String = "graftrow"
 
   /** Planning telemetry, asserted by specs: point lookups must probe
     * indexes, not scan.
@@ -222,8 +222,11 @@ object GraftRowStore extends TableRegistry {
   val rangePacksPruned = new AtomicLong(0)
   val rangePacksProbed = new AtomicLong(0)
 
-  def getOrCreate(name: String, schema: StructType, keyColumns: Seq[String],
-      bucketBy: Seq[String], numBuckets: Int): RowTable = {
+  /** Register a table whose first snapshot is `initial`, replacing any
+    * table of the name or else keeping an existing one.
+    */
+  def create(name: String, initial: RowSnapshot, replace: Boolean): RowTable = {
+    import initial.{bucketBy, keyColumns}
     // the PK uniqueness check on INSERT/PUT probes only the row's own
     // bucket, which is sound ONLY when the key determines the bucket —
     // the same partitioning-column-within-PK rule the reference's
@@ -234,7 +237,39 @@ object GraftRowStore extends TableRegistry {
       s"graftrow table $name: partition_by (${bucketBy.mkString(",")}) must be " +
         s"a subset of key_columns (${keyColumns.mkString(",")}) so the key " +
         "determines the bucket (per-bucket PK checks stay sound)")
-    getOrRegister(name, new RowTable(name,
-      RowSnapshot(schema, keyColumns, bucketBy, numBuckets, Vector.empty, Map.empty)))
+    register(name, new RowTable(name, initial), replace)
+  }
+
+  /** Rows per sealed pack. */
+  val PACK_SIZE = 32768
+
+  /** A writer task's pack sealer (the DSv2 write and the put task):
+    * seals a [[RowPack]] into [[packs]] every [[PACK_SIZE]] rows; a
+    * failed task releases what it sealed through [[abort]].
+    */
+  final class PackSealer(keyOrdinals: Array[Int], keyTypes: Array[DataType], bucketId: Int) {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    private val refs = scala.collection.mutable.ArrayBuffer.empty[PackRef]
+
+    /** Buffer `row`, which the caller no longer mutates (a copy). */
+    def add(row: InternalRow): Unit = {
+      buf += row
+      if (buf.length >= PACK_SIZE) seal()
+    }
+
+    private def seal(): Unit = if (buf.nonEmpty) {
+      val pack = new RowPack(buf.toArray, keyOrdinals, keyTypes)
+      refs += PackRef(packs.put(pack), bucketId, pack.numRows, createdAtMs = StoreClock.nowMs)
+      buf.clear()
+    }
+
+    /** Seal the tail; the refs of every pack sealed. */
+    def result(): Seq[PackRef] = { seal(); refs.toSeq }
+
+    def abort(): Unit = {
+      packs.release(refs.map(_.id))
+      refs.clear()
+      buf.clear()
+    }
   }
 }

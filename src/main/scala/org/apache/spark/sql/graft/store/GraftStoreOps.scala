@@ -3,7 +3,8 @@ package org.apache.spark.sql.graft.store
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
-
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
@@ -24,26 +25,112 @@ import scala.collection.mutable.ArrayBuffer
   *    before the swap keep their consistent snapshot (snapshot
   *    isolation, reference snapshot-transaction semantics).
   */
-object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
+object GraftStoreOps
+    extends StoreOps[GraftColumnStore.TableSnapshot, GraftColumnStore.BatchRef, ColumnLayout] {
+  import GraftColumnStore.{BatchRef, TableSnapshot}
 
   val FORMAT: String = classOf[GraftColumnSource].getName
   val provider: String = "column"
-  protected def registry: TableRegistry = GraftColumnStore
+  protected val registry: GraftColumnStore.type = GraftColumnStore
+  protected def tier: PayloadTier[_] = GraftColumnStore.batches
 
-  def snapshotOf(table: String): GraftColumnStore.TableSnapshot =
-    GraftColumnStore(table).snapshot
+  /** Seal size, codec, sketch set and roll-up policy take an explicit
+    * option, else the existing table's (so compact/createIndex rewrites
+    * keep the granularity the index was built at and keep compressing),
+    * else the default; so does the index clustering (a rewrite that
+    * destroys it passes `sort_by ''`). Only an EXPLICIT sketch set
+    * validates against the caller's schema: the inherited set must not
+    * reject a reader's partial user-specified schema (reading needs no
+    * digests).
+    */
+  protected def resolveOwn(schema: StructType, options: Map[String, String],
+      existing: Option[TableSnapshot]): ColumnLayout = {
+    val (d, prev) = (ColumnLayout(), existing.map(ownOf))
+    def own[A](key: String, parse: String => A, old: ColumnLayout => A, default: A): A =
+      options.get(key).map(parse).orElse(prev.map(old)).getOrElse(default)
+    val l = ColumnLayout(
+      own("batch_size", _.toInt, _.batchSize, d.batchSize),
+      own("sort_by", BaseLayout.columnList, _.sortBy, d.sortBy),
+      own("compression", _.toLowerCase, _.compression, d.compression),
+      own("sketch_columns", GraftColumnStore.DistinctSketch.parseSketchColumns(_, schema),
+        _.sketchBy, d.sketchBy),
+      own("rollup_threshold", _.toInt, _.rollupThreshold, d.rollupThreshold))
+    require(l.batchSize > 0, s"graftstore: batch_size must be > 0, got ${l.batchSize}")
+    require(l.compression == "none" || l.compression == "lz4",
+      s"graftstore: unsupported compression '${l.compression}' (none | lz4)")
+    require(l.rollupThreshold >= 0,
+      s"graftstore: rollup_threshold must be >= 0, got ${l.rollupThreshold}")
+    l
+  }
+
+  protected def ownOf(s: TableSnapshot): ColumnLayout =
+    ColumnLayout(s.batchSize, s.sortedBy, s.compression, s.sketchBy, s.rollupThreshold)
 
   /** A checkpoint keeps clustering, seal size, codec, sketch set and the
-    * roll-up policy (engine metadata, but the ingest pattern that needs
-    * it survives a restore).
+    * roll-up policy.
     */
-  protected def storeLayout
-      : Seq[(String, (String, GraftColumnStore.TableSnapshot) => String)] = Seq(
-    ("sort_by", (_, s) => s.sortedBy.mkString(",")),
-    ("batch_size", (_, s) => s.batchSize.toString),
-    ("compression", (_, s) => s.compression),
-    ("sketch_columns", (_, s) => s.sketchBy.mkString(",")),
-    ("rollup_threshold", (t, _) => GraftColumnStore.rollupThreshold(t).toString))
+  protected def ownKeys: Seq[(String, ColumnLayout => String)] = Seq(
+    ("sort_by", _.sortBy.mkString(",")),
+    ("batch_size", _.batchSize.toString),
+    ("compression", _.compression),
+    ("sketch_columns", _.sketchBy.mkString(",")),
+    ("rollup_threshold", _.rollupThreshold.toString))
+
+  protected def ownTunables: Seq[String] =
+    Seq("batch_size", "compression", "sketch_columns", "rollup_threshold")
+
+  /** The whole layout; a truncate write's batches are unclustered until
+    * a z-order rewrite records its columns again.
+    */
+  protected def withLayout(s: TableSnapshot, schema: StructType, base: BaseLayout,
+      own: ColumnLayout): TableSnapshot =
+    retune(s.copy(schema = schema, bucketBy = base.bucketBy, numBuckets = base.numBuckets,
+      keyColumns = base.keyColumns, sortedBy = own.sortBy, zorderedBy = Nil), base, own)
+
+  protected def retune(s: TableSnapshot, base: BaseLayout, own: ColumnLayout): TableSnapshot =
+    s.copy(batchSize = own.batchSize, compression = own.compression,
+      evictionBudget = base.evictionBudget, sketchBy = own.sketchBy,
+      expireSeconds = base.expireSeconds, rollupThreshold = own.rollupThreshold)
+
+  protected def register(name: String, schema: StructType, base: BaseLayout,
+      own: ColumnLayout, replace: Boolean): GraftColumnStore.StoreTable =
+    registry.register(name, new GraftColumnStore.StoreTable(name, withLayout(
+      TableSnapshot(schema, Nil, 0, Nil, Vector.empty, Map.empty, Map.empty), schema, base, own)),
+      replace)
+
+  protected def newTable(name: String, schema: StructType, base: BaseLayout,
+      own: ColumnLayout): StoreTable[ColumnLayout] =
+    new GraftTable(name, schema, base, own)
+
+  /** An upsert staged matched-key deletes for THIS append (token-keyed,
+    * so a concurrent upsert's staged set is untouched): apply them and
+    * the new refs in ONE swap (atomic PUT INTO).
+    */
+  override protected def appendCommit(t: GraftColumnStore.StoreTable,
+      refs: Vector[BatchRef], options: CaseInsensitiveStringMap): Unit =
+    Option(options.get("staged_token")).filter(_.nonEmpty)
+      .flatMap(GraftColumnStore.takeStagedDeletes) match {
+      case Some(staged) => t.applyDeletes(staged, refs)
+      case None => t.appendRefs(refs)
+    }
+
+  /** The heap pool spills past-budget batches now that the snapshot
+    * carries the new refs; then the row-buffer roll-up (the reference's
+    * always-on behavior, opt-in per table here so bulk loads keep
+    * byte-stable layouts, PERF_NOTES §23): when any bucket accumulates
+    * `rollup_threshold` small seals, merge them now — the streaming
+    * foreachBatch ingest loop is the shape that otherwise grows
+    * unbounded per-bucket tails of tiny batches.
+    */
+  override protected def afterCommit(table: String): Unit = {
+    GraftColumnStore.enforceHeapPool(table)
+    registry.get(table).map(_.snapshot).foreach { snap =>
+      val thr = snap.rollupThreshold
+      if (thr > 0 && snap.liveRefs.filter(_.isDelta).groupBy(_.bucketId).values
+          .exists(_.size >= thr))
+        rollupSmallBatches(SparkSession.active, table, thr)
+    }
+  }
 
   /** z-clustering is physical row order, which the restore write's bucket
     * shuffle does not preserve — re-clustered from the manifest.
@@ -68,10 +155,12 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
 
   /** A rewrite keeps the batch size and codec, and the sketch set minus
     * any dropped column — explicit even when empty, so a dropped sketch
-    * column cannot linger via layout inheritance.
+    * column cannot linger via layout inheritance. The rewrite destroys
+    * the index clustering, so its claim goes.
     */
   override protected def rewriteOptions(snap: GraftColumnStore.TableSnapshot,
       r: Relayout): Seq[(String, String)] = Seq(
+    "sort_by" -> "",
     "batch_size" -> snap.batchSize.toString,
     "compression" -> snap.compression,
     "sketch_columns" -> r.surviving(snap.sketchBy).mkString(","))
@@ -94,7 +183,7 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
   def readAddressed(spark: SparkSession, table: String): DataFrame = {
     val df = read(spark, table)
     df.select(df.metadataColumn(GraftTable.BATCH_ID_COL).as("_bid"),
-      df.metadataColumn(GraftTable.ROW_IDX_COL).as("_rid"), col("*"))
+      df.metadataColumn(StoreTable.ROW_IDX_COL).as("_rid"), col("*"))
   }
 
   private def withAddress(spark: SparkSession, table: String): DataFrame =
@@ -412,8 +501,8 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     * rewrite-restarts-TTL semantics). Returns the number of small seals
     * merged (0 = nothing to do).
     *
-    * Auto mode: `spark.sql.graft.rollupThreshold = N` (default 0 = off)
-    * makes every write commit roll up any bucket holding ≥ N small
+    * Auto mode: the `rollup_threshold = N` table option (default 0 =
+    * off) makes every write commit roll up any bucket holding ≥ N small
     * seals — the reference's always-on behavior, opt-in here so batch
     * pipelines keep byte-stable layouts unless asked.
     */
@@ -506,7 +595,7 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     */
   override def createIndex(spark: SparkSession, table: String,
       columns: Seq[String]): Unit =
-    createIndex(spark, table, columns, batchSize = 16384)
+    createIndex(spark, table, columns, batchSize = ColumnLayout.DefaultBatchSize)
 
   def createIndex(spark: SparkSession, table: String, columns: Seq[String],
       batchSize: Int): Unit = MatViews.inMaintenance {
@@ -525,67 +614,6 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
     */
   override def dropIndex(spark: SparkSession, table: String): Unit =
     GraftColumnStore(table).mutate(_.copy(sortedBy = Nil))
-
-  /** ALTER TABLE SET/UNSET TBLPROPERTIES: live-tune the store tunables
-    * that need NO data rewrite — retention (`expire_seconds`), the LRU
-    * overflow budget (`eviction_budget_bytes`), and on column tables the
-    * at-rest codec (`compression`), ingest granularity (`batch_size`)
-    * and the distinct-digest set (`sketch_columns`). A metadata-only
-    * snapshot swap; retention changes enforce IMMEDIATELY (sweep +
-    * budget), codec/batch-size apply to future writes and compactions
-    * (existing sealed batches are not rewritten — run compact() to
-    * re-encode), and newly-sketched columns serve after the next
-    * compact() exactly like the enable-on-append path. UNSET resets a
-    * tunable to its default. Reference mapping: GemFire's mutable
-    * region attributes (entry TTL / eviction controller) altered on a
-    * live region.
-    */
-  def alterProperties(spark: SparkSession, table: String,
-      set: Map[String, String], unset: Seq[String] = Nil): Unit = {
-    org.apache.spark.sql.graft.GrantRegistry.check(table, "ALTER")
-    val defaults = Map("expire_seconds" -> "0", "eviction_budget_bytes" -> "0",
-      "compression" -> "none", "batch_size" -> "16384", "sketch_columns" -> "")
-    val columnOnly = Set("compression", "batch_size", "sketch_columns")
-    val isColumn = GraftColumnStore.get(table).isDefined
-    if (!isColumn) require(GraftRowStore.get(table).isDefined,
-      s"graft: no such store table $table")
-    val changes = set ++ unset.map(k => k -> defaults.getOrElse(k, "")).toMap
-    changes.keys.foreach { k =>
-      require(defaults.contains(k),
-        s"alter($table): '$k' is not a live-tunable property " +
-          s"(${defaults.keys.toSeq.sorted.mkString(", ")}); " +
-          "column adds/drops/renames/type changes go through ALTER TABLE DDL")
-      require(isColumn || !columnOnly(k),
-        s"alter($table): '$k' applies only to column tables")
-    }
-    val expire = changes.get("expire_seconds").map(_.toLong)
-    val budget = changes.get("eviction_budget_bytes").map(_.toLong)
-    expire.foreach(v => require(v >= 0, s"expire_seconds must be >= 0: $v"))
-    budget.foreach(v => require(v >= 0, s"eviction_budget_bytes must be >= 0: $v"))
-    if (isColumn) {
-      val t = GraftColumnStore(table)
-      val codec = changes.get("compression").map(_.toLowerCase)
-      codec.foreach(c => require(c == "none" || c == "lz4",
-        s"unsupported compression '$c' (none | lz4)"))
-      val batchSize = changes.get("batch_size").map(_.toInt)
-      batchSize.foreach(b => require(b > 0, s"batch_size must be > 0: $b"))
-      val sketchBy = changes.get("sketch_columns").map(
-        GraftColumnStore.DistinctSketch.parseSketchColumns(_, t.snapshot.schema))
-      t.mutate(s => s.copy(
-        expireSeconds = expire.getOrElse(s.expireSeconds),
-        evictionBudget = budget.getOrElse(s.evictionBudget),
-        compression = codec.getOrElse(s.compression),
-        batchSize = batchSize.getOrElse(s.batchSize),
-        sketchBy = sketchBy.getOrElse(s.sketchBy)))
-      if (expire.isDefined) t.expireSweep()
-    } else {
-      val t = GraftRowStore(table)
-      t.mutate(s => s.copy(
-        expireSeconds = expire.getOrElse(s.expireSeconds),
-        evictionBudget = budget.getOrElse(s.evictionBudget)))
-      if (expire.isDefined) t.expireSweep()
-    }
-  }
 
   /** On-demand EXPIRE maintenance (every write commit also runs it):
     * retire batches/packs whose TTL has fully passed, whichever store
@@ -730,6 +758,7 @@ object GraftStoreOps extends StoreOps[GraftColumnStore.TableSnapshot] {
         .write.format(FORMAT).option("table", table)
         .option("batch_size", sealSize.toString)
         .option("compression", t.snapshot.compression)
+        .option("sort_by", "")
         .mode("overwrite").save()
       // record the clustering as layout metadata (checkpoint/compact
       // re-cluster from it; the overwrite itself reset the claim)

@@ -296,7 +296,7 @@ object LiveCheckpoint {
     * publish (claim stays burned, caller retries) rather than committing
     * a manifest that mixes two moments of the table.
     */
-  private def publishIncrementalEpoch(spark: SparkSession, ops: StoreOps[_],
+  private def publishIncrementalEpoch(spark: SparkSession, ops: StoreOps[_, _, _],
       table: String, root: String, dir: String): Option[(Long, Long)] = {
     import org.apache.hadoop.fs.Path
     val (f, _) = fs(spark, root)

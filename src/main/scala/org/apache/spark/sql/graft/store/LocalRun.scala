@@ -191,6 +191,12 @@ case class LocalLookupExec(child: SparkPlan) extends UnaryExecNode {
     copy(child = newChild)
 }
 
+/** A store scan that can report a bounded key lookup. */
+trait KeyLookupScan {
+  /** The scan reads one bucket or one probe's rows of the live table. */
+  def isKeyLookup: Boolean
+}
+
 /** Wraps a prepared plan in [[LocalLookupExec]] when the whole plan is
   * `ProjectExec`/`FilterExec`/`ColumnarToRowExec` over one
   * `BatchScanExec` whose scan reports a bounded key lookup (a full-PK
@@ -215,8 +221,7 @@ object LocalLookups extends Rule[SparkPlan] {
     case FilterExec(_, child) => keyLookup(child)
     case ColumnarToRowExec(child) => keyLookup(child)
     case scan: BatchScanExec if scan.runtimeFilters.isEmpty => scan.scan match {
-      case s: GraftRowScan => s.isKeyLookup
-      case s: GraftScan => s.isKeyLookup
+      case s: KeyLookupScan => s.isKeyLookup
       case _ => false
     }
     case _ => false
@@ -293,7 +298,7 @@ case class LocalWrites(session: SparkSession) extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AppendData(r: DataSourceV2Relation, query, _, _, Some(write), _)
-        if storeTable(r) =>
+        if r.table.isInstanceOf[StoreTable[_]] =>
       val (ordering, distributed) = query match {
         case Sort(order, false, child, _) => (order, child)
         case q => (Nil, q)
@@ -311,10 +316,5 @@ case class LocalWrites(session: SparkSession) extends SparkStrategy {
           () => classic.sharedState.cacheManager.recacheByPlan(classic, r), write)
       }.toSeq
     case _ => Nil
-  }
-
-  private def storeTable(r: DataSourceV2Relation): Boolean = r.table match {
-    case _: GraftTable | _: GraftRowTable => true
-    case _ => false
   }
 }

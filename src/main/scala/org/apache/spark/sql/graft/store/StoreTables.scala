@@ -2,13 +2,14 @@ package org.apache.spark.sql.graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.collection.concurrent.TrieMap
 
 /** Table lifecycle shared by the column and row stores: the metadata
   * handle a snapshot keeps per payload, the snapshot-swap holder with its
-  * reader-lease GC, the name → table registry, the layout both stores
-  * resolve from write options, the layout-preserving ALTER rewrite, and
+  * reader-lease GC, the name → table registry, the one layout resolver,
+  * the DSv2 write commit, the layout-preserving ALTER rewrite, and
   * checkpoint / restore through one layout manifest.
   * Each store supplies its payload tier, its snapshot type and its own
   * mutations; nothing here knows which store it serves (SnappyData keeps
@@ -163,8 +164,8 @@ abstract class SnapshotTable[S <: TableState[S, Ref], Ref <: PayloadRef](
 /** Name → table registry of one store. */
 trait TableRegistry {
   type T <: SnapshotTable[_, _ <: PayloadRef]
-  /** Store name used in errors ("graftstore"). */
-  protected def kind: String
+  /** Store name used in errors and DSv2 table names ("graftstore"). */
+  def kind: String
 
   private val tables = TrieMap.empty[String, T]
 
@@ -173,15 +174,18 @@ trait TableRegistry {
     */
   protected def forget(name: String): Unit = ()
 
-  protected def getOrRegister(name: String, make: => T): T =
-    tables.getOrElseUpdate(name, make)
-
-  protected def replace(name: String, t: T): T = {
-    forget(name)
-    tables.remove(name).foreach(_.releaseAll())
-    tables.put(name, t)
-    t
-  }
+  /** `make` under `name`: replacing (and releasing) any table of the
+    * name, or else keeping an existing one.
+    */
+  private[store] def register(name: String, make: => T, replace: Boolean): T =
+    if (!replace) tables.getOrElseUpdate(name, make)
+    else {
+      forget(name)
+      tables.remove(name).foreach(_.releaseAll())
+      val t = make
+      tables.put(name, t)
+      t
+    }
 
   def get(name: String): Option[T] = tables.get(name)
 
@@ -201,10 +205,15 @@ trait TableRegistry {
 
 /** The layout both stores resolve from write options. */
 final case class BaseLayout(keyColumns: Seq[String], bucketBy: Seq[String],
-    numBuckets: Int, evictionBudget: Long, expireSeconds: Long)
+    numBuckets: Int, evictionBudget: Long, expireSeconds: Long) {
+  def bucketed: Boolean = bucketBy.nonEmpty && numBuckets > 0
+}
 
 object BaseLayout {
   def columnList(v: String): Seq[String] = v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  def of(s: TableState[_, _ <: PayloadRef]): BaseLayout =
+    BaseLayout(s.keyColumns, s.bucketBy, s.numBuckets, s.evictionBudget, s.expireSeconds)
 
   def fromOptions(kind: String, existing: Option[TableState[_, _ <: PayloadRef]],
       props: Map[String, String]): BaseLayout = {
@@ -219,16 +228,18 @@ object BaseLayout {
     // budget and TTL are tunables: an explicit option always wins
     def tunable(key: String, old: TableState[_, _ <: PayloadRef] => Long): Long =
       props.get(key).map(_.toLong).orElse(existing.map(old)).getOrElse(0L)
-    val expireSeconds = tunable("expire_seconds", _.expireSeconds)
-    require(expireSeconds >= 0,
-      s"$kind: expire_seconds must be >= 0, got $expireSeconds")
-    BaseLayout(
+    val l = BaseLayout(
       layout(props.get("key_columns").map(columnList), _.keyColumns, Nil),
       layout(props.get("partition_by").map(columnList), _.bucketBy, Nil),
       layout(props.get("buckets").map(_.toInt), _.numBuckets, 0),
       // LRU-overflow budget (EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true')
       tunable("eviction_budget_bytes", _.evictionBudget),
-      expireSeconds)
+      tunable("expire_seconds", _.expireSeconds))
+    require(l.expireSeconds >= 0,
+      s"$kind: expire_seconds must be >= 0, got ${l.expireSeconds}")
+    require(l.evictionBudget >= 0,
+      s"$kind: eviction_budget_bytes must be >= 0, got ${l.evictionBudget}")
+    l
   }
 }
 
@@ -254,15 +265,18 @@ private[store] final case class PublishCut(ids: Vector[Long], rowCount: Long,
     fingerprints: Map[Long, String], layout: Seq[(String, String)],
     schema: StructType)
 
-/** Table operations written once for both stores: the ALTER rewrite,
-  * the layout manifest, and checkpoint / restore of the table through it
+/** Table operations written once for both stores: the layout resolver,
+  * the DSv2 table and its write commit, the ALTER rewrite, the layout
+  * manifest, and checkpoint / restore of the table through it
   * (SnappyData's PERSISTENCE is one option for column and row tables
   * alike). Each store supplies only what differs, through the hooks —
   * including the one mutation surface (append, put, update, delete,
   * deleteKeys, createIndex, dropIndex) that the session and the SQL
-  * surface dispatch through.
+  * surface dispatch through. `O` is the store's own layout beyond
+  * [[BaseLayout]] (the column store's seal size, clustering, codec,
+  * sketch set and roll-up policy).
   */
-trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
+trait StoreOps[S <: TableState[S, R], R <: PayloadRef, O] {
   val FORMAT: String
   /** The layout manifest's `provider` value for this store. */
   val provider: String
@@ -270,7 +284,11 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
   def read(spark: SparkSession, table: String): DataFrame =
     spark.read.format(FORMAT).option("table", table).load()
 
-  protected def registry: TableRegistry
+  protected val registry: TableRegistry { type T <: SnapshotTable[S, R] }
+  /** Store name used in errors and DSv2 table names ("graftstore"). */
+  private[store] def kind: String = registry.kind
+  /** The tier the store's writer tasks place payloads in. */
+  protected def tier: PayloadTier[_]
   def exists(table: String): Boolean = registry.get(table).isDefined
   def drop(table: String): Unit = registry.drop(table)
   def tableNames: Seq[String] = registry.tableNames
@@ -279,7 +297,7 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
     */
   def handle(table: String): AnyRef = registry(table)
 
-  def snapshotOf(table: String): S
+  def snapshotOf(table: String): S = registry(table).snapshot
   def schema(table: String): StructType = snapshotOf(table).schema
 
   /** The read a session serves the table through. */
@@ -312,10 +330,42 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
   protected def afterRewrite(spark: SparkSession, table: String, snap: S,
       r: Relayout): Unit = ()
 
-  /** Store-only manifest keys, each read off a live table (by name and
-    * snapshot); a restore replays every one as a write option.
+  // ---- the store's own layout ----
+
+  /** The store's own layout from options over the existing snapshot,
+    * holding every store-only default and check.
     */
-  protected def storeLayout: Seq[(String, (String, S) => String)]
+  protected def resolveOwn(schema: StructType, options: Map[String, String],
+      existing: Option[S]): O
+  /** The store's own layout of a snapshot. */
+  protected def ownOf(snap: S): O
+  /** Store-only manifest keys; a restore replays each as a write option. */
+  protected def ownKeys: Seq[(String, O => String)]
+  /** Store-only manifest keys ALTER TABLE SET TBLPROPERTIES may change. */
+  protected def ownTunables: Seq[String]
+  private[store] def tunables: Seq[String] =
+    Seq("eviction_budget_bytes", "expire_seconds") ++ ownTunables
+  /** `snap` carrying the whole layout: what a truncate write commits. */
+  protected def withLayout(snap: S, schema: StructType, base: BaseLayout, own: O): S
+  /** `snap` carrying the layout's tunables (TTL, budget and the store's
+    * [[ownTunables]]): what an append or a property change records.
+    */
+  protected def retune(snap: S, base: BaseLayout, own: O): S
+  /** Register an empty table of the layout, replacing any table of the
+    * name or else keeping an existing one. The whole layout rides the
+    * first snapshot: a later mutate would open a window where a
+    * concurrent writer resolves the table option-less.
+    */
+  protected def register(name: String, schema: StructType, base: BaseLayout, own: O,
+      replace: Boolean): registry.T
+  /** The store's DSv2 table over a resolved layout. */
+  protected def newTable(name: String, schema: StructType, base: BaseLayout, own: O): StoreTable[O]
+  /** The append half of a write commit (the column store's staged upsert). */
+  protected def appendCommit(t: registry.T, refs: Vector[R],
+      options: CaseInsensitiveStringMap): Unit = t.appendRefs(refs)
+  /** Store-only work after a write commit (the column store's roll-up). */
+  protected def afterCommit(table: String): Unit = ()
+
   /** The one store-only manifest key a restore does NOT replay as a write
     * option: a column list naming state the restore write cannot carry
     * over — physical row order the bucket shuffle destroys (z-order) or
@@ -339,16 +389,92 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
     */
   protected def mutationFingerprints(snap: S, ids: Set[Long]): Map[Long, String]
 
+  // ---- one layout resolver, one table, one commit ----
+
+  /** A table's validated layout from `options` over the existing
+    * snapshot: the existing physical layout wins unless `relayout` is
+    * set, tunables take an explicit option (see [[BaseLayout.fromOptions]]
+    * and [[resolveOwn]]). With no options this is the snapshot's layout.
+    */
+  private[store] def resolve(schema: StructType, options: Map[String, String],
+      existing: Option[S]): (BaseLayout, O) =
+    (BaseLayout.fromOptions(kind, existing, options),
+      resolveOwn(schema, options, existing))
+
+  /** The DSv2 table `name` over `options` (a format read or write). */
+  private[store] def table(name: String, schema: StructType,
+      options: Map[String, String]): StoreTable[O] =
+    table(name, schema, options, registry.get(name).map(_.snapshot))
+
+  /** The catalog's table `name`: with no options the snapshot is the
+    * layout (nothing is parsed on this per-statement path).
+    */
+  private[store] def loadTable(name: String): Option[StoreTable[O]] =
+    registry.get(name).map { t => val s = t.snapshot; table(name, s.schema, Map.empty, Some(s)) }
+
+  private def table(name: String, schema: StructType, options: Map[String, String],
+      existing: Option[S]): StoreTable[O] = {
+    val (base, own) = resolve(schema, options, existing)
+    newTable(name, schema, base, own)
+  }
+
+  /** DSv2 CREATE: validate the whole layout BEFORE registering the
+    * table with it (a failure after registration would leave a phantom
+    * entry that fails the corrected retry with TableAlreadyExists).
+    */
+  private[store] def createTable(name: String, schema: StructType,
+      options: Map[String, String]): StoreTable[O] = {
+    val (base, own) = resolve(schema, options, None)
+    register(name, schema, base, own, replace = true)
+    newTable(name, schema, base, own)
+  }
+
+  /** The write commit of both stores — metadata only: the refs land in
+    * the snapshot, the payloads are already where the tasks placed them.
+    * A truncate is ONE atomic swap of the old refs for the new ones, the
+    * write's schema and whole layout riding it, so a concurrent reader
+    * sees all of the old table or all of the new one (compact and the
+    * ALTER rewrite depend on this); an append records the write's
+    * changed tunables, then appends.
+    */
+  private[store] def commitWrite(name: String, schema: StructType, base: BaseLayout,
+      own: O, payloads: Seq[PayloadRef], truncate: Boolean,
+      options: CaseInsensitiveStringMap): Unit = {
+    // the store's own writer tasks sealed every ref
+    val refs = payloads.toVector.asInstanceOf[Vector[R]]
+    val t = register(name, schema, base, own, replace = false)
+    if (truncate) t.replaceRefs(refs, withLayout(_, schema, base, own))
+    else {
+      val s = t.snapshot
+      if (layoutOf(retune(s, base, own)) != layoutOf(s)) t.mutate(retune(_, base, own))
+      appendCommit(t, refs, options)
+    }
+    // EXPIRE: reclaim payloads whose TTL passed
+    t.expireSweep()
+    afterCommit(name)
+  }
+
+  /** Release an aborted write's payloads. */
+  private[store] def release(payloads: Seq[PayloadRef]): Unit =
+    tier.release(payloads.map(_.id))
+
+  private def layoutOf(s: S): (BaseLayout, O) = (BaseLayout.of(s), ownOf(s))
+
   /** Every manifest key a restore replays: the shared layout, then the
     * store's own.
     */
-  private def layoutKeys: Seq[(String, (String, S) => String)] =
-    Seq[(String, (String, S) => String)](
-      ("partition_by", (_, s) => s.bucketBy.mkString(",")),
-      ("buckets", (_, s) => s.numBuckets.toString),
-      ("key_columns", (_, s) => s.keyColumns.mkString(",")),
-      ("eviction_budget_bytes", (_, s) => s.evictionBudget.toString),
-      ("expire_seconds", (_, s) => s.expireSeconds.toString)) ++ storeLayout
+  private def layoutKeys: Seq[(String, (BaseLayout, O) => String)] =
+    Seq[(String, (BaseLayout, O) => String)](
+      ("partition_by", (b, _) => b.bucketBy.mkString(",")),
+      ("buckets", (b, _) => b.numBuckets.toString),
+      ("key_columns", (b, _) => b.keyColumns.mkString(",")),
+      ("eviction_budget_bytes", (b, _) => b.evictionBudget.toString),
+      ("expire_seconds", (b, _) => b.expireSeconds.toString)) ++
+      ownKeys.map { case (k, of) => (k, (_: BaseLayout, o: O) => of(o)) }
+
+  /** A layout as its manifest entries (also a table's DSv2 properties). */
+  private[store] def entries(base: BaseLayout, own: O): Seq[(String, String)] =
+    layoutKeys.map { case (k, of) => k -> of(base, own) }
 
   /** The table's layout manifest: everything a restore needs to rebuild
     * the same KIND of table — buckets, keys, budgets and the store's own
@@ -356,12 +482,47 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
     */
   def layoutEntries(table: String, snap: S): Seq[(String, String)] =
     Seq("provider" -> provider, rebuiltKey -> rebuiltColumns(snap).mkString(",")) ++
-      layoutKeys.map { case (k, of) => k -> of(table, snap) }
+      entries(BaseLayout.of(snap), ownOf(snap))
 
   /** The shared layout of the live table. */
-  def layout(table: String): BaseLayout = {
-    val s = snapshotOf(table)
-    BaseLayout(s.keyColumns, s.bucketBy, s.numBuckets, s.evictionBudget, s.expireSeconds)
+  def layout(table: String): BaseLayout = BaseLayout.of(snapshotOf(table))
+
+  /** ALTER TABLE SET/UNSET TBLPROPERTIES: live-tune the layout entries
+    * that need NO data rewrite — retention (`expire_seconds`), the LRU
+    * overflow budget (`eviction_budget_bytes`) and the store's own
+    * tunables (on column tables the at-rest codec, ingest granularity,
+    * distinct-digest set and roll-up policy). A metadata-only snapshot
+    * swap through the one resolver; retention changes enforce
+    * IMMEDIATELY (sweep + budget), codec/batch-size apply to future
+    * writes and compactions (existing sealed batches are not rewritten
+    * — run compact() to re-encode), and newly-sketched columns serve
+    * after the next compact() exactly like the enable-on-append path.
+    * UNSET resets a tunable to its default. Reference mapping: GemFire's
+    * mutable region attributes (entry TTL / eviction controller)
+    * altered on a live region.
+    */
+  def alterProperties(spark: SparkSession, table: String,
+      set: Map[String, String], unset: Seq[String] = Nil): Unit = {
+    org.apache.spark.sql.graft.GrantRegistry.check(table, "ALTER")
+    val t = registry(table)
+    val schema = t.snapshot.schema
+    val defaults = {
+      val (b, o) = resolve(schema, Map.empty, None)
+      entries(b, o).toMap
+    }
+    val changes = set ++ unset.map(k => k -> defaults.getOrElse(k, "")).toMap
+    changes.keys.foreach { k =>
+      require(tunables.contains(k),
+        StoreOps.all.find(_.tunables.contains(k)) match {
+          case Some(other) => s"alter($table): '$k' applies only to ${other.provider} tables"
+          case None => s"alter($table): '$k' is not a live-tunable property " +
+            s"(${tunables.sorted.mkString(", ")}); " +
+            "column adds/drops/renames/type changes go through ALTER TABLE DDL"
+        })
+    }
+    val (base, own) = resolve(schema, changes, Some(t.snapshot))
+    t.mutate(retune(_, base, own))
+    if (changes.contains("expire_seconds")) t.expireSweep()
   }
 
   private[store] def publishCut(table: String): PublishCut = {
@@ -492,14 +653,21 @@ trait StoreOps[S <: TableState[S, _ <: PayloadRef]] {
   * catalog: every session resolves a graft table here.
   */
 object StoreOps {
-  val all: Seq[StoreOps[_]] = Seq(GraftRowOps, GraftStoreOps)
+  val all: Seq[StoreOps[_, _, _]] = Seq(GraftRowOps, GraftStoreOps)
 
-  def forTable(table: String): Option[StoreOps[_]] = all.find(_.exists(table))
+  def forTable(table: String): Option[StoreOps[_, _, _]] = all.find(_.exists(table))
 
-  def apply(table: String): StoreOps[_] = forTable(table).getOrElse(
+  def apply(table: String): StoreOps[_, _, _] = forTable(table).getOrElse(
     throw new IllegalArgumentException(s"store table not found: $table"))
 
-  def forManifest(p: java.util.Properties): StoreOps[_] = {
+  /** A DSv2 CREATE's store: `USING row` makes a row table, any other
+    * provider a column table.
+    */
+  def forProvider(provider: Option[String]): StoreOps[_, _, _] =
+    if (provider.exists(_.equalsIgnoreCase(GraftRowOps.provider))) GraftRowOps
+    else GraftStoreOps
+
+  def forManifest(p: java.util.Properties): StoreOps[_, _, _] = {
     val provider = p.getProperty("provider", GraftStoreOps.provider)
     all.find(_.provider == provider).getOrElse(
       throw new IllegalArgumentException(s"unknown store provider '$provider'"))

@@ -159,4 +159,44 @@ class CatalogSpec extends SparkTestBase {
       cleanup("cat_co_col", "cat_co_row", "cat_co_flat")
     }
   }
+
+  test("a DSv2 CREATE keeps its TBLPROPERTIES layout through the first INSERT") {
+    // (table property, value, what the snapshot holds after the INSERT)
+    val cases: Seq[(String, String, String => Any, Any)] = Seq(
+      ("batch_size", "512", t => GraftColumnStore(t).snapshot.batchSize, 512),
+      ("compression", "lz4", t => GraftColumnStore(t).snapshot.compression, "lz4"),
+      ("sort_by", "k", t => GraftColumnStore(t).snapshot.sortedBy, Seq("k")),
+      ("rollup_threshold", "3", t => GraftColumnStore.rollupThreshold(t), 3))
+    val props = cases.map { case (k, v, _, _) => s"'$k'='$v'" }.mkString(", ")
+    spark.sql(s"CREATE TABLE graft.cat_lay (k BIGINT, v BIGINT) TBLPROPERTIES ($props)")
+    try {
+      spark.sql("INSERT INTO graft.cat_lay VALUES (3, 30), (1, 10), (2, 20)")
+      for ((key, _, of, want) <- cases)
+        assert(of("cat_lay") == want, s"$key after the INSERT: ${of("cat_lay")}")
+      assert(spark.table("graft.cat_lay").count() == 3)
+    } finally cleanup("cat_lay")
+  }
+
+  test("CREATE TABLE graft.t USING row makes a keyed row table, as the SQL DDL route does") {
+    val g = GraftSession(spark)
+    val routes = Seq(
+      "graft.cat_dsrow" -> (() => spark.sql("CREATE TABLE graft.cat_dsrow (k BIGINT, v BIGINT) " +
+        "USING row TBLPROPERTIES ('key_columns'='k')")),
+      "cat_sqlrow" -> (() => g.sql("CREATE TABLE cat_sqlrow (k bigint primary key, v bigint) " +
+        "USING row")))
+    try {
+      for ((name, create) <- routes) {
+        val t = name.stripPrefix("graft.")
+        create()
+        assert(GraftRowStore.get(t).isDefined && GraftColumnStore.get(t).isEmpty, name)
+        assert(GraftRowStore(t).snapshot.keyColumns == Seq("k"), name)
+        spark.sql(s"INSERT INTO $name VALUES (1, 10)")
+        val e = intercept[Exception](spark.sql(s"INSERT INTO $name VALUES (1, 11)"))
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(c =>
+          c.getMessage != null && c.getMessage.contains("primary key already exists")), e.toString)
+        assert(spark.table(s"graft.$t").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+          Seq((1L, 10L)), name)
+      }
+    } finally cleanup("cat_dsrow", "cat_sqlrow")
+  }
 }

@@ -18,8 +18,12 @@ class JdbcServeSpec extends SparkTestBase {
   // the Thrift server is once-per-JVM (a second startWithContext never
   // binds) — share one across the suite's tests
   private lazy val port: Int = {
-    System.setProperty("derby.system.home",
-      tempDir("jdbc_meta").toString)
+    // Spark's execution Hive client asks Derby for an in-memory
+    // metastore; a derby.system.home set before Derby boots makes Derby
+    // resolve that name on disk, where every retry fails. Only the log
+    // goes to a temp dir.
+    System.setProperty("derby.stream.error.file",
+      tempDir("jdbc_meta").resolve("derby.log").toString)
     val p = {
       val s = new java.net.ServerSocket(0)
       try s.getLocalPort finally s.close()

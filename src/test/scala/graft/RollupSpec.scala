@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftStoreOps}
 
 /** Row-buffer roll-up ([[GraftStoreOps.rollupSmallBatches]] + the opt-in
-  * commit trigger `spark.sql.graft.rollupThreshold`): repeated small
+  * commit trigger, the `rollup_threshold` table option): repeated small
   * appends accumulate per-bucket tails of tiny `isDelta` seals; the
   * roll-up merges exactly those refs executor-side and swaps them in one
   * atomic transition, folding their delete/update state into the merged
@@ -127,15 +127,14 @@ class RollupSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.graft.rollupThreshold"
     val mem = MemoryStream[Long]
-    spark.conf.set(key, "4")
     val q = mem.toDF().toDF("id")
       .select(col("id").as("k"), (col("id") * 3).as("v"))
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         df.write.format(fmt).option("table", "ru_stream")
-          .option("batch_size", "5000").mode("append").save()
+          .option("batch_size", "5000").option("rollup_threshold", "4")
+          .mode("append").save()
       }
       .start()
     try {
@@ -153,7 +152,6 @@ class RollupSpec extends SparkTestBase {
       assert(s == (0L until 1600L).map(_ * 3).sum)
     } finally {
       q.stop()
-      spark.conf.unset(key)
       GraftSession(spark).dropTable("ru_stream")
     }
   }
@@ -189,12 +187,11 @@ class RollupSpec extends SparkTestBase {
   }
 
   test("commit-trigger: rollupThreshold bounds the small-seal tail across an ingest loop") {
-    val key = "spark.sql.graft.rollupThreshold"
     spark.range(0, 0).select(col("id").as("k"), col("id").as("v"))
       .write.format(fmt).option("table", "ru_auto")
-      .option("batch_size", "10000").mode("overwrite").save()
+      .option("batch_size", "10000").option("rollup_threshold", "3")
+      .mode("overwrite").save()
     try {
-      spark.conf.set(key, "3")
       (0 until 12).foreach(i => smallInsert("ru_auto", i * 50, 50))
       val snap = GraftColumnStore("ru_auto").snapshot
       val tails = snap.liveRefs.filter(_.isDelta).groupBy(_.bucketId).values
@@ -205,9 +202,18 @@ class RollupSpec extends SparkTestBase {
       val s = GraftStoreOps.read(spark, "ru_auto")
         .agg(sum(col("v"))).first().getLong(0)
       assert(s == (0L until 600L).map(_ * 2).sum)
-    } finally {
-      spark.conf.unset(key)
-      GraftSession(spark).dropTable("ru_auto")
-    }
+    } finally GraftSession(spark).dropTable("ru_auto")
+  }
+
+  test("a read never changes the table's layout: a rollup_threshold read option is ignored") {
+    spark.range(0, 10).select(col("id").as("k"), col("id").as("v"))
+      .write.format(fmt).option("table", "ru_read").mode("overwrite").save()
+    try {
+      val n = spark.read.format(fmt).option("table", "ru_read")
+        .option("rollup_threshold", "7").load().count()
+      assert(n == 10)
+      assert(GraftColumnStore.rollupThreshold("ru_read") == 0,
+        "a read set the table's roll-up policy")
+    } finally GraftSession(spark).dropTable("ru_read")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftStoreOps}
+import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftRowOps, GraftStoreOps}
 
 /** Per-batch HLL distinct digests (`sketch_columns`): approx count
   * distinct answered from refs alone — estimate accuracy, Spark
@@ -246,19 +246,23 @@ class StoreSketchSpec extends SparkTestBase {
 
   test("DESCRIBE TABLE EXTENDED surfaces the physical layout as table properties") {
     import spark.implicits._
-    spark.range(100).select((col("id") % 10).as("k"), col("id").as("v"))
-      .write.format(fmt).option("table", "sk_desc")
-      .option("batch_size", "2048")
-      .option("compression", "lz4")
-      .option("sketch_columns", "k")
-      .option("expire_seconds", "3600")
-      .mode("overwrite").save()
-    val desc = spark.sql("DESCRIBE TABLE EXTENDED graft.sk_desc")
-      .as[(String, String, String)].collect()
-    val props = desc.find(_._1 == "Table Properties").map(_._2).getOrElse("")
-    Seq("batch_size=2048", "compression=lz4", "sketch_columns=k",
-      "expire_seconds=3600").foreach(p =>
-      assert(props.contains(p), s"missing '$p' in: $props"))
+    // (store format, table, layout options, properties DESCRIBE shows)
+    val cases = Seq(
+      (fmt, "sk_desc", Map("batch_size" -> "2048", "compression" -> "lz4",
+        "sketch_columns" -> "k", "expire_seconds" -> "3600"),
+        Seq("batch_size=2048", "compression=lz4", "sketch_columns=k", "expire_seconds=3600")),
+      (GraftRowOps.FORMAT, "sk_desc_row", Map("key_columns" -> "k", "partition_by" -> "k",
+        "buckets" -> "4", "expire_seconds" -> "3600"),
+        Seq("key_columns=k", "partition_by=k", "buckets=4", "expire_seconds=3600")))
+    for ((format, table, options, want) <- cases) {
+      spark.range(100).select(col("id").as("k"), col("id").as("v"))
+        .write.format(format).option("table", table).options(options)
+        .mode("overwrite").save()
+      val desc = spark.sql(s"DESCRIBE TABLE EXTENDED graft.$table")
+        .as[(String, String, String)].collect()
+      val props = desc.find(_._1 == "Table Properties").map(_._2).getOrElse("")
+      want.foreach(p => assert(props.contains(p), s"$table: missing '$p' in: $props"))
+    }
   }
 
   test("ALTER TABLE through the catalog preserves layout (codec, sketch, TTL, buckets)") {

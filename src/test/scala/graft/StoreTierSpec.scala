@@ -63,4 +63,27 @@ class StoreTierSpec extends AnyFunSuite {
       fail(s"${found.size} files write a layout manifest outside StoreOps: " +
         found.map(_.getFileName).mkString(", "))
   }
+
+  test("one DSv2 table surface: provider, write, commit and layout defaults appear once") {
+    // both stores declare, write and commit their tables in
+    // StoreSource.scala and resolve their layout through StoreOps; a
+    // second copy of any of these is a second table surface. (needle,
+    // the pattern counted where it is a regex, the path it counts under)
+    // — split so this file does not match itself
+    val rules = Seq(
+      ("extends " + "TableProvider", None, ""),
+      ("RequiresDistribution" + "AndOrdering", None, ""),
+      ("extends " + "BatchWrite", None, ""),
+      ("\"lz4\"", Some("\"none\"" + raw"\s*\|\|.*" + "\"lz4\""), ""),
+      ("163" + "84", None, "/graft/store/"))
+    val found = rules.flatMap { case (needle, pattern, under) =>
+      val r = pattern.getOrElse(java.util.regex.Pattern.quote(needle)).r
+      val hits = offenders("", Seq(needle)).filter(_.toString.contains(under))
+        .map(p => p -> r.findAllIn(new String(Files.readAllBytes(p), ISO_8859_1)).size)
+        .filter(_._2 > 0)
+      val n = hits.map(_._2).sum
+      if (n > 1) Some(s"$r x$n in ${hits.map(_._1.getFileName).mkString(", ")}") else None
+    }
+    if (found.nonEmpty) fail(s"a second DSv2 table surface: ${found.mkString("; ")}")
+  }
 }
