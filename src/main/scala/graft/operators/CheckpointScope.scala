@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.RddBlocks
 
 /** Deterministic lifecycle for the eager `localCheckpoint` intermediates
   * the dedup operators materialize ([[Dedup.minhashNearDupsFast]],
@@ -52,12 +53,12 @@ final class CheckpointScope {
 }
 
 object CheckpointScope {
-  /** Unpersist the RDD backing a (local)checkpointed frame; no-op for
-    * frames that are not checkpoint scans.
+  /** Free the blocks of the RDD backing a (local)checkpointed frame;
+    * no-op for frames that are not checkpoint scans.
     */
   def unpersist(df: DataFrame, blocking: Boolean = false): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking)
+      case lr: LogicalRDD => RddBlocks.free(lr.rdd, blocking)
       case _ => ()
     }
 }

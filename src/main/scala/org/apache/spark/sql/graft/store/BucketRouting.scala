@@ -41,15 +41,28 @@ object BucketRouting {
     if (m < 0) m + numBuckets else m
   }
 
+  /** Most value combinations bucket targeting hashes. */
+  val MaxBucketCombos = 64
+
   /** Buckets the pushed conjuncts allow, when they pin EVERY bucket
-    * column with EqualTo/EqualNullSafe/In (In sets intersect): the
-    * cross-product of pinned values hashes to the only buckets that can
-    * hold matching rows. None = can't prune (an unpinned bucket column,
-    * an unconvertible value, or a combination blow-up past 64).
+    * column ([[pinnedCombos]]): the pinned combinations hash to the only
+    * buckets that can hold matching rows. None = can't prune.
     */
   def targetBuckets(filters: Iterable[Filter], bucketBy: Seq[String],
-      numBuckets: Int, schema: StructType): Option[Set[Int]] = {
-    if (numBuckets <= 0) return None
+      numBuckets: Int, schema: StructType): Option[Set[Int]] =
+    if (numBuckets <= 0) None
+    else pinnedCombos(filters, bucketBy, schema, MaxBucketCombos).map { combos =>
+      val types = bucketBy.map(schema(_).dataType)
+      combos.map(bucketOf(_, types, numBuckets)).toSet
+    }
+
+  /** The value combinations (internal values, in `columns` order) the
+    * conjuncts pin when they pin EVERY one of `columns` with
+    * EqualTo/EqualNullSafe/In (In sets intersect). None = an unpinned
+    * column, an unconvertible value, or more than `cap` combinations.
+    */
+  def pinnedCombos(filters: Iterable[Filter], columns: Seq[String],
+      schema: StructType, cap: Int): Option[Seq[Seq[Any]]] = {
     val eq = scala.collection.mutable.Map.empty[String, Seq[Any]]
     filters.foreach {
       case EqualTo(c, v) if v != null => eq(c) = Seq(v)
@@ -58,18 +71,15 @@ object BucketRouting {
         eq(c) = eq.get(c).map(_.intersect(vs.toSeq)).getOrElse(vs.toSeq)
       case _ =>
     }
-    if (!bucketBy.forall(eq.contains)) return None
-    val perCol = bucketBy.map { c =>
-      val dt = schema.fields(schema.fieldIndex(c)).dataType
-      val internals = eq(c).flatMap(v => BatchPruning.internal(dt, v).map(_ -> dt))
+    if (!columns.forall(eq.contains)) return None
+    val perCol = columns.map { c =>
+      val internals = eq(c).flatMap(v => BatchPruning.internal(schema(c).dataType, v))
       if (internals.size != eq(c).size) return None // unconvertible value
       internals
     }
-    if (perCol.map(_.size.toLong).product > 64) return None // combinatorial cap
-    val combos = perCol.foldLeft(Seq(Seq.empty[(Any, DataType)])) { (acc, vals) =>
+    if (perCol.map(_.size.toLong).product > cap) return None
+    Some(perCol.foldLeft(Seq(Seq.empty[Any])) { (acc, vals) =>
       acc.flatMap(prefix => vals.map(prefix :+ _))
-    }
-    Some(combos.map(combo =>
-      bucketOf(combo.map(_._1), combo.map(_._2), numBuckets)).toSet)
+    })
   }
 }

@@ -128,66 +128,34 @@ object GraftAggPushdown {
 
 case class GraftAggPartition(works: Vector[BatchWork]) extends InputPartition
 
-class GraftAggScan(tableName: String, fullSchema: StructType,
-    spec: GraftAggPushdown.AggSpec) extends Scan with Batch {
-
-  private lazy val pinned: (GraftColumnStore.TableSnapshot, Long) = {
-    val t = GraftColumnStore(tableName)
-    val p = t.pinSnapshot()
-    t.addLeaseOwner(p._2, this)
-    p
-  }
-  private def snapshot = pinned._1
-  private def leaseId = pinned._2
+class GraftAggScan(tableName: String, spec: GraftAggPushdown.AggSpec)
+    extends PinnedScan[GraftColumnStore.TableSnapshot, GraftColumnStore.BatchRef](
+      GraftStoreOps, tableName) {
 
   override def readSchema(): StructType = spec.schema
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graftstore.$tableName PushedAggregation=[groups=${spec.groupCols.mkString(",")} " +
-      s"ops=${spec.ops.mkString(",")}]"
+  override protected def detail: String =
+    s"PushedAggregation=[groups=${spec.groupCols.mkString(",")} ops=${spec.ops.mkString(",")}]"
 
   override def planInputPartitions(): Array[InputPartition] = {
     val works = snapshot.liveRefs.map(r => BatchWork(r, snapshot.deletes.get(r.id),
       snapshot.updates.getOrElse(r.id, Map.empty)))
-    val target = math.max(1, math.min(works.size,
-      org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism))
-    val parts: Array[InputPartition] =
-      if (works.isEmpty) {
-        // a GLOBAL aggregate must still produce its one partial row
-        // (count 0, sums/mins null) even over an empty table
-        if (spec.groupCols.isEmpty) Array(GraftAggPartition(Vector.empty))
-        else Array.empty
-      } else {
-        works.grouped(math.max(1, (works.size + target - 1) / target))
-          .map(ws => GraftAggPartition(ws.toVector): InputPartition).toArray
-      }
-    parts
+    // a GLOBAL aggregate must still produce its one partial row (count
+    // 0, sums/mins null) even over an empty table
+    if (works.isEmpty && spec.groupCols.isEmpty) Array(GraftAggPartition(Vector.empty))
+    else grouped(works)(ws => GraftAggPartition(ws.toVector))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val f = new GraftAggReaderFactory(fullSchema, spec, tableName, leaseId)
-    GraftColumnStore.get(tableName).foreach(_.addLeaseOwner(leaseId, f))
-    f
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    leased(new GraftAggReaderFactory(spec))
 }
 
-class GraftAggReaderFactory(fullSchema: StructType,
-    spec: GraftAggPushdown.AggSpec, tableName: String, leaseId: Long)
+class GraftAggReaderFactory(spec: GraftAggPushdown.AggSpec)
     extends PartitionReaderFactory {
   import GraftAggPushdown._
   import GraftColumnStore._
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val works = partition.asInstanceOf[GraftAggPartition].works
-    val rows = aggregate(works).iterator
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = { val h = rows.hasNext; if (h) row = rows.next(); h }
-      override def get(): InternalRow = row
-      // reachability-driven release (LeaseGc) — see the column-source note
-      override def close(): Unit = ()
-    }
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new IteratorReader(aggregate(partition.asInstanceOf[GraftAggPartition].works).iterator)
 
   // ---- accumulators -------------------------------------------------
 

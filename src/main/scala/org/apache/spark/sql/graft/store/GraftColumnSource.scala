@@ -3,12 +3,11 @@ package org.apache.spark.sql.graft.store
 import java.util.OptionalLong
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.expressions.Expressions
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.sources._
@@ -72,33 +71,7 @@ class GraftTable(tableName: String, tableSchema: StructType, base: BaseLayout,
   def sketchColumns: Seq[String] = layout.sketchBy
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(tableName, tableSchema,
-      // maintenance reads (roll-up) address specific seals: an explicit
-      // batch-id list prunes refs at planning, so touching a few small
-      // batches never scans the table
-      Option(options.get("batch_ids")).map(
-        _.split(",").iterator.map(_.trim.toLong).toSet),
-      // strict-freshness matview serving: the rewrite names the view so
-      // the scan re-proves its fingerprint at EXECUTION start
-      Option(options.get("mv_strict")),
-      // maintenance: emit ONLY tombstoned rows (the matview subtractive
-      // delete-refresh reads the newly-deleted rows of pinned batches)
-      Option(options.get("deleted_rows")).exists(_.toBoolean),
-      // repeat-delete refresh: per-batch RECORDED bitmap ids whose rows
-      // are excluded from the deleted_rows read — what remains is
-      // exactly the rows tombstoned SINCE the view's fingerprint
-      // ("bid:bitmapId,bid:bitmapId")
-      Option(options.get("exclude_bitmaps")).map(_.split(",").iterator
-        .map { kv => val Array(b, m) = kv.split(":"); b.trim.toLong -> m.trim.toLong }
-        .toMap).getOrElse(Map.empty),
-      // update-delta refresh: emit ONLY rows addressed by update deltas
-      // NOT in `since_deltas`, valued as of the recorded delta set
-      // ("old") or the current one ("new") — the two sides of the
-      // subtract-old/add-new O(delta) matview refresh after UPDATEs
-      Option(options.get("updated_rows")),
-      Option(options.get("since_deltas")).filter(_.nonEmpty)
-        .map(_.split(",").iterator.map(_.trim.toLong).toSet)
-        .getOrElse(Set.empty))
+    new GraftScanBuilder(tableName, tableSchema, ColumnReadMode.fromOptions(options))
 
   // index clustering: Spark sorts each writer partition on the index
   // columns, so every sealed batch covers a narrow key range and the
@@ -113,28 +86,62 @@ class GraftTable(tableName: String, tableSchema: StructType, base: BaseLayout,
 
 // ------------------------------- read path -------------------------------
 
-class GraftScanBuilder(tableName: String, fullSchema: StructType,
+/** The column store's read modes beyond a plain read of the live table:
+  * the maintenance and matview reads, each set by a read option.
+  *
+  * @param batchIds       `batch_ids`: maintenance reads (roll-up) address
+  *                       specific seals, so an explicit batch-id list
+  *                       prunes refs at planning and touching a few small
+  *                       batches never scans the table
+  * @param mvStrict       `mv_strict`: strict-freshness matview serving;
+  *                       the rewrite names the view so the scan re-proves
+  *                       its fingerprint at EXECUTION start
+  * @param deletedOnly    `deleted_rows`: emit ONLY tombstoned rows (the
+  *                       matview subtractive delete-refresh reads the
+  *                       newly-deleted rows of pinned batches)
+  * @param excludeBitmaps `exclude_bitmaps` ("bid:bitmapId,..."): per-batch
+  *                       RECORDED bitmap ids whose rows the deleted_rows
+  *                       read excludes, so what remains is exactly the
+  *                       rows tombstoned SINCE the view's fingerprint
+  *                       (repeat-delete refresh)
+  * @param updatedMode    `updated_rows`: emit ONLY rows addressed by update
+  *                       deltas NOT in `sinceDeltas`, valued as of the
+  *                       recorded delta set ("old") or the current one
+  *                       ("new"), the two sides of the subtract-old/add-new
+  *                       O(delta) matview refresh after UPDATEs
+  * @param sinceDeltas    `since_deltas`: the delta ids the view recorded
+  */
+final case class ColumnReadMode(
     batchIds: Option[Set[Long]] = None,
     mvStrict: Option[String] = None,
     deletedOnly: Boolean = false,
     excludeBitmaps: Map[Long, Long] = Map.empty,
     updatedMode: Option[String] = None,
-    sinceDeltas: Set[Long] = Set.empty)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
+    sinceDeltas: Set[Long] = Set.empty) {
+  /** A read of the live table, no maintenance or matview mode. */
+  def plain: Boolean =
+    batchIds.isEmpty && mvStrict.isEmpty && !deletedOnly && updatedMode.isEmpty
+}
 
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = fullSchema
+object ColumnReadMode {
+  private def ids(s: String): Set[Long] = s.split(",").iterator.map(_.trim.toLong).toSet
+
+  def fromOptions(options: CaseInsensitiveStringMap): ColumnReadMode = ColumnReadMode(
+    Option(options.get("batch_ids")).map(ids),
+    Option(options.get("mv_strict")),
+    Option(options.get("deleted_rows")).exists(_.toBoolean),
+    Option(options.get("exclude_bitmaps")).map(_.split(",").iterator
+      .map { kv => val Array(b, m) = kv.split(":"); b.trim.toLong -> m.trim.toLong }
+      .toMap).getOrElse(Map.empty),
+    Option(options.get("updated_rows")),
+    Option(options.get("since_deltas")).filter(_.nonEmpty).map(ids).getOrElse(Set.empty))
+}
+
+class GraftScanBuilder(tableName: String, fullSchema: StructType,
+    mode: ColumnReadMode = ColumnReadMode())
+    extends StoreScanBuilder(fullSchema) with SupportsPushDownAggregates {
+
   private var aggSpec: Option[GraftAggPushdown.AggSpec] = None
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // stats can only PRUNE batches, never fully evaluate a predicate →
-    // accept everything for skipping but report all as residual so Spark
-    // still applies the exact filter on the surviving rows
-    pushed = filters
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
 
   /** PARTIAL aggregate pushdown (see [[GraftAggPushdown]]): Spark only
     * offers an aggregation when no post-scan filter remains — and this
@@ -143,18 +150,13 @@ class GraftScanBuilder(tableName: String, fullSchema: StructType,
     */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     val conf = org.apache.spark.sql.internal.SQLConf.get
-    // a batch_ids-restricted read must answer from EXACTLY those seals;
-    // GraftAggScan enumerates all live refs, so accepting a push here
-    // would silently aggregate the whole table — decline and let the
-    // plain GraftScan (which honors batchIds) feed Spark's aggregate
-    if (batchIds.isDefined) return false
-    // strict-freshness matview scans keep the plain GraftScan so the
-    // execution-start freshness re-proof below always runs
-    if (mvStrict.isDefined) return false
-    // deleted-rows / updated-rows maintenance reads change visibility in
-    // the reader; the agg scan enumerates live rows and would answer
-    // wrongly
-    if (deletedOnly || updatedMode.isDefined) return false
+    // GraftAggScan enumerates all live refs of the plain table: a
+    // batch_ids-restricted read must answer from EXACTLY those seals,
+    // strict-freshness matview scans keep the plain GraftScan so its
+    // execution-start re-proof always runs, and the deleted-rows /
+    // updated-rows reads change visibility in the reader — decline
+    // them all and let GraftScan feed Spark's aggregate
+    if (!mode.plain) return false
     if (conf.getConfString(GraftAggPushdown.CONF_KEY, "true") != "true" ||
         pushed.nonEmpty) return false
     GraftAggPushdown.translate(aggregation, fullSchema, conf.ansiEnabled) match {
@@ -180,24 +182,13 @@ class GraftScanBuilder(tableName: String, fullSchema: StructType,
     }
   }
 
+  // a pushed aggregation fixes the read schema itself
   override def pruneColumns(requiredSchema: StructType): Unit =
-    // top-level pruning only: batches hold WHOLE container values, so a
-    // nested-pruned struct type saves no store reads but would misalign
-    // the position-based vector writers — report the full column type
-    // and let Spark project the nested fields above (the v2 pushdown
-    // rule rebuilds the relation output from the scan's readSchema).
-    // A pushed aggregation fixes the read schema itself.
-    if (aggSpec.isEmpty) {
-      required = StructType(requiredSchema.fields.map { f =>
-        if (fullSchema.fieldNames.contains(f.name)) fullSchema(f.name) else f
-      })
-    }
+    if (aggSpec.isEmpty) super.pruneColumns(requiredSchema)
 
   override def build(): Scan = aggSpec match {
-    case Some(spec) => new GraftAggScan(tableName, fullSchema, spec)
-    case None => new GraftScan(tableName, fullSchema, required, pushed,
-      batchIds, mvStrict, deletedOnly, excludeBitmaps, updatedMode,
-      sinceDeltas)
+    case Some(spec) => new GraftAggScan(tableName, spec)
+    case None => new GraftScan(tableName, fullSchema, required, pushed, mode)
   }
 }
 
@@ -215,67 +206,20 @@ case class BatchWork(
     excludeBitmapId: Option[Long] = None)
 
 class GraftScan(tableName: String, fullSchema: StructType,
-    required: StructType, pushedFilters: Array[Filter],
-    batchIds: Option[Set[Long]] = None,
-    mvStrict: Option[String] = None,
-    deletedOnly: Boolean = false,
-    excludeBitmaps: Map[Long, Long] = Map.empty,
-    updatedMode: Option[String] = None,
-    sinceDeltas: Set[Long] = Set.empty)
-    extends Scan with Batch with SupportsReportStatistics with SupportsReportPartitioning
-    with SupportsRuntimeFiltering with KeyLookupScan {
+    required: StructType, pushed: Array[Filter], mode: ColumnReadMode = ColumnReadMode())
+    extends StoreScan[GraftColumnStore.TableSnapshot, GraftColumnStore.BatchRef](
+      GraftStoreOps, tableName, fullSchema, required, pushed) {
 
-  /** Store-table identity, for planner rules that inspect store metadata
-    * (DictJoinStrategy's auto gate reads the key column's encoding).
-    */
-  def table: String = tableName
-
-  // One consistent snapshot for the whole scan (planning + stats),
-  // captured together with a reader lease so payloads it references
-  // survive concurrent mutations until the last partition reader closes
-  // (see LeaseGc). The lease is sealed with the partition count at
-  // planInputPartitions; each reader's close() releases one unit.
-  private lazy val pinned: (GraftColumnStore.TableSnapshot, Long) = {
-    val t = GraftColumnStore(tableName)
-    val p = t.pinSnapshot()
-    // this scan keeps its lease alive; if the plan is discarded without
-    // running, the Cleaner force-drops the lease once the scan (and any
-    // reader factory) become unreachable
-    t.addLeaseOwner(p._2, this)
-    p
-  }
-  private def snapshot = pinned._1
-  private def leaseId = pinned._2
-
-  /** Runtime (dynamic-partition-pruning) filters: Spark hands the
-    * realized join-key values of a completed broadcast side here before
-    * partitions are planned — they prune buckets and batches exactly
-    * like statically pushed predicates (the reference's join pushdown
-    * into bucket regions).
-    */
-  @volatile private var runtimeFilters: Array[Filter] = Array.empty
-
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // only columns surviving pruning: Spark resolves these against the
-    // scan OUTPUT (and join keys are necessarily in the output)
-    required.fieldNames.filterNot(n =>
-      n == GraftTable.BATCH_ID_COL || n == StoreTable.ROW_IDX_COL)
-      .map(Expressions.column)
-
-  override def filter(filters: Array[Filter]): Unit =
-    runtimeFilters = filters
-
-  private def filters: Array[Filter] = pushedFilters ++ runtimeFilters
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graftstore.$tableName pushed=[${filters.mkString(", ")}] cols=[${required.fieldNames.mkString(",")}]"
+  // runtime filters prune batches on any column, like pushed ones;
+  // Spark resolves these against the scan OUTPUT (and join keys are
+  // necessarily in the output)
+  override protected def runtimeFilterColumns: Seq[String] =
+    required.fieldNames.toSeq.filter(fullSchema.fieldNames.contains)
 
   private def workFor(ref: GraftColumnStore.BatchRef): BatchWork =
     BatchWork(ref, snapshot.deletes.get(ref.id),
       snapshot.updates.getOrElse(ref.id, Map.empty),
-      excludeBitmaps.get(ref.id))
+      mode.excludeBitmaps.get(ref.id))
 
   // recomputed when runtime filters arrive; cached per filter state so
   // pruning (and its telemetry) runs once per planning
@@ -289,12 +233,13 @@ class GraftScan(tableName: String, fullSchema: StructType,
     // immediately (age checked once per planning); the payload itself is
     // retired by the next write's expireSweep or an explicit sweep
     val all = snapshot.liveRefs
+    val fs = filters
     val kept = all.filter { r =>
       // columns with update deltas have stale stats → never prune on them
       val updatedCols = snapshot.updates.getOrElse(r.id, Map.empty).keySet
         .map(fullSchema.fields(_).name)
-      batchIds.forall(_.contains(r.id)) &&
-        BatchPruning.mightMatch(r.stats, r.numRows, fullSchema, filters, updatedCols)
+      mode.batchIds.forall(_.contains(r.id)) &&
+        BatchPruning.mightMatch(r.stats, r.numRows, fullSchema, fs, updatedCols)
     }
     GraftColumnStore.batchesSkipped.addAndGet(all.size - kept.size)
     GraftColumnStore.batchesScanned.addAndGet(kept.size)
@@ -303,27 +248,16 @@ class GraftScan(tableName: String, fullSchema: StructType,
     works
   }
 
-  /** Bucket pruning for key point lookups (reference: PRIMARY KEY lookups
-    * route to one bucket region, RowFormatRelation/GemFire get): when the
-    * pushed conjuncts pin EVERY bucket column with EqualTo/In, only the
-    * buckets those key values hash to are scanned. The hash chain is
-    * identical to Spark's HashPartitioning (murmur3, seed 42) — the
-    * distribution the bucketed write required.
+  /** A bounded key lookup (reference: PRIMARY KEY lookups route to one
+    * bucket region, RowFormatRelation/GemFire get): the pushed
+    * EqualTo/In conjuncts pin every key column of a table bucketed on
+    * its key, so exactly one bucket (one partition) survives. Plain
+    * table reads only: the maintenance and matview reads keep the job
+    * path.
     */
-  private def targetBuckets: Option[Set[Int]] =
-    BucketRouting.targetBuckets(filters, snapshot.bucketBy,
-      snapshot.numBuckets, fullSchema)
-
-  /** A bounded key lookup: the pushed EqualTo/In conjuncts pin every key
-    * column of a table bucketed on its key, so exactly one bucket (one
-    * partition) survives. Plain table reads only: the option-driven
-    * maintenance and matview reads keep the job path. [[LocalLookups]]
-    * answers these on the calling thread.
-    */
-  def isKeyLookup: Boolean =
-    batchIds.isEmpty && mvStrict.isEmpty && !deletedOnly && updatedMode.isEmpty &&
-      snapshot.keyColumns.nonEmpty && snapshot.bucketBy == snapshot.keyColumns &&
-      targetBuckets.exists(_.size == 1)
+  override protected def keyLookup: Boolean =
+    mode.plain && snapshot.keyColumns.nonEmpty &&
+      snapshot.bucketBy == snapshot.keyColumns && pushedBuckets.exists(_.size == 1)
 
   override def planInputPartitions(): Array[InputPartition] = {
     // strict matview serving (spark.sql.graft.matviewStrictFreshness):
@@ -333,7 +267,12 @@ class GraftScan(tableName: String, fullSchema: StructType,
     // with an actionable error — a re-run re-plans and either re-proves
     // or falls back to the base scan.
     strictReprove()
-    planPartitions()
+    if (snapshot.numBuckets > 0) {
+      val parts = bucketPartitions(keptWork, (w: BatchWork) => w.ref.bucketId)(
+        (b, ws) => GraftBucketPartition(b, ws.toVector))
+      GraftColumnStore.bucketsPruned.addAndGet(snapshot.numBuckets - parts.length)
+      parts
+    } else grouped(keptWork)(ws => GraftBatchGroupPartition(ws.toVector))
   }
 
   /** The strict-freshness re-proof itself, shared by planInputPartitions
@@ -342,7 +281,7 @@ class GraftScan(tableName: String, fullSchema: StructType,
     * stage reuse) re-executes through createReaderFactory without
     * re-planning — re-proving in both closes that window too.
     */
-  private def strictReprove(): Unit = mvStrict.foreach { mv =>
+  private def strictReprove(): Unit = mode.mvStrict.foreach { mv =>
     if (!MatViews.get(mv).exists(MatViews.isFresh)) {
       throw new IllegalStateException(
         s"materialized view '$mv' went stale between planning and " +
@@ -351,36 +290,6 @@ class GraftScan(tableName: String, fullSchema: StructType,
           "base table")
     }
   }
-
-  private def planPartitions(): Array[InputPartition] =
-    if (snapshot.numBuckets > 0) {
-      // one partition per bucket (all buckets, so two co-bucketed scans
-      // always align group-for-group in a storage-partitioned join) —
-      // unless a key point lookup prunes to specific buckets
-      val byBucket = keptWork.groupBy(_.ref.bucketId)
-      val wanted = targetBuckets
-      val ids = (0 until snapshot.numBuckets).filter(b => wanted.forall(_.contains(b)))
-      GraftColumnStore.bucketsPruned.addAndGet(snapshot.numBuckets - ids.size)
-      ids.map { b =>
-        GraftBucketPartition(b, byBucket.getOrElse(b, Nil).toVector): InputPartition
-      }.toArray
-    } else {
-      // group contiguous batches so partition count tracks the cluster's
-      // parallelism, not the batch count — per-task overhead would
-      // otherwise dominate small-batch scans
-      val target = math.max(1, math.min(keptWork.size,
-        org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism))
-      if (keptWork.isEmpty) Array.empty
-      else keptWork.grouped(math.max(1, (keptWork.size + target - 1) / target))
-        .map(ws => GraftBatchGroupPartition(ws.toVector): InputPartition).toArray
-    }
-
-  override def outputPartitioning(): Partitioning =
-    if (snapshot.numBuckets > 0)
-      new KeyGroupedPartitioning(
-        Array(Expressions.bucket(snapshot.numBuckets, snapshot.bucketBy: _*)),
-        snapshot.numBuckets)
-    else new UnknownPartitioning(keptWork.size)
 
   /** Planning statistics, pushed-filter-aware (the DSv2 contract calls
     * this AFTER pushdown): size/rows count only the batches that survive
@@ -401,8 +310,7 @@ class GraftScan(tableName: String, fullSchema: StructType,
     val rows = works.foldLeft(0L)(_ + _.ref.numRows)
     val bytes = works.foldLeft(0L)((acc, w) =>
       acc + GraftColumnStore.batches.sizeBytes(w.ref.id))
-    val colStats = new java.util.HashMap[org.apache.spark.sql.connector.expressions.NamedReference,
-      org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
+    val colStats = new java.util.HashMap[NamedReference, ColumnStatistics]()
     val snap = snapshot
     required.fieldNames.foreach { fn =>
       val idx = fullSchema.fieldNames.indexOf(fn)
@@ -417,10 +325,10 @@ class GraftScan(tableName: String, fullSchema: StructType,
           // the column's Spark type (DECIMAL batches keep unscaled longs,
           // strings keep JVM strings — neither is a catalyst literal)
           def aligned(v: Any): Boolean = (dt, v) match {
-            case (org.apache.spark.sql.types.IntegerType, _: java.lang.Integer) => true
-            case (org.apache.spark.sql.types.LongType, _: java.lang.Long) => true
-            case (org.apache.spark.sql.types.DoubleType, _: java.lang.Double) => true
-            case (org.apache.spark.sql.types.FloatType, _: java.lang.Float) => true
+            case (IntegerType, _: java.lang.Integer) => true
+            case (LongType, _: java.lang.Long) => true
+            case (DoubleType, _: java.lang.Double) => true
+            case (FloatType, _: java.lang.Float) => true
             case _ => false
           }
           @inline def cmp(a: Any, b: Any): Int =
@@ -443,50 +351,34 @@ class GraftScan(tableName: String, fullSchema: StructType,
             else -1L
           } else -1L
         val dMin = minV; val dMax = maxV; val dNulls = nulls
-        colStats.put(Expressions.column(fn),
-          new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-            override def distinctCount(): OptionalLong =
-              if (dDistinct >= 0) OptionalLong.of(dDistinct) else OptionalLong.empty()
-            override def min(): java.util.Optional[Object] =
-              java.util.Optional.ofNullable(dMin.asInstanceOf[Object])
-            override def max(): java.util.Optional[Object] =
-              java.util.Optional.ofNullable(dMax.asInstanceOf[Object])
-            override def nullCount(): OptionalLong = OptionalLong.of(dNulls)
-          })
+        colStats.put(Expressions.column(fn), new ColumnStatistics {
+          override def distinctCount(): OptionalLong =
+            if (dDistinct >= 0) OptionalLong.of(dDistinct) else OptionalLong.empty()
+          override def min(): java.util.Optional[Object] =
+            java.util.Optional.ofNullable(dMin.asInstanceOf[Object])
+          override def max(): java.util.Optional[Object] =
+            java.util.Optional.ofNullable(dMax.asInstanceOf[Object])
+          override def nullCount(): OptionalLong = OptionalLong.of(dNulls)
+        })
       }
     }
-    new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(1L, bytes))
-      override def numRows(): OptionalLong = OptionalLong.of(rows)
-      override def columnStats(): java.util.Map[
-        org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = colStats
-    }
+    StoreScan.statistics(rows, bytes, colStats)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     strictReprove() // cached-plan re-executions skip planInputPartitions
-    val f = new GraftReaderFactory(fullSchema, required, tableName, leaseId,
-      deletedOnly, updatedMode, sinceDeltas)
-    GraftColumnStore.get(tableName).foreach(_.addLeaseOwner(leaseId, f))
-    f
+    leased(new GraftReaderFactory(fullSchema, required, mode))
   }
 }
 
 case class GraftBatchGroupPartition(works: Vector[BatchWork]) extends InputPartition
 
-case class GraftBucketPartition(bucketId: Int, works: Vector[BatchWork])
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](bucketId))
-}
+case class GraftBucketPartition(bucketId: Int, works: Vector[BatchWork]) extends BucketPartition
 
 class GraftReaderFactory(fullSchema: StructType, required: StructType,
-    tableName: String, leaseId: Long,
-    deletedOnly: Boolean = false,
-    updatedMode: Option[String] = None,
-    sinceDeltas: Set[Long] = Set.empty)
-    extends PartitionReaderFactory {
+    mode: ColumnReadMode) extends PartitionReaderFactory {
+  import mode.{deletedOnly, sinceDeltas, updatedMode}
+
   override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -497,15 +389,7 @@ class GraftReaderFactory(fullSchema: StructType, required: StructType,
       case GraftBatchGroupPartition(ws) => ws
       case GraftBucketPartition(_, ws) => ws
     }
-    new PartitionReader[ColumnarBatch] {
-      private var idx = -1
-      override def next(): Boolean = { idx += 1; idx < works.length }
-      override def get(): ColumnarBatch = decode(works(idx))
-      // payload release is reachability-driven (LeaseGc): a close-based
-      // countdown would free payloads a re-execution of this cached plan
-      // (or a sibling partition racing a task retry) still needs
-      override def close(): Unit = ()
-    }
+    new IteratorReader(works.iterator.map(decode))
   }
 
   /** Decode one batch: stream-decode required columns, overlay update

@@ -1,12 +1,8 @@
 package org.apache.spark.sql.graft.store
 
-import java.util.OptionalLong
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -90,35 +86,14 @@ class GraftRowTable(tableName: String, tableSchema: StructType, base: BaseLayout
 // ------------------------------- read path -------------------------------
 
 class GraftRowScanBuilder(tableName: String, fullSchema: StructType,
-    packIds: Option[Set[Long]] = None)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = fullSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // index probes / bucket pruning only narrow the partitions; report
-    // all filters as residual so Spark still evaluates them exactly
-    pushed = filters
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // top-level pruning only (see GraftColumnScanBuilder): packs hold
-    // whole rows, and the projector reads stored values by full type
-    required = StructType(requiredSchema.fields.map { f =>
-      if (fullSchema.fieldNames.contains(f.name)) fullSchema(f.name) else f
-    })
+    packIds: Option[Set[Long]] = None) extends StoreScanBuilder(fullSchema) {
   override def build(): Scan =
     new GraftRowScan(tableName, fullSchema, required, pushed, packIds)
 }
 
 /** Work units: a bucket (or pack group) to scan, or a probe result. */
 case class RowPackPartition(bucketId: Int, refs: Vector[GraftRowStore.PackRef],
-    tombstones: Map[Long, BitSet]) extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](bucketId))
-}
+    tombstones: Map[Long, BitSet]) extends BucketPartition
 case class RowPackGroupPartition(refs: Vector[GraftRowStore.PackRef],
     tombstones: Map[Long, BitSet]) extends InputPartition
 /** Already-resolved row addresses from a planning-time index probe. */
@@ -140,69 +115,28 @@ case class RowRangeSpec(column: String, ordinal: Int, dt: DataType,
     stats: Map[Long, (Any, Any)])
 
 class GraftRowScan(tableName: String, fullSchema: StructType,
-    required: StructType, pushedFilters: Array[Filter],
-    packIds: Option[Set[Long]] = None)
-    extends Scan with Batch with SupportsReportStatistics with SupportsReportPartitioning
-    with KeyLookupScan {
+    required: StructType, pushed: Array[Filter], packIds: Option[Set[Long]] = None)
+    extends StoreScan[GraftRowStore.RowSnapshot, GraftRowStore.PackRef](
+      GraftRowOps, tableName, fullSchema, required, pushed) {
+  import GraftRowScan.MaxProbeKeys
 
-  // snapshot + reader lease, captured atomically (see LeaseGc): packs
-  // this scan references survive concurrent mutations until the last
-  // partition reader closes
-  private lazy val pinned: (GraftRowStore.RowSnapshot, Long) = {
-    val t = GraftRowStore(tableName)
-    val p = t.pinSnapshot()
-    t.addLeaseOwner(p._2, this) // see the column-scan analog
-    p
-  }
-  private def snapshot = pinned._1
-  private def leaseId = pinned._2
+  // runtime filters narrow only the buckets
+  override protected def runtimeFilterColumns: Seq[String] =
+    snapshot.bucketBy.filter(required.fieldNames.contains)
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graftrow.$tableName pushed=[${pushedFilters.mkString(", ")}] cols=[${required.fieldNames.mkString(",")}]"
-
-  /** Key combos from pushed EqualTo/In conjuncts pinning every key column
-    * (converted to internal values); None unless the predicate is a full
-    * primary-key lookup.
+  /** Key combos the pushed conjuncts pin on every key column; None
+    * unless the predicate is a full primary-key lookup.
     */
-  private def keyCombos: Option[Seq[GraftRowStore.RowKey]] = {
-    val keyCols = snapshot.keyColumns
-    if (keyCols.isEmpty) return None
-    val eq = scala.collection.mutable.Map.empty[String, Seq[Any]]
-    pushedFilters.foreach {
-      case EqualTo(c, v) if v != null => eq(c) = Seq(v)
-      case EqualNullSafe(c, v) if v != null => eq(c) = Seq(v)
-      case In(c, vs) if vs.nonEmpty && !vs.contains(null) =>
-        eq(c) = eq.get(c).map(_.intersect(vs.toSeq)).getOrElse(vs.toSeq)
-      case _ =>
-    }
-    if (!keyCols.forall(eq.contains)) return None
-    val perCol = keyCols.map { c =>
-      val dt = fullSchema.fields(fullSchema.fieldIndex(c)).dataType
-      val internals = eq(c).flatMap(v => BatchPruning.internal(dt, v))
-      if (internals.size != eq(c).size) return None
-      internals
-    }
-    if (perCol.map(_.size.toLong).product > 256) return None
-    Some(perCol.foldLeft(Seq(Seq.empty[Any])) { (acc, vals) =>
-      acc.flatMap(prefix => vals.map(prefix :+ _))
-    }.map(GraftRowStore.RowKey))
-  }
+  private lazy val keyCombos: Option[Seq[GraftRowStore.RowKey]] =
+    if (snapshot.keyColumns.isEmpty) None
+    else BucketRouting.pinnedCombos(pushed, snapshot.keyColumns, fullSchema, MaxProbeKeys)
+      .map(_.map(GraftRowStore.RowKey))
 
   /** A bounded key lookup: a full-PK probe (one [[RowProbePartition]] of
     * rows planning already located) over the live table, not a
-    * pack-addressed maintenance read. [[LocalLookups]] answers these on
-    * the calling thread.
+    * pack-addressed maintenance read.
     */
-  def isKeyLookup: Boolean = packIds.isEmpty && keyCombos.isDefined
-
-  /** Buckets the pushed conjuncts allow, when they pin every bucket
-    * column (same murmur3-seed-42 chain as the write distribution).
-    */
-  private def targetBuckets: Option[Set[Int]] =
-    BucketRouting.targetBuckets(pushedFilters, snapshot.bucketBy,
-      snapshot.numBuckets, fullSchema)
+  override protected def keyLookup: Boolean = packIds.isEmpty && keyCombos.isDefined
 
   /** Range constraint on a secondary-indexed column, assembled from the
     * pushed conjuncts (tightest lower/upper bound wins; IN collapses to
@@ -211,10 +145,9 @@ class GraftRowScan(tableName: String, fullSchema: StructType,
     * that path prunes at least as hard AND keeps the bucket-grouped
     * output partitioning storage-partitioned joins rely on.
     */
-  private def rangeProbe: Option[RowRangeSpec] = {
-    if (snapshot.indexes.isEmpty) return None
-    if (snapshot.numBuckets > 0 && targetBuckets.isDefined) return None
-    snapshot.indexes.keys.toSeq.sorted.iterator.flatMap { key =>
+  private lazy val rangeProbe: Option[RowRangeSpec] = {
+    if (snapshot.indexes.isEmpty || pushedBuckets.isDefined) None
+    else snapshot.indexes.keys.toSeq.sorted.iterator.flatMap { key =>
       val ix = snapshot.indexes(key)
       val idx = fullSchema.fieldNames.indexWhere(_.equalsIgnoreCase(ix.column))
       if (idx < 0) None
@@ -243,7 +176,7 @@ class GraftRowScan(tableName: String, fullSchema: StructType,
             })
           }
         val c = ix.column
-        pushedFilters.foreach {
+        pushed.foreach {
           case GreaterThan(n, v) if n.equalsIgnoreCase(c) && v != null => low(v, false)
           case GreaterThanOrEqual(n, v) if n.equalsIgnoreCase(c) && v != null => low(v, true)
           case LessThan(n, v) if n.equalsIgnoreCase(c) && v != null => high(v, false)
@@ -264,9 +197,9 @@ class GraftRowScan(tableName: String, fullSchema: StructType,
     }.nextOption()
   }
 
-  override def planInputPartitions(): Array[InputPartition] = planPartitions()
+  override protected def bucketGrouped: Boolean = keyCombos.isEmpty && rangeProbe.isEmpty
 
-  private def planPartitions(): Array[InputPartition] = {
+  override def planInputPartitions(): Array[InputPartition] = {
     // EXPIRE: one TTL cut per planning — every path below (PK probe,
     // range scan, bucket scan, flat scan) sees the same live set.
     // An explicit pack-id list (maintenance dump) prunes first: the
@@ -276,118 +209,101 @@ class GraftRowScan(tableName: String, fullSchema: StructType,
       case Some(ids) => snapshot.liveRefs.filter(r => ids(r.id))
       case None => snapshot.liveRefs
     }
-    val combos = keyCombos
-    if (combos.isDefined) {
-      // full-PK lookup: probe pack indexes instead of scanning. When the
-      // table is bucketed BY the key columns the probe touches only the
-      // packs of the buckets the keys hash to (the routed get); in a
-      // cluster this probe is an RPC to those bucket's hosts.
-      val byBucket = live.groupBy(_.bucketId)
-      val keyIsBucket = snapshot.bucketBy == snapshot.keyColumns &&
-        snapshot.numBuckets > 0
-      val ords = snapshot.keyOrdinals
-      val kts = snapshot.keyTypes
-      val keyed = combos.get.map { key =>
-        key -> (if (keyIsBucket)
-          byBucket.getOrElse(
-            BucketRouting.bucketOf(key.values, kts, snapshot.numBuckets),
-            Vector.empty)
-        else live)
-      }
-      // each candidate pack fetched once across ALL keys (a spilled pack
-      // would otherwise deserialize per key)
-      val resolved = GraftRowStore.packs.resolve(
-        keyed.flatMap(_._2.map(_.id)).distinct)
-      val addresses = keyed.flatMap { case (key, candidates) =>
-        GraftRowStore.indexProbes.incrementAndGet()
-        snapshot.probe(key, candidates, resolved)
-      }
-      return Array(RowProbePartition(addresses))
-    }
-    rangeProbe match {
-      case Some(spec) =>
-        // secondary-index range scan: stats prune whole packs at
-        // planning (metadata only — pack payloads never leave their
-        // executors), survivors get binary-searched task-side
-        val ord = org.apache.spark.sql.catalyst.util.TypeUtils
-          .getInterpretedOrdering(spec.dt)
-        val kept = live.filter { r =>
-          spec.stats.get(r.id) match {
-            case Some((mn, mx)) =>
-              val okLo = spec.lo.forall { case (v, inc) =>
-                val c = ord.compare(mx, v); c > 0 || (c == 0 && inc)
-              }
-              val okHi = spec.hi.forall { case (v, inc) =>
-                val c = ord.compare(mn, v); c < 0 || (c == 0 && inc)
-              }
-              okLo && okHi
-            case None => true // packs appended after the index build
-          }
+    (keyCombos, rangeProbe) match {
+      case (Some(combos), _) => Array(probePartition(live, combos))
+      case (_, Some(spec)) => rangePartitions(live, spec)
+      case _ if snapshot.numBuckets > 0 =>
+        bucketPartitions(live, (r: GraftRowStore.PackRef) => r.bucketId) { (b, refs) =>
+          GraftRowStore.packsScanned.addAndGet(refs.size)
+          RowPackPartition(b, refs.toVector, tombstonesOf(refs))
         }
-        GraftRowStore.rangePacksPruned.addAndGet(live.size - kept.size)
-        GraftRowStore.rangePacksProbed.addAndGet(kept.size)
-        if (kept.isEmpty) return Array.empty
-        val target = math.max(1, math.min(kept.size,
-          org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism))
-        return kept.grouped(math.max(1, (kept.size + target - 1) / target)).map { g =>
-          RowRangePartition(g.toVector,
-            snapshot.tombstones.filter(t => g.exists(_.id == t._1)),
-            spec.column, spec.ordinal, spec.dt, spec.lo, spec.hi): InputPartition
-        }.toArray
-      case None =>
-    }
-    if (snapshot.numBuckets > 0) {
-      val byBucket = live.groupBy(_.bucketId)
-      val wanted = targetBuckets
-      val ids = (0 until snapshot.numBuckets).filter(b => wanted.forall(_.contains(b)))
-      ids.map { b =>
-        val refs = byBucket.getOrElse(b, Vector.empty)
-        GraftRowStore.packsScanned.addAndGet(refs.size)
-        RowPackPartition(b, refs,
-          snapshot.tombstones.filter(t => refs.exists(_.id == t._1))): InputPartition
-      }.toArray
-    } else {
-      val refs = live
-      GraftRowStore.packsScanned.addAndGet(refs.size)
-      if (refs.isEmpty) return Array.empty
-      val target = math.max(1, math.min(refs.size,
-        org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism))
-      refs.grouped(math.max(1, (refs.size + target - 1) / target)).map { g =>
-        RowPackGroupPartition(g.toVector,
-          snapshot.tombstones.filter(t => g.exists(_.id == t._1))): InputPartition
-      }.toArray
+      case _ =>
+        GraftRowStore.packsScanned.addAndGet(live.size)
+        grouped(live)(g => RowPackGroupPartition(g.toVector, tombstonesOf(g)))
     }
   }
 
-  override def outputPartitioning(): Partitioning =
-    if (snapshot.numBuckets > 0 && keyCombos.isEmpty && rangeProbe.isEmpty)
-      new KeyGroupedPartitioning(
-        Array(Expressions.bucket(snapshot.numBuckets, snapshot.bucketBy: _*)),
-        snapshot.numBuckets)
-    else new UnknownPartitioning(1)
+  private def tombstonesOf(refs: Seq[GraftRowStore.PackRef]): Map[Long, BitSet] =
+    snapshot.tombstones.filter(t => refs.exists(_.id == t._1))
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    // a full-PK probe matches AT MOST one row per key combo (keys are
-    // unique by construction) — report that instead of the whole table,
-    // so a point-lookup joined against anything plans as the broadcast
-    // side (the column store's pruned stats, PERF_NOTES §20, applied to
-    // the row store's strongest pruning path)
-    private val probeRows: Option[Long] = keyCombos.map(_.size.toLong)
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(1L,
-      probeRows.getOrElse(snapshot.rowCount) * fullSchema.defaultSize))
-    override def numRows(): OptionalLong =
-      OptionalLong.of(probeRows.getOrElse(snapshot.rowCount))
+  /** Full-PK lookup: probe pack indexes instead of scanning. When the
+    * table is bucketed BY the key columns the probe touches only the
+    * packs of the buckets the keys hash to (the routed get); in a
+    * cluster this probe is an RPC to those bucket's hosts.
+    */
+  private def probePartition(live: Vector[GraftRowStore.PackRef],
+      combos: Seq[GraftRowStore.RowKey]): RowProbePartition = {
+    val byBucket = live.groupBy(_.bucketId)
+    val keyIsBucket = snapshot.bucketBy == snapshot.keyColumns &&
+      snapshot.numBuckets > 0
+    val kts = snapshot.keyTypes
+    val keyed = combos.map { key =>
+      key -> (if (keyIsBucket)
+        byBucket.getOrElse(
+          BucketRouting.bucketOf(key.values, kts, snapshot.numBuckets),
+          Vector.empty)
+      else live)
+    }
+    // each candidate pack fetched once across ALL keys (a spilled pack
+    // would otherwise deserialize per key)
+    val resolved = GraftRowStore.packs.resolve(
+      keyed.flatMap(_._2.map(_.id)).distinct)
+    val addresses = keyed.flatMap { case (key, candidates) =>
+      GraftRowStore.indexProbes.incrementAndGet()
+      snapshot.probe(key, candidates, resolved)
+    }
+    RowProbePartition(addresses)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val f = new GraftRowReaderFactory(fullSchema, required, tableName, leaseId)
-    GraftRowStore.get(tableName).foreach(_.addLeaseOwner(leaseId, f))
-    f
+  /** Secondary-index range scan: stats prune whole packs at planning
+    * (metadata only — pack payloads never leave their executors),
+    * survivors get binary-searched task-side.
+    */
+  private def rangePartitions(live: Vector[GraftRowStore.PackRef],
+      spec: RowRangeSpec): Array[InputPartition] = {
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(spec.dt)
+    val kept = live.filter { r =>
+      spec.stats.get(r.id) match {
+        case Some((mn, mx)) =>
+          val okLo = spec.lo.forall { case (v, inc) =>
+            val c = ord.compare(mx, v); c > 0 || (c == 0 && inc)
+          }
+          val okHi = spec.hi.forall { case (v, inc) =>
+            val c = ord.compare(mn, v); c < 0 || (c == 0 && inc)
+          }
+          okLo && okHi
+        case None => true // packs appended after the index build
+      }
+    }
+    GraftRowStore.rangePacksPruned.addAndGet(live.size - kept.size)
+    GraftRowStore.rangePacksProbed.addAndGet(kept.size)
+    grouped(kept) { g =>
+      RowRangePartition(g.toVector, tombstonesOf(g),
+        spec.column, spec.ordinal, spec.dt, spec.lo, spec.hi)
+    }
   }
+
+  // a full-PK probe matches AT MOST one row per key combo (keys are
+  // unique by construction) — report that instead of the whole table,
+  // so a point-lookup joined against anything plans as the broadcast
+  // side (the column store's pruned stats, PERF_NOTES §20, applied to
+  // the row store's strongest pruning path)
+  override def estimateStatistics(): Statistics = {
+    val rows = keyCombos.map(_.size.toLong).getOrElse(snapshot.rowCount)
+    StoreScan.statistics(rows, rows * fullSchema.defaultSize)
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    leased(new GraftRowReaderFactory(fullSchema, required))
 }
 
-class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
-    tableName: String, leaseId: Long)
+object GraftRowScan {
+  /** Most key combinations a full-PK probe looks up at planning. */
+  val MaxProbeKeys = 256
+}
+
+class GraftRowReaderFactory(fullSchema: StructType, required: StructType)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -461,13 +377,7 @@ class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
             .map(slot => project(ref.id, slot, rows(slot)))
         }
     }
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) row = it.next(); h }
-      override def get(): InternalRow = row
-      // reachability-driven release (LeaseGc) — see the column-source note
-      override def close(): Unit = ()
-    }
+    new IteratorReader(it)
   }
 
   private def packIterator(refs: Vector[GraftRowStore.PackRef],

@@ -191,12 +191,6 @@ case class LocalLookupExec(child: SparkPlan) extends UnaryExecNode {
     copy(child = newChild)
 }
 
-/** A store scan that can report a bounded key lookup. */
-trait KeyLookupScan {
-  /** The scan reads one bucket or one probe's rows of the live table. */
-  def isKeyLookup: Boolean
-}
-
 /** Wraps a prepared plan in [[LocalLookupExec]] when the whole plan is
   * `ProjectExec`/`FilterExec`/`ColumnarToRowExec` over one
   * `BatchScanExec` whose scan reports a bounded key lookup (a full-PK
@@ -221,7 +215,7 @@ object LocalLookups extends Rule[SparkPlan] {
     case FilterExec(_, child) => keyLookup(child)
     case ColumnarToRowExec(child) => keyLookup(child)
     case scan: BatchScanExec if scan.runtimeFilters.isEmpty => scan.scan match {
-      case s: KeyLookupScan => s.isKeyLookup
+      case s: StoreScan[_, _] => s.isKeyLookup
       case _ => false
     }
     case _ => false

@@ -293,9 +293,10 @@ trait StoreOps[S <: TableState[S, R], R <: PayloadRef, O] {
   def drop(table: String): Unit = registry.drop(table)
   def tableNames: Seq[String] = registry.tableNames
   /** The live registry object of `table`: a re-created table is a new
-    * object, so callers may key per-table caches by it.
+    * object, so callers may key per-table caches by it, and a scan keeps
+    * the one it pinned.
     */
-  def handle(table: String): AnyRef = registry(table)
+  def handle(table: String): SnapshotTable[S, R] = registry(table)
 
   def snapshotOf(table: String): S = registry(table).snapshot
   def schema(table: String): StructType = snapshotOf(table).schema

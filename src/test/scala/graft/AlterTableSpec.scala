@@ -282,4 +282,55 @@ class AlterTableSpec extends SparkTestBase {
     assert(spark.read.format(rowFmt).option("table", "alt_rowix").load()
       .filter(col("b") === 13).count() == 10)
   }
+
+  test("an ALTER rewrite frees its checkpoint without a lineage-truncation WARN") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    spark.range(200).select(col("id").as("k"), (col("id") * 3).as("v"))
+      .write.format(fmt).option("table", "alt_quiet")
+      .option("partition_by", "k").option("buckets", "2").mode("overwrite").save()
+    val warnings = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("alt-quiet", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    // RDDs the rewrite's stages cache: its local checkpoint. A marker
+    // job afterwards is the barrier (the listener bus delivers in order)
+    val cached = new ConcurrentLinkedQueue[Int]()
+    val marker = s"alt-quiet-${java.util.UUID.randomUUID()}"
+    val seen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        s.stageInfo.rddInfos.foreach(i => if (i.storageLevel.isValid) cached.add(i.id))
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.job.description") == marker) seen.countDown()
+    }
+    val sc = spark.sparkContext
+    val rddLogger = LogManager.getLogger("org.apache.spark.rdd").asInstanceOf[Logger]
+    appender.start()
+    rddLogger.addAppender(appender)
+    sc.addSparkListener(listener)
+    try {
+      spark.sql("ALTER TABLE graft.alt_quiet ADD COLUMNS (w DOUBLE)")
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(30, TimeUnit.SECONDS), "barrier job never reached the listener")
+    } finally {
+      sc.removeSparkListener(listener)
+      rddLogger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(GraftColumnStore("alt_quiet").snapshot.schema.fieldNames.toSeq == Seq("k", "v", "w"))
+    val noisy = warnings.toArray.toSeq.filter(_.toString.contains("locally checkpointed"))
+    assert(noisy.isEmpty, s"the rewrite warned: ${noisy.mkString("; ")}")
+    assert(!cached.isEmpty, "the rewrite cached no checkpoint")
+    val kept = cached.toArray.toSeq.map(_.asInstanceOf[Int])
+      .filter(sc.getPersistentRDDs.contains)
+    assert(kept.isEmpty, s"checkpoint RDDs still persisted: ${kept.mkString(",")}")
+  }
 }

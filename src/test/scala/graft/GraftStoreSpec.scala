@@ -412,20 +412,66 @@ class GraftStoreSpec extends SparkTestBase {
 
   test("runtime (DPP) filters prune buckets like pushed filters") {
     import org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
-    import org.apache.spark.sql.graft.store.GraftScanBuilder
-    import org.apache.spark.sql.sources.EqualTo
+    import org.apache.spark.sql.graft.store.{GraftRowScanBuilder, GraftRowStore, GraftScanBuilder}
+    import org.apache.spark.sql.sources.{EqualTo, Filter}
     val g = GraftSession(spark)
-    freshOrders("s_dpp", buckets = 8)
-    val schema = GraftColumnStore("s_dpp").schema
-    val scan = new GraftScanBuilder("s_dpp", schema).build()
-    val rf = scan.asInstanceOf[SupportsRuntimeFiltering]
-    assert(rf.filterAttributes().map(_.fieldNames.head).contains("o_orderkey"))
-    val before = scan.toBatch.planInputPartitions().length
-    assert(before == 8, "all buckets before the runtime filter arrives")
-    rf.filter(Array[org.apache.spark.sql.sources.Filter](EqualTo("o_orderkey", 100L)))
-    val after = scan.toBatch.planInputPartitions().length
-    assert(after == 1, s"runtime key filter must prune to one bucket, got $after")
-    g.dropTable("s_dpp")
+    // (provider, table, a scan of the table with no pushed filter)
+    val stores = Seq(
+      ("column", "s_dpp", (n: String) => new GraftScanBuilder(n, GraftColumnStore(n).schema).build()),
+      ("row", "r_dpp", (n: String) => new GraftRowScanBuilder(n, GraftRowStore(n).schema).build()))
+    stores.foreach { case (provider, name, scanOf) =>
+      g.createTable(name, Tables.load(spark, sf, "orders"), keyColumns = Seq("o_orderkey"),
+        partitionBy = Seq("o_orderkey"), buckets = 8, provider = provider)
+      try {
+        val scan = scanOf(name)
+        assert(scan.isInstanceOf[SupportsRuntimeFiltering],
+          s"$provider: a bucketed scan must take runtime filters")
+        val rf = scan.asInstanceOf[SupportsRuntimeFiltering]
+        assert(rf.filterAttributes().map(_.fieldNames.head).contains("o_orderkey"), provider)
+        val before = scan.toBatch.planInputPartitions().length
+        assert(before == 8, s"$provider: all buckets before the runtime filter arrives")
+        rf.filter(Array[Filter](EqualTo("o_orderkey", 100L)))
+        val after = scan.toBatch.planInputPartitions().length
+        assert(after == 1, s"$provider: runtime key filter must prune to one bucket, got $after")
+      } finally g.dropTable(name)
+    }
+  }
+
+  test("a broadcast join's dynamic pruning narrows a bucketed row table's buckets") {
+    import org.apache.spark.sql.catalyst.expressions.{DynamicPruningExpression, Literal}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val g = GraftSession(spark)
+    g.createTable("r_dpp_cust", Tables.load(spark, sf, "customer"),
+      partitionBy = Seq("c_nationkey"), buckets = 8, provider = "row")
+    object Plans extends AdaptiveSparkPlanHelper
+    // the executed row-table scan and the partitions it plans now
+    def run(): (Seq[org.apache.spark.sql.Row], BatchScanExec, Int) = {
+      val nation = broadcast(Tables.load(spark, sf, "nation").filter(col("n_name") === "NATION_7"))
+      val df = GraftSession(spark).table("r_dpp_cust")
+        .join(nation, col("c_nationkey") === col("n_nationkey"))
+        .select("c_custkey", "c_name", "n_name")
+      val rows = df.collect().toSeq.sortBy(_.getAs[Any]("c_custkey").toString)
+      val scans = Plans.collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec if b.scan.description().startsWith("graftrow.r_dpp_cust") => b
+      }
+      assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+      (rows, scans.head, scans.head.scan.toBatch.planInputPartitions().length)
+    }
+    try {
+      val (pruned, scan, buckets) = run()
+      assert(scan.runtimeFilters.exists {
+        case DynamicPruningExpression(Literal.TrueLiteral) => false
+        case _: DynamicPruningExpression => true
+        case _ => false
+      }, s"no dynamic pruning filter on the row scan:\n${scan.runtimeFilters}")
+      val (all, unpruned, allBuckets) =
+        withConf("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false")(run())
+      assert(unpruned.runtimeFilters.isEmpty)
+      assert(allBuckets == 8 && buckets < allBuckets,
+        s"dynamic pruning must plan fewer buckets: $buckets of $allBuckets")
+      assert(pruned.nonEmpty && pruned == all)
+    } finally g.dropTable("r_dpp_cust")
   }
 
   test("CREATE INDEX re-clusters batches so stats skipping becomes the probe") {

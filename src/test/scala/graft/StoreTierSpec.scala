@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * LZ4 codec and the spill directory live in its file alone; and they
   * checkpoint and publish through the one `StoreOps`, so the layout
   * manifest is written in `StoreTables.scala` alone; and the session and
-  * SQL surface reach both stores' DML through that same `StoreOps`.
+  * SQL surface reach both stores' DML through that same `StoreOps`; and
+  * they scan through the one `StoreScan`.
   */
 class StoreTierSpec extends AnyFunSuite {
 
@@ -85,5 +86,20 @@ class StoreTierSpec extends AnyFunSuite {
       if (n > 1) Some(s"$r x$n in ${hits.map(_._1.getFileName).mkString(", ")}") else None
     }
     if (found.nonEmpty) fail(s"a second DSv2 table surface: ${found.mkString("; ")}")
+  }
+
+  test("one scan skeleton: lease pin, pushdown, bucket targeting and runtime filters") {
+    // both stores scan through StoreScanBuilder and StoreScan in
+    // StoreSource.scala; any of these elsewhere under store/ is a second
+    // scan skeleton (outside store/, a parser comment names the
+    // partitioning class) — split so this file does not match itself
+    val needles = Seq("new " + "KeyGroupedPartitioning", "SupportsRuntime" + "Filtering",
+      "SupportsPushDown" + "Filters", "SupportsPushDown" + "RequiredColumns",
+      "BucketRouting" + ".targetBuckets(", "lazy val " + "pinned")
+    val found = offenders("StoreSource.scala", needles)
+      .filter(_.toString.contains("/graft/store/"))
+    if (found.nonEmpty)
+      fail(s"${found.size} files restate the scan skeleton: " +
+        found.map(_.getFileName).mkString(", "))
   }
 }
